@@ -451,7 +451,7 @@ def _murmur3_int32(x: int, seed: int = 42) -> int:
 
 
 def _balanced_shuffle_partitions(key_groups: list[list[int]],
-                                 default_n: int) -> int:
+                                 default_n: int, key_type) -> int:
     """Pick the shuffle-partition count for the per-bucket kernel stages.
 
     ``groupBy("bucket").applyInPandas`` hash-partitions ~P atomic bucket
@@ -464,7 +464,16 @@ def _balanced_shuffle_partitions(key_groups: list[list[int]],
     smallest n minimizing the worst per-group max-load (each group's
     segment/docmap jobs see only that group's buckets). Beyond 3× the
     empty-task scheduling overhead outweighs the remaining load-2 tail.
+
+    ``key_type`` is the Spark type of the grouping column. The planner
+    models Spark's hashInt (bucket_expr casts to int); a long key is
+    hashed with hashLong, so any other type raises instead of silently
+    planning the wrong balance.
     """
+    if not isinstance(key_type, T.IntegerType):
+        raise TypeError(
+            f"balanced shuffle planning models an int key, got {key_type}"
+        )
     # With keys ≫ bins the hash balance is already smooth (relative load
     # variance ~ 1/sqrt(keys/bins)) and the scan would cost O(n·keys)
     # driver time for nothing — the straggler this fixes only exists
@@ -1381,7 +1390,7 @@ def build_index(
     # extra empty-task/file overhead it adds (sf0.1: planner 7.36 s vs
     # default 6.94 s; sf1.0: planner ≈1.5-2 s FASTER) — the override
     # only engages when per-bucket work dominates scheduling.
-    if sum(grp_counts.values()) >= 2000 * n_buckets:
+    if pending and sum(grp_counts.values()) >= 2000 * n_buckets:
         seg_conf["spark.sql.shuffle.partitions"] = str(
             _balanced_shuffle_partitions(
                 [
@@ -1389,6 +1398,7 @@ def build_index(
                     for g in range(n_groups)
                 ],
                 int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+                _group_input(pending[0]).schema["bucket"].dataType,
             )
         )
     with _scoped_conf(spark, seg_conf):

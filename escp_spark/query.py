@@ -14,14 +14,18 @@ Two execution paths, both rank-identical to the exhaustive oracle:
    This is what a query node would run per request; Spark is not in the
    request path.
 
-2. **Batch path** (`search_topk_spark`): throughput-oriented, runs a whole
-   query set through one distributed scoring pass — term-pushdown scan
-   of postings → `mapInPandas` decode to query-independent BM25 bases →
-   JVM-side (posting × query) expansion (broadcast join + hash agg,
-   map-side combine) → `groupBy(query_id, doc_id).sum` → work-adaptive
-   tie-complete top-k cut → driver-side url resolution via the serving
-   reader's interval-index stabs and deterministic (score desc, url asc)
-   final ranking.
+2. **Batch path** (`search_topk_spark`): throughput-oriented, scores a
+   whole query set. The batch's matched work (Σ df over its distinct
+   matched terms, from the driver-side dictionary lookup) picks the
+   side of one switch, `_BIG_MATCHED_POSTINGS`: at or below it the
+   driver runs the serving scorer above over a cached batch reader (no
+   Spark job); above it one distributed scoring pass runs — rebalanced
+   term-pushdown scan of postings → `mapInPandas` decode to
+   query-independent BM25 bases → JVM-side (posting × query) expansion
+   (broadcast join + hash agg, map-side combine) →
+   `groupBy(query_id, doc_id).sum` → value-count threshold top-k cut →
+   driver-side url resolution via the serving reader's interval-index
+   stabs and deterministic (score desc, url asc) final ranking.
 
 Tie-break contract (FIXTURES.md §2): final order is (score desc, url asc);
 ranking first takes a tie-complete candidate set (`rank() <= k`, which
@@ -36,6 +40,7 @@ from collections import Counter, defaultdict
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.dataset as pads
 
 from .analyzer import tokenize
@@ -394,25 +399,31 @@ class IndexReader:
     def fetch_payloads(self, fi: np.ndarray, rg: np.ndarray, pos: np.ndarray):
         """Payload buffers (doc_ids, tfs, dls bytes) for the given block
         rows, reading each needed row group's payload column chunks at
-        most once (bounded cache). Returns three aligned object arrays."""
+        most once (bounded cache). The cache holds each column's values
+        buffer and offsets: only requested blocks become Python bytes
+        (three objects per cached block cost ~120 B, several times the
+        payload of a small block). Returns three aligned object arrays."""
         n = len(pos)
         out = tuple(np.empty(n, dtype=object) for _ in range(3))
         key = fi.astype(np.int64) * (1 << 20) + rg
         for k in np.unique(key):
             f, r = int(k >> 20), int(k & ((1 << 20) - 1))
-            arrs = self._payload_cache.get((f, r))
-            if arrs is None:
+            cols = self._payload_cache.get((f, r))
+            if cols is None:
                 tbl = self._file(f).read_row_group(r, columns=PAYLOAD_COLS)
-                arrs = tuple(
-                    tbl.column(c).to_pandas().to_numpy() for c in PAYLOAD_COLS
-                )
-                self._payload_cache.put((f, r), arrs, tbl.nbytes)
+                cols = tuple(_values_and_offsets(tbl.column(c))
+                             for c in PAYLOAD_COLS)
+                self._payload_cache.put((f, r), cols, tbl.nbytes)
                 self.payload_bytes_fetched += self._payload_sizes.get((f, r), 0)
                 self.payload_rowgroups_fetched += 1
             sel = np.flatnonzero(key == k)
             p = pos[sel]
-            for o, a in zip(out, arrs):
-                o[sel] = a[p]
+            for o, (data, offs) in zip(out, cols):
+                # Element-wise: assigning a list goes through a fixed-width
+                # bytes array, which strips trailing NUL bytes.
+                for i, a, b in zip(sel.tolist(), offs[p].tolist(),
+                                   offs[p + 1].tolist()):
+                    o[i] = data[a:b]
         return out
 
     def _dm_rg_index(self):
@@ -516,6 +527,17 @@ class IndexReader:
             for i in np.flatnonzero(ok):
                 out[int(ids[i])] = rg_urls[p[i]]
         return out
+
+
+def _values_and_offsets(col) -> tuple[bytes, np.ndarray]:
+    """A binary column's back-to-back values and its offsets: value i is
+    ``values[offsets[i]:offsets[i + 1]]``."""
+    arr = col.combine_chunks()
+    _, offsets, values = arr.buffers()
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(offsets, dtype=width)
+    data = values.to_pybytes() if values is not None else b""
+    return data, offs[arr.offset:arr.offset + len(arr) + 1]
 
 
 def _aggregate(doc_ids: np.ndarray, contribs: np.ndarray):
@@ -735,7 +757,13 @@ def search_topk(index_dir: str, queries: list[dict],
     queries: [{query_id, query_text, k}] → rows [{query_id, rank,
     doc_url, score}] with (score desc, url asc) deterministic order.
     """
-    reader = reader or IndexReader(index_dir)
+    return _serve_topk(reader or IndexReader(index_dir), queries)[0]
+
+
+def _serve_topk(reader: IndexReader, queries: list[dict]):
+    """search_topk's body → (rows, candidates): ``candidates`` counts the
+    tie-complete candidate docs whose urls were resolved (the batch
+    path's ``last_batch_timings["candidates"]``)."""
     all_terms = sorted({t for q in queries for t in tokenize(q["query_text"])})
     dfs = reader.term_dfs(all_terms)
     idf = {t: float(idf_lucene(reader.n_docs, d)) for t, d in dfs.items()}
@@ -745,7 +773,7 @@ def search_topk(index_dir: str, queries: list[dict],
     by_term = {t: g for t, g in meta.groupby("term")} if len(meta) else {}
     empty_meta = pd.DataFrame(columns=META_COLS + _SRC_COLS)
 
-    rows = []
+    rows, candidates = [], 0
     for q in queries:
         weights = dict(Counter(tokenize(q["query_text"])))
         qblocks = pd.concat(
@@ -771,6 +799,7 @@ def search_topk(index_dir: str, queries: list[dict],
             kth = np.partition(scores, -k)[-k]
             mask = scores >= kth
             doc_ids, scores = doc_ids[mask], scores[mask]
+        candidates += doc_ids.size
         urls = reader.urls_for(doc_ids)
         ranked = sorted(
             zip(scores.tolist(), (urls[int(d)] for d in doc_ids)),
@@ -781,52 +810,74 @@ def search_topk(index_dir: str, queries: list[dict],
                 {"query_id": q["query_id"], "rank": rank,
                  "doc_url": url, "score": score}
             )
-    return rows
+    return rows, candidates
 
 
 # --------------------------------------------------------------------------
 # Batch path (distributed Spark job over the whole query set)
 # --------------------------------------------------------------------------
 
-# Matched work (sum of document frequencies over the batch's distinct
-# matched terms — known driver-side from the dictionary lookup, BEFORE
-# any job runs) above which the batch path switches to its big-batch
-# shapes: decode rebalance + value-count threshold cut. Below it the
-# batch is driver-scheduling-bound, so the job-count-minimal shapes win.
-# Keyed on the BATCH's work, not the index's size: a single rare-term
-# query against a 10^12-doc index is still a small batch. (Measured
-# crossover is between the 50-query sf0.1 reference batch ~0.5M matched
-# postings and the 200-query 2M-doc batch ~30M.) Module-level so tests
-# can force either side.
+# The batch path's driver/distributed switch on matched work (Σ df over
+# the batch's distinct matched terms, known from the dictionary lookup
+# BEFORE any job runs). At or below it the serving WAND scorer runs on
+# the driver (rank-identical, no Spark job): as a Spark job such a batch
+# is bound by per-job scheduling cost, not work. Above it the batch runs
+# the distributed decode rebalance + value-count threshold cut, which
+# scales past one driver. Keyed on the batch's work, not the index size.
+# 100k docs, local[4], 4-core VM, cold reader, driver vs distributed cut:
+# 50 reference queries (0.57M matched) 0.47-0.59 vs 4.1-5.1 s; 100 Zipf
+# queries (2.1M) 1.9-2.3 vs 7.2-10.0 s; scale_queries(1000) (1.3M) 3.6-4.5
+# vs 5.0-6.2 s; scale_queries(3000) (3.0M) 9.9-11.8 vs 10.3-12.2 s, level
+# at 3000 queries (~3.5 ms per rare query), so no query-count rule.
+# Tests force the distributed side with -1.
 _BIG_MATCHED_POSTINGS = 4_000_000
 
-# Size-1 reader cache for the batch path's driver-side finish: repeat
-# batches against the same index reuse the docmap row-group LRU instead
-# of rebuilding a reader per call; _ensure_current inside the reader
-# handles republish. Size-1 on purpose — a driver process serves batches
-# against one index at a time, and an unbounded dict would pin caches
-# for every tmp index a test session ever touched.
+# Size-1 reader cache for the batch path's driver side: repeat batches
+# against the same index reuse the dictionary, payload and docmap
+# row-group LRUs; _ensure_current inside the reader handles republish.
+# Size-1 on purpose — a driver process serves batches against one index
+# at a time. No metadata cache: a batch reads each candidate row group's
+# stats once (meta_for_terms takes all its terms), so keeping them only
+# pins a second copy of a serving reader's working set (+8 MB driver
+# VmHWM on the update benchmark).
 _batch_reader_cache: list = []  # [(index_dir, IndexReader)]
 
 
 def _batch_reader(index_dir: str) -> "IndexReader":
     if _batch_reader_cache and _batch_reader_cache[0][0] == index_dir:
         return _batch_reader_cache[0][1]
-    r = IndexReader(index_dir)
+    r = IndexReader(index_dir, meta_cache_bytes=0)
     _batch_reader_cache[:] = [(index_dir, r)]
     return r
 
 
 # Phase telemetry of the last search_topk_spark call (the batch-path
-# analog of build.last_build_timings): "plan" = driver-side query
-# planning incl. the pyarrow dictionary df lookup; "score" = the big
-# scan+score+aggregate job (big batches: populates the persisted scores
-# and returns the threshold survivors; small batches: the whole
-# candidate collect, with "cut" = 0); "cut" = the threshold filter +
-# candidate collect off the cache. The url resolution + final ranking
-# after the cut are driver-side (reader.urls_for + numpy) and the
-# returned DataFrame is a local relation, so plan + score + cut ≈ wall.
+# analog of build.last_build_timings). "plan" = driver-side planning incl.
+# the pyarrow dictionary df lookup that decides the switch; "score" = the
+# driver-side serving scorer (below the switch, with "cut" = 0) or the
+# scan+score+aggregate job that populates the persisted scores and returns
+# the value-count survivors (above it); "cut" = the threshold filter +
+# candidate collect off the cache; "candidates" = tie-complete candidates
+# whose urls were resolved. Url resolution + final ranking are
+# driver-side and the returned DataFrame is a local relation, so
+# plan + score + cut ≈ wall.
 last_batch_timings: dict = {}
+
+_BATCH_SCHEMA = pa.schema([
+    ("query_id", pa.int32()), ("rank", pa.int32()),
+    ("doc_url", pa.string()), ("score", pa.float64()),
+])
+
+
+def _result_df(spark, rows: list[tuple]):
+    """The batch result as a local relation. Built from an Arrow table, so
+    collecting it starts no Spark job (a Python list would be
+    parallelized into an RDD)."""
+    cols = list(zip(*rows)) or [[]] * len(_BATCH_SCHEMA)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, _BATCH_SCHEMA)],
+        schema=_BATCH_SCHEMA,
+    ))
 
 
 def _maybe_dump_plan(df, name: str) -> None:
@@ -852,31 +903,33 @@ def _maybe_dump_plan(df, name: str) -> None:
 
 
 def search_topk_spark(spark, index_dir: str, queries: list[dict]):
-    """Distributed batch scoring of a query set → DataFrame
-    (query_id int, rank int, doc_url string, score double).
+    """Batch scoring of a query set → local DataFrame (query_id int, rank
+    int, doc_url string, score double), rows in query-id order.
 
-    Scale shape: the postings scan is term-pushdown-pruned (Parquet
-    row-group stats on the sorted term column); python tasks decode each
-    live posting ONCE into a query-independent BM25 base keyed by a
-    dense term id; the (posting × query) expansion and idf/tf weighting
-    run JVM-side (broadcast join against the tiny per-query weight table
-    + hash aggregation inside whole-stage codegen, map-side partials
-    before the one shuffle). Big batches (matched work above
-    _BIG_MATCHED_POSTINGS) also hash-rebalance matched blocks before the
-    decode — term-sorted postings concentrate a hot term's blocks in a
-    few row groups and scan splits bottom out at one row group — and cut
-    the tie-complete top-k with an exact per-query k-th-largest score
+    The driver first looks up the batch's term dfs in the dictionary
+    (pyarrow, stats-pruned) and sums them over the distinct matched terms
+    (_BIG_MATCHED_POSTINGS). A batch at or below that switch is scored
+    on the driver by the serving WAND scorer over the size-1 batch
+    reader — no broadcast, no Spark job. A batch above it runs one
+    distributed pass: the postings scan is term-pushdown-pruned (Parquet
+    row-group stats on the sorted term column) and hash-rebalanced
+    before the decode — term-sorted postings concentrate a hot term's
+    blocks in a few row groups and scan splits bottom out at one row
+    group; python tasks decode each live posting ONCE into a
+    query-independent BM25 base keyed by a dense term id; the (posting ×
+    query) expansion and idf/tf weighting run JVM-side (broadcast join
+    against the tiny per-query weight table + hash aggregation inside
+    whole-stage codegen, map-side partials before the one shuffle); the
+    tie-complete top-k is cut with an exact per-query k-th-largest score
     threshold derived from a value-count table (never window-sorting
-    candidate rows); small batches use a job-count-minimal salted-rank
-    cut (inline proofs at the branch). Url resolution for the
-    driver-sized tie-complete candidate set is driver-side — the serving
+    candidate rows; proof inline). Url resolution for the driver-sized
+    tie-complete candidate set is driver-side on both sides — the serving
     reader's sidecar-backed interval-index stabs read only the docmap
     row groups containing candidates; it is never a cluster job and
     never a full docmap probe.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     import time as _time
 
@@ -889,9 +942,7 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
     q_terms: dict[str, list[tuple[int, float]]] = defaultdict(list)
     all_terms = sorted({t for q in queries for t in tokenize(q["query_text"])})
     if not all_terms:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, doc_url string, score double"
-        )
+        return _result_df(spark, [])
     # Driver-side pyarrow read, not a Spark job: the dictionary is
     # term-sorted so the isin filter prunes to the row groups holding
     # the query terms (the same stats-pruned path IndexReader.term_dfs
@@ -907,14 +958,24 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
                 q_terms[t].append(
                     (q["query_id"], float(c) * float(idf_lucene(n_docs, dfs[t])))
                 )
+    # The batch's work, known before any job runs (on the distributed
+    # side: one decode + one base-score row per matched posting).
+    if sum(dfs[t] for t in q_terms) <= _BIG_MATCHED_POSTINGS:
+        last_batch_timings["plan"] = round(_time.perf_counter() - _t0, 3)
+        _t0 = _time.perf_counter()
+        rows, candidates = _serve_topk(_batch_reader(index_dir), queries)
+        rows.sort(key=lambda r: r["query_id"])  # stable: ranks stay ordered
+        last_batch_timings.update(
+            score=round(_time.perf_counter() - _t0, 3), cut=0.0,
+            candidates=candidates,
+        )
+        return _result_df(spark, [
+            (r["query_id"], r["rank"], r["doc_url"], r["score"]) for r in rows
+        ])
     # Per-query weighting happens JVM-side (broadcast join + hash agg):
     # python tasks only decode and compute the query-independent BM25
-    # base per posting, keyed by a dense integer term id. The old shape
-    # expanded (posting x query) rows in python (a copy of the ids
-    # array per query containing the term) and partial-aggregated them
-    # with a lexsort — profiled at 2M docs/200 queries, that expansion
-    # plus combine was the bulk of ~250 python core-seconds while the
-    # JVM hash-agg does the same expansion inside whole-stage codegen.
+    # base per posting, keyed by a dense integer term id (a python-side
+    # expansion profiled at ~250 core-seconds at 2M docs/200 queries).
     tid_of = {t: i for i, t in enumerate(all_terms) if t in q_terms}
     w_rows = [
         (tid, qid, w)
@@ -922,11 +983,6 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
         for qid, w in q_terms[t]
     ]
     wdf = spark.createDataFrame(w_rows, "tid int, query_id int, w double")
-    # The batch's distributed work, known before any job runs: one decode
-    # + one base-score row per matched posting. Drives the big-batch
-    # shape choices below.
-    matched_postings = sum(dfs[t] for t in q_terms)
-    big_batch = matched_postings > _BIG_MATCHED_POSTINGS
     plan_bc = spark.sparkContext.broadcast(tid_of)
     avgdl_bc = avgdl
     # Soft-deleted doc_ids (streamed update/delete): dropped at decode
@@ -981,11 +1037,10 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
             if tids_out:
                 yield emit(tids_out, dids_out, base_out)
 
-    # Published-postings size: drives the scan-split sizing only (the
-    # shape choices key on matched_postings). Local FS walk first; on a
-    # remote FS (s3a/hdfs — os.walk yields nothing) fall back to the
-    # rg_stats sidecar's payload_bytes sum, which the build persists for
-    # exactly this kind of listing-free consumer.
+    # Published-postings size: drives the scan-split sizing. Local FS
+    # walk first; on a remote FS (s3a/hdfs — os.walk yields nothing) fall
+    # back to the rg_stats sidecar's payload_bytes sum, which the build
+    # persists for exactly this kind of listing-free consumer.
     from .build import _dir_bytes
 
     try:
@@ -1011,13 +1066,9 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
     # bytes — and is deterministic under task retry (unlike round-robin
     # repartition, which also local-sorts the block payloads). Shuffled
     # bytes = matched blocks only (~10 core-s vs the ~80 core-s decode
-    # it balances). Skipped when the batch's matched work is small enough
-    # that one scan wave covers it — the shuffle would only add a barrier.
-    if big_batch:
-        n_parts = max(16, spark.sparkContext.defaultParallelism * 3)
-        postings = postings.repartition(
-            n_parts, F.xxhash64("term", "doc_ids")
-        )
+    # it balances).
+    n_parts = max(16, spark.sparkContext.defaultParallelism * 3)
+    postings = postings.repartition(n_parts, F.xxhash64("term", "doc_ids"))
     partials = postings.mapInPandas(
         score_partition, "tid int, doc_id long, base double"
     )
@@ -1062,35 +1113,18 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
     last_batch_timings["plan"] = round(_time.perf_counter() - _t0, 3)
     _t0 = _time.perf_counter()
 
-    # Tie-complete top-k cut. Two strategies, chosen by the batch's
-    # matched work (sum of matched-term dfs, known driver-side) — the
-    # same explicit small/large split the merge placement uses (driver
-    # fast path <= 1M terms, distributed prefix sum above):
-    #
-    # SMALL batch (matched work fits one scan wave): salted rank()
-    # pre-cut feeding a per-query rank() window, candidates collected in
-    # ONE job. After the groupBy every (query_id, doc_id) score is
-    # FINAL, so a cut at the k-th largest score WITHIN any disjoint
-    # subset is rank-safe: a cut row has >= k rows of its own query
-    # strictly above it in its subset, hence >= k globally (rank() keeps
-    # boundary ties at both stages). Job-count-minimal — at 50k docs the
-    # whole batch is driver-scheduling-bound, and this shape measured
-    # ~1.4 s faster per 50-query batch than the threshold strategy in a
-    # same-window A/B. (A rare-terms-only batch against a huge index is
-    # still a small batch — the shape follows the work, not the index.)
-    #
-    # BIG batch: the window sort over the full candidate set is the
-    # bottleneck — profiled at 2M docs / 200 queries the two window
-    # stages burned ~270 JVM core-seconds, and the salt cut passed 59%
-    # of rows through because quantized BM25 scores form large tie
-    # plateaus whose within-salt strict-higher count stays below k even
-    # when their global rank is far beyond it. Instead: a row belongs to
-    # the tie-complete top-k of its query iff score >= s_k (the
-    # per-query k-th largest score, multiplicity counted), and s_k comes
-    # from a per-(query, score) VALUE-COUNT table — a hash aggregation
-    # whose map-side combine collapses each tie plateau to one row per
-    # task, so the window sorts only distinct-score rows, never the
-    # candidate rows:
+    # Tie-complete top-k cut. A window sort over the full candidate set
+    # is the bottleneck of a big batch — profiled at 2M docs / 200
+    # queries two window stages burned ~270 JVM core-seconds, and a
+    # salted-rank pre-cut passed 59% of rows through because quantized
+    # BM25 scores form large tie plateaus whose within-salt strict-higher
+    # count stays below k even when their global rank is far beyond it.
+    # Instead: a row belongs to the tie-complete top-k of its query iff
+    # score >= s_k (the per-query k-th largest score, multiplicity
+    # counted), and s_k comes from a per-(query, score) VALUE-COUNT table
+    # — a hash aggregation whose map-side combine collapses each tie
+    # plateau to one row per task, so the window sorts only
+    # distinct-score rows, never the candidate rows:
     #   window (query, salt(score)): keep values whose within-salt
     #     strictly-higher count < k. Every value > s_k survives (its
     #     global strict-higher count is already < k), and each survivor
@@ -1102,122 +1136,83 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
     # scores is persisted across its two consumers (threshold job +
     # final filter); the filter then collects exactly the tie-complete
     # candidates.
-    if not big_batch:
-        # Salt pre-cut at each query's OWN k (r07) — the cut-at-subset-kth
-        # proof in the strategy comment above holds per query, so joining
-        # kdf BEFORE the salt window and cutting at F.col("k") is
-        # rank-identical to the old global-k_max cut. The old shape let
-        # ONE huge-k query (reference q9 carries k=1e6 > any match
-        # count) disable the pre-cut for the WHOLE batch: every hot
-        # query's full candidate set then hit the per-query rank window
-        # — a single-task sort of ~df(hot) rows (measured: the ref50
-        # window stages dropped ~1.5 s at sf1.0).
-        w_salt_r = Window.partitionBy(
-            "query_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_salts))
-        ).orderBy(F.col("score").desc())
-        w_q = Window.partitionBy("query_id").orderBy(F.col("score").desc())
-        cand = (
-            scores.join(F.broadcast(kdf), "query_id")
-            .withColumn("rk_s", F.rank().over(w_salt_r))
-            .filter(F.col("rk_s") <= F.col("k"))
-            .drop("rk_s")
-            .withColumn("rk", F.rank().over(w_q))  # rank() keeps ties
-            .filter(F.col("rk") <= F.col("k"))
+    scores = scores.persist()
+    try:
+        vc = (
+            scores.groupBy("query_id", "score")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .join(F.broadcast(kdf), "query_id")
         )
-        _maybe_dump_plan(cand, "bm25_batch_smallcut")
+        w_salt = (
+            Window.partitionBy(
+                "query_id", F.pmod(F.xxhash64("score"), F.lit(n_salts))
+            )
+            .orderBy(F.col("score").desc())
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        with _scoped_conf(spark, scan_conf):
+            surv = (
+                vc.withColumn(
+                    "hi_s", F.coalesce(F.sum("c").over(w_salt), F.lit(0))
+                )
+                .filter(F.col("hi_s") < F.col("k"))
+                .select("query_id", "score", "c")
+                .toArrow()
+                .to_pandas()
+            )
+        last_batch_timings["score"] = round(_time.perf_counter() - _t0, 3)
+        _t0 = _time.perf_counter()
+        # Survivors come back as Arrow columns, not Row objects: the set
+        # is driver-sized but up to |queries| x n_salts x k_max rows, and
+        # a Row per survivor was the driver's memory peak of a big batch.
+        # ``above`` = each value's strictly-higher count in its query.
+        surv = surv.sort_values(
+            ["query_id", "score"], ascending=[True, False], kind="mergesort"
+        )
+        above = surv.groupby("query_id")["c"].cumsum() - surv["c"]
+        k_of = {q["query_id"]: q["k"] for q in queries}
+        s_k = surv["score"][above < surv["query_id"].map(k_of)].groupby(
+            surv["query_id"]
+        ).min()
+        # The candidate filter runs against a SECOND evaluation of
+        # scores: if a cached partition was evicted or an executor died,
+        # it is recomputed, and the hash-agg sums term contributions in
+        # shuffle-fetch order — float addition is not associative, so a
+        # recomputed score can sit an ulp below the thr derived from the
+        # first materialization and silently drop the whole k-th
+        # plateau. Widen the filter by a relative 1e-9 margin (orders of
+        # magnitude above accumulated ulp drift for <=dozens of terms,
+        # orders below the gap between DISTINCT BM25 values, whose
+        # inputs are integers): extras are harmless — the final ranking
+        # cuts to exactly k — missing rows break the contract.
+        thr = spark.createDataFrame(
+            list(zip(s_k.index.tolist(), (s_k - s_k.abs() * 1e-9).tolist())),
+            "query_id int, thr double",
+        )
+        cand = (
+            scores.join(F.broadcast(thr), "query_id")
+            .filter(F.col("score") >= F.col("thr"))
+            .join(F.broadcast(kdf), "query_id")
+        )
+        _maybe_dump_plan(cand, "bm25_batch_bigcut")
+        # (Same scoped split conf as the threshold job: if the cached
+        # scores were evicted this collect re-runs the scan.)
         with _scoped_conf(spark, scan_conf):
             cand_rows = cand.select(
                 "query_id", "doc_id", "score", "k"
             ).collect()
-        last_batch_timings["score"] = round(_time.perf_counter() - _t0, 3)
-        last_batch_timings["cut"] = 0.0
-    else:
-        scores = scores.persist()
-        try:
-            vc = (
-                scores.groupBy("query_id", "score")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .join(F.broadcast(kdf), "query_id")
-            )
-            w_salt = (
-                Window.partitionBy(
-                    "query_id", F.pmod(F.xxhash64("score"), F.lit(n_salts))
-                )
-                .orderBy(F.col("score").desc())
-                .rowsBetween(Window.unboundedPreceding, -1)
-            )
-            with _scoped_conf(spark, scan_conf):
-                surv = (
-                    vc.withColumn(
-                        "hi_s", F.coalesce(F.sum("c").over(w_salt), F.lit(0))
-                    )
-                    .filter(F.col("hi_s") < F.col("k"))
-                    .select("query_id", "score", "c")
-                    .collect()
-                )
-            last_batch_timings["score"] = round(
-                _time.perf_counter() - _t0, 3
-            )
-            _t0 = _time.perf_counter()
-            by_q: dict[int, list[tuple[float, int]]] = defaultdict(list)
-            for r in surv:
-                by_q[r.query_id].append((r.score, r.c))
-            k_of = {q["query_id"]: q["k"] for q in queries}
-            thr_rows = []
-            for qid, vals in by_q.items():
-                vals.sort(key=lambda t: -t[0])
-                hi, kq, thr_v = 0, k_of[qid], vals[0][0]
-                for v, c in vals:
-                    if hi >= kq:
-                        break
-                    thr_v = v
-                    hi += c
-                # The candidate filter runs against a SECOND evaluation
-                # of scores: if a cached partition was evicted or an
-                # executor died, it is recomputed, and the hash-agg sums
-                # term contributions in shuffle-fetch order — float
-                # addition is not associative, so a recomputed score can
-                # sit an ulp below the thr derived from the first
-                # materialization and silently drop the whole k-th
-                # plateau. Widen the filter by a relative 1e-9 margin
-                # (orders of magnitude above accumulated ulp drift for
-                # <=dozens of terms, orders below the gap between
-                # DISTINCT BM25 values, whose inputs are integers):
-                # extras are harmless — the final row_number window cuts
-                # to exactly k — missing rows break the contract.
-                thr_rows.append((qid, thr_v - abs(thr_v) * 1e-9))
-            thr = spark.createDataFrame(thr_rows, "query_id int, thr double")
-            cand = (
-                scores.join(F.broadcast(thr), "query_id")
-                .filter(F.col("score") >= F.col("thr"))
-                .join(F.broadcast(kdf), "query_id")
-            )
-            _maybe_dump_plan(cand, "bm25_batch_bigcut")
-            # (Same scoped split conf as the threshold job: if the cached
-            # scores were evicted this collect re-runs the scan.)
-            with _scoped_conf(spark, scan_conf):
-                cand_rows = cand.select(
-                    "query_id", "doc_id", "score", "k"
-                ).collect()
-        finally:
-            # A long-lived session must not leak cached score RDDs when a
-            # collect dies mid-batch (host kill, cancellation).
-            scores.unpersist()
-        last_batch_timings["cut"] = round(_time.perf_counter() - _t0, 3)
+    finally:
+        # A long-lived session must not leak cached score RDDs when a
+        # collect dies mid-batch (host kill, cancellation).
+        scores.unpersist()
+    last_batch_timings["cut"] = round(_time.perf_counter() - _t0, 3)
     # Driver-side finish — ZERO further Spark jobs. The tie-complete
     # candidate set is driver-sized by construction (≤ Σ_q (k_q +
-    # boundary ties)); collecting it ONCE already cut the scoring
-    # lineage, and fetching its urls is the serving path's
-    # bread-and-butter: sidecar-backed interval-index stabs into the
-    # docmap, reading ONLY row groups containing candidates
-    # (reader.urls_for — test-asserted row-group-exact). The previous
-    # shape spent a whole Spark job (scan + broadcast join + rank window
-    # + sort, 4 stages) on the same pruned reads; at 10^12 docs both
-    # touch identical row groups, but the join pays its fixed driver/
-    # scheduling cost at every parallelism level — measured ~3 s of the
-    # 24 s 4N wall on the 2M scaling workload. Final ranking of a
-    # driver-sized set is numpy work. (Reference anchor: esindex.go's
-    # per-doc GET — point lookups don't become cluster jobs.)
+    # boundary ties)); its urls come from the serving reader's
+    # sidecar-backed interval-index stabs, reading ONLY docmap row groups
+    # containing candidates (reader.urls_for — test-asserted
+    # row-group-exact). A Spark join here paid ~3 s of fixed cost on the
+    # 2M-doc scaling workload for the same pruned reads.
     last_batch_timings["candidates"] = len(cand_rows)
     reader = _batch_reader(index_dir)
     urls = reader.urls_for(
@@ -1233,6 +1228,4 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
         kq = vals[0][2]
         for rank, (neg_s, url, _) in enumerate(vals[:kq], start=1):
             out_rows.append((qid, rank, url, -neg_s))
-    return spark.createDataFrame(
-        out_rows, "query_id int, rank int, doc_url string, score double"
-    )
+    return _result_df(spark, out_rows)

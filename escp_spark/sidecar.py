@@ -359,10 +359,16 @@ def load_rg_sidecar(index_dir: str, kind: str,
 
             # doc_lo/doc_hi load as NULLABLE Int64 (not float64-with-NaN)
             # so doc ids stay exact past 2^53; legacy double-typed
-            # sidecars simply come back float64 as before.
-            pdf = pads.dataset(shards, format="parquet").to_table().to_pandas(
-                types_mapper={pa.int64(): pd.Int64Dtype()}.get
-            )
+            # sidecars simply come back float64 as before. The mapping
+            # is scoped to those two columns: payload_bytes (never null)
+            # stays plain int64.
+            tbl = pads.dataset(shards, format="parquet").to_table()
+            ids = [c for c in ("doc_lo", "doc_hi") if c in tbl.column_names]
+            pdf = tbl.drop_columns(ids).to_pandas()
+            for c in ids:
+                pdf[c] = tbl.column(c).to_pandas(
+                    types_mapper={pa.int64(): pd.Int64Dtype()}.get
+                )
         except Exception:
             return None
     if len(pdf) != meta["n_rows"]:

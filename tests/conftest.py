@@ -83,3 +83,23 @@ def oracle_docs(tiny_corpus):
     t = t.sort_values(["url", "warc_ts", "tie"], ascending=[True, False, False])
     t = t.drop_duplicates("url", keep="first")
     return dict(zip(t["url"], t["text"]))
+
+
+@pytest.fixture()
+def batch_sides(monkeypatch):
+    """Iterate a batch check over both sides of the batch path's switch:
+    the default ``_BIG_MATCHED_POSTINGS`` (a small batch is scored on the
+    driver by the serving scorer) and -1 (every batch takes the
+    distributed Spark cut). On a test-sized index only the forced side
+    reaches the Spark cut, so a check run on the default alone would
+    compare the serving scorer with itself."""
+    import escp_spark.query as Q
+
+    default = Q._BIG_MATCHED_POSTINGS
+
+    def sides():
+        for side, switch in (("driver", default), ("spark", -1)):
+            monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", switch)
+            yield side
+
+    return sides

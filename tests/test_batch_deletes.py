@@ -38,7 +38,8 @@ def batch_idx(spark, tiny_corpus, tmp_path):
     return idx
 
 
-def test_batch_soft_delete_hides_docs_both_paths(spark, batch_idx):
+def test_batch_soft_delete_hides_docs_both_paths(spark, batch_idx,
+                                                 batch_sides):
     before = search_topk(batch_idx, QUERIES)
     assert before
     victims = sorted({r["doc_url"] for r in before})[:3]
@@ -53,10 +54,11 @@ def test_batch_soft_delete_hides_docs_both_paths(spark, batch_idx):
     }
     assert survivors_before <= {(r["query_id"], r["doc_url"]) for r in after}
 
-    batch = search_topk_spark(spark, batch_idx, QUERIES).collect()
-    assert not {r.doc_url for r in batch} & set(victims)
-    assert sorted((r.query_id, r.rank, r.doc_url, round(r.score, 9))
-                  for r in batch) == sorted(_rows(after))
+    for side in batch_sides():
+        batch = search_topk_spark(spark, batch_idx, QUERIES).collect()
+        assert not {r.doc_url for r in batch} & set(victims), side
+        assert sorted((r.query_id, r.rank, r.doc_url, round(r.score, 9))
+                      for r in batch) == sorted(_rows(after)), side
 
 
 def test_batch_compact_purges_and_matches_fresh_build(spark, tiny_corpus,
@@ -113,7 +115,8 @@ def test_batch_compact_purges_and_matches_fresh_build(spark, tiny_corpus,
 
 def test_delete_after_compact_exact_on_spanning_blocks(spark, tiny_corpus,
                                                        batch_idx,
-                                                       oracle_docs):
+                                                       oracle_docs,
+                                                       batch_sides):
     """Compact FIRST (producing consolidated spanning blocks), then
     delete: the tombstone mask inside the spanning-block decode
     (query._prune_and_score step 0) must stay exact — both paths equal
@@ -145,6 +148,7 @@ def test_delete_after_compact_exact_on_spanning_blocks(spark, tiny_corpus,
         for (_, s), (_, es) in zip(mine, live):
             assert s == pytest.approx(es, abs=1e-6)
 
-    batch = search_topk_spark(spark, batch_idx, QUERIES).collect()
-    assert sorted((r.query_id, r.rank, r.doc_url, round(r.score, 9))
-                  for r in batch) == sorted(_rows(after))
+    for side in batch_sides():
+        batch = search_topk_spark(spark, batch_idx, QUERIES).collect()
+        assert sorted((r.query_id, r.rank, r.doc_url, round(r.score, 9))
+                      for r in batch) == sorted(_rows(after)), side

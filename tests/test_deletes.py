@@ -64,7 +64,7 @@ def streamed_idx(spark, streamed_src, tmp_path):
     return idx
 
 
-def test_soft_delete_hides_docs_both_paths(spark, streamed_idx):
+def test_soft_delete_hides_docs_both_paths(spark, streamed_idx, batch_sides):
     before = search_topk(streamed_idx, QUERIES)
     assert before
     victims = sorted({r["doc_url"] for r in before})[:3]
@@ -83,11 +83,12 @@ def test_soft_delete_hides_docs_both_paths(spark, streamed_idx):
     after_set = {(r["query_id"], r["doc_url"]) for r in after}
     assert survivors_before <= after_set
 
-    batch = search_topk_spark(spark, streamed_idx, QUERIES).collect()
-    assert not {r.doc_url for r in batch} & set(victims)
-    # Serving and batch agree on the soft-deleted index.
-    assert sorted((r.query_id, r.rank, r.doc_url, round(r.score, 9))
-                  for r in batch) == sorted(_rows(after))
+    for side in batch_sides():
+        batch = search_topk_spark(spark, streamed_idx, QUERIES).collect()
+        assert not {r.doc_url for r in batch} & set(victims), side
+        # Serving and batch agree on the soft-deleted index.
+        assert sorted((r.query_id, r.rank, r.doc_url, round(r.score, 9))
+                      for r in batch) == sorted(_rows(after)), side
 
 
 def test_long_lived_reader_sees_delete(spark, streamed_idx):

@@ -55,29 +55,68 @@ def test_serving_path_rank_identical(built_index, oracle_results):
     _assert_rank_identical(rows, oracle_results)
 
 
-def test_spark_batch_path_rank_identical(spark, built_index, oracle_results):
-    index_dir, _ = built_index
+def _assert_batch_rank_identical(spark, index_dir, oracle_results):
     df = search_topk_spark(spark, index_dir, reference_queries())
     rows = [r.asDict() for r in df.collect()]
+    assert [(r["query_id"], r["rank"]) for r in rows] == sorted(
+        (r["query_id"], r["rank"]) for r in rows
+    )
     _assert_rank_identical(rows, oracle_results)
+
+
+def test_spark_batch_path_rank_identical(spark, built_index, oracle_results):
+    """At the default switch a test-sized batch is scored on the driver by
+    the serving scorer; it is rank-identical to the exhaustive oracle."""
+    index_dir, _ = built_index
+    _assert_batch_rank_identical(spark, index_dir, oracle_results)
 
 
 def test_spark_batch_large_index_strategy_rank_identical(
     spark, built_index, oracle_results, monkeypatch
 ):
-    """The batch path picks its cut strategy by the batch's matched work
-    (salted-rank one-job cut below _BIG_MATCHED_POSTINGS; decode
-    rebalance + value-count threshold above). The default tests exercise
-    the small side; force the BIG-batch shapes on the same tiny index
-    and assert the exhaustive-oracle rank identity holds there too — the
-    two strategies must be output-identical at every scale."""
+    """The batch path picks its strategy by the batch's matched work
+    (driver-side serving scorer at or below _BIG_MATCHED_POSTINGS; decode
+    rebalance + value-count threshold cut above). Force the distributed
+    side on the same tiny index and assert the exhaustive-oracle rank
+    identity holds there too — the two sides must be output-identical at
+    every scale."""
     import escp_spark.query as Q
 
     monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", -1)
     index_dir, _ = built_index
-    df = search_topk_spark(spark, index_dir, reference_queries())
-    rows = [r.asDict() for r in df.collect()]
-    _assert_rank_identical(rows, oracle_results)
+    _assert_batch_rank_identical(spark, index_dir, oracle_results)
+
+
+def test_batch_path_spark_jobs_by_switch_side(spark, built_index,
+                                              batch_sides):
+    """A batch at or below the switch starts no Spark job, collect of its
+    result included; a batch forced above it runs the distributed cut.
+    Both sides fill the phase telemetry the benchmark reads."""
+    import escp_spark.query as Q
+
+    index_dir, _ = built_index
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for side in batch_sides():
+            Q.last_batch_timings.clear()
+            group = f"batch_side_{side}"
+            sc.setJobGroup(group, group)
+            rows = search_topk_spark(
+                spark, index_dir, reference_queries()
+            ).collect()
+            jobs[side] = sc.statusTracker().getJobIdsForGroup(group)
+            assert rows
+            assert {"plan", "score", "cut", "candidates"} <= set(
+                Q.last_batch_timings
+            ), side
+            assert Q.last_batch_timings["candidates"] >= len(rows), side
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs["driver"] == []
+    assert len(jobs["spark"]) >= 1
+    assert Q.last_batch_timings["cut"] > 0.0
 
 
 def test_extraction_byte_identical(spark, tiny_corpus):
@@ -126,26 +165,31 @@ def test_docids_unique_and_bucketed(spark, built_index):
     assert bad == 0
 
 
-def test_spark_batch_path_small_k_bounded_topk(spark, built_index):
-    """The partition-local top-k cut (query.py local_topk) is rank-safe:
-    small k on a hot term — where the cut actually discards candidates —
-    must stay identical to the serving path, including boundary ties
-    (the cut keeps score >= kth, so (score desc, url asc) stays exact)."""
+def test_spark_batch_path_small_k_bounded_topk(spark, built_index,
+                                              batch_sides):
+    """The batch path's tie-complete top-k cut is rank-safe on both sides
+    of its switch (the value-count threshold cut in
+    query.search_topk_spark; the serving scorer's kth-score cut in
+    query._serve_topk): small k on a hot term — where the cut actually
+    discards candidates — must stay identical to the serving path,
+    including boundary ties (the cut keeps score >= kth, so (score desc,
+    url asc) stays exact)."""
     index_dir, _ = built_index
     qs = [
         {"query_id": 0, "query_text": "t00000", "k": 1},
         {"query_id": 1, "query_text": "t00001 t00002", "k": 2},
         {"query_id": 2, "query_text": "t00000 t00003", "k": 3},
     ]
-    got = {
-        (r.query_id, r.rank): (r.doc_url, round(r.score, 6))
-        for r in search_topk_spark(spark, index_dir, qs).collect()
-    }
     exp = {
         (r["query_id"], r["rank"]): (r["doc_url"], round(r["score"], 6))
         for r in search_topk(index_dir, qs)
     }
-    assert got == exp and got
+    for side in batch_sides():
+        got = {
+            (r.query_id, r.rank): (r.doc_url, round(r.score, 6))
+            for r in search_topk_spark(spark, index_dir, qs).collect()
+        }
+        assert got == exp and got, side
 
 
 def test_merge_consolidates_tail_blocks(spark, built_index):
@@ -232,6 +276,7 @@ def test_murmur3_matches_spark_hash(spark):
     Spark's F.hash for int keys — a mismatch only costs balance, never
     correctness, but then the planner would be guessing."""
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from escp_spark.build import _balanced_shuffle_partitions, _murmur3_int32
 
@@ -243,5 +288,16 @@ def test_murmur3_matches_spark_hash(spark):
     # The planner never lowers the partition count and never exceeds 3x.
     for nb, ng, p in ((64, 2, 32), (8, 2, 32), (16, 4, 8)):
         groups = [[b for b in range(nb) if b % ng == g] for g in range(ng)]
-        n = _balanced_shuffle_partitions(groups, p)
+        n = _balanced_shuffle_partitions(groups, p, T.IntegerType())
         assert p <= n <= 3 * p
+
+
+def test_balanced_shuffle_planner_rejects_long_key():
+    """The planner models Spark's hashInt; a long bucket column is hashed
+    with hashLong, so planning for it must fail loudly, not mis-balance."""
+    from pyspark.sql import types as T
+
+    from escp_spark.build import _balanced_shuffle_partitions
+
+    with pytest.raises(TypeError, match="int key"):
+        _balanced_shuffle_partitions([[0, 2], [1, 3]], 4, T.LongType())

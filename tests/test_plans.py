@@ -47,7 +47,8 @@ def test_docmap_lookup_pushdown(spark, built_index):
     assert_pushed_filters(df, "In(doc_id")
 
 
-def test_batch_path_result_is_local_no_docmap_scan(spark, built_index):
+def test_batch_path_result_is_local_no_docmap_scan(spark, built_index,
+                                                   batch_sides):
     """The batch path's url resolution must never be a full docmap probe —
     at design scale the docmap has one row per corpus doc (VERDICT r02
     wrong-#3). Since round 5 it is not a Spark job AT ALL: the
@@ -61,17 +62,18 @@ def test_batch_path_result_is_local_no_docmap_scan(spark, built_index):
     from escp_spark.plans import explain_str
     from escp_spark.query import search_topk_spark
 
-    Q._batch_reader_cache.clear()
-    df = search_topk_spark(
-        spark, built_index[0],
-        [{"query_id": 0, "query_text": "t00000 t00005", "k": 3}],
-    )
-    plan = explain_str(df)
-    assert "Scan parquet" not in plan, plan
-    rows = df.collect()
-    assert 0 < len(rows) <= 3
-    reader = Q._batch_reader_cache[0][1]
-    assert len(reader._dm_cache._d) <= len(rows)
+    for side in batch_sides():
+        Q._batch_reader_cache.clear()
+        df = search_topk_spark(
+            spark, built_index[0],
+            [{"query_id": 0, "query_text": "t00000 t00005", "k": 3}],
+        )
+        plan = explain_str(df)
+        assert "Scan parquet" not in plan, (side, plan)
+        rows = df.collect()
+        assert 0 < len(rows) <= 3, side
+        reader = Q._batch_reader_cache[0][1]
+        assert len(reader._dm_cache._d) <= len(rows), side
 
 
 def test_no_per_row_python_anywhere(spark, built_index, tiny_corpus):

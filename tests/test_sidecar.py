@@ -239,6 +239,28 @@ def test_distributed_sidecar_write_matches_driver_scan(spark, built_index):
         )
 
 
+def test_sidecar_loader_dtypes(built_index):
+    """Only the doc-id range loads as nullable Int64 (postings rows carry
+    no doc range, so those columns hold nulls); payload_bytes is never
+    null and stays plain int64."""
+    import numpy as np
+    import pandas as pd
+
+    from escp_spark.query import IndexReader
+    from escp_spark.sidecar import load_rg_sidecar
+
+    d, _ = built_index
+    reader = IndexReader(d)
+    for kind, files in (("postings", reader._pfiles),
+                        ("docmap", reader._dm_files)):
+        pdf = load_rg_sidecar(d, kind, files)
+        assert pdf is not None
+        assert pdf["doc_lo"].dtype == pd.Int64Dtype(), kind
+        assert pdf["doc_hi"].dtype == pd.Int64Dtype(), kind
+        assert pdf["payload_bytes"].dtype == np.dtype("int64"), kind
+    assert pdf["doc_lo"].notna().all()  # docmap rows carry exact ids
+
+
 def test_republish_refreshes_sidecar(spark, stream_source, tmp_path):
     """Streaming finalize + compaction keep the sidecar current: after
     each republish a fresh reader takes the sidecar path."""
@@ -287,8 +309,12 @@ def test_batch_post_bytes_falls_back_to_sidecar(spark, built_index,
     import escp_spark.build as B
     from escp_spark.oracle import NaiveIndex
 
+    import escp_spark.query as Q
+
     d, _ = built_index
     monkeypatch.setattr(B, "_dir_bytes", lambda path: 0)
+    # Only the distributed side sizes a postings scan.
+    monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", -1)
 
     from escp_spark.sidecar import sidecar_payload_bytes
 
