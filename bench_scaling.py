@@ -616,13 +616,13 @@ window; raw stage rows recorded in the round-4 session):
   that drift was host variance, now mitigated in bench.py by min-of-3 +
   adaptive burst repeats.
 - Suspect (b) (extract double-materialization) was real and is fixed:
-  extraction now runs inside the wide dedup pass by default
-  (`extract_mode="wide"` — staging stores text once; "fused"/"staged"
-  remain selectable). Same-session A/B at sf0.1 (sequential, warming
-  favors later rows): wide 12.3 s, fused 11.2 s, staged 10.5 s — the
-  three modes are within host noise at this scale; "wide" is the
-  default because it writes the fewest bytes (text ≤ html, one staging
-  copy instead of two), which is what matters at 100 TB.
+  extraction now runs inside the wide dedup pass (staging stores text
+  once; the "fused"/"staged" placements were later removed).
+  Same-session A/B at sf0.1 (sequential, warming favors later rows):
+  wide 12.3 s, fused 11.2 s, staged 10.5 s — the three modes are
+  within host noise at this scale; "wide" was kept because it writes
+  the fewest bytes (text ≤ html, one staging copy instead of two),
+  which is what matters at 100 TB.
 - Fixed-job-count cuts: merge placement computes hot list + range
   bounds driver-side from one limit-collect for vocabularies ≤1M terms
   (distributed prefix-sum path above that, byte-identical — tested);

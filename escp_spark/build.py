@@ -34,12 +34,9 @@ Scale notes (the 10^12-doc design point):
   docid assignment is a window over the already-clustered data.
 - The dedup shuffle is materialized once to staging (stage ``shuffle``,
   partitioned by checkpoint group). The CPU-heavy html→text extraction
-  runs inside that wide pass by default (``extract_mode="wide"`` —
-  staging stores text, the corpus is read+written exactly once); see
-  build_index's docstring for the "fused"/"staged" placements that
-  trade bytes for finer extraction-resume granularity. A mid-segment
-  failure never recomputes the corpus-wide shuffle, and per-group
-  builds re-read a pruned scan.
+  runs inside that wide pass, so staging stores text and the corpus is
+  read and written exactly once. A mid-segment failure never recomputes
+  the corpus-wide shuffle, and per-group builds re-read a pruned scan.
 - Segment build is ``applyInPandas`` per bucket: memory per task is one
   bucket's text + postings; choose ``n_buckets`` ≈ corpus_bytes /
   (executor_mem / tasks_per_executor). Buckets are hash-uniform, so no
@@ -417,10 +414,11 @@ _CORPUS_SCAN_CONF = {
     "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
 }
 
-# Group-scoped staging reads (fused extract path): staging group dirs
-# hold up to shuffle-partitions smallish files; small splits + low open
-# cost keep the Arrow-UDF extraction at full core parallelism instead
-# of bin-packing the whole group into a couple of tasks.
+# Group-scoped staging reads (segment stage): staging group dirs hold
+# up to shuffle-partitions smallish files; small splits + low open cost
+# keep the group scan and its bucket-shuffle write at full core
+# parallelism instead of bin-packing the whole group into a couple of
+# tasks.
 _GROUP_SCAN_CONF = {
     "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
     "spark.sql.files.openCostInBytes": str(1 * 1024 * 1024),
@@ -817,8 +815,6 @@ def merge_segments(
     n_buckets: int,
     max_segments: int,
     merge_parallelism: int,
-    physical: str = "range",
-    consolidate: bool = True,
     hot_term_blocks: int | None = None,
     row_group_bytes: int = POSTINGS_ROW_GROUP_BYTES,
 ) -> dict:
@@ -849,18 +845,13 @@ def merge_segments(
     pruning window coarsens from bucket to segment — a segment is a
     complete, contiguous docid range (window id = doc_id >> prune_shift),
     so the serving path's exact-θ invariant is preserved at prune_shift =
-    DOC_BUCKET_SHIFT + seg_shift. With consolidate=False (streaming
-    finalize, where modulo segment placement breaks contiguity) every
-    block stays inside one bucket and prune_shift stays DOC_BUCKET_SHIFT.
+    DOC_BUCKET_SHIFT + seg_shift.
 
-    physical="range" (default): clusters whole terms per output file so a
-    query touches ONE file per (cold term, segment), and — decisive for
-    the metadata-first serving path — each row group's [term-min,
-    term-max] footer range is NARROW, so per-query metadata reads touch
-    only the query terms' row groups. (physical="narrow" avoids the
-    block shuffle but leaves every file spanning the whole vocabulary,
-    which makes every row group a stats-candidate for every query —
-    measured 5-8× worse serving p50.) Placement is driven by the B8
+    Placement clusters whole terms per output file so a query touches
+    ONE file per (cold term, segment), and — decisive for the
+    metadata-first serving path — each row group's [term-min, term-max]
+    footer range is NARROW, so per-query metadata reads touch only the
+    query terms' row groups. Placement is driven by the B8
     df-stats pass (block counts per term from level-0 metadata), NOT by
     repartitionByRange's sampling job. Terms above ``hot_term_blocks``
     (default 4096 blocks — an absolute work-unit bound, see the inline
@@ -885,19 +876,16 @@ def merge_segments(
         )
         .drop("bucket", "group")
     )
-    if consolidate:
-        full = base.filter(F.col("n") == BLOCK_SIZE).select(*_MERGED_COLS)
-        tails = base.filter(F.col("n") < BLOCK_SIZE)
-        n_tgrp = max(merge_parallelism * 2, 8)
-        # All tails of a term hash to ONE partition (repartition on the
-        # term column), so the Arrow kernel sees every fragment of each
-        # (segment, term) together.
-        consolidated = tails.select(*_MERGED_COLS).repartition(
-            n_tgrp, "term"
-        ).mapInArrow(_consolidate_tails_arrow, MERGED_SCHEMA)
-        merged = full.unionByName(consolidated)
-    else:
-        merged = base.select(*_MERGED_COLS)
+    full = base.filter(F.col("n") == BLOCK_SIZE).select(*_MERGED_COLS)
+    tails = base.filter(F.col("n") < BLOCK_SIZE)
+    n_tgrp = max(merge_parallelism * 2, 8)
+    # All tails of a term hash to ONE partition (repartition on the
+    # term column), so the Arrow kernel sees every fragment of each
+    # (segment, term) together.
+    consolidated = tails.select(*_MERGED_COLS).repartition(
+        n_tgrp, "term"
+    ).mapInArrow(_consolidate_tails_arrow, MERGED_SCHEMA)
+    merged = full.unionByName(consolidated)
     # ONE aggregation pass over the level-0 block metadata feeds the
     # placement derivations (hot list, range bounds) AND the term
     # dictionary (df = Σn, cf = Σsum_tf — invariant under consolidation).
@@ -906,98 +894,94 @@ def merge_segments(
         F.sum("n").alias("df"),
         F.sum("sum_tf").alias("cf"),
     )
-    total_tokens: int
-    if physical == "range":
-        # A cold term must be a BOUNDED work unit for every consumer —
-        # one merge task, one batch-scoring task (its whole list lands in
-        # one file = one input split), one serving metadata read. The cut
-        # is therefore absolute work size (4096 blocks ≈ 0.5M postings ≈
-        # ~5 MB payload), not a fraction of the corpus: the old
-        # total/P/2 cut classified a 1M-posting term as cold at 2M docs,
-        # and its single-file placement made one straggler task decode
-        # the hottest query term's entire list in the batch path
-        # (measured: query N→4N scaling 0.36). The hot list stays
-        # driver-sized via top-(4P): residual terms beyond it are at
-        # most as big as the (4P+1)-th hottest — under any Zipf-ish law
-        # the fat head is covered.
-        hot_cut = hot_term_blocks or 4096
-        n_top = 4 * max(merge_parallelism, 1)
-        # Cold terms get CONTIGUOUS, block-balanced term ranges (not a
-        # hash): a query term then lives in ONE file per segment and the
-        # metadata-first serving reader's footer check prunes every other
-        # FILE outright — with a hash each file spans the whole
-        # vocabulary and a tiny index reads every row group's metadata
-        # per query (measured 5-8× worse serving p50). Range boundaries
-        # come from cumulative block counts over the term-sorted stats.
-        #
-        # Small-vocab fast path (≤ _PLACEMENT_DRIVER_MAX_TERMS): ONE
-        # limit-collect job, hot list + bounds in pandas on the driver —
-        # the fixed cost of the distributed derivations (~4 extra jobs)
-        # was a measurable slice of the sf0.1 merge stage. limit(N+1)
-        # returning ≤ N rows proves we saw the whole vocabulary; above
-        # the cap, the distributed two-pass prefix sum (_cold_term_bounds
-        # — byte-identical, tested) handles 10^9+-term vocabularies with
-        # no single-partition step.
+    # A cold term must be a BOUNDED work unit for every consumer —
+    # one merge task, one batch-scoring task (its whole list lands in
+    # one file = one input split), one serving metadata read. The cut
+    # is therefore absolute work size (4096 blocks ≈ 0.5M postings ≈
+    # ~5 MB payload), not a fraction of the corpus: the old
+    # total/P/2 cut classified a 1M-posting term as cold at 2M docs,
+    # and its single-file placement made one straggler task decode
+    # the hottest query term's entire list in the batch path
+    # (measured: query N→4N scaling 0.36). The hot list stays
+    # driver-sized via top-(4P): residual terms beyond it are at
+    # most as big as the (4P+1)-th hottest — under any Zipf-ish law
+    # the fat head is covered.
+    hot_cut = hot_term_blocks or 4096
+    n_top = 4 * max(merge_parallelism, 1)
+    # Cold terms get CONTIGUOUS, block-balanced term ranges (not a
+    # hash): a query term then lives in ONE file per segment and the
+    # metadata-first serving reader's footer check prunes every other
+    # FILE outright — with a hash each file spans the whole
+    # vocabulary and a tiny index reads every row group's metadata
+    # per query (measured 5-8× worse serving p50). Range boundaries
+    # come from cumulative block counts over the term-sorted stats.
+    #
+    # Small-vocab fast path (≤ _PLACEMENT_DRIVER_MAX_TERMS): ONE
+    # limit-collect job, hot list + bounds in pandas on the driver —
+    # the fixed cost of the distributed derivations (~4 extra jobs)
+    # was a measurable slice of the sf0.1 merge stage. limit(N+1)
+    # returning ≤ N rows proves we saw the whole vocabulary; above
+    # the cap, the distributed two-pass prefix sum (_cold_term_bounds
+    # — byte-identical, tested) handles 10^9+-term vocabularies with
+    # no single-partition step.
+    with _detail("merge_placement"):
+        rows = stats.limit(_PLACEMENT_DRIVER_MAX_TERMS + 1).collect()
+    if len(rows) <= _PLACEMENT_DRIVER_MAX_TERMS:
         with _detail("merge_placement"):
-            rows = stats.limit(_PLACEMENT_DRIVER_MAX_TERMS + 1).collect()
-        if len(rows) <= _PLACEMENT_DRIVER_MAX_TERMS:
-            with _detail("merge_placement"):
-                spdf = pd.DataFrame(
-                    {"term": [r.term for r in rows],
-                     "nblocks": [r.nblocks for r in rows],
-                     "df": [r.df for r in rows],
-                     "cf": [r.cf for r in rows]}
-                )
-                hot_pdf = (
-                    spdf[spdf["nblocks"] > hot_cut]
-                    .sort_values(["nblocks", "term"], ascending=[False, True])
-                    .head(n_top)
-                )
-                hot_terms = hot_pdf["term"].tolist()
-                bounds = _bounds_pandas(
-                    spdf[~spdf["term"].isin(hot_terms)], merge_parallelism
-                )
-            with _detail("merge_dict"):
-                total_tokens = _write_dictionary(
-                    spark, layout, None, driver_pdf=spdf
-                )
-        else:
-            stats = stats.persist()
-            with _detail("merge_placement"):
-                hot_terms = [
-                    r.term
-                    for r in stats.filter(F.col("nblocks") > hot_cut)
-                    .orderBy(F.col("nblocks").desc(), "term")
-                    .limit(n_top)
-                    .collect()
-                ]
-                cold = (
-                    stats.filter(~F.col("term").isin(hot_terms))
-                    if hot_terms else stats
-                )
-                bounds = _cold_term_bounds(cold, merge_parallelism)
-            with _detail("merge_dict"):
-                total_tokens = _write_dictionary(spark, layout, stats)
-            stats.unpersist()
-        pos = F.shiftright(F.col("doc_id_lo"), DOC_BUCKET_SHIFT)
-        barr = (
-            F.array(*[F.lit(b) for b in bounds]) if bounds else F.array(F.lit(""))
-        )
-        cold_part = F.greatest(
-            F.size(F.filter(barr, lambda b: b <= F.col("term"))) - F.lit(1),
-            F.lit(0),
-        )
-        mpart = F.when(
-            F.col("term").isin(hot_terms) if hot_terms else F.lit(False),
-            F.pmod(pos, F.lit(merge_parallelism)),
-        ).otherwise(F.lit(merge_parallelism) + cold_part)
-        merged = (
-            merged.withColumn("mpart", mpart)
-            .repartition(merge_parallelism + max(len(bounds), 1), "mpart")
-            .drop("mpart")
-        )
+            spdf = pd.DataFrame(
+                {"term": [r.term for r in rows],
+                 "nblocks": [r.nblocks for r in rows],
+                 "df": [r.df for r in rows],
+                 "cf": [r.cf for r in rows]}
+            )
+            hot_pdf = (
+                spdf[spdf["nblocks"] > hot_cut]
+                .sort_values(["nblocks", "term"], ascending=[False, True])
+                .head(n_top)
+            )
+            hot_terms = hot_pdf["term"].tolist()
+            bounds = _bounds_pandas(
+                spdf[~spdf["term"].isin(hot_terms)], merge_parallelism
+            )
+        with _detail("merge_dict"):
+            total_tokens = _write_dictionary(
+                spark, layout, None, driver_pdf=spdf
+            )
     else:
-        total_tokens = _write_dictionary(spark, layout, stats)
+        stats = stats.persist()
+        with _detail("merge_placement"):
+            hot_terms = [
+                r.term
+                for r in stats.filter(F.col("nblocks") > hot_cut)
+                .orderBy(F.col("nblocks").desc(), "term")
+                .limit(n_top)
+                .collect()
+            ]
+            cold = (
+                stats.filter(~F.col("term").isin(hot_terms))
+                if hot_terms else stats
+            )
+            bounds = _cold_term_bounds(cold, merge_parallelism)
+        with _detail("merge_dict"):
+            total_tokens = _write_dictionary(spark, layout, stats)
+        stats.unpersist()
+    pos = F.shiftright(F.col("doc_id_lo"), DOC_BUCKET_SHIFT)
+    barr = (
+        F.array(*[F.lit(b) for b in bounds]) if bounds else F.array(F.lit(""))
+    )
+    cold_part = F.greatest(
+        F.size(F.filter(barr, lambda b: b <= F.col("term"))) - F.lit(1),
+        F.lit(0),
+    )
+    mpart = F.when(
+        F.col("term").isin(hot_terms) if hot_terms else F.lit(False),
+        F.pmod(pos, F.lit(merge_parallelism)),
+    ).otherwise(F.lit(merge_parallelism) + cold_part)
+    merged = (
+        merged.withColumn("mpart", mpart)
+        .repartition(merge_parallelism + max(len(bounds), 1), "mpart")
+        .drop("mpart")
+    )
     merged = merged.sortWithinPartitions("segment", "term", "doc_id_lo")
     with _detail("merge_write"):
         (
@@ -1014,7 +998,7 @@ def merge_segments(
             .parquet(layout.postings)
         )
     return {
-        "prune_shift": DOC_BUCKET_SHIFT + (seg_shift if consolidate else 0),
+        "prune_shift": DOC_BUCKET_SHIFT + seg_shift,
         "total_tokens": total_tokens,
     }
 
@@ -1022,50 +1006,6 @@ def merge_segments(
 # --------------------------------------------------------------------------
 # Orchestration
 # --------------------------------------------------------------------------
-
-def _run_segment_groups(spark, pending, run_group, fail_after_groups,
-                        concurrent_groups):
-    """Execute the pending segment groups sequentially, or — on request —
-    from a small thread pool to overlap per-group driver gaps (job setup,
-    parquet commit, ledger write, FS walk): groups are independent (their
-    writes target disjoint group-scoped dirs; ledger commits are atomic
-    uuid-named files), and on a real cluster the scheduler caps
-    concurrent tasks at total cores while the per-group driver barrier is
-    the growing cost as executors scale. Default is OFF (sequential): on
-    this sandbox's microVM host, concurrent Arrow-UDF stages page-fault
-    together and anti-scale 5× (measured — see BENCH.md environment
-    note), and the same is true of any memory-bound single-node
-    deployment."""
-    if fail_after_groups is not None:
-        # Deterministic kill switch for resume tests: run groups in
-        # order, die after exactly N commits.
-        for groups_run, g in enumerate(pending, 1):
-            run_group(g)
-            if groups_run >= fail_after_groups:
-                raise SimulatedFailure(
-                    f"killed after {groups_run} groups (test)"
-                )
-    elif concurrent_groups > 1 and len(pending) > 1:
-        from concurrent.futures import (
-            FIRST_EXCEPTION, ThreadPoolExecutor, wait,
-        )
-
-        workers = min(concurrent_groups, len(pending))
-        with ThreadPoolExecutor(max_workers=workers) as ex:
-            futs = [ex.submit(run_group, g) for g in pending]
-            done_f, not_done = wait(futs, return_when=FIRST_EXCEPTION)
-            # Surface the FIRST failure promptly (not in submit order)
-            # and don't keep sibling groups running behind it: unstarted
-            # futures cancel; in-flight ones finish their idempotent
-            # group write harmlessly (ADVICE r02).
-            for f in not_done:
-                f.cancel()
-            for f in done_f:
-                f.result()  # re-raise
-    else:
-        for g in pending:
-            run_group(g)
-
 
 def build_index(
     spark: SparkSession,
@@ -1077,12 +1017,9 @@ def build_index(
     build_id: str = "build0",
     merge_parallelism: int | None = None,
     fail_after_groups: int | None = None,
-    fail_after_extract_groups: int | None = None,
     pages: DataFrame | None = None,
     source_filter: str | None = None,
-    concurrent_groups: int = 1,
     postings_row_group_bytes: int = POSTINGS_ROW_GROUP_BYTES,
-    extract_mode: str = "wide",
 ) -> dict:
     """Run (or resume) a full index build. Returns the published manifest.
 
@@ -1093,33 +1030,11 @@ def build_index(
     filter POSTed at esscroll.go:79-90 — index only the matching docs
     without pre-materializing a filtered corpus).
 
-    ``extract_mode`` places the html→text extraction (VERDICT r03 #1/#7:
-    round 3's separate materialized extract stage was a second staging
-    copy of the corpus, and its cost showed up directly in the headline
-    build time — measured per-stage in BENCH.md):
-
-    - ``"wide"`` (default): extraction runs inside the one wide pass —
-      staging stores TEXT, the corpus' html is read and written exactly
-      once, minimum total bytes. A failure during the wide pass redoes
-      it whole (dedup+extract are one stage), after it per-group resume
-      applies as usual.
-    - ``"fused"``: staging stores html; extraction re-runs inside each
-      group's segment stage (Catalyst prunes text out of the docmap job).
-      Wide-pass failures no longer redo extraction work, per-group
-      failures redo only that group's extraction. Costs reading html per
-      group instead of the (smaller) text.
-    - ``"staged"``: round-3 behavior — a separate per-group extract
-      stage materialized to staging with its own ledger commits; finest
-      resume granularity (a mid-group segment failure resumes AFTER
-      extraction), at 1× extra corpus write amplification. For
-      deployments where re-extracting one group is expensive.
+    ``fail_after_groups=N`` is the resume-test kill switch: the build
+    raises SimulatedFailure after exactly N segment-group commits of
+    this run (0 = right after the shuffle commit).
     """
     import hashlib
-
-    if fail_after_extract_groups is not None:
-        extract_mode = "staged"  # the kill switch targets that stage
-    if extract_mode not in ("wide", "fused", "staged"):
-        raise ValueError(f"unknown extract_mode {extract_mode!r}")
 
     layout = IndexLayout(index_dir, build_id)
     layout.ensure_dirs()
@@ -1128,11 +1043,10 @@ def build_index(
     # bucketing/grouping/filtering — key the ledger on input AND params
     # so a re-run with different n_buckets/n_groups/filter rebuilds
     # instead of silently mixing layouts.
-    # extract_mode changes what staging HOLDS (text vs html) — resume
-    # units are not interchangeable across modes.
+    # "xm=wide" names what staging holds (extracted text, not html).
     params = (
         f"nb={n_buckets}|ng={n_groups}|flt={source_filter or ''}"
-        f"|xm={extract_mode}"
+        "|xm=wide"
     )
     resume_key = (
         snapshot + "|" + hashlib.md5(params.encode()).hexdigest()[:12]
@@ -1152,11 +1066,10 @@ def build_index(
         _t0 = now
 
     shuffled_dir = os.path.join(layout.staging, "shuffled")
-    extracted_dir = os.path.join(layout.staging, "extracted")
 
     # ---- Stage "shuffle": the ONE wide pass — dedup shuffle + md5
-    # bucketing (+ extraction when extract_mode="wide") — materialized
-    # partitioned by checkpoint group. Its resumable unit is the whole
+    # bucketing + extraction — materialized partitioned by checkpoint
+    # group. Its resumable unit is the whole
     # shuffle (a shuffle either completes or doesn't). Staging write
     # amplification is 1× of the input or less (text < html) — the same
     # cost the reference pays bulk-writing every doc into the target
@@ -1168,28 +1081,23 @@ def build_index(
             # Catalyst pushes this predicate into the Parquet/Iceberg
             # scan (plan-asserted in tests/test_plans.py).
             pages = pages.filter(F.expr(source_filter))
-        # The corpus ``text`` column never survives the wide pass (every
-        # mode re-derives text from html via the byte-identical
-        # extractor), but the dedup aggregate's max_by struct would
+        # The corpus ``text`` column never survives the wide pass (text
+        # is re-derived from html via the byte-identical extractor), but the dedup aggregate's max_by struct would
         # otherwise carry it through the one wide exchange — drop it
         # BEFORE the aggregate so the shuffle ships html only (guide
         # §2.3 "project before the exchange"; ~45% fewer dedup-exchange
         # bytes on the bench corpus, where text ≈ html payload).
         pages = pages.drop("text")
+        # Extraction inside the wide pass: the Arrow UDF runs on the
+        # post-dedup stage tasks and staging stores text — the html is
+        # never written anywhere.
         shuffled = (
             dedup_last_write_wins(pages)
             .withColumn("bucket", bucket_expr(F.col("url"), n_buckets))
             .withColumn("grp", (F.col("bucket") % n_groups))
+            .withColumn("text", extract_text_udf(F.col("html")))
+            .select("url", "bucket", "grp", "text", "lang")
         )
-        if extract_mode == "wide":
-            # Extraction inside the wide pass: the Arrow UDF runs on the
-            # post-dedup stage tasks and staging stores text — the html
-            # is never written anywhere.
-            shuffled = shuffled.withColumn(
-                "text", extract_text_udf(F.col("html"))
-            ).select("url", "bucket", "grp", "text", "lang")
-        else:
-            shuffled = shuffled.select("url", "bucket", "grp", "html", "lang")
         with _scoped_conf(spark, _CORPUS_SCAN_CONF), _detail("shuffle_write"):
             shuffled.write.mode("overwrite").partitionBy("grp").parquet(
                 shuffled_dir
@@ -1254,88 +1162,18 @@ def build_index(
 
     _mark("shuffle")
 
-    # ---- Stage "extract" (opt-in, extract_stage=True): per-group
-    # Arrow-UDF html→text extraction materialized to staging with a
-    # ledger commit per group (the esscroll.go:129 per-page checkpoint
-    # analog at sub-group granularity). Default is FUSED extraction in
-    # the segment stage below — same per-group resume unit, no second
-    # staging copy of the corpus (VERDICT r03 #1/#7).
-    if extract_mode == "staged":
-        done_extract = committed_groups(spark, layout, "extract", resume_key)
-
-        def _extract_group(g: int) -> None:
-            part = spark.read.parquet(shuffled_dir).filter(F.col("grp") == g)
-            out_path = os.path.join(extracted_dir, f"grp={g}")
-            with _scoped_conf(spark, _GROUP_SCAN_CONF):
-                (
-                    part.withColumn("text", extract_text_udf(F.col("html")))
-                    .select("url", "bucket", "text", "lang")
-                    .write.mode("overwrite")
-                    .parquet(out_path)
-                )
-            _ledger_append(
-                spark,
-                layout,
-                [
-                    {
-                        "build_id": build_id,
-                        "partition_id": g,
-                        "stage": "extract",
-                        "status": "committed",
-                        "segment_path": out_path,
-                        "docs": int(grp_counts.get(g, 0)),
-                        "bytes": _dir_bytes(out_path),
-                        "input_snapshot": resume_key,
-                    }
-                ],
-            )
-            log.info(
-                "extract group %d committed: %d docs", g, grp_counts.get(g, 0)
-            )
-
-        pending_extract = [g for g in range(n_groups) if g not in done_extract]
-        if done_extract:
-            log.info(
-                "%d extract groups already committed — skipping (resume)",
-                len(done_extract),
-            )
-        for run_count, g in enumerate(pending_extract, 1):
-            _extract_group(g)
-            if (
-                fail_after_extract_groups is not None
-                and run_count >= fail_after_extract_groups
-            ):
-                raise SimulatedFailure(
-                    f"killed after {run_count} extract groups (test)"
-                )
-
-        _mark("extract")
-
     # ---- Stage "segment": per-group docmap + level-0 segment build,
-    # idempotent group-scoped writes, ledger commit per group. In the
-    # fused (default) path this stage also extracts: the docmap job
-    # never computes the UDF (Catalyst prunes the text column — it only
-    # needs url+bucket) and the segment job extracts on the group-scan
-    # tasks right before the bucket shuffle.
+    # idempotent group-scoped writes, ledger commit per group.
     done = committed_groups(spark, layout, "segment", resume_key)
 
     def _group_input(g: int) -> DataFrame:
-        if extract_mode == "staged":
-            return spark.read.parquet(extracted_dir).filter(F.col("grp") == g)
-        part = spark.read.parquet(shuffled_dir).filter(F.col("grp") == g)
-        if extract_mode == "wide":
-            return part.select("url", "bucket", "text", "lang")
-        return part.withColumn("text", extract_text_udf(F.col("html"))).select(
-            "url", "bucket", "text", "lang"
+        return (
+            spark.read.parquet(shuffled_dir).filter(F.col("grp") == g)
+            .select("url", "bucket", "text", "lang")
         )
 
     def _run_group(g: int) -> None:
         part = _group_input(g)
-        # Group-scan splits sized small (scoped conf set by the caller
-        # around this whole stage): staging group dirs hold many small
-        # files and the fused extraction runs on the scan tasks — the
-        # default 128 MB bin-packing would collapse a group to a couple
-        # of tasks and serialize the Arrow UDF.
         # docmap group files are written straight to their final location
         # (clustered by doc_id via the window's output order) — publish is
         # zero-copy, which matters when the docmap has 10^12 rows.
@@ -1379,8 +1217,7 @@ def build_index(
     if len(done):
         log.info("%d groups already committed — skipping (resume)", len(done))
     # One scope around the whole stage (not per group): identical values
-    # for every group, and concurrent_groups threads must not race the
-    # restore mid-plan. The shuffle-partition override spreads the
+    # for every group. The shuffle-partition override spreads the
     # per-bucket kernels 1-2 per task instead of the 3-4 balls-into-bins
     # worst bin (see _balanced_shuffle_partitions) — scoped to this
     # stage only; every other query keeps the session's sizing.
@@ -1402,9 +1239,10 @@ def build_index(
             )
         )
     with _scoped_conf(spark, seg_conf):
-        _run_segment_groups(
-            spark, pending, _run_group, fail_after_groups, concurrent_groups
-        )
+        for g in pending[:fail_after_groups]:  # None slices all
+            _run_group(g)
+    if fail_after_groups is not None and fail_after_groups <= len(pending):
+        raise SimulatedFailure(f"killed after {fail_after_groups} groups (test)")
 
     _mark("segment")
 

@@ -55,12 +55,6 @@ def main(argv=None):
     b.add_argument("--build-id", default="build0")
     b.add_argument("--filter", default=None,
                    help="SQL predicate pushed into the corpus scan")
-    b.add_argument("--extract-mode", default="wide",
-                   choices=("wide", "fused", "staged"),
-                   help="where html→text extraction runs: in the wide "
-                        "dedup pass (fewest bytes), fused into each "
-                        "group's segment stage, or as a separate "
-                        "checkpointed staging stage (finest resume)")
 
     di = sub.add_parser("diff")
     di.add_argument("index_a")
@@ -147,7 +141,7 @@ def main(argv=None):
                 spark, args.source, args.index_dir,
                 n_buckets=args.buckets, max_segments=args.maxsegs,
                 n_groups=args.groups, build_id=args.build_id,
-                source_filter=args.filter, extract_mode=args.extract_mode,
+                source_filter=args.filter,
             )
             from .build import _dir_bytes
             from .functions.fmt import iec_format

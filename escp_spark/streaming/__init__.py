@@ -1,7 +1,6 @@
 from .deletes import delete_urls, load_tombstones
 from .ingest import (
     compact_index,
-    compact_streamed_index,
     finalize_streamed_index,
     stream_ingest_once,
 )
@@ -10,7 +9,6 @@ __all__ = [
     "stream_ingest_once",
     "finalize_streamed_index",
     "compact_index",
-    "compact_streamed_index",
     "delete_urls",
     "load_tombstones",
 ]

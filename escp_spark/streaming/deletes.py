@@ -18,7 +18,7 @@ Lifecycle:
    excludes tombstoned urls from the append-only dedup, so a later
    micro-batch re-indexes the url under a fresh doc_id; the old doc_id
    stays tombstoned.
-4. ``compact_streamed_index`` PHYSICALLY purges: affected level-0
+4. ``compact_index`` PHYSICALLY purges: affected level-0
    blocks are decoded, filtered, and re-encoded (untouched blocks pass
    through by a doc_id-range check against the sorted tombstone array),
    the docmap drops tombstoned rows, stats are recomputed from the

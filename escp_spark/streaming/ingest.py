@@ -461,7 +461,7 @@ def finalize_streamed_index(spark: SparkSession, index_dir: str,
     the force-merge + refresh-restore lifecycle step (D3/D5). Cheap and
     epoch-incremental-friendly: modulo segment placement, no tail
     consolidation (fragmentation grows with epochs — run
-    ``compact_streamed_index`` periodically to reset it)."""
+    ``compact_index`` periodically to reset it)."""
     layout = IndexLayout(index_dir, build_id)
     # Segment assignment must not depend on a fixed bucket count (epochs
     # keep adding effective buckets), so merge with modulo placement.
@@ -579,8 +579,3 @@ def compact_index(spark: SparkSession, index_dir: str,
         # the anti-join verify resolves them correctly (conservative).
         clear_tombstones(index_dir)
     return manifest
-
-
-# Back-compat name: compaction was first wired for streamed indexes
-# only; the implementation is layout-agnostic (see compact_index).
-compact_streamed_index = compact_index

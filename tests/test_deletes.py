@@ -14,7 +14,7 @@ import pytest
 
 from escp_spark.query import search_topk, search_topk_spark
 from escp_spark.streaming import (
-    compact_streamed_index,
+    compact_index,
     delete_urls,
     finalize_streamed_index,
     load_tombstones,
@@ -167,7 +167,7 @@ def test_compact_purges_and_matches_fresh_build(spark, stream_source,
     tomb = load_tombstones(idx)
     assert tomb.size == 4
 
-    compact_streamed_index(spark, idx, max_segments=3)
+    compact_index(spark, idx, max_segments=3)
     assert load_tombstones(idx).size == 0, "tombstones not cleared"
 
     layout = IndexLayout(idx, "stream0")

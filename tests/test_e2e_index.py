@@ -225,7 +225,7 @@ def test_merge_consolidates_tail_blocks(spark, built_index):
 
 
 def test_range_merge_stats_driven_placement(spark, tiny_corpus, tmp_path):
-    """physical='range': placement driven by the B8 block-count stats —
+    """Range placement driven by the B8 block-count stats —
     hot terms spread across >= merge_parallelism/2 files (no straggler
     task/file), cold terms cluster into one file per (hash-group,
     segment), and rank identity survives the re-layout."""
@@ -242,7 +242,7 @@ def test_range_merge_stats_driven_placement(spark, tiny_corpus, tmp_path):
     layout = IndexLayout(d, "build0")
     P = 8
     merge_segments(spark, layout, n_buckets=8, max_segments=3,
-                   merge_parallelism=P, physical="range", hot_term_blocks=4)
+                   merge_parallelism=P, hot_term_blocks=4)
     p = spark.read.parquet(layout.postings)
     hot_files = (
         p.filter(F.col("term") == "t00000")

@@ -35,80 +35,51 @@ def _index_content(spark, index_dir, build_id="build0"):
 
 
 def test_resume_skips_committed_and_is_identical(spark, tiny_corpus, tmp_path):
-    """Kill after 2 of 4 groups; rerun; committed groups must NOT
+    """Kill right after the shuffle commit (0 groups) and after 2 of 4
+    groups; rerun; the committed shuffle and committed groups must NOT
     re-execute (file mtimes unchanged) and the final index must be
     content-identical to an uninterrupted build (esscroll.go:129 /
     293-294 realized)."""
-    d_interrupted = str(tmp_path / "idx_resume")
     d_clean = str(tmp_path / "idx_clean")
-
-    with pytest.raises(SimulatedFailure):
-        build_index(
-            spark, tiny_corpus, d_interrupted,
-            n_buckets=8, max_segments=3, n_groups=4, fail_after_groups=2,
-        )
-    layout = IndexLayout(d_interrupted, "build0")
-    led = read_ledger(spark, layout)
-    committed = led.filter(F.col("stage") == "segment").count()
-    assert committed == 2
-    before = _file_mtimes(layout.postings_l0)
-    assert before, "no level-0 segment files after partial build"
-
-    # Resume: remaining 2 groups run, committed 2 are skipped untouched.
-    build_index(
-        spark, tiny_corpus, d_interrupted,
-        n_buckets=8, max_segments=3, n_groups=4,
-    )
-    after = _file_mtimes(layout.postings_l0)
-    for p, m in before.items():
-        assert after.get(p) == m, f"committed segment file was rewritten: {p}"
-    assert read_ledger(spark, layout).filter(F.col("stage") == "segment").count() == 4
-
     build_index(spark, tiny_corpus, d_clean, n_buckets=8, max_segments=3, n_groups=4)
-    assert _index_content(spark, d_interrupted) == _index_content(spark, d_clean)
+    clean = _index_content(spark, d_clean)
 
+    for kill_after in (0, 2):
+        d_interrupted = str(tmp_path / f"idx_resume_{kill_after}")
+        with pytest.raises(SimulatedFailure):
+            build_index(
+                spark, tiny_corpus, d_interrupted,
+                n_buckets=8, max_segments=3, n_groups=4,
+                fail_after_groups=kill_after,
+            )
+        layout = IndexLayout(d_interrupted, "build0")
+        led = read_ledger(spark, layout)
+        assert led.filter(F.col("stage") == "shuffle").count() == 4
+        assert led.filter(F.col("stage") == "segment").count() == kill_after
+        shuffled_dir = os.path.join(layout.staging, "shuffled")
+        before_shuffle = _file_mtimes(shuffled_dir)
+        before = _file_mtimes(layout.postings_l0)
+        assert before_shuffle, "no staging files after the shuffle commit"
+        assert bool(before) == bool(kill_after), (
+            f"kill after {kill_after}: unexpected level-0 segment files"
+        )
 
-def test_resume_mid_extract_skips_committed_groups(spark, tiny_corpus, tmp_path):
-    """Kill after 1 of 4 EXTRACT groups (the most expensive stage);
-    rerun must skip the committed shuffle stage and the committed
-    extract group (files untouched), re-run only the remaining groups,
-    and produce an index content-identical to a clean build
-    (VERDICT r02 #3: extract-stage resume granularity)."""
-    d_interrupted = str(tmp_path / "idx_xresume")
-    d_clean = str(tmp_path / "idx_xclean")
-
-    with pytest.raises(SimulatedFailure):
+        # Resume: remaining groups run, committed work is skipped untouched.
         build_index(
             spark, tiny_corpus, d_interrupted,
             n_buckets=8, max_segments=3, n_groups=4,
-            fail_after_extract_groups=1,
         )
-    layout = IndexLayout(d_interrupted, "build0")
-    led = read_ledger(spark, layout)
-    assert led.filter(F.col("stage") == "shuffle").count() == 4
-    assert led.filter(F.col("stage") == "extract").count() == 1
-    assert led.filter(F.col("stage") == "segment").count() == 0
-    shuffled_dir = os.path.join(layout.staging, "shuffled")
-    committed_extract = os.path.join(layout.staging, "extracted", "grp=0")
-    before_shuffle = _file_mtimes(shuffled_dir)
-    before_extract = _file_mtimes(committed_extract)
-    assert before_shuffle and before_extract
-
-    build_index(
-        spark, tiny_corpus, d_interrupted,
-        n_buckets=8, max_segments=3, n_groups=4, extract_mode="staged",
-    )
-    assert _file_mtimes(shuffled_dir) == before_shuffle, (
-        "resume re-ran the wide shuffle pass"
-    )
-    for p, m in before_extract.items():
-        assert _file_mtimes(committed_extract).get(p) == m, (
-            f"committed extract group rewritten: {p}"
+        assert _file_mtimes(shuffled_dir) == before_shuffle, (
+            f"kill after {kill_after}: resume re-ran the wide shuffle pass"
         )
-    led = read_ledger(spark, layout)
-    assert led.filter(F.col("stage") == "extract").count() == 4
-    build_index(spark, tiny_corpus, d_clean, n_buckets=8, max_segments=3, n_groups=4)
-    assert _index_content(spark, d_interrupted) == _index_content(spark, d_clean)
+        after = _file_mtimes(layout.postings_l0)
+        for p, m in before.items():
+            assert after.get(p) == m, f"committed segment file was rewritten: {p}"
+        led = read_ledger(spark, layout)
+        assert led.filter(F.col("stage") == "segment").count() == 4
+        assert _index_content(spark, d_interrupted) == clean, (
+            f"kill after {kill_after}: resumed index differs from a clean build"
+        )
 
 
 def test_rerun_of_published_index_is_noop_fast(spark, built_index, tiny_corpus):
@@ -261,6 +232,22 @@ def test_diff_indexes_job(spark, built_index, tiny_corpus, tmp_path):
         + [q["query_text"] for q in qs]
     )
     assert rc == 0
+
+
+def test_cli_build_prints_manifest(spark, tiny_corpus, oracle_docs, tmp_path,
+                                   capsys):
+    """`cli build` builds the index and prints the published manifest as
+    JSON on stdout; its doc count is the live (LWW-deduplicated) corpus."""
+    import json
+
+    from escp_spark.cli import main as cli_main
+
+    idx = str(tmp_path / "cli_idx")
+    rc = cli_main(["build", tiny_corpus, idx, "--buckets", "8",
+                   "--maxsegs", "3", "--groups", "4"])
+    assert rc == 0
+    manifest = json.loads(capsys.readouterr().out)
+    assert manifest["n_docs"] == len(oracle_docs)
 
 
 def test_cli_tail_field_value_filters(spark, tiny_corpus, capsys):

@@ -268,7 +268,7 @@ def test_republish_refreshes_sidecar(spark, stream_source, tmp_path):
 
     from escp_spark.query import IndexReader
     from escp_spark.streaming import (
-        compact_streamed_index,
+        compact_index,
         finalize_streamed_index,
         stream_ingest_once,
     )
@@ -289,7 +289,7 @@ def test_republish_refreshes_sidecar(spark, stream_source, tmp_path):
     assert r1.rg_index_source == "sidecar"
     assert r1.dm_index_source == "sidecar"
 
-    compact_streamed_index(spark, idx, max_segments=3)
+    compact_index(spark, idx, max_segments=3)
     r2 = IndexReader(idx)
     r2._rg_stats()
     r2._dm_rg_index()

@@ -58,7 +58,7 @@ def test_stream_ingest_matches_batch_build(spark, stream_source, tmp_path):
 def test_stream_compaction_consolidates_and_preserves_results(
     spark, stream_source, tmp_path
 ):
-    """Epoch compaction: after many epochs, compact_streamed_index must
+    """Epoch compaction: after many epochs, compact_index must
     leave ≤1 short block per (segment, term) (the batch-merge D5
     invariant), advertise the coarsened prune window, and leave query
     results bit-identical to the uncompacted index."""
@@ -67,7 +67,7 @@ def test_stream_compaction_consolidates_and_preserves_results(
 
     from escp_spark.codec import BLOCK_SIZE
     from escp_spark.sources.tables import IndexLayout, load_manifest
-    from escp_spark.streaming import compact_streamed_index
+    from escp_spark.streaming import compact_index
 
     schema = T.StructType([
         T.StructField("url", T.StringType()),
@@ -94,7 +94,7 @@ def test_stream_compaction_consolidates_and_preserves_results(
     )
     assert frag_before > 0, "corpus too small to fragment — weak test"
 
-    manifest = compact_streamed_index(spark, idx, max_segments=3)
+    manifest = compact_index(spark, idx, max_segments=3)
     assert manifest["consolidation_shift"] > 40
     p = spark.read.parquet(layout.postings)
     frag = (
