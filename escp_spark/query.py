@@ -4,15 +4,20 @@ Two execution paths, both rank-identical to the exhaustive oracle:
 
 1. **Serving path** (`search_topk`): latency-oriented, METADATA-FIRST —
    the footer-built row-group index (term min/max per row group, the
-   dictionary-seek analog) locates the query terms' stats columns, the
-   WAND envelope pruning runs on stats alone, and payload bytes are
-   fetched per row group only for KEPT blocks; scoring is numpy with
-   **block-max pruning**: a seeded lower bound θ of the kth score prunes
-   every block whose docid-range score envelope (block ub + Σ other-term
-   max ub) stays below θ — a vectorized MaxScore/Block-Max-WAND family
-   algorithm with a correctness proof in `_prune_and_score`'s docstring.
-   This is what a query node would run per request; Spark is not in the
-   request path.
+   dictionary-seek analog) locates the query terms' stats columns, read
+   as numpy arrays ordered by term (a query's blocks are searchsorted
+   slices of them), the WAND envelope pruning runs on stats alone, and
+   payload bytes are fetched per row group only for KEPT blocks; scoring
+   is numpy with **block-max pruning**: a lower bound θ of the kth score
+   prunes every block whose docid-range score envelope (block ub + Σ
+   other-term max ub) stays below θ — a vectorized MaxScore/Block-Max-
+   WAND family algorithm. Bucket windows are visited by descending
+   envelope in batches of 1, 2, 4, … windows, each batch one fetch, one
+   bulk decode and one aggregate filtered by the θ of the batches before
+   it (eager filtering by an early safe cutoff, as in *External Merge
+   Sort for Top-K Queries*); the correctness proof is in
+   `_prune_and_score`'s docstring. This is what a query node would run
+   per request; neither Spark nor pandas is in the request path.
 
 2. **Batch path** (`search_topk_spark`): throughput-oriented, scores a
    whole query set. The batch's matched work (Σ df over its distinct
@@ -23,7 +28,8 @@ Two execution paths, both rank-identical to the exhaustive oracle:
    term-pushdown scan of postings → `mapInPandas` decode to
    query-independent BM25 bases → JVM-side (posting × query) expansion
    (broadcast join + hash agg, map-side combine) →
-   `groupBy(query_id, doc_id).sum` → value-count threshold top-k cut →
+   `groupBy(query_id, doc_id)` exact fixed-point sum → value-count
+   threshold top-k cut →
    driver-side url resolution via the serving reader's interval-index
    stabs and deterministic (score desc, url asc) final ranking.
 
@@ -51,6 +57,14 @@ from .sources.tables import load_manifest
 META_COLS = ["term", "n", "doc_id_lo", "doc_id_hi", "max_tf", "min_dl"]
 PAYLOAD_COLS = ["doc_ids", "tfs", "dls"]
 _SRC_COLS = ["__fi", "__rg", "__pos"]  # (file, row group, row) of a block
+_META_KEYS = META_COLS[1:] + _SRC_COLS + ["__tc"]  # meta_for_terms columns
+
+
+def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """The concatenated ranges [starts[i], starts[i] + counts[i])."""
+    ends = np.cumsum(counts)
+    return (np.repeat(starts - (ends - counts), counts)
+            + np.arange(ends[-1] if ends.size else 0))
 
 
 class _ByteLRU:
@@ -179,7 +193,7 @@ class IndexReader:
         self._pfiles = sorted(self._postings.files)
         self._pf: dict[int, object] = {}        # fi -> pq.ParquetFile
         self._rg_index = None                    # (_IntervalIndex, always, rgs)
-        self._payload_sizes: dict[tuple, int] = {}
+        self._payload_sizes = None               # [fi, rg] -> payload bytes
         self._payload_cache = _ByteLRU(payload_b)
         self._meta_cache = _ByteLRU(meta_b)
         self._dict_cache: dict[str, int] | None = None
@@ -263,15 +277,17 @@ class IndexReader:
         term-max] stats (the term-dictionary seek structure of the
         serving path) — built once; per-term candidate row groups are
         then found with searchsorted in O(log n + overlap). Returns
-        (index, always_rows, rg_list) where ``always_rows`` are row
-        groups without term stats (must always be candidates) and
-        rg_list[i] = (fi, rgi). Also fills each row group's compressed
-        payload size for the bytes-fetched telemetry.
+        (index, always_rows, rgs) where ``always_rows`` are row groups
+        without term stats (must always be candidates) and rgs[i] =
+        (fi, rgi) as an (n, 2) array. Also fills
+        ``_payload_sizes[fi, rg]``, each row group's compressed payload
+        size, for the bytes-fetched telemetry.
 
         The stats come from the build-time SIDECAR (one file open —
         VERDICT r04 wrong-#1: the old footer walk opened EVERY postings
-        file per reader per publish); the walk remains only as a
-        fallback for pre-sidecar indexes or a stale sidecar."""
+        file per reader per publish) as whole columns, with no Python
+        loop over row groups; the walk remains only as a fallback for
+        pre-sidecar indexes or a stale sidecar."""
         if self._rg_index is None:
             from .sidecar import load_rg_sidecar
 
@@ -282,20 +298,13 @@ class IndexReader:
                 # against the reader's own sorted listing — validated by
                 # the _meta.json fingerprint, no path-set/dict build).
                 sc = sc.sort_values(["fi", "rg"], kind="mergesort")
-                fis = sc["fi"].to_numpy(dtype=np.int64)
-                rgis = sc["rg"].to_numpy(dtype=np.int64)
-                tmins = sc["term_lo"].to_numpy()
-                tmaxs = sc["term_hi"].to_numpy()
-                pbytes = sc["payload_bytes"].to_numpy(dtype=np.int64)
-                rgs = list(zip(fis.tolist(), rgis.tolist()))
-                for i, key in enumerate(rgs):
-                    self._payload_sizes[key] = int(pbytes[i])
-                has = np.array([t is not None for t in tmins], dtype=bool)
-                always = np.flatnonzero(~has).astype(np.int64)
-                stat_rows = np.flatnonzero(has).astype(np.int64)
+                fis, rgis, pbytes = (sc[c].to_numpy(dtype=np.int64)
+                                     for c in ("fi", "rg", "payload_bytes"))
+                tmins, tmaxs = (sc[c].to_numpy(dtype=object)
+                                for c in ("term_lo", "term_hi"))
             else:
                 self.rg_index_source = "footers"
-                rgs, tmins_l, tmaxs_l, always_l = [], [], [], []
+                rows = []
                 for fi in range(len(self._pfiles)):
                     md = self._file(fi).metadata
                     names = md.schema.names
@@ -304,97 +313,90 @@ class IndexReader:
                     for rgi in range(md.num_row_groups):
                         rg = md.row_group(rgi)
                         st = rg.column(ti).statistics
-                        self._payload_sizes[(fi, rgi)] = sum(
-                            rg.column(pi).total_compressed_size for pi in pis
-                        )
-                        row = len(rgs)
-                        rgs.append((fi, rgi))
-                        if st is not None and st.has_min_max:
-                            tmins_l.append(st.min)
-                            tmaxs_l.append(st.max)
-                        else:
-                            tmins_l.append(None)
-                            tmaxs_l.append(None)
-                            always_l.append(row)
-                tmins = np.array(tmins_l, dtype=object)
-                tmaxs = np.array(tmaxs_l, dtype=object)
-                always = np.array(always_l, dtype=np.int64)
-                stat_rows = np.array(
-                    [i for i in range(len(rgs)) if tmins_l[i] is not None],
-                    dtype=np.int64,
-                )
-            idx = _IntervalIndex(
-                np.array([tmins[i] for i in stat_rows], dtype=object),
-                np.array([tmaxs[i] for i in stat_rows], dtype=object),
-                stat_rows,
+                        has = st is not None and st.has_min_max
+                        rows.append((
+                            fi, rgi, st.min if has else None,
+                            st.max if has else None,
+                            sum(rg.column(pi).total_compressed_size
+                                for pi in pis),
+                        ))
+                cols = list(zip(*rows)) or [()] * 5
+                fis, rgis, pbytes = (np.array(cols[i], dtype=np.int64)
+                                     for i in (0, 1, 4))
+                tmins, tmaxs = (np.array(cols[i], dtype=object)
+                                for i in (2, 3))
+            has = pd.notna(tmins)
+            stat_rows = np.flatnonzero(has)
+            idx = _IntervalIndex(tmins[stat_rows], tmaxs[stat_rows], stat_rows)
+            self._payload_sizes = np.zeros(
+                (len(self._pfiles), rgis.max(initial=-1) + 1), dtype=np.int64
             )
-            self._rg_index = (idx, always, rgs)
+            self._payload_sizes[fis, rgis] = pbytes
+            self._rg_index = (idx, np.flatnonzero(~has),
+                              np.column_stack([fis, rgis]))
         return self._rg_index
 
     def _meta_arrays(self, fi: int, rgi: int) -> tuple:
-        """One row group's stats columns as numpy arrays (bounded cache —
-        these are the small columns, term + 5 ints per block)."""
+        """One row group's stats columns, term-sorted: (terms, {column:
+        array}, pos) where entry j is row ``pos[j]`` of the row group
+        (bounded cache — these are the small columns, term + 5 ints per
+        block)."""
         arrs = self._meta_cache.get((fi, rgi))
         if arrs is None:
             tbl = self._file(fi).read_row_group(rgi, columns=META_COLS)
-            cols = tuple(
-                tbl.column(c).to_pandas().to_numpy() for c in META_COLS
-            )
-            # term kept as a pandas Index too: hash-based isin beats
-            # np.isin's object-dtype path on the hot lookup.
-            arrs = (pd.Index(cols[0]), cols)
+            terms = tbl.column("term").to_numpy(zero_copy_only=False)
+            pos = np.argsort(terms, kind="stable")  # O(n): files are term-sorted
+            arrs = (terms[pos],
+                    {c: tbl.column(c).to_numpy()[pos] for c in META_COLS[1:]},
+                    pos)
             # Charge what is actually RESIDENT (ADVICE r04: the Arrow
             # table's nbytes undercounts the materialized python-str
             # term objects ~2×): string payload + ~64 B/object header +
-            # the numeric copies + the two pointer arrays (column and
-            # Index).
-            n_rows = len(cols[0])
+            # the numeric copies + the term pointer array and ``pos``.
+            n_rows = len(pos)
             nb = (
                 tbl.column("term").nbytes + 64 * n_rows
-                + sum(int(a.nbytes) for a in cols[1:]) + 2 * 8 * n_rows
+                + sum(int(a.nbytes) for a in arrs[1].values()) + 2 * 8 * n_rows
             )
             self._meta_cache.put((fi, rgi), arrs, nb)
         return arrs
 
-    def meta_for_terms(self, terms: list[str]) -> pd.DataFrame:
-        """Stats columns of every posting block of ``terms``, plus the
-        block's physical source (__fi, __rg, __pos) for the lazy payload
-        fetch. Row groups whose [term-min, term-max] cannot contain any
-        query term are never touched — with the merge's contiguous term
-        placement this prunes whole FILES, so a query reads metadata of
-        ~(terms × segments) row groups, independent of index size."""
-        cols = META_COLS + _SRC_COLS
-        if not terms:
-            return pd.DataFrame(columns=cols)
-        self._ensure_current()
-        tsorted = sorted(terms)
-        idx, always, rgs = self._rg_stats()
-        cand_rows = np.unique(
-            np.concatenate([always] + [idx.stab(t) for t in tsorted])
-        )
+    def meta_for_terms(self, terms: list[str]) -> dict[str, np.ndarray]:
+        """Stats columns of every posting block of ``terms`` as numpy
+        arrays (META_COLS but the term itself), plus the block's physical
+        source (__fi, __rg, __pos) for the lazy payload fetch and
+        ``__tc``, the block's term as an index into sorted(set(terms));
+        rows are ordered by ``__tc``. Row groups whose [term-min,
+        term-max] cannot contain any query term are never touched — with
+        the merge's contiguous term placement this prunes whole FILES, so
+        a query reads metadata of ~(terms × segments) row groups,
+        independent of index size. Inside a row group each term is one
+        searchsorted slice of the term-sorted stats."""
+        tsorted = np.array(sorted(set(terms)), dtype=object)
         parts = []
-        for row in cand_rows:
-            fi, rgi = rgs[row]
-            term_ix, cols_np = self._meta_arrays(fi, rgi)
-            mask = term_ix.isin(tsorted)
-            if not mask.any():
-                continue
-            pos = np.flatnonzero(mask)
-            parts.append((fi, rgi, pos, [a[pos] for a in cols_np]))
+        if tsorted.size:
+            self._ensure_current()
+            idx, always, rgs = self._rg_stats()
+            cand_rows = np.unique(
+                np.concatenate([always] + [idx.stab(t) for t in tsorted])
+            )
+            for fi, rgi in rgs[cand_rows].tolist():
+                rg_terms, cols, pos = self._meta_arrays(fi, rgi)
+                lo = np.searchsorted(rg_terms, tsorted, side="left")
+                cnt = np.searchsorted(rg_terms, tsorted, side="right") - lo
+                if not cnt.any():
+                    continue
+                j = _ranges(lo, cnt)
+                parts.append([cols[c][j] for c in META_COLS[1:]] + [
+                    np.full(j.size, fi), np.full(j.size, rgi), pos[j],
+                    np.repeat(np.arange(tsorted.size), cnt),
+                ])
         if not parts:
-            return pd.DataFrame(columns=cols)
-        data = {
-            c: np.concatenate([p[3][ci] for p in parts])
-            for ci, c in enumerate(META_COLS)
-        }
-        data["__fi"] = np.concatenate(
-            [np.full(p[2].size, p[0], dtype=np.int64) for p in parts]
-        )
-        data["__rg"] = np.concatenate(
-            [np.full(p[2].size, p[1], dtype=np.int64) for p in parts]
-        )
-        data["__pos"] = np.concatenate([p[2] for p in parts])
-        return pd.DataFrame(data)
+            return {c: np.empty(0, dtype=np.int64) for c in _META_KEYS}
+        order = np.argsort(np.concatenate([p[-1] for p in parts]),
+                           kind="stable")
+        return {c: np.concatenate([p[i] for p in parts])[order]
+                for i, c in enumerate(_META_KEYS)}
 
     def fetch_payloads(self, fi: np.ndarray, rg: np.ndarray, pos: np.ndarray):
         """Payload buffers (doc_ids, tfs, dls bytes) for the given block
@@ -403,6 +405,7 @@ class IndexReader:
         buffer and offsets: only requested blocks become Python bytes
         (three objects per cached block cost ~120 B, several times the
         payload of a small block). Returns three aligned object arrays."""
+        self._rg_stats()  # fills _payload_sizes
         n = len(pos)
         out = tuple(np.empty(n, dtype=object) for _ in range(3))
         key = fi.astype(np.int64) * (1 << 20) + rg
@@ -414,7 +417,7 @@ class IndexReader:
                 cols = tuple(_values_and_offsets(tbl.column(c))
                              for c in PAYLOAD_COLS)
                 self._payload_cache.put((f, r), cols, tbl.nbytes)
-                self.payload_bytes_fetched += self._payload_sizes.get((f, r), 0)
+                self.payload_bytes_fetched += int(self._payload_sizes[f, r])
                 self.payload_rowgroups_fetched += 1
             sel = np.flatnonzero(key == k)
             p = pos[sel]
@@ -433,7 +436,7 @@ class IndexReader:
         (searchsorted per id, VERDICT r03 wrong-#3), instead of looping
         over every row group's stats in Python. Docmap files are written
         doc_id-clustered per bucket, so a top-k's ≤k url lookups touch
-        ≤k row groups. Returns (index, always_rows, rg_list)."""
+        ≤k row groups. Returns (index, always_rows, rgs) like _rg_stats."""
         if self._dm_index is None:
             from .sidecar import load_rg_sidecar
 
@@ -441,52 +444,35 @@ class IndexReader:
             if sc is not None:
                 self.dm_index_source = "sidecar"
                 sc = sc.sort_values(["fi", "rg"], kind="mergesort")
-                rgs = list(zip(
-                    sc["fi"].to_numpy(dtype=np.int64).tolist(),
-                    sc["rg"].to_numpy(dtype=np.int64).tolist(),
-                ))
+                fis, rgis = (sc[c].to_numpy(dtype=np.int64)
+                             for c in ("fi", "rg"))
                 # Nullable-Int64 sidecar (r07): doc ids stay integral
                 # end-to-end — no float64 leg (exact past 2^53). A
                 # legacy double-typed sidecar still loads (float64
                 # series; fillna/to_numpy below behave as before).
                 lo_ser, hi_ser = sc["doc_lo"], sc["doc_hi"]
                 has = lo_ser.notna().to_numpy(dtype=bool)
-                always = np.flatnonzero(~has).astype(np.int64)
-                stat_rows = np.flatnonzero(has).astype(np.int64)
                 los = lo_ser.fillna(0).to_numpy(dtype=np.int64)
                 his = hi_ser.fillna(0).to_numpy(dtype=np.int64)
             else:
                 self.dm_index_source = "footers"
-                import pyarrow.parquet as pq
-
-                rgs, los_l, his_l, always_l = [], [], [], []
-                for fi, path in enumerate(self._dm_files):
-                    pf = self._dm_pf.setdefault(fi, pq.ParquetFile(path))
-                    md = pf.metadata
+                rows = []
+                for fi in range(len(self._dm_files)):
+                    md = self._dm_file(fi).metadata
                     di = md.schema.names.index("doc_id")
                     for rgi in range(md.num_row_groups):
                         st = md.row_group(rgi).column(di).statistics
-                        row = len(rgs)
-                        rgs.append((fi, rgi))
-                        if st is not None and st.has_min_max:
-                            los_l.append(st.min)
-                            his_l.append(st.max)
-                        else:
-                            los_l.append(0)
-                            his_l.append(0)
-                            always_l.append(row)
-                always_set = set(always_l)  # hoisted — O(n) (ADVICE r04)
-                stat_rows = np.array(
-                    [i for i in range(len(rgs)) if i not in always_set],
-                    dtype=np.int64,
-                )
-                always = np.array(always_l, dtype=np.int64)
-                los = np.array(los_l, dtype=np.int64)
-                his = np.array(his_l, dtype=np.int64)
-            idx = _IntervalIndex(
-                los[stat_rows], his[stat_rows], stat_rows,
-            )
-            self._dm_index = (idx, always, rgs)
+                        has = st is not None and st.has_min_max
+                        rows.append((fi, rgi, st.min if has else 0,
+                                     st.max if has else 0, has))
+                cols = list(zip(*rows)) or [()] * 5
+                fis, rgis, los, his = (np.array(c, dtype=np.int64)
+                                       for c in cols[:4])
+                has = np.array(cols[4], dtype=bool)
+            stat_rows = np.flatnonzero(has)
+            idx = _IntervalIndex(los[stat_rows], his[stat_rows], stat_rows)
+            self._dm_index = (idx, np.flatnonzero(~has),
+                              np.column_stack([fis, rgis]))
         return self._dm_index
 
     def urls_for(self, doc_ids: np.ndarray) -> dict[int, str]:
@@ -499,8 +485,7 @@ class IndexReader:
             np.concatenate([always] + [idx.stab(int(i)) for i in ids])
         )
         out: dict[int, str] = {}
-        for row in cand_rows:
-            fi, rgi = rgs[row]
+        for fi, rgi in rgs[cand_rows].tolist():
             cached = self._dm_cache.get((fi, rgi))
             if cached is None:
                 tbl = self._dm_file(fi).read_row_group(
@@ -540,21 +525,31 @@ def _values_and_offsets(col) -> tuple[bytes, np.ndarray]:
     return data, offs[arr.offset:arr.offset + len(arr) + 1]
 
 
-def _aggregate(doc_ids: np.ndarray, contribs: np.ndarray):
-    """Sum contributions per docid — sort + reduceat (vectorized)."""
+def _aggregate(doc_ids: np.ndarray, contribs: np.ndarray, terms: np.ndarray):
+    """Sum contributions per docid — sort + reduceat (vectorized). Each
+    doc's contributions are summed in ascending term order, so equal
+    postings give bit-equal scores whichever blocks, windows or batches
+    they were decoded in."""
     if doc_ids.size == 0:
         return doc_ids, contribs
-    order = np.argsort(doc_ids, kind="stable")
+    order = np.lexsort((terms, doc_ids))
     d, c = doc_ids[order], contribs[order]
     starts = np.flatnonzero(np.concatenate(([True], d[1:] != d[:-1])))
     return d[starts], np.add.reduceat(c, starts)
 
 
-def _prune_and_score(blocks: pd.DataFrame, term_weights: dict[str, float],
-                     idf: dict[str, float], avgdl: float, k: int,
-                     window_shift: int = 40, fetch=None,
-                     exclude: np.ndarray | None = None):
-    """Block-max pruned scoring for ONE query — window-at-a-time WAND.
+def _prune_and_score(meta: dict, rows: np.ndarray, tq: np.ndarray,
+                     w: np.ndarray, avgdl: float, k: int, fetch,
+                     exclude: np.ndarray | None = None,
+                     window_shift: int = 40):
+    """Block-max pruned scoring for ONE query — WAND over bucket windows,
+    visited in geometrically growing batches.
+
+    ``meta`` holds meta_for_terms' columns, ``rows`` the query's blocks
+    in it, ``tq`` each block's query-term index (ascending term order)
+    and ``w`` each query term's weight (query tf × idf); ``fetch`` is
+    IndexReader.fetch_payloads, so payload bytes are read only for
+    blocks that are decoded.
 
     Windows are buckets (docid = bucket<<40|rank, so docid>>40 is the
     bucket and every doc's postings live inside one window). Level-0 and
@@ -564,167 +559,116 @@ def _prune_and_score(blocks: pd.DataFrame, term_weights: dict[str, float],
 
     0. Spanning blocks (typically the consolidated tails — small) are
        bulk-decoded UP FRONT. Their raw postings give exact per-(window,
-       term) maxima sp_max(w, t); their per-doc partials are aggregated
-       and sliced per window (docids are sorted).
+       term) maxima sp_max(w, t) and are merged into the scoring of the
+       window each doc lives in.
     1. A (term, doc) posting lives in exactly ONE block — contained or
        spanning — so env(w, t) = max(contained_ub_max(w, t), sp_max(w, t))
        and envelope(w) = Σ_t env(w, t) is a true upper bound on any
        single doc score in w (no double counting).
-    2. Visit windows in descending envelope order, maintaining θ = kth
-       best collected score (only rises).
-    3. Skip a whole window when envelope(w) < θ. Inside a kept window,
-       additionally skip contained block b of term t when
-       ub(b) + (envelope(w) − env(w, t)) < θ. Scoring a kept window
-       merges its decoded contained blocks with its slice of the
-       spanning partials, so every emitted doc's score includes all of
-       its covering blocks that were not provably-below-θ.
+    2. Visit windows in descending envelope order, in batches of 1, 2,
+       4, … windows, maintaining θ = kth best collected score (only
+       rises; re-tightened after each batch).
+    3. Before a batch, skip its windows with envelope(w) < θ (once one
+       window is below θ every later one is too, so the visit stops),
+       and skip contained block b of term t when
+       ub(b) + (envelope(w) − env(w, t)) < θ. A batch's kept blocks are
+       fetched, decoded and aggregated in ONE pass together with its
+       windows' spanning postings, so a query makes O(log W) payload
+       fetches for W windows, and every emitted doc's score includes all
+       of its covering blocks that were not provably-below-θ.
 
-    Rank-identity proof: a skipped window/block only hides (or
-    understates) docs whose TOTAL score is strictly below θ ≤ (final kth
-    best), so they cannot enter the top-k; understated scores are ≤ the
-    true score and the true score is < θ, so they can never displace a
-    true top-k doc, and θ (a max over collected scores' kth) stays a
-    valid lower bound of the true kth score. Any doc with final score
-    ≥ θ has every covering block kept, hence is scored exactly.
+    Rank-identity proof: θ is the kth best score collected by earlier
+    batches, so it never exceeds the true kth best score. A skipped
+    window/block only hides (or understates) docs whose TOTAL score is
+    strictly below θ ≤ (final kth best), so they cannot enter the top-k;
+    understated scores are ≤ the true score and the true score is < θ,
+    so they can never displace a true top-k doc, and θ (a max over
+    collected scores' kth) stays a valid lower bound of the true kth
+    score. Any doc with final score ≥ θ has every covering block kept,
+    hence is scored exactly. Filtering a whole batch with the θ of the
+    batches before it only prunes less than window-at-a-time would.
     """
     global last_prune_stats
-    weights = {t: term_weights[t] * idf[t] for t in term_weights if t in idf}
-    if blocks.empty or not weights:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.float64)
+    ns = meta["n"][rows]
+    ub = bm25_upper_bound(meta["max_tf"][rows], meta["min_dl"][rows],
+                          avgdl, w[tq])
+    lo_w = meta["doc_id_lo"][rows].astype(np.int64) >> window_shift
+    spanning = lo_w != meta["doc_id_hi"][rows].astype(np.int64) >> window_shift
 
-    blocks = blocks[blocks["term"].isin(weights)].reset_index(drop=True)
-    w_arr = blocks["term"].map(weights).to_numpy(dtype=np.float64)
-    ub = bm25_upper_bound(
-        blocks["max_tf"].to_numpy(), blocks["min_dl"].to_numpy(), avgdl, w_arr
-    )
-    term_codes, term_uniq = pd.factorize(blocks["term"], sort=True)
-    n_terms = len(term_uniq)
-    lo_w = blocks["doc_id_lo"].to_numpy(dtype=np.int64) >> window_shift
-    hi_w = blocks["doc_id_hi"].to_numpy(dtype=np.int64) >> window_shift
-    spanning = lo_w != hi_w
-
-    ns = blocks["n"].to_numpy()
-    if fetch is not None:
-        # Lazy payload source (metadata-first serving): bytes are only
-        # read for rows actually decoded — pruned blocks cost zero I/O.
-        fi_a = blocks["__fi"].to_numpy(dtype=np.int64)
-        rg_a = blocks["__rg"].to_numpy(dtype=np.int64)
-        pos_a = blocks["__pos"].to_numpy(dtype=np.int64)
-
-        def get_bufs(idx: np.ndarray):
-            ids_b, tfs_b, dls_b = fetch(fi_a[idx], rg_a[idx], pos_a[idx])
-            return list(ids_b), list(tfs_b), list(dls_b)
-    else:
-        id_bufs = blocks["doc_ids"].to_numpy()
-        tf_bufs = blocks["tfs"].to_numpy()
-        dl_bufs = blocks["dls"].to_numpy()
-
-        def get_bufs(idx: np.ndarray):
-            return list(id_bufs[idx]), list(tf_bufs[idx]), list(dl_bufs[idx])
-
-    # Soft-deleted docs (streamed update/delete) are dropped at decode
-    # time, BEFORE θ is seeded — θ then reflects live docs only, so the
-    # pruning proof holds unchanged over the live set (block upper
-    # bounds may still include deleted docs' stats: stale but valid).
-    def drop_excluded(ids, *aligned):
-        if exclude is None or exclude.size == 0 or ids.size == 0:
-            return (ids, *aligned)
-        from .streaming.deletes import live_mask
-
-        m = live_mask(ids, exclude)
-        return (ids[m], *(a[m] for a in aligned))
-
-    def decode_rows(idx: np.ndarray):
-        if idx.size == 0:
-            return np.empty(0, dtype=np.uint64), np.empty(0)
-        b_ids, b_tfs, b_dls = get_bufs(idx)
-        ids, tfs, dls, blk = decode_blocks_bulk(b_ids, b_tfs, b_dls, ns[idx])
-        contribs = bm25_contrib(tfs, dls, avgdl, w_arr[idx][blk])
-        ids, contribs = drop_excluded(ids, contribs)
-        return _aggregate(ids, contribs)
-
-    # ---- Spanning blocks: decode once (raw postings for per-(window,
-    # term) maxima, then per-doc aggregation for the scoring merge).
-    sp_idx = np.flatnonzero(spanning)
-    if sp_idx.size:
-        sp_b_ids, sp_b_tfs, sp_b_dls = get_bufs(sp_idx)
-        sp_raw_ids, sp_raw_tfs, sp_raw_dls, sp_blk = decode_blocks_bulk(
-            sp_b_ids, sp_b_tfs, sp_b_dls, ns[sp_idx],
+    def decode(sel: np.ndarray):
+        """(doc ids, contributions, query-term index) of blocks ``sel``.
+        Soft-deleted docs (streamed update/delete) are dropped here,
+        BEFORE θ is seeded — θ then reflects live docs only, so the
+        pruning proof holds unchanged over the live set (block upper
+        bounds may still include deleted docs' stats: stale but
+        valid)."""
+        if sel.size == 0:
+            return np.empty(0, dtype=np.uint64), np.empty(0), sel
+        r = rows[sel]
+        ids, tfs, dls, blk = decode_blocks_bulk(
+            *fetch(meta["__fi"][r], meta["__rg"][r], meta["__pos"][r]),
+            ns[sel],
         )
-        sp_raw_contribs = bm25_contrib(
-            sp_raw_tfs, sp_raw_dls, avgdl, w_arr[sp_idx][sp_blk]
-        )
-        sp_raw_t = term_codes[sp_idx][sp_blk]
-        sp_raw_ids, sp_raw_contribs, sp_raw_t = drop_excluded(
-            sp_raw_ids, sp_raw_contribs, sp_raw_t
-        )
-        sp_raw_w = sp_raw_ids.astype(np.int64) >> window_shift
-        sp_ids, sp_contribs = _aggregate(sp_raw_ids, sp_raw_contribs)
-    else:
-        sp_raw_w = np.empty(0, dtype=np.int64)
-        sp_ids = np.empty(0, dtype=np.uint64)
-        sp_contribs = np.empty(0)
-    sp_w = (sp_ids.astype(np.int64) >> window_shift)
+        t = tq[sel][blk]
+        contribs = bm25_contrib(tfs, dls, avgdl, w[t])
+        if exclude is not None and ids.size:
+            from .streaming.deletes import live_mask
+
+            m = live_mask(ids, exclude)
+            return ids[m], contribs[m], t[m]
+        return ids, contribs, t
+
+    # ---- Spanning blocks: decode once.
+    sp = np.flatnonzero(spanning)
+    sp_ids, sp_c, sp_t = decode(sp)
+    sp_win = sp_ids.astype(np.int64) >> window_shift
 
     # ---- Windows = union of contained-block windows and spanning-doc
     # windows (a window that only spanning docs touch must still be
     # visitable, or those docs would be silently dropped).
-    co_idx = np.flatnonzero(~spanning)
-    buckets_uniq = np.unique(np.concatenate([lo_w[co_idx], sp_w]))
-    bucket_code_co = np.searchsorted(buckets_uniq, lo_w[co_idx])
-    sp_code = np.searchsorted(buckets_uniq, sp_w)
-    n_w = buckets_uniq.size
+    co = np.flatnonzero(~spanning)
+    wins = np.unique(np.concatenate([lo_w[co], sp_win]))
+    co_w = np.searchsorted(wins, lo_w[co])
+    sp_w = np.searchsorted(wins, sp_win)
+    env_wt = np.zeros((wins.size, w.size))
+    np.maximum.at(env_wt, (co_w, tq[co]), ub[co])
+    np.maximum.at(env_wt, (sp_w, sp_t), sp_c)
+    env = env_wt.sum(axis=1)
+    visit = np.argsort(env)[::-1]
+    rank = np.empty_like(visit)
+    rank[visit] = np.arange(visit.size)
+    co_rank, sp_rank = rank[co_w], rank[sp_w]
 
-    per_bt_env = np.zeros(n_w * n_terms)
-    np.maximum.at(
-        per_bt_env, bucket_code_co * n_terms + term_codes[co_idx], ub[co_idx]
-    )
-    if sp_idx.size:
-        np.maximum.at(
-            per_bt_env,
-            np.searchsorted(buckets_uniq, sp_raw_w) * n_terms + sp_raw_t,
-            sp_raw_contribs,
-        )
-    per_bt_env = per_bt_env.reshape(n_w, n_terms)
-    bucket_env = per_bt_env.sum(axis=1)
-    # Spanning docs are sorted by docid (per-window aggregation below
-    # slices this by searchsorted on the window code).
-    sp_starts = np.searchsorted(sp_code, np.arange(n_w + 1))
-
-    visit_order = np.argsort(bucket_env)[::-1]
     theta = -np.inf
-    all_ids, all_scores = [], []
+    got_ids, got_scores = [], []
     # Running k-largest collected scores (the SURVEY §2.9 Q4 "bounded
-    # min-heap", kept as a flat array): θ maintenance per kept window is
-    # O(k + new) instead of re-partitioning the FULL collected set —
-    # the old np.partition(concatenate(all_scores)) was O(windows ×
-    # collected), quadratic for a high-k query over a many-window index.
+    # min-heap", kept as a flat array): θ maintenance per batch is
+    # O(k + new), never a re-partition of the FULL collected set.
     topk_pool = np.empty(0, dtype=np.float64)
-    total_collected = 0
-    pruned = 0
-    for bc in visit_order:
-        in_window = np.flatnonzero(bucket_code_co == bc)
-        if total_collected >= k and bucket_env[bc] < theta:
-            pruned += int(in_window.size)
-            continue
-        sel = co_idx[in_window]
-        if total_collected >= k and sel.size:
-            blk_env = ub[sel] + (
-                bucket_env[bc] - per_bt_env[bc, term_codes[sel]]
-            )
-            keep_mask = blk_env >= theta
-            pruned += int(np.count_nonzero(~keep_mask))
-            sel = sel[keep_mask]
-        ids, scores = decode_rows(sel)
-        s, e = sp_starts[bc], sp_starts[bc + 1]
-        if e > s:
-            ids, scores = _aggregate(
-                np.concatenate([ids, sp_ids[s:e]]),
-                np.concatenate([scores, sp_contribs[s:e]]),
-            )
+    total_collected = pruned = start = 0
+    while start < wins.size:
+        if total_collected >= k and env[visit[start]] < theta:
+            pruned += int(np.count_nonzero(co_rank >= start))
+            break
+        end = min(2 * start + 1, wins.size)  # batches of 1, 2, 4, … windows
+        in_batch = (co_rank >= start) & (co_rank < end)
+        sel, sel_w = co[in_batch], co_w[in_batch]
+        sp_in = (sp_rank >= start) & (sp_rank < end)
+        if total_collected >= k:
+            keep = ub[sel] + (env[sel_w] - env_wt[sel_w, tq[sel]]) >= theta
+            pruned += int(np.count_nonzero(~keep))
+            sel = sel[keep]
+            sp_in &= env[sp_w] >= theta
+        ids, contribs, t = decode(sel)
+        ids, scores = _aggregate(
+            np.concatenate([ids, sp_ids[sp_in]]),
+            np.concatenate([contribs, sp_c[sp_in]]),
+            np.concatenate([t, sp_t[sp_in]]),
+        )
+        start = end
         if ids.size:
-            all_ids.append(ids)
-            all_scores.append(scores)
+            got_ids.append(ids)
+            got_scores.append(scores)
             total_collected += ids.size
             topk_pool = np.concatenate([topk_pool, scores])
             if topk_pool.size > k:
@@ -737,17 +681,17 @@ def _prune_and_score(blocks: pd.DataFrame, term_weights: dict[str, float],
                 theta = topk_pool.min()
 
     last_prune_stats = {
-        "total_blocks": int(len(blocks)),
-        "spanning_blocks": int(sp_idx.size),
-        "kept_blocks": int(len(blocks) - pruned),
+        "total_blocks": int(rows.size),
+        "spanning_blocks": int(sp.size),
+        "kept_blocks": int(rows.size - pruned),
         "pruned_blocks": int(pruned),
         "theta": float(theta),
-        "n_buckets": int(n_w),
+        "n_buckets": int(wins.size),
     }
-    if not all_ids:
+    if not got_ids:
         return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.float64)
     # Windows are disjoint docid spaces — concatenation needs no re-agg.
-    return np.concatenate(all_ids), np.concatenate(all_scores)
+    return np.concatenate(got_ids), np.concatenate(got_scores)
 
 
 def search_topk(index_dir: str, queries: list[dict],
@@ -764,26 +708,28 @@ def _serve_topk(reader: IndexReader, queries: list[dict]):
     """search_topk's body → (rows, candidates): ``candidates`` counts the
     tie-complete candidate docs whose urls were resolved (the batch
     path's ``last_batch_timings["candidates"]``)."""
-    all_terms = sorted({t for q in queries for t in tokenize(q["query_text"])})
-    dfs = reader.term_dfs(all_terms)
+    q_tfs = [Counter(tokenize(q["query_text"])) for q in queries]
+    dfs = reader.term_dfs(sorted({t for tfs in q_tfs for t in tfs}))
+    terms = sorted(dfs)
+    code = {t: i for i, t in enumerate(terms)}
     idf = {t: float(idf_lucene(reader.n_docs, d)) for t, d in dfs.items()}
-    # Metadata-first: stats columns only; payload bytes are fetched inside
-    # _prune_and_score for KEPT blocks via reader.fetch_payloads.
-    meta = reader.meta_for_terms([t for t in all_terms if t in dfs])
-    by_term = {t: g for t, g in meta.groupby("term")} if len(meta) else {}
-    empty_meta = pd.DataFrame(columns=META_COLS + _SRC_COLS)
+    # Metadata-first: stats columns only, ordered by term; payload bytes
+    # are fetched inside _prune_and_score for KEPT blocks.
+    meta = reader.meta_for_terms(terms)
+    bounds = np.searchsorted(meta["__tc"], np.arange(len(terms) + 1))
+    exclude = reader.tombstones if reader.tombstones.size else None
 
     rows, candidates = [], 0
-    for q in queries:
-        weights = dict(Counter(tokenize(q["query_text"])))
-        qblocks = pd.concat(
-            [by_term[t] for t in weights if t in by_term], ignore_index=True
-        ) if any(t in by_term for t in weights) else empty_meta
+    for q, tfs in zip(queries, q_tfs):
+        qt = sorted(t for t in tfs if t in code)
+        c = np.array([code[t] for t in qt], dtype=np.int64)
+        n_blocks = bounds[c + 1] - bounds[c]
         io0 = (reader.payload_bytes_fetched, reader.payload_rowgroups_fetched)
         doc_ids, scores = _prune_and_score(
-            qblocks, weights, idf, reader.avgdl, q["k"],
-            fetch=reader.fetch_payloads,
-            exclude=reader.tombstones if reader.tombstones.size else None,
+            meta, _ranges(bounds[c], n_blocks),
+            np.repeat(np.arange(c.size), n_blocks),
+            np.array([tfs[t] * idf[t] for t in qt], dtype=np.float64),
+            reader.avgdl, q["k"], reader.fetch_payloads, exclude,
         )
         last_prune_stats["payload_bytes_fetched"] = (
             reader.payload_bytes_fetched - io0[0]
@@ -824,12 +770,14 @@ def _serve_topk(reader: IndexReader, queries: list[dict]):
 # is bound by per-job scheduling cost, not work. Above it the batch runs
 # the distributed decode rebalance + value-count threshold cut, which
 # scales past one driver. Keyed on the batch's work, not the index size.
-# 100k docs, local[4], 4-core VM, cold reader, driver vs distributed cut:
-# 50 reference queries (0.57M matched) 0.47-0.59 vs 4.1-5.1 s; 100 Zipf
-# queries (2.1M) 1.9-2.3 vs 7.2-10.0 s; scale_queries(1000) (1.3M) 3.6-4.5
-# vs 5.0-6.2 s; scale_queries(3000) (3.0M) 9.9-11.8 vs 10.3-12.2 s, level
-# at 3000 queries (~3.5 ms per rare query), so no query-count rule.
-# Tests force the distributed side with -1.
+# 100k docs, local[4], 4-core VM, cold reader, driver vs distributed cut
+# (batched-window serving scorer): 50 reference queries (0.57M matched)
+# 0.45-0.51 vs 4.7-5.3 s; 100 Zipf queries (2.0M) 1.9 vs 9.6-10.9 s;
+# scale_queries(1000) (1.3M) 2.0-2.4 vs 7.1-7.4 s; scale_queries(3000)
+# (3.0M) 6.2-7.4 vs 13.3-14.1 s; scale_queries(6000) (4.6M) 13.4-13.8 vs
+# 20.4-21.4 s. The driver wins at every size up to 4.6M, so the crossover
+# lies above the switch; it stays at 4M (see ROADMAP item 5). Tests force
+# the distributed side with -1.
 _BIG_MATCHED_POSTINGS = 4_000_000
 
 # Size-1 reader cache for the batch path's driver side: repeat batches
@@ -1076,11 +1024,19 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
     # codegen: broadcast-join the tiny (tid, query_id, weight) table and
     # hash-aggregate — the partial agg in the scan stage collapses
     # duplicate (query_id, doc_id) keys before the shuffle exactly like
-    # the old python-side combine did, at Tungsten cost per row.
+    # the old python-side combine did, at Tungsten cost per row. Each
+    # contribution is split into two integers in units of 2^-30 and
+    # 2^-60 whose sums are exact, so a doc's score does not depend on
+    # the order the shuffle delivers its terms in (equal docs tie
+    # bit-identically, and a recomputed score equals the first one).
+    c = F.col("base") * F.col("w") * float(1 << 30)
     scores = (
         partials.join(F.broadcast(wdf), "tid")
+        .select("query_id", "doc_id", F.floor(c).alias("hi"),
+                F.floor((c - F.floor(c)) * float(1 << 30)).alias("lo"))
         .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("base") * F.col("w")).alias("score"))
+        .agg((F.sum("hi") * 2.0 ** -30 + F.sum("lo") * 2.0 ** -60)
+             .alias("score"))
     )
 
     # Split-size the postings scan to the session's parallelism (the
@@ -1175,18 +1131,10 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
             surv["query_id"]
         ).min()
         # The candidate filter runs against a SECOND evaluation of
-        # scores: if a cached partition was evicted or an executor died,
-        # it is recomputed, and the hash-agg sums term contributions in
-        # shuffle-fetch order — float addition is not associative, so a
-        # recomputed score can sit an ulp below the thr derived from the
-        # first materialization and silently drop the whole k-th
-        # plateau. Widen the filter by a relative 1e-9 margin (orders of
-        # magnitude above accumulated ulp drift for <=dozens of terms,
-        # orders below the gap between DISTINCT BM25 values, whose
-        # inputs are integers): extras are harmless — the final ranking
-        # cuts to exactly k — missing rows break the contract.
+        # scores (a cached partition may have been evicted); the exact
+        # sums above make it reproduce every score bit for bit.
         thr = spark.createDataFrame(
-            list(zip(s_k.index.tolist(), (s_k - s_k.abs() * 1e-9).tolist())),
+            list(zip(s_k.index.tolist(), s_k.tolist())),
             "query_id int, thr double",
         )
         cand = (

@@ -169,6 +169,34 @@ def test_stale_or_missing_sidecar_falls_back_to_footers(spark, built_index,
     assert got_none == want
 
 
+def test_docmap_footer_walk_reuses_open_handles(built_index, monkeypatch):
+    """Without a sidecar the docmap interval index walks the files'
+    footers through the reader's handle cache: each docmap file is opened
+    once, the url reads reuse those handles, and rebuilding the index
+    while they are cached opens no file again."""
+    import escp_spark.sidecar as sidecar
+    from escp_spark.query import IndexReader, search_topk
+
+    d, _ = built_index
+    monkeypatch.setattr(sidecar, "load_rg_sidecar", lambda *a, **kw: None)
+    opened, real = [], pq.ParquetFile
+
+    def counting_parquet_file(path, *a, **kw):
+        opened.append(path)
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting_parquet_file)
+    reader = IndexReader(d)
+    assert search_topk(d, _queries()[:5], reader=reader)
+    assert reader.dm_index_source == "footers"
+    dm_opened = sorted(p for p in opened if p in reader._dm_files)
+    assert dm_opened == reader._dm_files
+    n_opened = len(opened)
+    reader._dm_index = None
+    reader._dm_rg_index()
+    assert len(opened) == n_opened
+
+
 def test_distributed_sidecar_write_matches_driver_scan(spark, built_index):
     """Above the file-count threshold the footer scan fans out as a
     Spark job whose tasks WRITE the (kind, segment) shards directly — no

@@ -3,6 +3,7 @@ changes top-k vs exhaustive): a multi-block corpus where pruning actually
 fires, checked rank-identical against the exhaustive oracle."""
 
 import hashlib
+import math
 
 import numpy as np
 import pytest
@@ -137,3 +138,96 @@ def test_single_term_hot_query_correct(big_index, big_oracle):
     assert [(r["doc_url"], round(r["score"], 6)) for r in got] == [
         (u, round(s, 6)) for u, s in want
     ]
+
+
+def test_windows_decoded_in_geometric_batches(big_index):
+    """A query fetches its payloads once for the spanning blocks plus
+    once per batch of 1, 2, 4, … bucket windows — O(log windows) fetch
+    and decode calls, never one per window. The hot+rare query also
+    prunes; the hot+hot query prunes nothing, so there a decode per
+    window would take one call per bucket."""
+    import pyarrow.dataset as pads
+
+    _, idx = big_index
+    reader = IndexReader(idx)
+    d = pads.dataset(
+        reader.manifest["paths"]["dictionary"], format="parquet"
+    ).to_table().to_pandas()
+    rare = d[(d.df >= 3) & (d.df <= 20)].sort_values("term").iloc[0].term
+    fetch, calls = reader.fetch_payloads, []
+
+    def counting_fetch(*args):
+        calls.append(len(args[2]))
+        return fetch(*args)
+
+    reader.fetch_payloads = counting_fetch
+    n_buckets = reader.manifest["n_buckets"]
+    for text, k in ((f"t00000 {rare}", 3), ("t00000 t00001", 10)):
+        calls.clear()
+        search_topk(idx, [{"query_id": 0, "query_text": text, "k": k}],
+                    reader=reader)
+        st = Q.last_prune_stats
+        assert 0 < len(calls) <= math.ceil(math.log2(n_buckets)) + 2, (
+            text, calls, st)
+        assert st["kept_blocks"] + st["pruned_blocks"] == st["total_blocks"]
+        if rare in text:
+            assert st["pruned_blocks"] > 0, st
+        else:
+            assert st["n_buckets"] == n_buckets, st
+
+
+def test_equal_docs_in_different_windows_tie_exactly(spark, tmp_path,
+                                                      batch_sides):
+    """One text under two urls in different buckets — so in different
+    windows, decoded in different window batches — scores bit-identically
+    and comes back url-ascending, on the serving path and on both sides
+    of the batch switch. The serving scorer sums each doc's
+    contributions in a fixed term order, so the blocks and batches a
+    doc's postings were decoded in cannot move a last float digit."""
+    import pyarrow as pa
+
+    from escp_spark.analyzer import wrap_html
+    from escp_spark.corpus import generate_web_pages, hash_md5_int
+    from escp_spark.query import search_topk_spark
+
+    n_buckets = 8
+    cols = generate_web_pages(300, seed=5)
+    text = "tiealpha tiebeta tiebeta tiegamma tiegamma tiegamma t00000 t00001"
+    a = "https://tie.example/a"
+    b = next(u for u in (f"https://tie.example/b{i}" for i in range(64))
+             if hash_md5_int(u) % n_buckets != hash_md5_int(a) % n_buckets)
+    for url in (b, a):
+        cols["url"].append(url)
+        cols["text"].append(text)
+        cols["html"].append(wrap_html(f"page {url}", text))
+        cols["lang"].append("en")
+        cols["warc_ts"].append(cols["warc_ts"][-1])
+    corpus = str(tmp_path / "pages.parquet")
+    pq.write_table(pa.table({
+        "url": pa.array(cols["url"], pa.string()),
+        "warc_ts": pa.array(cols["warc_ts"], pa.timestamp("us")),
+        "html": pa.array(cols["html"], pa.binary()),
+        "text": pa.array(cols["text"], pa.string()),
+        "lang": pa.array(cols["lang"], pa.string()),
+    }), corpus)
+    idx = str(tmp_path / "idx")
+    build_index(spark, corpus, idx, n_buckets=n_buckets, max_segments=2,
+                n_groups=1)
+    queries = [
+        {"query_id": 0, "query_text": "tiealpha tiebeta tiegamma t00000",
+         "k": 5},
+        {"query_id": 1, "query_text": "tiegamma tiealpha", "k": 5},
+    ]
+
+    def check(rows, path):
+        for q in queries:
+            top = sorted((r for r in rows if r[0] == q["query_id"]),
+                         key=lambda r: r[1])[:2]
+            assert [r[2] for r in top] == [a, b], (path, q, top)
+            assert top[0][3] == top[1][3], (path, q, top)
+
+    check([(r["query_id"], r["rank"], r["doc_url"], r["score"])
+           for r in search_topk(idx, queries)], "serving")
+    for side in batch_sides():
+        check([tuple(r) for r in search_topk_spark(spark, idx,
+                                                   queries).collect()], side)
