@@ -28,10 +28,12 @@ Two execution paths, both rank-identical to the exhaustive oracle:
    term-pushdown scan of postings → `mapInPandas` decode to
    query-independent BM25 bases → JVM-side (posting × query) expansion
    (broadcast join + hash agg, map-side combine) →
-   `groupBy(query_id, doc_id)` exact fixed-point sum → value-count
-   threshold top-k cut →
-   driver-side url resolution via the serving reader's interval-index
-   stabs and deterministic (score desc, url asc) final ranking.
+   `groupBy(query_id, doc_id)` exact fixed-point sum → in the same
+   stage, each partition's tie-complete top-k per query (`mapInArrow`) →
+   one Arrow collect of the survivors → the exact tie-complete cut in
+   numpy → driver-side url resolution via the serving reader's
+   interval-index stabs and deterministic (score desc, url asc) final
+   ranking.
 
 Tie-break contract (FIXTURES.md §2): final order is (score desc, url asc);
 ranking first takes a tie-complete candidate set (`rank() <= k`, which
@@ -399,35 +401,34 @@ class IndexReader:
                 for i, c in enumerate(_META_KEYS)}
 
     def fetch_payloads(self, fi: np.ndarray, rg: np.ndarray, pos: np.ndarray):
-        """Payload buffers (doc_ids, tfs, dls bytes) for the given block
-        rows, reading each needed row group's payload column chunks at
-        most once (bounded cache). The cache holds each column's values
-        buffer and offsets: only requested blocks become Python bytes
-        (three objects per cached block cost ~120 B, several times the
-        payload of a small block). Returns three aligned object arrays."""
+        """Payload streams (doc_ids, tfs, dls) of the given block rows:
+        per column, the requested blocks' bytes back to back in request
+        order, as one bytes object (the concatenated form
+        decode_blocks_bulk takes). Each needed row group's payload
+        column chunks are read at most once (bounded cache of each
+        column's values buffer and offsets). A request touches a few
+        blocks per row group, so slicing and joining per block costs
+        less than a vectorized gather's per-row-group array calls."""
         self._rg_stats()  # fills _payload_sizes
-        n = len(pos)
-        out = tuple(np.empty(n, dtype=object) for _ in range(3))
-        key = fi.astype(np.int64) * (1 << 20) + rg
-        for k in np.unique(key):
-            f, r = int(k >> 20), int(k & ((1 << 20) - 1))
-            cols = self._payload_cache.get((f, r))
+        key = (fi.astype(np.int64) * (1 << 20) + rg).tolist()
+        parts, seen = ([], [], []), {}
+        for k, p in zip(key, pos.tolist()):
+            cols = seen.get(k)
             if cols is None:
-                tbl = self._file(f).read_row_group(r, columns=PAYLOAD_COLS)
-                cols = tuple(_values_and_offsets(tbl.column(c))
-                             for c in PAYLOAD_COLS)
-                self._payload_cache.put((f, r), cols, tbl.nbytes)
-                self.payload_bytes_fetched += int(self._payload_sizes[f, r])
-                self.payload_rowgroups_fetched += 1
-            sel = np.flatnonzero(key == k)
-            p = pos[sel]
-            for o, (data, offs) in zip(out, cols):
-                # Element-wise: assigning a list goes through a fixed-width
-                # bytes array, which strips trailing NUL bytes.
-                for i, a, b in zip(sel.tolist(), offs[p].tolist(),
-                                   offs[p + 1].tolist()):
-                    o[i] = data[a:b]
-        return out
+                f, r = k >> 20, k & ((1 << 20) - 1)
+                cols = self._payload_cache.get((f, r))
+                if cols is None:
+                    tbl = self._file(f).read_row_group(r, columns=PAYLOAD_COLS)
+                    cols = tuple(_values_and_offsets(tbl.column(c))
+                                 for c in PAYLOAD_COLS)
+                    self._payload_cache.put((f, r), cols, tbl.nbytes)
+                    self.payload_rowgroups_fetched += 1
+                    self.payload_bytes_fetched += int(
+                        self._payload_sizes[f, r])
+                seen[k] = cols
+            for part, (data, offs) in zip(parts, cols):
+                part.append(data[offs[p]:offs[p + 1]])
+        return tuple(b"".join(part) for part in parts)
 
     def _dm_rg_index(self):
         """Interval index over the docmap row groups' [doc_id min, max]
@@ -768,8 +769,9 @@ def _serve_topk(reader: IndexReader, queries: list[dict]):
 # BEFORE any job runs). At or below it the serving WAND scorer runs on
 # the driver (rank-identical, no Spark job): as a Spark job such a batch
 # is bound by per-job scheduling cost, not work. Above it the batch runs
-# the distributed decode rebalance + value-count threshold cut, which
-# scales past one driver. Keyed on the batch's work, not the index size.
+# the distributed decode rebalance + one-pass partition-local top-k cut,
+# which scales past one driver. Keyed on the batch's work, not the index
+# size.
 # 100k docs, local[4], 4-core VM, cold reader, driver vs distributed cut
 # (batched-window serving scorer): 50 reference queries (0.57M matched)
 # 0.45-0.51 vs 4.7-5.3 s; 100 Zipf queries (2.0M) 1.9 vs 9.6-10.9 s;
@@ -803,9 +805,11 @@ def _batch_reader(index_dir: str) -> "IndexReader":
 # analog of build.last_build_timings). "plan" = driver-side planning incl.
 # the pyarrow dictionary df lookup that decides the switch; "score" = the
 # driver-side serving scorer (below the switch, with "cut" = 0) or the
-# scan+score+aggregate job that populates the persisted scores and returns
-# the value-count survivors (above it); "cut" = the threshold filter +
-# candidate collect off the cache; "candidates" = tie-complete candidates
+# one Spark action (above it): scan, decode, score, aggregate, cut each
+# partition's tie-complete top-k and collect the survivors; "cut" = the
+# driver's exact tie-complete cut over those survivors; "survivors" =
+# rows collected from the partitions (= "candidates" below the switch,
+# which has no partition cut); "candidates" = tie-complete candidates
 # whose urls were resolved. Url resolution + final ranking are
 # driver-side and the returned DataFrame is a local relation, so
 # plan + score + cut ≈ wall.
@@ -850,6 +854,24 @@ def _maybe_dump_plan(df, name: str) -> None:
         pass
 
 
+def _tie_complete_rows(qid: np.ndarray, score: np.ndarray,
+                       k_qids: np.ndarray, k_vals: np.ndarray) -> np.ndarray:
+    """Indices of the rows that score at least their query's k-th largest
+    score (multiplicity counted; every row of a query with fewer than k
+    rows), in (query asc, score desc) order. ``k_qids`` is sorted and
+    ``k_vals`` holds each query's k; a k below 1 keeps the query's best
+    plateau, which the final ranking then slices away."""
+    order = np.lexsort((-score, qid))
+    q, s = qid[order], score[order]
+    if q.size == 0:
+        return order
+    starts = np.flatnonzero(np.concatenate(([True], q[1:] != q[:-1])))
+    sizes = np.diff(np.append(starts, q.size))
+    k = np.maximum(k_vals[np.searchsorted(k_qids, q[starts])], 1)
+    kth = np.where(sizes >= k, s[starts + np.minimum(k, sizes) - 1], -np.inf)
+    return order[s >= np.repeat(kth, sizes)]
+
+
 def search_topk_spark(spark, index_dir: str, queries: list[dict]):
     """Batch scoring of a query set → local DataFrame (query_id int, rank
     int, doc_url string, score double), rows in query-id order.
@@ -867,16 +889,39 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
     query-independent BM25 base keyed by a dense term id; the (posting ×
     query) expansion and idf/tf weighting run JVM-side (broadcast join
     against the tiny per-query weight table + hash aggregation inside
-    whole-stage codegen, map-side partials before the one shuffle); the
-    tie-complete top-k is cut with an exact per-query k-th-largest score
-    threshold derived from a value-count table (never window-sorting
-    candidate rows; proof inline). Url resolution for the driver-sized
-    tie-complete candidate set is driver-side on both sides — the serving
-    reader's sidecar-backed interval-index stabs read only the docmap
-    row groups containing candidates; it is never a cluster job and
-    never a full docmap probe.
+    whole-stage codegen, map-side partials before the one shuffle). In
+    the final ``groupBy(query_id, doc_id)`` aggregation's own stage a
+    ``mapInArrow`` keeps, per query, every row scoring at least that
+    partition's k-th largest score; one ``toArrow()`` collects those
+    survivors — the batch is ONE Spark action, with no persist, window
+    or second collect — and the driver finishes the exact per-query
+    tie-complete cut in numpy (*External Merge Sort for Top-K Queries*:
+    a provably safe cutoff filters before any sort, and only
+    driver-sized survivors are collected).
+
+    Why the cut is exact:
+
+    - Each (query, doc) score is final in exactly one post-shuffle
+      partition, and the exact fixed-point sums make it independent of
+      the order the shuffle delivers the doc's terms in.
+    - A partition's top k rows for a query are global rows, so the
+      global k-th score is at least the partition's k-th score t_P.
+      Every row scoring at least the global k-th score therefore
+      survives its partition, and the driver's cut over the survivors
+      equals the cut over all rows.
+    - The survivors are at most partitions × Σ_q (k_q + the tie
+      plateau at t_P).
+    - The cut streams: after each Arrow batch the running survivor set
+      is cut again. Its k-th largest score (over a subset of the
+      partition's rows) never exceeds t_P, so nothing scoring at least
+      t_P is dropped, and temporaries stay batch-sized.
+
+    Url resolution for the driver-sized tie-complete candidate set is
+    driver-side on both sides — the serving reader's sidecar-backed
+    interval-index stabs read only the docmap row groups containing
+    candidates; it is never a cluster job and never a full docmap
+    probe.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     import time as _time
@@ -915,7 +960,7 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
         rows.sort(key=lambda r: r["query_id"])  # stable: ranks stay ordered
         last_batch_timings.update(
             score=round(_time.perf_counter() - _t0, 3), cut=0.0,
-            candidates=candidates,
+            survivors=candidates, candidates=candidates,
         )
         return _result_df(spark, [
             (r["query_id"], r["rank"], r["doc_url"], r["score"]) for r in rows
@@ -931,14 +976,15 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
         for qid, w in q_terms[t]
     ]
     wdf = spark.createDataFrame(w_rows, "tid int, query_id int, w double")
-    plan_bc = spark.sparkContext.broadcast(tid_of)
+    k_of = {q["query_id"]: q["k"] for q in queries}
+    k_qids = np.array(sorted(k_of), dtype=np.int64)
+    k_vals = np.array([k_of[q] for q in k_qids.tolist()], dtype=np.int64)
     avgdl_bc = avgdl
     # Soft-deleted doc_ids (streamed update/delete): dropped at decode
     # time inside the scoring tasks, mirroring the serving path.
     from .streaming.deletes import live_mask, load_tombstones
 
     tombstones = load_tombstones(index_dir)
-    tomb_bc = spark.sparkContext.broadcast(tombstones)
 
     # Flush the per-posting output every ~512k rows so each yielded
     # Arrow batch concatenates ~10 MB of reusable arena pages instead of
@@ -985,11 +1031,28 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
             if tids_out:
                 yield emit(tids_out, dids_out, base_out)
 
+    def cut_partition(batches):
+        """The partition's tie-complete top-k per query, cut again after
+        every Arrow batch, so temporaries stay batch-sized plus the
+        running survivors (proof in search_topk_spark's docstring)."""
+        kq, kv = k_bc.value
+        q, d, s = (np.empty(0, dtype=t)
+                   for t in (np.int32, np.int64, np.float64))
+        for b in batches:
+            q, d, s = (np.concatenate([x, b.column(i).to_numpy()])
+                       for i, x in enumerate((q, d, s)))
+            keep = _tie_complete_rows(q, s, kq, kv)
+            q, d, s = q[keep], d[keep], s[keep]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(q), pa.array(d), pa.array(s)],
+            names=["query_id", "doc_id", "score"],
+        )
+
     # Published-postings size: drives the scan-split sizing. Local FS
     # walk first; on a remote FS (s3a/hdfs — os.walk yields nothing) fall
     # back to the rg_stats sidecar's payload_bytes sum, which the build
     # persists for exactly this kind of listing-free consumer.
-    from .build import _dir_bytes
+    from .build import _dir_bytes, _scoped_conf
 
     try:
         post_bytes = _dir_bytes(paths["postings"])
@@ -999,61 +1062,19 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
         from .sidecar import sidecar_payload_bytes
 
         post_bytes = sidecar_payload_bytes(index_dir, "postings")
-    postings = (
-        spark.read.parquet(paths["postings"])
-        .filter(F.col("term").isin(all_terms))
-        .select("term", "n", "doc_ids", "tfs", "dls")
-    )
-    # Explicit skew rebalance before the CPU-heavy decode: the scan's
-    # parallelism bottoms out at parquet row-group granularity, and the
-    # postings are TERM-SORTED — a hot term's blocks cluster in a few
-    # row groups, so one scan task can hold most of the decode work
-    # (profiled at 2M docs: max decode task 32 s vs an 11 s mean; after
-    # the rebalance max task 4.7 s). Hash on (term, doc_ids) spreads a
-    # single hot term's blocks too — every block has distinct doc_ids
-    # bytes — and is deterministic under task retry (unlike round-robin
-    # repartition, which also local-sorts the block payloads). Shuffled
-    # bytes = matched blocks only (~10 core-s vs the ~80 core-s decode
-    # it balances).
-    n_parts = max(16, spark.sparkContext.defaultParallelism * 3)
-    postings = postings.repartition(n_parts, F.xxhash64("term", "doc_ids"))
-    partials = postings.mapInPandas(
-        score_partition, "tid int, doc_id long, base double"
-    )
-    # Expansion to (posting x query) happens HERE, inside whole-stage
-    # codegen: broadcast-join the tiny (tid, query_id, weight) table and
-    # hash-aggregate — the partial agg in the scan stage collapses
-    # duplicate (query_id, doc_id) keys before the shuffle exactly like
-    # the old python-side combine did, at Tungsten cost per row. Each
-    # contribution is split into two integers in units of 2^-30 and
-    # 2^-60 whose sums are exact, so a doc's score does not depend on
-    # the order the shuffle delivers its terms in (equal docs tie
-    # bit-identically, and a recomputed score equals the first one).
-    c = F.col("base") * F.col("w") * float(1 << 30)
-    scores = (
-        partials.join(F.broadcast(wdf), "tid")
-        .select("query_id", "doc_id", F.floor(c).alias("hi"),
-                F.floor((c - F.floor(c)) * float(1 << 30)).alias("lo"))
-        .groupBy("query_id", "doc_id")
-        .agg((F.sum("hi") * 2.0 ** -30 + F.sum("lo") * 2.0 ** -60)
-             .alias("score"))
-    )
-
     # Split-size the postings scan to the session's parallelism (the
-    # scan runs inside the first collect below): the merged postings of
-    # a 2M-doc index are ~40 files / ~280 MB, which the session-wide
-    # 32 MB splits bin-pack into ~14 tasks — two ragged waves at 8 cores
+    # scan runs inside the one action below): the merged postings of a
+    # 2M-doc index are ~40 files / ~280 MB, which the session-wide 32 MB
+    # splits bin-pack into ~14 tasks — two ragged waves at 8 cores
     # (profiled max task 35 s vs ~24 s mean) while the work inside is
-    # row-group-pruned and CPU-heavy. Target ~3 waves of small splits
-    # per core so pruned-empty splits cost nothing and hot row groups
-    # spread across tasks; cap at 16 MB (2 postings row groups) — with
-    # term-isin row-group pruning the matched work concentrates in few
-    # splits, and a 32 MB cap left one local[2] task holding 69 s of the
-    # 82 core-second scan. (At cluster scale the same rule holds per
-    # executor core; bytes come from a driver-side listing — the
-    # rg_stats sidecar carries them when the FS walk is remote.)
-    from .build import _scoped_conf
-
+    # row-group-pruned and CPU-heavy. Target ~3 waves of small splits per
+    # core so pruned-empty splits cost nothing and hot row groups spread
+    # across tasks; cap at 16 MB (2 postings row groups) — with term-isin
+    # row-group pruning the matched work concentrates in few splits, and
+    # a 32 MB cap left one local[2] task holding 69 s of the 82
+    # core-second scan. (At cluster scale the same rule holds per
+    # executor core; bytes come from a driver-side listing — the rg_stats
+    # sidecar carries them when the FS walk is remote.)
     scan_conf = {}
     if post_bytes:
         par = max(1, spark.sparkContext.defaultParallelism)
@@ -1062,118 +1083,88 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
             "spark.sql.files.maxPartitionBytes": str(int(target)),
             "spark.sql.files.openCostInBytes": str(256 << 10),
         }
-    kdf = spark.createDataFrame(
-        [(q["query_id"], q["k"]) for q in queries], "query_id int, k int"
-    )
-    n_salts = max(32, spark.sparkContext.defaultParallelism * 2)
-    last_batch_timings["plan"] = round(_time.perf_counter() - _t0, 3)
-    _t0 = _time.perf_counter()
 
-    # Tie-complete top-k cut. A window sort over the full candidate set
-    # is the bottleneck of a big batch — profiled at 2M docs / 200
-    # queries two window stages burned ~270 JVM core-seconds, and a
-    # salted-rank pre-cut passed 59% of rows through because quantized
-    # BM25 scores form large tie plateaus whose within-salt strict-higher
-    # count stays below k even when their global rank is far beyond it.
-    # Instead: a row belongs to the tie-complete top-k of its query iff
-    # score >= s_k (the per-query k-th largest score, multiplicity
-    # counted), and s_k comes from a per-(query, score) VALUE-COUNT table
-    # — a hash aggregation whose map-side combine collapses each tie
-    # plateau to one row per task, so the window sorts only
-    # distinct-score rows, never the candidate rows:
-    #   window (query, salt(score)): keep values whose within-salt
-    #     strictly-higher count < k. Every value > s_k survives (its
-    #     global strict-higher count is already < k), and each survivor
-    #     adds >= 1 to its salt's cumulative count, so a salt keeps at
-    #     most k values — the survivor set is DRIVER-SIZED BY
-    #     CONSTRUCTION (<= |queries| x n_salts x k_max rows).
-    #   driver merge (per query): the cumulative counts over survivors
-    #     are exact at and above s_k; s_k = min value with cum < k.
-    # scores is persisted across its two consumers (threshold job +
-    # final filter); the filter then collects exactly the tie-complete
-    # candidates.
-    scores = scores.persist()
+    sc = spark.sparkContext
+    # Each broadcast pickles to a file in the driver's temp dir that only
+    # destroy() removes, so they are destroyed once the one action ran.
+    plan_bc = sc.broadcast(tid_of)
+    tomb_bc = sc.broadcast(tombstones)
+    k_bc = sc.broadcast((k_qids, k_vals))
     try:
-        vc = (
-            scores.groupBy("query_id", "score")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .join(F.broadcast(kdf), "query_id")
+        postings = (
+            spark.read.parquet(paths["postings"])
+            .filter(F.col("term").isin(all_terms))
+            .select("term", "n", "doc_ids", "tfs", "dls")
         )
-        w_salt = (
-            Window.partitionBy(
-                "query_id", F.pmod(F.xxhash64("score"), F.lit(n_salts))
-            )
-            .orderBy(F.col("score").desc())
-            .rowsBetween(Window.unboundedPreceding, -1)
+        # Explicit skew rebalance before the CPU-heavy decode: the scan's
+        # parallelism bottoms out at parquet row-group granularity, and
+        # the postings are TERM-SORTED — a hot term's blocks cluster in a
+        # few row groups, so one scan task can hold most of the decode
+        # work (profiled at 2M docs: max decode task 32 s vs an 11 s
+        # mean; after the rebalance max task 4.7 s). Hash on (term,
+        # doc_ids) spreads a single hot term's blocks too — every block
+        # has distinct doc_ids bytes — and is deterministic under task
+        # retry (unlike round-robin repartition, which also local-sorts
+        # the block payloads). Shuffled bytes = matched blocks only (~10
+        # core-s vs the ~80 core-s decode it balances).
+        n_parts = max(16, sc.defaultParallelism * 3)
+        postings = postings.repartition(n_parts, F.xxhash64("term", "doc_ids"))
+        partials = postings.mapInPandas(
+            score_partition, "tid int, doc_id long, base double"
         )
-        with _scoped_conf(spark, scan_conf):
-            surv = (
-                vc.withColumn(
-                    "hi_s", F.coalesce(F.sum("c").over(w_salt), F.lit(0))
-                )
-                .filter(F.col("hi_s") < F.col("k"))
-                .select("query_id", "score", "c")
-                .toArrow()
-                .to_pandas()
-            )
-        last_batch_timings["score"] = round(_time.perf_counter() - _t0, 3)
+        # Expansion to (posting x query) happens HERE, inside whole-stage
+        # codegen: broadcast-join the tiny (tid, query_id, weight) table
+        # and hash-aggregate — the partial agg in the scan stage collapses
+        # duplicate (query_id, doc_id) keys before the shuffle exactly
+        # like the old python-side combine did, at Tungsten cost per row.
+        # Each contribution is split into two integers in units of 2^-30
+        # and 2^-60 whose sums are exact, so a doc's score does not depend
+        # on the order the shuffle delivers its terms in (equal docs tie
+        # bit-identically in whichever partition they land).
+        c = F.col("base") * F.col("w") * float(1 << 30)
+        scores = (
+            partials.join(F.broadcast(wdf), "tid")
+            .select("query_id", "doc_id", F.floor(c).alias("hi"),
+                    F.floor((c - F.floor(c)) * float(1 << 30)).alias("lo"))
+            .groupBy("query_id", "doc_id")
+            .agg((F.sum("hi") * 2.0 ** -30 + F.sum("lo") * 2.0 ** -60)
+                 .alias("score"))
+        )
+        # The partition-local cut runs in the final aggregation's stage.
+        survivors = scores.mapInArrow(
+            cut_partition, "query_id int, doc_id long, score double"
+        )
+        _maybe_dump_plan(survivors, "bm25_batch_bigcut")
+        last_batch_timings["plan"] = round(_time.perf_counter() - _t0, 3)
         _t0 = _time.perf_counter()
-        # Survivors come back as Arrow columns, not Row objects: the set
-        # is driver-sized but up to |queries| x n_salts x k_max rows, and
-        # a Row per survivor was the driver's memory peak of a big batch.
-        # ``above`` = each value's strictly-higher count in its query.
-        surv = surv.sort_values(
-            ["query_id", "score"], ascending=[True, False], kind="mergesort"
-        )
-        above = surv.groupby("query_id")["c"].cumsum() - surv["c"]
-        k_of = {q["query_id"]: q["k"] for q in queries}
-        s_k = surv["score"][above < surv["query_id"].map(k_of)].groupby(
-            surv["query_id"]
-        ).min()
-        # The candidate filter runs against a SECOND evaluation of
-        # scores (a cached partition may have been evicted); the exact
-        # sums above make it reproduce every score bit for bit.
-        thr = spark.createDataFrame(
-            list(zip(s_k.index.tolist(), s_k.tolist())),
-            "query_id int, thr double",
-        )
-        cand = (
-            scores.join(F.broadcast(thr), "query_id")
-            .filter(F.col("score") >= F.col("thr"))
-            .join(F.broadcast(kdf), "query_id")
-        )
-        _maybe_dump_plan(cand, "bm25_batch_bigcut")
-        # (Same scoped split conf as the threshold job: if the cached
-        # scores were evicted this collect re-runs the scan.)
         with _scoped_conf(spark, scan_conf):
-            cand_rows = cand.select(
-                "query_id", "doc_id", "score", "k"
-            ).collect()
+            surv = survivors.toArrow()
     finally:
-        # A long-lived session must not leak cached score RDDs when a
-        # collect dies mid-batch (host kill, cancellation).
-        scores.unpersist()
-    last_batch_timings["cut"] = round(_time.perf_counter() - _t0, 3)
-    # Driver-side finish — ZERO further Spark jobs. The tie-complete
-    # candidate set is driver-sized by construction (≤ Σ_q (k_q +
-    # boundary ties)); its urls come from the serving reader's
-    # sidecar-backed interval-index stabs, reading ONLY docmap row groups
-    # containing candidates (reader.urls_for — test-asserted
-    # row-group-exact). A Spark join here paid ~3 s of fixed cost on the
-    # 2M-doc scaling workload for the same pruned reads.
-    last_batch_timings["candidates"] = len(cand_rows)
-    reader = _batch_reader(index_dir)
-    urls = reader.urls_for(
-        np.array([r.doc_id for r in cand_rows], dtype=np.int64)
-    )
+        for bc in (plan_bc, tomb_bc, k_bc):
+            bc.destroy()
+    last_batch_timings["score"] = round(_time.perf_counter() - _t0, 3)
+    _t0 = _time.perf_counter()
+    # The exact cut over the union of the partitions' survivors.
+    qid, did, score = (surv.column(c).to_numpy()
+                       for c in ("query_id", "doc_id", "score"))
+    keep = _tie_complete_rows(qid, score, k_qids, k_vals)
+    qid, did, score = qid[keep], did[keep], score[keep]
+    # Rounded finer than the other phases: this cut is sub-millisecond.
+    last_batch_timings["cut"] = round(_time.perf_counter() - _t0, 6)
+    last_batch_timings.update(survivors=surv.num_rows, candidates=keep.size)
+    # No further Spark job: the candidates' urls come from the serving
+    # reader's interval-index stabs, reading ONLY docmap row groups that
+    # hold candidates (a Spark join here paid ~3 s of fixed cost on the
+    # 2M-doc scaling workload for the same pruned reads).
+    urls = _batch_reader(index_dir).urls_for(did)
     by_qid: dict[int, list] = defaultdict(list)
-    for r in cand_rows:
-        by_qid[r.query_id].append((-r.score, urls[r.doc_id], r.k))
+    for q, d, s in zip(qid.tolist(), did.tolist(), score.tolist()):
+        by_qid[q].append((-s, urls[d]))
     out_rows = []
-    for qid in sorted(by_qid):
-        vals = sorted(by_qid[qid])  # (score desc, url asc) — the
-        # engine-wide final tie-break (CLAUDE invariant)
-        kq = vals[0][2]
-        for rank, (neg_s, url, _) in enumerate(vals[:kq], start=1):
-            out_rows.append((qid, rank, url, -neg_s))
+    for q in sorted(by_qid):
+        # (score desc, url asc) — the engine-wide final tie-break
+        # (CLAUDE invariant).
+        ranked = sorted(by_qid[q])[:k_of[q]]
+        for rank, (neg_s, url) in enumerate(ranked, start=1):
+            out_rows.append((q, rank, url, -neg_s))
     return _result_df(spark, out_rows)

@@ -254,7 +254,12 @@ def purge_level0(spark: SparkSession, layout: IndexLayout,
                 out.append(pd.DataFrame(new, columns=cols))
             yield pd.concat(out)[cols] if len(out) > 1 else out[0]
 
-    purged = l0.mapInPandas(_purge, l0.schema)
     tmp = layout.postings_l0 + ".purged"
-    purged.write.mode("overwrite").partitionBy("group").parquet(tmp)
+    try:
+        purged = l0.mapInPandas(_purge, l0.schema)
+        purged.write.mode("overwrite").partitionBy("group").parquet(tmp)
+    finally:
+        # The broadcast's pickle file in the driver's temp dir outlives
+        # the job unless destroyed.
+        tomb_bc.destroy()
     _swap_dir(tmp, layout.postings_l0)

@@ -152,3 +152,23 @@ def test_delete_after_compact_exact_on_spanning_blocks(spark, tiny_corpus,
         batch = search_topk_spark(spark, batch_idx, QUERIES).collect()
         assert sorted((r.query_id, r.rank, r.doc_url, round(r.score, 9))
                       for r in batch) == sorted(_rows(after)), side
+
+
+def test_no_broadcast_files_left_behind(spark, batch_idx, monkeypatch):
+    """Every sc.broadcast pickles to a file in the driver's temp dir that
+    only Broadcast.destroy() removes. A forced-distributed batch over an
+    index with tombstones (term ids, tombstones and per-query k) and
+    a compaction that purges them leave the temp dir as they found it."""
+    import escp_spark.query as Q
+
+    monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", -1)
+    tmp = spark.sparkContext._temp_dir
+    victims = sorted({r["doc_url"] for r in search_topk(batch_idx,
+                                                        QUERIES)})[:2]
+    delete_urls(spark, batch_idx, victims)
+    n_files = len(os.listdir(tmp))
+    assert search_topk_spark(spark, batch_idx, QUERIES).collect()
+    assert len(os.listdir(tmp)) == n_files
+    compact_index(spark, batch_idx)
+    assert load_tombstones(batch_idx).size == 0
+    assert len(os.listdir(tmp)) == n_files

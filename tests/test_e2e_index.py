@@ -76,10 +76,10 @@ def test_spark_batch_large_index_strategy_rank_identical(
 ):
     """The batch path picks its strategy by the batch's matched work
     (driver-side serving scorer at or below _BIG_MATCHED_POSTINGS; decode
-    rebalance + value-count threshold cut above). Force the distributed
-    side on the same tiny index and assert the exhaustive-oracle rank
-    identity holds there too — the two sides must be output-identical at
-    every scale."""
+    rebalance + one-pass partition-local top-k cut above). Force the
+    distributed side on the same tiny index and assert the
+    exhaustive-oracle rank identity holds there too — the two sides must
+    be output-identical at every scale."""
     import escp_spark.query as Q
 
     monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", -1)
@@ -168,7 +168,7 @@ def test_docids_unique_and_bucketed(spark, built_index):
 def test_spark_batch_path_small_k_bounded_topk(spark, built_index,
                                               batch_sides):
     """The batch path's tie-complete top-k cut is rank-safe on both sides
-    of its switch (the value-count threshold cut in
+    of its switch (the partition-local tie-complete cut in
     query.search_topk_spark; the serving scorer's kth-score cut in
     query._serve_topk): small k on a hot term — where the cut actually
     discards candidates — must stay identical to the serving path,
@@ -301,3 +301,36 @@ def test_balanced_shuffle_planner_rejects_long_key():
 
     with pytest.raises(TypeError, match="int key"):
         _balanced_shuffle_partitions([[0, 2], [1, 3]], 4, T.LongType())
+
+
+# Spark jobs of one forced-distributed batch over ``built_index``, as
+# measured: the one toArrow action runs as several jobs under adaptive
+# execution (the weight table's broadcast and one per shuffle stage).
+_DISTRIBUTED_BATCH_JOBS = 5
+
+
+def test_distributed_batch_is_one_pass_and_caches_nothing(
+        spark, built_index, monkeypatch):
+    """The distributed side cuts each partition's tie-complete top-k in
+    the aggregation's stage and collects the survivors once: nothing is
+    left persisted, the tie-complete candidates are a subset of the
+    collected survivors, and the job count stays at its measured value."""
+    import escp_spark.query as Q
+
+    monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", -1)
+    index_dir, _ = built_index
+    sc = spark.sparkContext
+    group = "batch_one_pass"
+    try:
+        sc.setJobGroup(group, group)
+        rows = search_topk_spark(spark, index_dir,
+                                 reference_queries()).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows
+    assert len(sc._jsc.getPersistentRDDs()) == 0
+    bt = Q.last_batch_timings
+    assert len(rows) <= bt["candidates"] <= bt["survivors"], bt
+    assert len(jobs) <= _DISTRIBUTED_BATCH_JOBS, jobs

@@ -231,3 +231,98 @@ def test_equal_docs_in_different_windows_tie_exactly(spark, tmp_path,
     for side in batch_sides():
         check([tuple(r) for r in search_topk_spark(spark, idx,
                                                    queries).collect()], side)
+
+
+def _write_pages(path, cols, extra):
+    """Write generated web pages plus ``extra`` (url, text) docs as a
+    build_index input."""
+    import pyarrow as pa
+
+    from escp_spark.analyzer import wrap_html
+
+    for url, text in extra:
+        cols["url"].append(url)
+        cols["text"].append(text)
+        cols["html"].append(wrap_html(f"page {url}", text))
+        cols["lang"].append("en")
+        cols["warc_ts"].append(cols["warc_ts"][-1])
+    pq.write_table(pa.table({
+        "url": pa.array(cols["url"], pa.string()),
+        "warc_ts": pa.array(cols["warc_ts"], pa.timestamp("us")),
+        "html": pa.array(cols["html"], pa.binary()),
+        "text": pa.array(cols["text"], pa.string()),
+        "lang": pa.array(cols["lang"], pa.string()),
+    }), path)
+
+
+def _assert_fetch_matches_per_block_decode(idx) -> int:
+    """Decode fetch_payloads' buffers for every block of ``idx``, in
+    shuffled request order, and compare with a per-block decode of the
+    row groups' own cells. Returns the number of blocks with a payload
+    ending in a NUL byte."""
+    from escp_spark.codec import decode_block, decode_blocks_bulk
+
+    reader = IndexReader(idx)
+    src, want, nul_tails = [], [], 0
+    for fi, path in enumerate(reader._pfiles):
+        pf = pq.ParquetFile(path)
+        for rgi in range(pf.num_row_groups):
+            cells = pf.read_row_group(
+                rgi, columns=["n"] + Q.PAYLOAD_COLS).to_pydict()
+            for pos, n in enumerate(cells["n"]):
+                bufs = [cells[c][pos] for c in Q.PAYLOAD_COLS]
+                nul_tails += any(b.endswith(b"\x00") for b in bufs)
+                src.append((fi, rgi, pos, n))
+                want.append(decode_block(*bufs, n))
+    perm = np.random.default_rng(0).permutation(len(src))
+    fi, rg, pos, n = np.array(src, dtype=np.int64)[perm].T
+    got = decode_blocks_bulk(*reader.fetch_payloads(fi, rg, pos), n)
+    for c in range(3):
+        np.testing.assert_array_equal(
+            got[c], np.concatenate([want[i][c] for i in perm]))
+    np.testing.assert_array_equal(got[3], np.repeat(np.arange(n.size), n))
+    return nul_tails
+
+
+def test_fetch_payloads_gathers_every_block(spark, big_index, tmp_path):
+    """fetch_payloads returns each payload column as one buffer of the
+    requested blocks, back to back in request order: decoding it equals
+    a per-block decode for every block of ``big_index`` and of a small
+    one-bucket index whose smallest url (doc id 0) alone holds a term.
+    That term's one-posting block stores doc id 0 as the single byte
+    0x00, a payload that ends in NUL."""
+    from escp_spark.corpus import generate_web_pages
+
+    _assert_fetch_matches_per_block_decode(big_index[1])
+    corpus = str(tmp_path / "pages.parquet")
+    _write_pages(corpus, generate_web_pages(40, seed=3),
+                 [("https://0.example/", "nulonly t00000 t00001")])
+    idx = str(tmp_path / "idx")
+    build_index(spark, corpus, idx, n_buckets=1, max_segments=1, n_groups=1)
+    assert IndexReader(idx).urls_for(np.array([0])) == {
+        0: "https://0.example/"}
+    assert _assert_fetch_matches_per_block_decode(idx) > 0
+
+
+def test_tie_plateau_across_partitions(spark, tmp_path, batch_sides):
+    """64 docs of one text under distinct urls spread over the buckets,
+    hence over the distributed cut's shuffle partitions: each partition
+    holds several of the tied rows. The top 5 must be the 5 smallest
+    urls with bit-equal scores on both sides of the batch switch — a
+    partition-local cut that kept exactly k rows per partition, not
+    every row tied with its k-th, would lose some of them."""
+    from escp_spark.corpus import generate_web_pages, hash_md5_int
+    from escp_spark.query import search_topk_spark
+
+    urls = [f"https://plateau.example/{i:03d}" for i in range(64)]
+    assert len({hash_md5_int(u) % 8 for u in urls}) == 8
+    corpus = str(tmp_path / "pages.parquet")
+    _write_pages(corpus, generate_web_pages(200, seed=9),
+                 [(u, "plateauword plateauword t00001") for u in urls])
+    idx = str(tmp_path / "idx")
+    build_index(spark, corpus, idx, n_buckets=8, max_segments=2, n_groups=1)
+    queries = [{"query_id": 0, "query_text": "plateauword", "k": 5}]
+    for side in batch_sides():
+        rows = search_topk_spark(spark, idx, queries).collect()
+        assert [r.doc_url for r in rows] == urls[:5], side
+        assert len({r.score for r in rows}) == 1, side
