@@ -24,8 +24,7 @@ from-scratch, Spark-first index construction and query stack:
 - ``operators`` — training-data-pipeline operators over the driver's
                   ``documents``/``embeddings`` tables: dedup (exact,
                   minhash-LSH, simhash), ANN similarity search, text
-                  quality/langid/token-count/fingerprint, multimodal
-                  plumbing.
+                  quality/langid/token-count/fingerprint.
 
 Everything is DataFrame/SQL-first; Python appears only inside
 Arrow-vectorized pandas UDFs (no per-row Python anywhere).

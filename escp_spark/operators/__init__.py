@@ -22,12 +22,6 @@ from .textstats import (
     token_count_expr,
     doc_fingerprints,
 )
-from .multimodal import (
-    MEDIA_SCHEMA,
-    attach_media_metadata,
-    decode_and_featurize,
-    sample_frames,
-)
 
 __all__ = [
     "exact_dedup_groups", "minhash_signatures", "lsh_candidate_pairs",
@@ -36,6 +30,4 @@ __all__ = [
     "ann_bruteforce_topk", "ann_lsh_topk", "ann_lsh_topk_bucketed",
     "bucketize_embeddings", "ensure_embedding_buckets", "lsh_bucket_expr",
     "langid_scores", "quality_scores", "token_count_expr", "doc_fingerprints",
-    "MEDIA_SCHEMA", "attach_media_metadata", "decode_and_featurize",
-    "sample_frames",
 ]

@@ -11,25 +11,26 @@ dictionary/skip data at merge time for exactly this reason (reference
 anchor: index metadata is fetched as one document, not re-derived per
 client — esindex/esindex.go:72-105).
 
-So the build does the scan ONCE per publish: ``write_rg_sidecar`` runs
-right before every manifest publish (batch finalize, streaming finalize,
-compaction) and writes the ``rg_stats`` directory at the index root —
-a parquet dataset hive-partitioned by (kind, segment), one row per
-(artifact kind, file, row group), plus a tiny ``_meta.json`` carrying
-per-kind file counts, row counts, and a fingerprint of the file listing.
+So the writer does the scan ONCE per publish: ``write_rg_sidecar`` runs
+right before every manifest publish that changes postings or docmap
+(batch finalize, streaming finalize, compaction) and writes a NEW
+``rg_stats-<id>`` directory that the manifest names next to the data
+directories — a parquet dataset hive-partitioned by (kind, segment), one
+row per (artifact kind, file, row group). It is written for exactly the
+files of that publish, so it is also the publish's FILE LIST: the reader
+takes its postings and docmap file lists from it and never lists a data
+directory (streamed epochs append docmap files that only the next
+publish's sidecar names).
 
 Why sharded (round 5 shipped ONE monolithic file): at the 10^12-doc
 design point the sidecar is ~10^7 rows. A single file forces every
-consumer to parse ALL of it — the round-5 reader parsed it twice per
-load (once per kind) and validated by materializing every path into a
-set. The sharded layout gives each consumer exactly its slice:
+consumer to parse ALL of it. The sharded layout gives each consumer
+exactly its slice:
 
 - the reader loads ONE kind's shards with a directory-scoped read
   (``kind=postings/`` never touches docmap bytes, and vice versa);
 - a serving node that owns a subset of segments can read only those
   ``segment=N`` shards;
-- validation is O(1) metadata (count + listing fingerprint from
-  ``_meta.json``) instead of a 10^7-entry set comparison;
 - the distributed scan WRITES from the Spark job (one shard per task) —
   the round-5 version funnelled every row through a driver ``toPandas``.
 
@@ -43,19 +44,13 @@ their own shard of them at 10^12-doc scale — the driver never touches
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 import re
-import shutil
-import uuid
 
 import numpy as np
 import pandas as pd
 
 SIDECAR_NAME = "rg_stats"
-_META_NAME = "_meta.json"
-_LEGACY_SIDECAR = "rg_stats.parquet"  # round-5 monolithic layout
 
 PAYLOAD_COLS = ("doc_ids", "tfs", "dls")
 
@@ -93,18 +88,6 @@ def _segment_of(rel_path: str) -> int:
     return int(m.group(1)) if m else -1
 
 
-def _fingerprint(rel_paths: list[str]) -> str:
-    """Listing fingerprint: md5 over the sorted relative paths. The
-    reader recomputes this from its OWN listing — O(n) hashing, no
-    per-path set materialization — to detect a sidecar that is stale
-    w.r.t. what is actually on disk (e.g. the compaction purge window)."""
-    h = hashlib.md5()
-    for p in sorted(rel_paths):
-        h.update(p.encode())
-        h.update(b"\n")
-    return h.hexdigest()
-
-
 def _scan_footers(kind: str, files: list[str]) -> pd.DataFrame:
     """Footer stats of every row group of ``files`` (absolute paths).
     ``path`` in the result is the absolute input path; callers relativize."""
@@ -119,19 +102,6 @@ def _scan_footers(kind: str, files: list[str]) -> pd.DataFrame:
             pis = [names.index(c) for c in PAYLOAD_COLS]
         else:
             di = names.index("doc_id")
-        if md.num_row_groups == 0:
-            # Empty part file (a shuffle partition that got no rows):
-            # emit a marker row (rg = -1) so the per-kind row count in
-            # _meta.json still accounts for the file; it carries no
-            # row group.
-            rows["path"].append(path)
-            rows["rg"].append(-1)
-            rows["term_lo"].append(None)
-            rows["term_hi"].append(None)
-            rows["doc_lo"].append(None)
-            rows["doc_hi"].append(None)
-            rows["payload_bytes"].append(0)
-            continue
         for rgi in range(md.num_row_groups):
             rg = md.row_group(rgi)
             rows["path"].append(path)
@@ -188,34 +158,22 @@ def _pdf_to_arrow(pdf: pd.DataFrame):
     })
 
 
-def _swap_dir(tmp: str, final: str) -> None:
-    """Atomic-enough local swap: the final name flips in one rename; a
-    reader racing the swap sees either layout complete (or nothing, and
-    falls back to the footer walk — the same guarantee the manifest
-    publish gives)."""
-    trash = final + f".trash-{uuid.uuid4().hex}"
-    if os.path.exists(final):
-        os.rename(final, trash)
-    os.rename(tmp, final)
-    shutil.rmtree(trash, ignore_errors=True)
-
-
-def write_rg_sidecar(layout, spark=None) -> int:
-    """Scan the published postings + docmap footers and write the
-    sharded sidecar atomically. Returns the number of row-group rows
-    written. With a SparkSession and a large file count, the scan
-    distributes AND each task writes its own (kind, segment) shards —
-    no driver materialization of the row set."""
+def write_rg_sidecar(layout, paths: dict, spark=None) -> str:
+    """Scan the footers of ``paths["postings"]`` and ``paths["docmap"]``
+    and write the sharded sidecar into a new directory, which it
+    returns (the caller publishes it as ``paths["rg_stats"]``). With a
+    SparkSession and a large file count, the scan distributes AND each
+    task writes its own (kind, segment) shards — no driver
+    materialization of the row set."""
     import pyarrow.parquet as pq
 
     root = layout.root
     work = [
-        ("postings", _list_parquet_files(layout.postings)),
-        ("docmap", _list_parquet_files(layout.docmap)),
+        ("postings", _list_parquet_files(paths["postings"])),
+        ("docmap", _list_parquet_files(paths["docmap"])),
     ]
     n_files = sum(len(fs) for _, fs in work)
-    tmp = os.path.join(root, f".tmp-rgstats-{uuid.uuid4().hex}")
-    os.makedirs(tmp, exist_ok=True)
+    out = layout.artifact(SIDECAR_NAME)
     if spark is not None and n_files > _DRIVER_SCAN_MAX_FILES:
         inputs = [(k, f) for k, fs in work for f in fs]
         fdf = spark.createDataFrame(inputs, "kind string, path string")
@@ -252,61 +210,38 @@ def write_rg_sidecar(layout, spark=None) -> int:
             # partitions instead of one; ADVICE r06.)
             fdf.repartition(max(16, min(256, n_files // 64)))
             .mapInPandas(scan, out_schema)
-            .write.mode("overwrite")
-            .partitionBy("kind", "segment")
-            .parquet(tmp)
+            .write.partitionBy("kind", "segment")
+            .parquet(out)
         )
-        # Spark's _SUCCESS marker would confuse nothing, but keep the
-        # dataset clean for non-Spark consumers.
-        for extra in ("_SUCCESS",):
-            p = os.path.join(tmp, extra)
-            if os.path.exists(p):
-                os.remove(p)
+        # Keep the dataset clean of Spark's marker for non-Spark readers.
+        if os.path.exists(os.path.join(out, "_SUCCESS")):
+            os.remove(os.path.join(out, "_SUCCESS"))
     else:
         for kind, files in work:
             pdf = _scan_footers(kind, files)
             pdf["path"] = [os.path.relpath(p, root) for p in pdf["path"]]
             for seg, g in pdf.groupby(pdf["path"].map(_segment_of)):
-                d = os.path.join(tmp, f"kind={kind}", f"segment={int(seg)}")
+                d = os.path.join(out, f"kind={kind}", f"segment={int(seg)}")
                 os.makedirs(d, exist_ok=True)
                 pq.write_table(
                     _pdf_to_arrow(g.reset_index(drop=True)),
                     os.path.join(d, "part-0.parquet"),
                 )
-    # Per-kind meta: row counts from the written shards' own footers
-    # (metadata-only reads — the driver never re-materializes the rows),
-    # listing fingerprints from the file lists the scan already holds.
-    meta, total_rows = {}, 0
-    for kind, files in work:
-        kdir = os.path.join(tmp, f"kind={kind}")
-        n_rows = 0
-        if os.path.isdir(kdir):
-            for shard in _list_parquet_files(kdir):
-                n_rows += pq.ParquetFile(shard).metadata.num_rows
-        rel = [os.path.relpath(f, root) for f in files]
-        meta[kind] = {
-            "n_files": len(files),
-            "n_rows": n_rows,
-            "fingerprint": _fingerprint(rel),
-        }
-        total_rows += n_rows
-    with open(os.path.join(tmp, _META_NAME), "w") as f:
-        json.dump(meta, f)
-    _swap_dir(tmp, os.path.join(root, SIDECAR_NAME))
-    legacy = os.path.join(root, _LEGACY_SIDECAR)
-    if os.path.exists(legacy):
-        os.remove(legacy)
-    return total_rows
+    os.makedirs(out, exist_ok=True)
+    return out
 
 
 def sidecar_payload_bytes(index_dir: str, kind: str) -> int:
-    """Σ payload_bytes of one kind — a listing-free size probe for scan
-    sizing (reads only that kind's shards). 0 when absent/unreadable."""
+    """Σ payload_bytes of one kind of the published index — a
+    listing-free size probe for scan sizing (reads only that kind's
+    shards). 0 when absent/unreadable."""
     import pyarrow.dataset as pads
 
-    kdir = os.path.join(index_dir, SIDECAR_NAME, f"kind={kind}")
+    from .sources.tables import load_manifest
+
     try:
-        files = _list_parquet_files(kdir)
+        sidecar = load_manifest(index_dir)["paths"][SIDECAR_NAME]
+        files = _list_parquet_files(os.path.join(sidecar, f"kind={kind}"))
         if not files:
             return 0
         tbl = pads.dataset(files, format="parquet").to_table(
@@ -318,69 +253,35 @@ def sidecar_payload_bytes(index_dir: str, kind: str) -> int:
         return 0
 
 
-def load_rg_sidecar(index_dir: str, kind: str,
-                    expected_files: list[str]) -> pd.DataFrame | None:
-    """Sidecar rows of ``kind``, validated against the reader's actual
-    file listing (absolute paths, sorted — the reader's canonical
-    order). Returns None — caller falls back to the footer walk — when
-    the sidecar is absent or stale (listing fingerprint or row count
-    disagrees with ``_meta.json``: e.g. a reader that catches the
-    compaction purge window between the docmap swap and the republish).
-
-    ONE directory-scoped read per kind (``kind=<kind>/`` shards only);
-    validation is count + fingerprint — O(n) hashing over the listing
-    the reader already holds, never a path-set materialization. The
-    returned frame carries ``fi``: each row's index into
-    ``expected_files`` (valid because the fingerprint proved the
-    sidecar's file set IS the reader's listing)."""
+def load_rg_sidecar(index_dir: str, sidecar: str,
+                    kind: str) -> tuple[list[str], pd.DataFrame]:
+    """The published files of ``kind`` (absolute, sorted) and their row
+    groups, from the sidecar directory ``sidecar``: one row per row
+    group with ``fi`` (index into the files), ``rg``, the term or doc-id
+    range and ``payload_bytes``. ONE directory-scoped read
+    (``kind=<kind>/`` shards only)."""
+    import pyarrow as pa
     import pyarrow.dataset as pads
 
-    base = os.path.join(index_dir, SIDECAR_NAME)
-    try:
-        with open(os.path.join(base, _META_NAME)) as f:
-            meta = json.load(f)[kind]
-    except Exception:
-        return None
-    rel_expected = np.array(
-        [os.path.relpath(f, index_dir) for f in expected_files], dtype=object
-    )
-    if meta["n_files"] != len(rel_expected) or (
-        meta["fingerprint"] != _fingerprint(list(rel_expected))
-    ):
-        return None
-    shards = _list_parquet_files(os.path.join(base, f"kind={kind}"))
+    shards = _list_parquet_files(os.path.join(sidecar, f"kind={kind}"))
     if not shards:
         pdf = pd.DataFrame(
             {k: pd.Series(dtype=v) for k, v in _SIDECAR_PANDAS_SCHEMA.items()}
         )
     else:
-        try:
-            import pyarrow as pa
-
-            # doc_lo/doc_hi load as NULLABLE Int64 (not float64-with-NaN)
-            # so doc ids stay exact past 2^53; legacy double-typed
-            # sidecars simply come back float64 as before. The mapping
-            # is scoped to those two columns: payload_bytes (never null)
-            # stays plain int64.
-            tbl = pads.dataset(shards, format="parquet").to_table()
-            ids = [c for c in ("doc_lo", "doc_hi") if c in tbl.column_names]
-            pdf = tbl.drop_columns(ids).to_pandas()
-            for c in ids:
-                pdf[c] = tbl.column(c).to_pandas(
-                    types_mapper={pa.int64(): pd.Int64Dtype()}.get
-                )
-        except Exception:
-            return None
-    if len(pdf) != meta["n_rows"]:
-        return None  # shard set incomplete/tampered vs what was written
-    # expected_files is sorted, relpath under one root preserves order →
-    # rel_expected is sorted: fi by binary search, no dict of 10^7 keys.
-    fi = np.searchsorted(rel_expected, pdf["path"].to_numpy(dtype=object))
-    ok = (fi < len(rel_expected)) & (
-        rel_expected[np.minimum(fi, len(rel_expected) - 1)]
-        == pdf["path"].to_numpy(dtype=object)
-    )
-    if not bool(np.all(ok)):
-        return None  # a row references a file the reader cannot see
-    pdf = pdf.assign(fi=fi.astype(np.int64))
-    return pdf[pdf["rg"] >= 0]
+        # doc_lo/doc_hi load as NULLABLE Int64 (not float64-with-NaN)
+        # so doc ids stay exact past 2^53. The mapping is scoped to
+        # those two columns: payload_bytes (never null) stays plain int64.
+        tbl = pads.dataset(shards, format="parquet").to_table(
+            columns=list(_SIDECAR_PANDAS_SCHEMA)
+        )
+        ids = ["doc_lo", "doc_hi"]
+        pdf = tbl.drop_columns(ids).to_pandas()
+        for c in ids:
+            pdf[c] = tbl.column(c).to_pandas(
+                types_mapper={pa.int64(): pd.Int64Dtype()}.get
+            )
+    rel, fi = np.unique(pdf["path"].to_numpy(dtype=object),
+                        return_inverse=True)
+    files = [os.path.join(index_dir, p) for p in rel]
+    return files, pdf.assign(fi=fi.astype(np.int64))

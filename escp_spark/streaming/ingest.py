@@ -20,7 +20,9 @@ Semantics:
   trade Lucene makes with soft-deletes; out of scope here.
 - Queries only ever see a published manifest: call
   ``finalize_streamed_index`` after (or periodically between) epochs to
-  merge + re-stat + atomically republish (D3/D5 analogs).
+  merge + re-stat + atomically republish (D3/D5 analogs). An epoch adds
+  files to the level-0 and docmap directories and changes none; readers
+  see the new docmap files only once a publish's sidecar lists them.
 """
 
 from __future__ import annotations
@@ -160,6 +162,8 @@ def _bloom_bits_for(df_with_urls: DataFrame, m: int, k: int) -> np.ndarray:
 
 
 def _bloom_might_contain_udf(spark: SparkSession, bloom: dict):
+    """The bloom probe as a pandas UDF, and the broadcast of its bitmap
+    (the caller destroys it once the plans using the UDF have run)."""
     bits_bc = spark.sparkContext.broadcast(bloom["bits"])
     m, k = bloom["m"], bloom["k"]
 
@@ -174,7 +178,7 @@ def _bloom_might_contain_udf(spark: SparkSession, bloom: dict):
             ok &= ((w >> (pos & np.uint64(63))) & np.uint64(1)).astype(bool)
         return pd.Series(ok)
 
-    return might_contain
+    return might_contain, bits_bc
 
 
 def _existing_urls(spark: SparkSession, layout: IndexLayout,
@@ -193,7 +197,7 @@ def _existing_urls(spark: SparkSession, layout: IndexLayout,
         docmap = docmap.filter(F.col("group") != f"e{epoch}")
     from .deletes import load_tombstones
 
-    tomb = load_tombstones(layout.root)
+    tomb = load_tombstones(layout.root, layout.paths)
     if tomb.size:
         # Exclude by DOC_ID (not url): a deleted url with no live row
         # becomes re-ingestable, while an url that was already
@@ -225,13 +229,20 @@ def _drop_already_indexed(spark: SparkSession, layout: IndexLayout,
         _save_bloom(layout, bloom)
         rebuilt = True
     hashed = _with_url_hashes(prepared)
-    might = _bloom_might_contain_udf(spark, bloom)
-    maybe_urls = [
-        r.url
-        for r in hashed.withColumn("__maybe", might(F.col("__h1"), F.col("__h2")))
-        .filter(F.col("__maybe"))
-        .select("url").limit(_MAYBE_ISIN_MAX + 1).collect()
-    ]
+    might, bits_bc = _bloom_might_contain_udf(spark, bloom)
+    try:
+        maybe_urls = [
+            r.url
+            for r in hashed.withColumn(
+                "__maybe", might(F.col("__h1"), F.col("__h2"))
+            )
+            .filter(F.col("__maybe"))
+            .select("url").limit(_MAYBE_ISIN_MAX + 1).collect()
+        ]
+    finally:
+        # Its pickle file in the driver's temp dir outlives the job
+        # unless destroyed, and no later plan uses the UDF.
+        bits_bc.destroy()
     # Downstream plans split on the COLLECTED url set (a JVM-side isin),
     # never on a recomputed __maybe column — the bloom UDF runs exactly
     # one pass over the batch (ADVICE r04: the old plan re-evaluated it
@@ -400,37 +411,29 @@ def stream_ingest_once(spark: SparkSession, source_dir: str, index_dir: str,
 
 
 def _stats_and_publish(spark: SparkSession, layout: IndexLayout,
-                       max_segments: int, consolidation_shift: int,
-                       total_tokens: int | None = None,
+                       paths: dict, max_segments: int,
+                       consolidation_shift: int, total_tokens: int,
                        prior: dict | None = None) -> dict:
-    """Publish corpus stats + manifest — shared by finalize and
-    compaction. ``total_tokens`` (Σcf) comes from the dictionary write
-    that merge_segments / finalize fused into their level-0 stats pass
-    (VERDICT r04 #4 — no separate published-postings re-scan); when
-    None (defensive fallback) it is read back from the dictionary.
-    ``prior`` (the pre-compaction manifest) carries identity/lineage
-    fields — n_buckets, input_snapshot, source_filter — so compacting a
-    BATCH-built index doesn't rewrite them to streaming defaults."""
+    """Write the rg_stats sidecar of ``paths`` and publish them with the
+    corpus stats — shared by finalize and compaction. ``total_tokens``
+    (Σcf) comes from the dictionary write that merge_segments / finalize
+    fused into their level-0 stats pass (VERDICT r04 #4 — no separate
+    published-postings re-scan). ``prior`` (the pre-compaction manifest)
+    carries identity/lineage fields — n_buckets, input_snapshot,
+    source_filter — so compacting a BATCH-built index doesn't rewrite
+    them to streaming defaults."""
     from ..analyzer import ANALYZER_VERSION
-    from ..build import INDEX_LAYOUT_VERSION
     from ..codec import BLOCK_SIZE, CODEC_VERSION
+    from ..sidecar import write_rg_sidecar
+    from ..sources.tables import INDEX_LAYOUT_VERSION
 
     # Doc count from parquet footers (driver-side metadata, exact) —
     # not a Spark scan job per (re)publish (r07, same change as the
     # batch build's shuffle_counts).
     import pyarrow.dataset as pads
 
-    n_docs = pads.dataset(layout.docmap, format="parquet").count_rows()
-    if total_tokens is None:
-        total_tokens = (
-            spark.read.parquet(layout.dictionary).agg(F.sum("cf"))
-            .collect()[0][0] or 0
-        )
-    # Refresh the serving-metadata sidecar at every (re)publish so
-    # long-lived readers never fall back to the per-reader footer walk.
-    from ..sidecar import write_rg_sidecar
-
-    write_rg_sidecar(layout, spark)
+    n_docs = pads.dataset(paths["docmap"], format="parquet").count_rows()
+    paths = {**paths, "rg_stats": write_rg_sidecar(layout, paths, spark)}
     prior = prior or {}
     stats = {
         "n_docs": int(n_docs),
@@ -448,10 +451,11 @@ def _stats_and_publish(spark: SparkSession, layout: IndexLayout,
         "analyzer_version": ANALYZER_VERSION,
         "input_snapshot": prior.get("input_snapshot", "streaming"),
         "consolidation_shift": consolidation_shift,
+        "level0": layout.postings_l0,
     }
     if "source_filter" in prior:
         stats["source_filter"] = prior["source_filter"]
-    return publish_manifest(layout, stats)
+    return publish_manifest(layout, stats, paths)
 
 
 def finalize_streamed_index(spark: SparkSession, index_dir: str,
@@ -477,17 +481,18 @@ def finalize_streamed_index(spark: SparkSession, index_dir: str,
     )
     from ..build import POSTINGS_ROW_GROUP_BYTES
 
+    postings = layout.artifact("postings")
     (
-        merged.write.mode("overwrite")
+        merged.write
         .option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES))
         .partitionBy("segment")
-        .parquet(layout.postings)
+        .parquet(postings)
     )
     # Dictionary from the SAME level-0 metadata (df/cf invariant under
     # the modulo re-layout) — not a re-scan of the published postings.
     from ..build import _write_dictionary
 
-    total_tokens = _write_dictionary(
+    dictionary, total_tokens = _write_dictionary(
         spark, layout,
         l0.groupBy("term").agg(
             F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")
@@ -496,9 +501,12 @@ def finalize_streamed_index(spark: SparkSession, index_dir: str,
     # Modulo segment placement (open-ended epoch buckets) is not
     # docid-contiguous, so tails stay unconsolidated and every block
     # remains inside one effective bucket → prune window stays the bucket.
+    # The tombstone set (if any) carries over unchanged.
     return _stats_and_publish(
-        spark, layout, max_segments, DOC_BUCKET_SHIFT,
-        total_tokens=total_tokens,
+        spark, layout,
+        {**layout.paths, "postings": postings, "dictionary": dictionary,
+         "docmap": layout.docmap},
+        max_segments, DOC_BUCKET_SHIFT, total_tokens,
     )
 
 
@@ -531,10 +539,9 @@ def compact_index(spark: SparkSession, index_dir: str,
     manifest, not reset to streaming defaults (ADVICE r04).
     ``max_segments`` defaults to the prior manifest's value."""
     from ..build import merge_segments
-    from ..sources.tables import load_manifest, publish_manifest
+    from ..sources.tables import load_manifest
     from .deletes import (
-        _GENERATED_KEYS, _resolve_build_id, clear_tombstones,
-        load_tombstones, purge_docmap, purge_level0,
+        _resolve_build_id, load_tombstones, purge_docmap, purge_level0,
     )
 
     prior = load_manifest(index_dir)
@@ -545,37 +552,23 @@ def compact_index(spark: SparkSession, index_dir: str,
     # postings from level-0 and rows from the docmap BEFORE the merge,
     # so the republished stats (df, cf, n_docs, avgdl) are exact for
     # the live corpus — post-compact results equal a fresh build over
-    # the live docs (asserted in tests).
-    tomb = load_tombstones(index_dir)
+    # the live docs (asserted in tests). Both purges write new
+    # directories; the one publish below switches to them and drops the
+    # tombstone set.
+    paths = {k: v for k, v in layout.paths.items() if k != "tombstones"}
+    tomb = load_tombstones(index_dir, layout.paths)
     if tomb.size:
-        purge_level0(spark, layout, tomb)  # staging only — readers unaffected
-        purge_docmap(spark, layout, tomb)
-        # The docmap swap replaced PUBLISHED files; long-lived readers
-        # hold pyarrow datasets over the old paths and only re-resolve
-        # on a manifest change — republish immediately (same stats; the
-        # tombstones are still in place so soft-delete masking keeps
-        # results exact over the live set), instead of leaving readers
-        # FileNotFound-prone for the whole merge below (ADVICE r04
-        # medium). A crash right after the swap leaves the same state:
-        # purged files + live tombstones — correct, just stale-stats.
-        publish_manifest(
-            layout,
-            {k: v for k, v in prior.items() if k not in _GENERATED_KEYS},
-        )
+        layout.postings_l0 = purge_level0(spark, layout, tomb)
+        paths["docmap"] = layout.docmap = purge_docmap(spark, layout, tomb)
     l0 = spark.read.parquet(layout.postings_l0)
     n_eff = int(l0.agg(F.max("bucket")).first()[0] or 0) + 1
     merged = merge_segments(
         spark, layout, n_buckets=n_eff, max_segments=max_segments,
         merge_parallelism=spark.sparkContext.defaultParallelism,
     )
-    manifest = _stats_and_publish(
-        spark, layout, max_segments, merged["prune_shift"],
-        total_tokens=merged["total_tokens"], prior=prior,
+    paths.update(postings=merged["postings"],
+                 dictionary=merged["dictionary"])
+    return _stats_and_publish(
+        spark, layout, paths, max_segments, merged["prune_shift"],
+        merged["total_tokens"], prior=prior,
     )
-    if tomb.size:
-        # Cleared only after the purged index is published; a crash
-        # before this point leaves the (now no-op) tombstones in place —
-        # idempotent. The url bloom keeps deleted urls as maybe-hits;
-        # the anti-join verify resolves them correctly (conservative).
-        clear_tombstones(index_dir)
-    return manifest

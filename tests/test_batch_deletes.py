@@ -154,12 +154,20 @@ def test_delete_after_compact_exact_on_spanning_blocks(spark, tiny_corpus,
                       for r in batch) == sorted(_rows(after)), side
 
 
-def test_no_broadcast_files_left_behind(spark, batch_idx, monkeypatch):
+def test_no_broadcast_files_left_behind(spark, batch_idx, monkeypatch,
+                                        stream_source, tmp_path):
     """Every sc.broadcast pickles to a file in the driver's temp dir that
     only Broadcast.destroy() removes. A forced-distributed batch over an
-    index with tombstones (term ids, tombstones and per-query k) and
-    a compaction that purges them leave the temp dir as they found it."""
+    index with tombstones (term ids, tombstones and per-query k),
+    a compaction that purges them, and a two-epoch streamed ingest (the
+    second epoch probes the url bloom of the first) leave the temp dir as
+    they found it."""
+    import shutil
+
+    from pyspark.sql import types as T
+
     import escp_spark.query as Q
+    from escp_spark.streaming import stream_ingest_once
 
     monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", -1)
     tmp = spark.sparkContext._temp_dir
@@ -171,4 +179,19 @@ def test_no_broadcast_files_left_behind(spark, batch_idx, monkeypatch):
     assert len(os.listdir(tmp)) == n_files
     compact_index(spark, batch_idx)
     assert load_tombstones(batch_idx).size == 0
+    assert len(os.listdir(tmp)) == n_files
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for f in sorted(glob.glob(os.path.join(stream_source, "*.parquet")))[:2]:
+        shutil.copy(f, str(src))
+    schema = T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+    ])
+    assert stream_ingest_once(spark, str(src), str(tmp_path / "stream_idx"),
+                              schema, n_buckets=4) == 2
     assert len(os.listdir(tmp)) == n_files

@@ -241,9 +241,9 @@ def test_range_merge_stats_driven_placement(spark, tiny_corpus, tmp_path):
     build_index(spark, tiny_corpus, d, n_buckets=8, max_segments=3, n_groups=1)
     layout = IndexLayout(d, "build0")
     P = 8
-    merge_segments(spark, layout, n_buckets=8, max_segments=3,
-                   merge_parallelism=P, hot_term_blocks=4)
-    p = spark.read.parquet(layout.postings)
+    merged = merge_segments(spark, layout, n_buckets=8, max_segments=3,
+                            merge_parallelism=P, hot_term_blocks=4)
+    p = spark.read.parquet(merged["postings"])
     hot_files = (
         p.filter(F.col("term") == "t00000")
         .select(F.input_file_name().alias("f"))

@@ -1,4 +1,4 @@
-"""Training-data operator tests: dedup family, ANN, text stats, multimodal."""
+"""Training-data operator tests: dedup family, ANN, text stats."""
 
 import duckdb
 import numpy as np
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from escp_spark.operators import (
     ann_bruteforce_topk,
     ann_lsh_topk,
-    decode_and_featurize,
     doc_fingerprints,
     embedding_near_dup_pairs,
     exact_dedup_groups,
@@ -16,7 +15,6 @@ from escp_spark.operators import (
     minhash_near_dups,
     ngram_jaccard_pairs,
     quality_scores,
-    sample_frames,
     simhash_expr,
     simhash_near_dups,
 )
@@ -217,133 +215,6 @@ def test_fingerprints(spark, docs):
     assert fp[0].md5_raw == fp[1].md5_raw
     assert fp[0].md5_normtok == fp[1].md5_normtok
     assert fp[0].md5_raw != fp[5].md5_raw
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    rows = [
-        (1, "image", b"\x89PNGfake1", "image/png", 64, 64, None),
-        (2, "image", b"\x89PNGfake2", "image/png", 32, 32, None),
-        (3, "video", b"RIFFfake", "video/avi", 320, 200, 3500),
-        (4, "audio", b"ID3fake", "audio/mp3", None, None, 2000),
-    ]
-    from escp_spark.operators.multimodal import MEDIA_SCHEMA
-
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_multimodal_fake_decode_deterministic(spark, media):
-    a = {r.media_id: r.feature for r in decode_and_featurize(media, fake=True).collect()}
-    b = {r.media_id: r.feature for r in decode_and_featurize(media, fake=True).collect()}
-    assert a == b
-    assert len(a[1]) == 16 and a[1] != a[2]
-
-
-def test_multimodal_real_decode_stubbed(spark, media):
-    with pytest.raises(Exception, match="NotImplementedError|decoders"):
-        decode_and_featurize(media, fake=False).collect()
-
-
-def _make_ppm(arr):
-    import numpy as np
-
-    h, w, _ = arr.shape
-    return (
-        b"P6\n# comment\n" + f"{w} {h}\n255\n".encode()
-        + np.ascontiguousarray(arr).tobytes()
-    )
-
-
-def _make_bmp(arr):
-    """Minimal bottom-up 24-bit BI_RGB BMP around an (h, w, 3) RGB array."""
-    import struct
-
-    import numpy as np
-
-    h, w, _ = arr.shape
-    stride = ((w * 3 + 3) // 4) * 4
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, : w * 3] = arr[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up BGR
-    data = rows.tobytes()
-    header = struct.pack("<2sIHHI", b"BM", 54 + len(data), 0, 0, 54)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data),
-                      2835, 2835, 0, 0)
-    return header + dib + data
-
-
-def _make_wav(samples, rate=8000):
-    """PCM-16 WAV around an (n, channels) int16 array."""
-    import struct
-
-    data = samples.tobytes()
-    ch = samples.shape[1]
-    fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
-    body = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-
-
-def test_real_image_decode_byte_exact():
-    """PPM and BMP round-trip byte-exactly through the pure-numpy
-    decoders (VERDICT r05 next-#6: real decode behind the same
-    interface, no native libs)."""
-    import numpy as np
-
-    from escp_spark.operators.multimodal import decode_image
-
-    rng = np.random.default_rng(7)
-    px = rng.integers(0, 256, size=(5, 7, 3), dtype=np.uint8)
-    assert np.array_equal(decode_image(_make_ppm(px)), px)
-    assert np.array_equal(decode_image(_make_bmp(px)), px)
-    gray = rng.integers(0, 256, size=(4, 6), dtype=np.uint8)
-    pgm = b"P5\n6 4\n255\n" + gray.tobytes()
-    assert np.array_equal(decode_image(pgm), gray)
-
-
-def test_real_audio_decode_byte_exact():
-    import numpy as np
-
-    from escp_spark.operators.multimodal import decode_audio
-
-    rng = np.random.default_rng(11)
-    samples = rng.integers(-32768, 32768, size=(64, 2), dtype=np.int16)
-    got, rate = decode_audio(_make_wav(samples, rate=16000))
-    assert rate == 16000
-    assert np.array_equal(got, samples)
-
-
-def test_multimodal_real_decode_end_to_end(spark):
-    """decode_and_featurize(fake=False) over REAL media bytes: the same
-    Spark plumbing, actual decoders, deterministic features."""
-    import numpy as np
-
-    from escp_spark.operators.multimodal import MEDIA_SCHEMA, _decode_media
-
-    rng = np.random.default_rng(3)
-    px = rng.integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
-    wav = rng.integers(-2000, 2000, size=(256, 1), dtype=np.int16)
-    rows = [
-        (1, "image", _make_ppm(px), "image/x-portable-pixmap", 8, 8, None),
-        (2, "image", _make_bmp(px), "image/bmp", 8, 8, None),
-        (3, "audio", _make_wav(wav), "audio/wav", None, None, 32),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r.media_id: r.feature
-           for r in decode_and_featurize(media, fake=False).collect()}
-    assert set(got) == {1, 2, 3}
-    # PPM and BMP carry identical pixels → identical features; both match
-    # the driver-side reference computation exactly.
-    assert got[1] == got[2]
-    ref = _decode_media(_make_ppm(px), "image", fake=False)
-    assert got[1] == pytest.approx(list(ref), abs=0)
-    assert all(np.isfinite(got[3]))
-
-
-def test_multimodal_frame_sampling(spark, media):
-    frames = sample_frames(media, every_ms=1000, fake=True).collect()
-    assert len(frames) == 3  # 3500ms → 3 frames
-    assert [f.ts_ms for f in sorted(frames, key=lambda r: r.frame_idx)] == [0, 1000, 2000]
-    assert all(len(f.frame_feature) == 16 for f in frames)
 
 
 def test_shingle_chunking_is_doc_exact():

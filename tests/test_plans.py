@@ -25,6 +25,28 @@ def test_postings_term_filter_pushed_down(spark, built_index):
     assert_pushed_filters(df, "In(term")
 
 
+def test_batch_postings_scan_term_filter_pushed_down(spark, built_index,
+                                                    monkeypatch):
+    """The distributed batch side's postings scan builds its term filter
+    in O(1) py4j calls — Column.isin makes one literal call per term
+    (0.74 s of the plan phase for a 600-term batch) — and the filter
+    still reaches the Parquet scan."""
+    import pyspark.sql.classic.column as C
+
+    from escp_spark.query import _postings_scan
+
+    index_dir, _ = built_index
+    literals, real = [], C._create_column_from_literal
+    monkeypatch.setattr(C, "_create_column_from_literal",
+                        lambda v: literals.append(v) or real(v))
+    terms = [f"t{i:05d}" for i in range(600)] + ["o'neil"]
+    df = _postings_scan(spark, load_manifest(index_dir)["paths"]["postings"],
+                        terms)
+    assert literals == []
+    assert_pushed_filters(df, "In(term")
+    assert df.filter(F.col("term") == "t00000").count() > 0
+
+
 def test_postings_scan_prunes_columns(spark, built_index):
     """Selecting the scoring columns must not read doc_id_hi/max_tf etc."""
     index_dir, _ = built_index

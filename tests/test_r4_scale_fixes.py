@@ -82,52 +82,56 @@ def copied_index(built_index, tmp_path):
     shutil.copytree(src, dst)
     mp = os.path.join(dst, "_manifest.json")
     with open(mp) as f:
-        doc = json.load(f)
-    doc["paths"] = {k: v.replace(src, dst) for k, v in doc["paths"].items()}
+        doc = json.loads(f.read().replace(src, dst))
     with open(mp, "w") as f:
         json.dump(doc, f)
     return dst
 
 
-def _rewrite_docmap_many_rowgroups(index_dir: str, row_group_size: int = 5):
-    """Rewrite the docmap as ONE doc_id-sorted file with tiny row groups
-    (the many-row-group shape of a 100 TB docmap, shrunk)."""
+def _republish_docmap_many_rowgroups(index_dir: str, row_group_size: int = 5):
+    """Publish the docmap rewritten as ONE doc_id-sorted file with tiny
+    row groups (the many-row-group shape of a 100 TB docmap, shrunk),
+    the way every writer publishes: a new docmap directory and a new
+    sidecar, then the manifest swap (which deletes the old docmap)."""
+    import pyarrow as pa
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 
-    dm_dir = os.path.join(index_dir, "docmap")
-    tbl = pads.dataset(dm_dir, format="parquet").to_table(
+    from escp_spark.sidecar import write_rg_sidecar
+    from escp_spark.sources.tables import (
+        IndexLayout, load_manifest, publish_manifest,
+    )
+
+    man = load_manifest(index_dir)
+    layout = IndexLayout(index_dir, man["build_id"])
+    tbl = pads.dataset(layout.docmap, format="parquet").to_table(
         columns=["bucket", "url", "doc_id"]
     )
     pdf = tbl.to_pandas().sort_values("doc_id").reset_index(drop=True)
-    shutil.rmtree(dm_dir)
+    dm_dir = layout.artifact("docmap")
     os.makedirs(dm_dir)
-    import pyarrow as pa
-
     pq.write_table(
         pa.Table.from_pandas(pdf, preserve_index=False),
         os.path.join(dm_dir, "part-0.parquet"),
         row_group_size=row_group_size,
     )
-    return pdf
-
-
-def test_urls_for_touches_only_candidate_rowgroups(copied_index):
-    from escp_spark.query import IndexReader
-    from escp_spark.sources.tables import IndexLayout, load_manifest
-
-    pdf = _rewrite_docmap_many_rowgroups(copied_index)
-    man = load_manifest(copied_index)
-    # Republish so a reader sees the rewritten docmap as a new publish.
-    from escp_spark.sources.tables import publish_manifest
-
-    layout = IndexLayout(copied_index, man["build_id"])
+    paths = {**layout.paths, "docmap": dm_dir}
+    paths["rg_stats"] = write_rg_sidecar(layout, paths)
     publish_manifest(
         layout,
         {k: v for k, v in man.items()
          if k not in ("paths", "build_id", "status", "published_unix",
                       "publish_id")},
+        paths,
     )
+    assert not os.path.exists(man["paths"]["docmap"]), "old docmap kept"
+    return pdf
+
+
+def test_urls_for_touches_only_candidate_rowgroups(copied_index):
+    from escp_spark.query import IndexReader
+
+    pdf = _republish_docmap_many_rowgroups(copied_index)
     reader = IndexReader(copied_index)
     idx, always, rgs = reader._dm_rg_index()
     assert len(rgs) >= 150, "docmap rewrite failed to make many row groups"
@@ -144,16 +148,13 @@ def test_reader_refreshes_after_republish(copied_index):
     """ADVICE r03: a long-lived reader must re-resolve datasets/caches
     after finalize/compact republish instead of serving stale/deleted
     files."""
+    import pyarrow.dataset as pads
+
     from escp_spark.query import IndexReader
-    from escp_spark.sources.tables import (
-        IndexLayout, load_manifest, publish_manifest,
-    )
 
     reader = IndexReader(copied_index)
     # Warm the docmap index + caches on the ORIGINAL layout.
-    import pyarrow.dataset as pads
-
-    dm = pads.dataset(os.path.join(copied_index, "docmap"),
+    dm = pads.dataset(reader.manifest["paths"]["docmap"],
                       format="parquet").to_table(columns=["doc_id", "url"])
     some_ids = np.sort(dm["doc_id"].to_numpy())[:5]
     before = reader.urls_for(some_ids)
@@ -161,15 +162,7 @@ def test_reader_refreshes_after_republish(copied_index):
     old_sig = reader._manifest_sig
 
     # Republish with a REWRITTEN docmap (old files deleted).
-    pdf = _rewrite_docmap_many_rowgroups(copied_index)
-    man = load_manifest(copied_index)
-    layout = IndexLayout(copied_index, man["build_id"])
-    publish_manifest(
-        layout,
-        {k: v for k, v in man.items()
-         if k not in ("paths", "build_id", "status", "published_unix",
-                      "publish_id")},
-    )
+    _republish_docmap_many_rowgroups(copied_index)
     after = reader.urls_for(some_ids)
     assert after == before, "refreshed reader must serve the same mapping"
     assert reader._manifest_sig != old_sig, "reader did not re-resolve"

@@ -1,8 +1,8 @@
 """Persisted serving-metadata sidecar (VERDICT r04 missing #2, sharded
-per VERDICT r05 missing #2): the reader's interval indexes load from a
-build-time artifact partitioned by (kind, segment) — one directory-scoped
-read per kind, count+fingerprint validation — not a per-reader walk of
-every row-group footer and not a monolithic parse-everything file."""
+per VERDICT r05 missing #2): the reader's interval indexes and file lists
+load from a publish-time artifact partitioned by (kind, segment) — one
+directory-scoped read per kind — not a per-reader walk of every row-group
+footer and not a monolithic parse-everything file."""
 
 import os
 
@@ -16,18 +16,24 @@ def _queries():
     return reference_queries()
 
 
+def _nonempty_files(path):
+    """The parquet files under ``path`` that hold rows — what a sidecar
+    lists (a Spark write leaves empty files for empty partitions)."""
+    from escp_spark.sidecar import _list_parquet_files
+
+    return [f for f in _list_parquet_files(path)
+            if pq.ParquetFile(f).metadata.num_row_groups]
+
+
 def test_reader_uses_sidecar_and_stays_rank_identical(spark, built_index,
                                                       oracle_docs):
     from escp_spark.oracle import NaiveIndex
     from escp_spark.query import IndexReader, search_topk
-    from escp_spark.sidecar import SIDECAR_NAME
 
     d, _ = built_index
-    assert os.path.exists(os.path.join(d, SIDECAR_NAME))
     reader = IndexReader(d)
+    assert os.path.isdir(reader.manifest["paths"]["rg_stats"])
     rows = search_topk(d, _queries(), reader=reader)
-    assert reader.rg_index_source == "sidecar"
-    assert reader.dm_index_source == "sidecar"
 
     ix = NaiveIndex(oracle_docs)
     got = {}
@@ -49,25 +55,25 @@ def test_sidecar_reader_opens_no_files_for_metadata(spark, tiny_corpus,
     opens only its candidate files."""
     from escp_spark.build import build_index
     from escp_spark.query import IndexReader, search_topk
-    from escp_spark.sidecar import SIDECAR_NAME
 
     d = str(tmp_path / "fine_idx")
-    build_index(
+    manifest = build_index(
         spark, tiny_corpus, d, n_buckets=8, max_segments=3, n_groups=1,
         postings_row_group_bytes=2048,
     )
+    sidecar = manifest["paths"]["rg_stats"]
     n_rg = sum(
         1
-        for _ in pq.read_table(os.path.join(d, SIDECAR_NAME))
+        for _ in pq.read_table(sidecar)
         .column("rg").to_pylist()
     )
     assert n_rg >= 200, f"fixture too coarse: only {n_rg} row groups"
     # Sharded layout: hive-partitioned by (kind, segment).
-    assert os.path.isdir(os.path.join(d, SIDECAR_NAME, "kind=postings"))
-    assert os.path.isdir(os.path.join(d, SIDECAR_NAME, "kind=docmap"))
+    assert os.path.isdir(os.path.join(sidecar, "kind=postings"))
+    assert os.path.isdir(os.path.join(sidecar, "kind=docmap"))
     assert any(
         e.startswith("segment=")
-        for e in os.listdir(os.path.join(d, SIDECAR_NAME, "kind=postings"))
+        for e in os.listdir(os.path.join(sidecar, "kind=postings"))
     )
 
     # Each interval-index build reads ONLY its own kind's shards — no
@@ -96,8 +102,6 @@ def test_sidecar_reader_opens_no_files_for_metadata(spark, tiny_corpus,
         assert read_lists and all(
             f"kind=docmap{os.sep}" in p for fl in read_lists for p in fl
         ), "docmap load touched non-docmap sidecar shards"
-    assert reader.rg_index_source == "sidecar"
-    assert reader.dm_index_source == "sidecar"
     assert len(reader._pf) == 0, "metadata build opened postings files"
     assert len(reader._dm_pf) == 0, "metadata build opened docmap files"
 
@@ -109,92 +113,39 @@ def test_sidecar_reader_opens_no_files_for_metadata(spark, tiny_corpus,
     )
 
 
-def test_stale_or_missing_sidecar_falls_back_to_footers(spark, built_index,
-                                                        tmp_path):
-    """Missing/stale sidecar (e.g. a reader catching the compaction
-    purge window): the footer walk takes over and results are
-    byte-identical to the sidecar path."""
+def test_missing_sidecar_or_old_layout_raises_rebuild(built_index,
+                                                      tmp_path):
+    """The sidecar is the publish's file list: an index whose manifest
+    names no sidecar, names one that is gone, or was published under an
+    older layout is refused with an error that says to rebuild — no
+    reader falls back to listing and walking footers."""
     import json
     import shutil
 
-    from escp_spark.query import IndexReader, search_topk
-    from escp_spark.sidecar import _META_NAME, SIDECAR_NAME
+    from escp_spark.query import IndexReader
 
     d, _ = built_index
-    reader = IndexReader(d)
-    want = search_topk(d, _queries(), reader=reader)
-    assert reader.rg_index_source == "sidecar"
-
     d2 = str(tmp_path / "idx_copy")
     shutil.copytree(d, d2)
-    p = os.path.join(d2, SIDECAR_NAME)
-    meta_p = os.path.join(p, _META_NAME)
-    with open(meta_p) as f:
-        meta_orig = json.load(f)
+    mp = os.path.join(d2, "_manifest.json")
+    with open(mp) as f:
+        good = json.loads(f.read().replace(d, d2))
 
-    # Stale vs disk: the postings listing fingerprint no longer matches
-    # what the reader sees (the compaction-purge-window shape) → fallback.
-    meta = json.loads(json.dumps(meta_orig))
-    meta["postings"]["fingerprint"] = "0" * 32
-    with open(meta_p, "w") as f:
-        json.dump(meta, f)
-    r_stale = IndexReader(d2)
-    got_stale = search_topk(d2, _queries(), reader=r_stale)
-    assert r_stale.rg_index_source == "footers"
-    assert got_stale == want
+    def reader_with(doc):
+        with open(mp, "w") as f:
+            json.dump(doc, f)
+        return IndexReader(d2)
 
-    # Incomplete shard set: a kind=postings shard vanished → the loaded
-    # row count disagrees with _meta.json → fallback.
-    with open(meta_p, "w") as f:
-        json.dump(meta_orig, f)
-    post_dir = os.path.join(p, "kind=postings")
-    victim = next(
-        os.path.join(dp, fn)
-        for dp, _, fns in os.walk(post_dir)
-        for fn in fns
-        if fn.endswith(".parquet")
-    )
-    os.remove(victim)
-    r_partial = IndexReader(d2)
-    got_partial = search_topk(d2, _queries(), reader=r_partial)
-    assert r_partial.rg_index_source == "footers"
-    assert got_partial == want
-
-    # Missing sidecar entirely (pre-sidecar index).
-    shutil.rmtree(p)
-    r_none = IndexReader(d2)
-    got_none = search_topk(d2, _queries(), reader=r_none)
-    assert r_none.rg_index_source == "footers"
-    assert r_none.dm_index_source == "footers"
-    assert got_none == want
-
-
-def test_docmap_footer_walk_reuses_open_handles(built_index, monkeypatch):
-    """Without a sidecar the docmap interval index walks the files'
-    footers through the reader's handle cache: each docmap file is opened
-    once, the url reads reuse those handles, and rebuilding the index
-    while they are cached opens no file again."""
-    import escp_spark.sidecar as sidecar
-    from escp_spark.query import IndexReader, search_topk
-
-    d, _ = built_index
-    monkeypatch.setattr(sidecar, "load_rg_sidecar", lambda *a, **kw: None)
-    opened, real = [], pq.ParquetFile
-
-    def counting_parquet_file(path, *a, **kw):
-        opened.append(path)
-        return real(path, *a, **kw)
-
-    monkeypatch.setattr(pq, "ParquetFile", counting_parquet_file)
-    reader = IndexReader(d)
-    assert search_topk(d, _queries()[:5], reader=reader)
-    assert reader.dm_index_source == "footers"
-    dm_opened = sorted(p for p in opened if p in reader._dm_files)
-    assert dm_opened == reader._dm_files
-    n_opened = len(opened)
-    reader._dm_index = None
-    reader._dm_rg_index()
-    assert len(opened) == n_opened
+    assert reader_with(good).manifest["n_docs"] == good["n_docs"]
+    no_sidecar = json.loads(json.dumps(good))
+    del no_sidecar["paths"]["rg_stats"]
+    old_layout = dict(good, layout_version=good["layout_version"] - 1)
+    for doc in (no_sidecar, old_layout):
+        with pytest.raises(RuntimeError, match="rebuild"):
+            reader_with(doc)
+    shutil.rmtree(good["paths"]["rg_stats"])
+    with pytest.raises(RuntimeError, match="rebuild"):
+        reader_with(good)
 
 
 def test_distributed_sidecar_write_matches_driver_scan(spark, built_index):
@@ -202,20 +153,20 @@ def test_distributed_sidecar_write_matches_driver_scan(spark, built_index):
     Spark job whose tasks WRITE the (kind, segment) shards directly — no
     driver toPandas. Forcing that path on the same index must produce a
     sidecar the loader resolves to the identical row set."""
+    import shutil
+
     import escp_spark.sidecar as sc_mod
-    from escp_spark.query import IndexReader
     from escp_spark.sidecar import load_rg_sidecar, write_rg_sidecar
     from escp_spark.sources.tables import IndexLayout
 
     d, _ = built_index
-    reader = IndexReader(d)
+    layout = IndexLayout(d)
 
-    def snap():
+    def snap(sidecar):
         out = {}
-        for kind, files in (("postings", reader._pfiles),
-                            ("docmap", reader._dm_files)):
-            pdf = load_rg_sidecar(d, kind, files)
-            assert pdf is not None
+        for kind in ("postings", "docmap"):
+            files, pdf = load_rg_sidecar(d, sidecar, kind)
+            assert files == _nonempty_files(layout.paths[kind])
             out[kind] = (
                 pdf.sort_values(["fi", "rg"], kind="mergesort")
                 .reset_index(drop=True)
@@ -223,9 +174,7 @@ def test_distributed_sidecar_write_matches_driver_scan(spark, built_index):
             )
         return out
 
-    driver_side = snap()
-
-    def shard_types():
+    def shard_types(root):
         """Physical arrow types of every shard column, unioned across
         shards — both write paths must produce IDENTICAL schemas, and
         doc_lo/doc_hi must be int64 (never double: doc_id = bucket<<40 |
@@ -234,7 +183,6 @@ def test_distributed_sidecar_write_matches_driver_scan(spark, built_index):
         import pyarrow.parquet as pq
 
         types = {}
-        root = os.path.join(d, sc_mod.SIDECAR_NAME)
         for dp, _, fns in os.walk(root):
             for fn in fns:
                 if fn.endswith(".parquet"):
@@ -243,19 +191,18 @@ def test_distributed_sidecar_write_matches_driver_scan(spark, built_index):
                         types.setdefault(name, set()).add(str(typ))
         return types
 
-    layout = IndexLayout(d)
-    n1 = write_rg_sidecar(layout, spark)  # driver path (small index)
-    driver_types = shard_types()
+    s1 = write_rg_sidecar(layout, layout.paths, spark)  # driver path
     import unittest.mock as mock
 
     with mock.patch.object(sc_mod, "_DRIVER_SCAN_MAX_FILES", 1):
-        n2 = write_rg_sidecar(layout, spark)  # distributed write path
-    assert n1 == n2
-    dist_types = shard_types()
-    for t in (driver_types, dist_types):
+        s2 = write_rg_sidecar(layout, layout.paths, spark)  # distributed
+    assert len({s1, s2, layout.paths["rg_stats"]}) == 3, "not new dirs"
+    for t in (shard_types(s1), shard_types(s2)):
         assert t["doc_lo"] == {"int64"}, t
         assert t["doc_hi"] == {"int64"}, t
-    spark_side = snap()
+    driver_side, spark_side = snap(s1), snap(s2)
+    for s in (s1, s2):
+        shutil.rmtree(s)
     for kind in ("postings", "docmap"):
         a, b = driver_side[kind], spark_side[kind]
         assert list(a.columns) == list(b.columns)
@@ -274,15 +221,13 @@ def test_sidecar_loader_dtypes(built_index):
     import numpy as np
     import pandas as pd
 
-    from escp_spark.query import IndexReader
     from escp_spark.sidecar import load_rg_sidecar
+    from escp_spark.sources.tables import load_manifest
 
     d, _ = built_index
-    reader = IndexReader(d)
-    for kind, files in (("postings", reader._pfiles),
-                        ("docmap", reader._dm_files)):
-        pdf = load_rg_sidecar(d, kind, files)
-        assert pdf is not None
+    sidecar = load_manifest(d)["paths"]["rg_stats"]
+    for kind in ("postings", "docmap"):
+        _, pdf = load_rg_sidecar(d, sidecar, kind)
         assert pdf["doc_lo"].dtype == pd.Int64Dtype(), kind
         assert pdf["doc_hi"].dtype == pd.Int64Dtype(), kind
         assert pdf["payload_bytes"].dtype == np.dtype("int64"), kind
@@ -290,8 +235,8 @@ def test_sidecar_loader_dtypes(built_index):
 
 
 def test_republish_refreshes_sidecar(spark, stream_source, tmp_path):
-    """Streaming finalize + compaction keep the sidecar current: after
-    each republish a fresh reader takes the sidecar path."""
+    """Streaming finalize + compaction each publish a new sidecar that
+    lists exactly the published postings and docmap files."""
     from pyspark.sql import types as T
 
     from escp_spark.query import IndexReader
@@ -310,19 +255,17 @@ def test_republish_refreshes_sidecar(spark, stream_source, tmp_path):
     ])
     idx = str(tmp_path / "stream_idx")
     stream_ingest_once(spark, stream_source, idx, schema, n_buckets=4)
-    finalize_streamed_index(spark, idx, max_segments=3)
-    r1 = IndexReader(idx)
-    r1._rg_stats()
-    r1._dm_rg_index()
-    assert r1.rg_index_source == "sidecar"
-    assert r1.dm_index_source == "sidecar"
-
-    compact_index(spark, idx, max_segments=3)
-    r2 = IndexReader(idx)
-    r2._rg_stats()
-    r2._dm_rg_index()
-    assert r2.rg_index_source == "sidecar"
-    assert r2.dm_index_source == "sidecar"
+    sidecars = []
+    for publish in (lambda: finalize_streamed_index(spark, idx,
+                                                    max_segments=3),
+                    lambda: compact_index(spark, idx, max_segments=3)):
+        paths = publish()["paths"]
+        sidecars.append(paths["rg_stats"])
+        r = IndexReader(idx)
+        r._dm_rg_index()
+        assert r._pfiles == _nonempty_files(paths["postings"])
+        assert r._dm_files == _nonempty_files(paths["docmap"])
+    assert sidecars[0] != sidecars[1]
 
 
 def test_batch_post_bytes_falls_back_to_sidecar(spark, built_index,

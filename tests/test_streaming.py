@@ -96,7 +96,7 @@ def test_stream_compaction_consolidates_and_preserves_results(
 
     manifest = compact_index(spark, idx, max_segments=3)
     assert manifest["consolidation_shift"] > 40
-    p = spark.read.parquet(layout.postings)
+    p = spark.read.parquet(manifest["paths"]["postings"])
     frag = (
         p.filter(F.col("n") < BLOCK_SIZE).groupBy("segment", "term")
         .count().filter(F.col("count") > 1).count()
