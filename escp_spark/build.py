@@ -1048,14 +1048,16 @@ def build_index(
     resume_key = (
         snapshot + "|" + hashlib.md5(params.encode()).hexdigest()[:12]
     )
-    # The build's own level-0 (not a compaction's purged one), and a
-    # docmap directory named by the resume key: a rebuild over another
-    # input never writes into a published docmap, and a resumed run
-    # finds its committed groups' docmap files again.
-    layout.postings_l0 = os.path.join(layout.staging, "postings_l0")
-    dm_dir = layout.artifact(
-        "docmap", hashlib.md5(resume_key.encode()).hexdigest()[:16]
-    )
+    # The shuffle output, the level-0 (not a compaction's purged one)
+    # and the docmap directory are all named by the resume key: a
+    # rebuild over another input never writes into what this key's
+    # ledger commits point at, nor into a published docmap, and a
+    # resumed run finds its committed outputs again. The publish deletes
+    # the other keys' staging.
+    tag = hashlib.md5(resume_key.encode()).hexdigest()[:16]
+    shuffled_dir = os.path.join(layout.staging, f"shuffled-{tag}")
+    layout.postings_l0 = os.path.join(layout.staging, f"postings_l0-{tag}")
+    dm_dir = layout.artifact("docmap", tag)
     merge_parallelism = merge_parallelism or spark.sparkContext.defaultParallelism
 
     import time as _time
@@ -1070,16 +1072,16 @@ def build_index(
         last_build_timings[stage] = round(now - _t0, 3)
         _t0 = now
 
-    shuffled_dir = os.path.join(layout.staging, "shuffled")
-
     # ---- Stage "shuffle": the ONE wide pass — dedup shuffle + md5
     # bucketing + extraction — materialized partitioned by checkpoint
     # group. Its resumable unit is the whole
-    # shuffle (a shuffle either completes or doesn't). Staging write
-    # amplification is 1× of the input or less (text < html) — the same
-    # cost the reference pays bulk-writing every doc into the target
-    # index.
-    if not committed_groups(spark, layout, "shuffle", resume_key):
+    # shuffle (a shuffle either completes or doesn't); a commit counts
+    # only while its output exists (a compaction's publish deletes it).
+    # Staging write amplification is 1× of the input or less (text <
+    # html) — the same cost the reference pays bulk-writing every doc
+    # into the target index.
+    if not (committed_groups(spark, layout, "shuffle", resume_key)
+            and os.path.isdir(shuffled_dir)):
         if pages is None:
             pages = read_web_pages(spark, source)
         if source_filter:

@@ -7,17 +7,20 @@ Two execution paths, both rank-identical to the exhaustive oracle:
    dictionary-seek analog) locates the query terms' stats columns, read
    as numpy arrays ordered by term (a query's blocks are searchsorted
    slices of them), the WAND envelope pruning runs on stats alone, and
-   payload bytes are fetched per row group only for KEPT blocks; scoring
-   is numpy with **block-max pruning**: a lower bound θ of the kth score
-   prunes every block whose docid-range score envelope (block ub + Σ
-   other-term max ub) stays below θ — a vectorized MaxScore/Block-Max-
-   WAND family algorithm. Bucket windows are visited by descending
-   envelope in batches of 1, 2, 4, … windows, each batch one fetch, one
-   bulk decode and one aggregate filtered by the θ of the batches before
-   it (eager filtering by an early safe cutoff, as in *External Merge
-   Sort for Top-K Queries*); the correctness proof is in
-   `_prune_and_score`'s docstring. This is what a query node would run
-   per request; neither Spark nor pandas is in the request path.
+   payload row groups are read only for KEPT blocks. A payload row
+   group is decoded once per process on its first read and cached
+   decoded (one LRU shared by every reader), so a request gathers its
+   kept blocks' postings without a varint decode. Scoring is numpy with
+   **block-max pruning**: a lower bound θ of the kth score prunes every
+   block whose docid-range score envelope (block ub + Σ other-term max
+   ub) stays below θ — a vectorized MaxScore/Block-Max-WAND family
+   algorithm. Bucket windows are visited by descending envelope in
+   batches of 1, 2, 4, … windows, each batch one gather and one
+   aggregate filtered by the θ of the batches before it (eager filtering
+   by an early safe cutoff, as in *External Merge Sort for Top-K
+   Queries*); the correctness proof is in `_prune_and_score`'s
+   docstring. This is what a query node would run per request; neither
+   Spark nor pandas is in the request path.
 
 2. **Batch path** (`search_topk_spark`): throughput-oriented, scores a
    whole query set. The batch's matched work (Σ df over its distinct
@@ -44,6 +47,7 @@ is independent of internal docid assignment and of parallelism.
 from __future__ import annotations
 
 import os
+import threading
 from collections import Counter, defaultdict
 from contextlib import contextmanager
 
@@ -79,38 +83,49 @@ class _ByteLRU:
     ``get`` re-inserts the key (true LRU); ``put`` evicts oldest-used
     entries until Σ nbytes fits the budget. The most recent entry is
     always kept even if it alone exceeds the budget (a query must be
-    able to make progress)."""
+    able to make progress). Every call holds the cache's lock, so one
+    cache can serve the readers of several threads."""
 
     def __init__(self, budget_bytes: int):
         self.budget = int(budget_bytes)
         self._d: dict = {}  # key -> (value, nbytes); dict order = LRU order
         self.bytes = 0
+        self._lock = threading.Lock()
 
     def get(self, key):
-        ent = self._d.get(key)
-        if ent is None:
-            return None
-        del self._d[key]
-        self._d[key] = ent  # move to end: most-recently-used
-        return ent[0]
+        with self._lock:
+            ent = self._d.pop(key, None)
+            if ent is None:
+                return None
+            self._d[key] = ent  # re-insert at the end: most-recently-used
+            return ent[0]
 
     def put(self, key, value, nbytes: int):
-        old = self._d.pop(key, None)
-        if old is not None:
-            self.bytes -= old[1]
-        self._d[key] = (value, int(nbytes))
-        self.bytes += int(nbytes)
-        while self.bytes > self.budget and len(self._d) > 1:
-            k = next(iter(self._d))
-            self.bytes -= self._d.pop(k)[1]
+        with self._lock:
+            old = self._d.pop(key, None)
+            if old is not None:
+                self.bytes -= old[1]
+            self._d[key] = (value, int(nbytes))
+            self.bytes += int(nbytes)
+            while self.bytes > self.budget and len(self._d) > 1:
+                k = next(iter(self._d))
+                self.bytes -= self._d.pop(k)[1]
 
     def __len__(self):
         return len(self._d)
 
     def retain(self, keep) -> None:
         """Drop every entry whose key fails ``keep``."""
-        for k in [k for k in self._d if not keep(k)]:
-            self.bytes -= self._d.pop(k)[1]
+        with self._lock:
+            for k in [k for k in self._d if not keep(k)]:
+                self.bytes -= self._d.pop(k)[1]
+
+
+# Decoded postings row groups, shared by every IndexReader of the
+# process (the batch path's reader too), keyed by (file path, row
+# group): artifact files are immutable, so a path names one content for
+# as long as it exists, and each row group is decoded once per process.
+_decoded_payloads = _ByteLRU(256 << 20)
 
 
 class _IntervalIndex:
@@ -158,27 +173,33 @@ class IndexReader:
     Serving reads are **metadata-first** (VERDICT r02 #2 — the Lucene
     block-max-skipping semantic saves I/O, not just CPU): the small stats
     columns (term, n, docid range, max_tf, min_dl) are read up front for
-    the query terms; the posting PAYLOAD bytes (doc_ids/tfs/dls binaries)
-    are fetched lazily, per Parquet row group, only for blocks the WAND
-    pruning keeps. Row groups are the physical skip unit (a Parquet
-    column chunk is read whole), so the postings are written with a small
+    the query terms; the posting PAYLOAD (doc_ids/tfs/dls binaries) is
+    read lazily, per Parquet row group, only for blocks the WAND pruning
+    keeps. Row groups are the physical skip unit (a Parquet column chunk
+    is read whole), so the postings are written with a small
     ``parquet.block.size`` (build.POSTINGS_ROW_GROUP_BYTES) — at 10^12-doc
     scale a hot term's list spans many row groups in docid order, and a
     pruned docid window skips its row groups' payload bytes entirely.
-    ``payload_bytes_fetched`` / ``payload_rowgroups_fetched`` count actual
-    reads (cache misses) for telemetry and tests.
+
+    A payload row group is decoded whole on its first read and kept
+    DECODED (int64 doc ids, narrowed tfs/dls, block start offsets) in
+    ``_decoded_payloads``, one byte-budgeted LRU shared by every reader
+    of the process, so later requests gather their blocks' postings
+    without a varint decode.
+    ``payload_bytes_fetched`` / ``payload_rowgroups_fetched`` count this
+    reader's row-group reads (cache misses) for telemetry and tests.
 
     Every query is served from ONE manifest, pinned at its entry: the
     data-file lists come from that manifest's rg_stats sidecar (written
     for exactly those files), and the caches are keyed by immutable file
     path. A publish is seen at the next query entry; the reload keeps
     whatever the new manifest still names (a delete-only publish reloads
-    only the tombstones)."""
+    only the tombstones) and drops this index's decoded row groups of
+    every other postings directory."""
 
     _DICT_CACHE_MAX_ROWS = 20_000_000  # term dict kept in RAM below this
 
     def __init__(self, index_dir: str,
-                 payload_cache_bytes: int = 256 << 20,
                  meta_cache_bytes: int = 64 << 20,
                  dm_cache_bytes: int = 128 << 20):
         self._index_dir = index_dir
@@ -189,7 +210,7 @@ class IndexReader:
         self.manifest = {"paths": {}}
         self.tombstones = np.empty(0, dtype=np.int64)
         self._pf: dict[str, object] = {}         # path -> pq.ParquetFile
-        self._payload_cache = _ByteLRU(payload_cache_bytes)
+        self._payload_cache = _decoded_payloads
         self._meta_cache = _ByteLRU(meta_cache_bytes)
         self._dm_pf: dict[str, object] = {}
         self._dm_cache = _ByteLRU(dm_cache_bytes)
@@ -217,9 +238,15 @@ class IndexReader:
             self._rg_index = None                # (_IntervalIndex, always, rgs)
             self._payload_sizes = None           # [fi, rg] -> payload bytes
             pre = os.path.join(p["postings"], "")
-            for cache in (self._payload_cache, self._meta_cache):
-                cache.retain(lambda key: key[0].startswith(pre))
+            self._meta_cache.retain(lambda key: key[0].startswith(pre))
             self._pf = {k: v for k, v in self._pf.items() if k.startswith(pre)}
+            # The decoded cache may hold other indexes' row groups: drop
+            # only this index's (its root's postings-* directories).
+            mine = os.path.join(os.path.dirname(os.path.normpath(pre)),
+                                "postings")
+            self._payload_cache.retain(
+                lambda key: key[0].startswith(pre)
+                or not key[0].startswith(mine))
         if changed("docmap", "rg_stats"):
             self._dm_files: list[str] | None = None
             self._dm_index = None                # (_IntervalIndex, always, rgs)
@@ -400,37 +427,60 @@ class IndexReader:
         return {c: np.concatenate([p[i] for p in parts])[order]
                 for i, c in enumerate(_META_KEYS)}
 
+    def _decoded_rowgroup(self, fi: int, rgi: int) -> tuple:
+        """One postings row group, decoded: (doc ids int64, tfs, dls,
+        block starts), where block ``pos`` of the row group holds entries
+        [starts[pos], starts[pos + 1]) and tfs/dls are narrowed to the
+        smallest unsigned type holding their maximum. The first request
+        reads the row group's payload columns and decodes every block in
+        one decode_blocks_bulk call; later ones, from any reader of the
+        process, reuse the cached arrays."""
+        key = (self._post_files[fi], rgi)
+        ent = self._payload_cache.get(key)
+        if ent is None:
+            tbl = self._open(self._pf, key[0]).read_row_group(
+                rgi, columns=["n"] + PAYLOAD_COLS)
+            ns = tbl.column("n").to_numpy()
+            ids, tfs, dls, _ = decode_blocks_bulk(
+                *(_payload_stream(tbl.column(c)) for c in PAYLOAD_COLS), ns)
+            ent = (ids.view(np.int64), _narrow(tfs), _narrow(dls),
+                   np.concatenate(([0], np.cumsum(ns, dtype=np.int64))))
+            self._payload_cache.put(key, ent, sum(a.nbytes for a in ent))
+            self.payload_rowgroups_fetched += 1
+            self.payload_bytes_fetched += int(self._payload_sizes[fi, rgi])
+        return ent
+
     def fetch_payloads(self, fi: np.ndarray, rg: np.ndarray, pos: np.ndarray):
-        """Payload streams (doc_ids, tfs, dls) of the given block rows:
-        per column, the requested blocks' bytes back to back in request
-        order, as one bytes object (the concatenated form
-        decode_blocks_bulk takes). Each needed row group's payload
-        column chunks are read at most once (bounded cache of each
-        column's values buffer and offsets). A request touches a few
-        blocks per row group, so slicing and joining per block costs
-        less than a vectorized gather's per-row-group array calls."""
+        """Decoded postings of the given block rows: (doc_ids, tfs, dls,
+        block_index), the blocks' postings back to back in request order,
+        with block_index[i] the request ordinal of posting i (the form
+        decode_blocks_bulk returns). Each block is a ``_ranges`` gather
+        from its decoded row group (``_decoded_rowgroup``), so a warm
+        request decodes nothing and slices no bytes."""
         self._rg_stats()  # fills _payload_sizes
-        files = self._post_files
-        key = (fi.astype(np.int64) * (1 << 20) + rg).tolist()
-        parts, seen = ([], [], []), {}
-        for k, p in zip(key, pos.tolist()):
-            cols = seen.get(k)
-            if cols is None:
-                f, r = k >> 20, k & ((1 << 20) - 1)
-                cols = self._payload_cache.get((files[f], r))
-                if cols is None:
-                    tbl = self._open(self._pf, files[f]).read_row_group(
-                        r, columns=PAYLOAD_COLS)
-                    cols = tuple(_values_and_offsets(tbl.column(c))
-                                 for c in PAYLOAD_COLS)
-                    self._payload_cache.put((files[f], r), cols, tbl.nbytes)
-                    self.payload_rowgroups_fetched += 1
-                    self.payload_bytes_fetched += int(
-                        self._payload_sizes[f, r])
-                seen[k] = cols
-            for part, (data, offs) in zip(parts, cols):
-                part.append(data[offs[p]:offs[p + 1]])
-        return tuple(b"".join(part) for part in parts)
+        pos = np.asarray(pos, dtype=np.int64)
+        if pos.size == 0:
+            e = np.empty(0, dtype=np.int64)
+            return e, e, e, e
+        key = fi.astype(np.int64) * (1 << 20) + rg
+        uniq, inv = np.unique(key, return_inverse=True)
+        counts = np.empty(pos.size, dtype=np.int64)
+        groups = []  # (request rows, their first entries, decoded row group)
+        for u, k in enumerate(uniq.tolist()):
+            j = np.flatnonzero(inv == u)
+            ent = self._decoded_rowgroup(k >> 20, k & ((1 << 20) - 1))
+            lo = ent[3][pos[j]]
+            counts[j] = ent[3][pos[j] + 1] - lo
+            groups.append((j, lo, ent))
+        block_index = np.repeat(np.arange(pos.size, dtype=np.int64), counts)
+        out = [np.empty(block_index.size, dtype=np.result_type(
+            *(g[2][c] for g in groups))) for c in range(3)]
+        dst0 = np.cumsum(counts) - counts
+        for j, lo, ent in groups:
+            src, dst = _ranges(lo, counts[j]), _ranges(dst0[j], counts[j])
+            for o, a in zip(out, ent[:3]):
+                o[dst] = a[src]
+        return (*out, block_index)
 
     def _dm_rg_index(self):
         """Interval index over the docmap row groups' [doc_id min, max]
@@ -501,15 +551,21 @@ class IndexReader:
         return out
 
 
-def _values_and_offsets(col) -> tuple[bytes, np.ndarray]:
-    """A binary column's back-to-back values and its offsets: value i is
-    ``values[offsets[i]:offsets[i + 1]]``."""
+def _payload_stream(col):
+    """A binary column's values back to back, as one buffer (the
+    concatenated stream decode_blocks_bulk takes)."""
     arr = col.combine_chunks()
     _, offsets, values = arr.buffers()
+    if values is None:
+        return b""
     width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
     offs = np.frombuffer(offsets, dtype=width)
-    data = values.to_pybytes() if values is not None else b""
-    return data, offs[arr.offset:arr.offset + len(arr) + 1]
+    return memoryview(values)[offs[arr.offset]:offs[arr.offset + len(arr)]]
+
+
+def _narrow(a: np.ndarray) -> np.ndarray:
+    """``a`` in the smallest unsigned type that holds its maximum."""
+    return a.astype(np.min_scalar_type(int(a.max()) if a.size else 0))
 
 
 def _aggregate(doc_ids: np.ndarray, contribs: np.ndarray, terms: np.ndarray):
@@ -535,8 +591,8 @@ def _prune_and_score(meta: dict, rows: np.ndarray, tq: np.ndarray,
     ``meta`` holds meta_for_terms' columns, ``rows`` the query's blocks
     in it, ``tq`` each block's query-term index (ascending term order)
     and ``w`` each query term's weight (query tf × idf); ``fetch`` is
-    IndexReader.fetch_payloads, so payload bytes are read only for
-    blocks that are decoded.
+    IndexReader.fetch_payloads, so postings are gathered (and payload
+    row groups read) only for blocks that are scored.
 
     Windows are buckets (docid = bucket<<40|rank, so docid>>40 is the
     bucket and every doc's postings live inside one window). Level-0 and
@@ -545,7 +601,7 @@ def _prune_and_score(meta: dict, rows: np.ndarray, tq: np.ndarray,
     range crosses buckets. The algorithm handles both exactly:
 
     0. Spanning blocks (typically the consolidated tails — small) are
-       bulk-decoded UP FRONT. Their raw postings give exact per-(window,
+       fetched UP FRONT. Their raw postings give exact per-(window,
        term) maxima sp_max(w, t) and are merged into the scoring of the
        window each doc lives in.
     1. A (term, doc) posting lives in exactly ONE block — contained or
@@ -559,10 +615,10 @@ def _prune_and_score(meta: dict, rows: np.ndarray, tq: np.ndarray,
        window is below θ every later one is too, so the visit stops),
        and skip contained block b of term t when
        ub(b) + (envelope(w) − env(w, t)) < θ. A batch's kept blocks are
-       fetched, decoded and aggregated in ONE pass together with its
-       windows' spanning postings, so a query makes O(log W) payload
-       fetches for W windows, and every emitted doc's score includes all
-       of its covering blocks that were not provably-below-θ.
+       fetched and aggregated in ONE pass together with its windows'
+       spanning postings, so a query makes O(log W) payload fetches for
+       W windows, and every emitted doc's score includes all of its
+       covering blocks that were not provably-below-θ.
 
     Rank-identity proof: θ is the kth best score collected by earlier
     batches, so it never exceeds the true kth best score. A skipped
@@ -576,7 +632,6 @@ def _prune_and_score(meta: dict, rows: np.ndarray, tq: np.ndarray,
     batches before it only prunes less than window-at-a-time would.
     """
     global last_prune_stats
-    ns = meta["n"][rows]
     ub = bm25_upper_bound(meta["max_tf"][rows], meta["min_dl"][rows],
                           avgdl, w[tq])
     lo_w = meta["doc_id_lo"][rows].astype(np.int64) >> window_shift
@@ -590,12 +645,10 @@ def _prune_and_score(meta: dict, rows: np.ndarray, tq: np.ndarray,
         bounds may still include deleted docs' stats: stale but
         valid)."""
         if sel.size == 0:
-            return np.empty(0, dtype=np.uint64), np.empty(0), sel
+            return np.empty(0, dtype=np.int64), np.empty(0), sel
         r = rows[sel]
-        ids, tfs, dls, blk = decode_blocks_bulk(
-            *fetch(meta["__fi"][r], meta["__rg"][r], meta["__pos"][r]),
-            ns[sel],
-        )
+        ids, tfs, dls, blk = fetch(meta["__fi"][r], meta["__rg"][r],
+                                   meta["__pos"][r])
         t = tq[sel][blk]
         contribs = bm25_contrib(tfs, dls, avgdl, w[t])
         if exclude is not None and ids.size:
@@ -676,7 +729,7 @@ def _prune_and_score(meta: dict, rows: np.ndarray, tq: np.ndarray,
         "n_buckets": int(wins.size),
     }
     if not got_ids:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.float64)
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     # Windows are disjoint docid spaces — concatenation needs no re-agg.
     return np.concatenate(got_ids), np.concatenate(got_scores)
 
@@ -771,8 +824,9 @@ def _serve_topk(reader: IndexReader, queries: list[dict]):
 _BIG_MATCHED_POSTINGS = 4_000_000
 
 # Size-1 reader cache for the batch path's driver side: repeat batches
-# against the same index reuse the dictionary, payload and docmap
-# row-group LRUs; _ensure_current inside the reader handles republish.
+# against the same index reuse the dictionary and docmap row-group
+# caches (decoded payload row groups are shared with every serving
+# reader); _ensure_current inside the reader handles republish.
 # Size-1 on purpose — a driver process serves batches against one index
 # at a time. No metadata cache: a batch reads each candidate row group's
 # stats once (meta_for_terms takes all its terms), so keeping them only

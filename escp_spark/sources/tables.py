@@ -84,9 +84,13 @@ class IndexLayout:
                                        publish's file lists     (paths.rg_stats)
       tombstones-<id>/                 soft-deleted doc_ids    (paths.tombstones,
                                        only between delete_urls and compaction)
-      staging/<build_id>/shuffled/     build resume state (ledger-committed)
+      staging/<build_id>/shuffled-<key>/
+                                       build resume state (ledger-committed,
+                                       one per resume key)
       staging/<build_id>/postings_l0[-<id>]/group=G/
-                                       level-0 segments         (level0)
+                                       level-0 segments         (level0: a
+                                       build's ``-<key>``, a compaction
+                                       purge's ``-<uuid>``, a stream's bare)
       ledger/                          checkpoint ledger (append-only parquet)
 
     Attributes are resolved from the manifest published at construction:
@@ -172,19 +176,24 @@ def publish_manifest(layout: IndexLayout, stats: dict, paths: dict) -> dict:
 
 
 def _delete_unreferenced(layout: IndexLayout, manifest: dict) -> None:
-    """Delete the artifact directories (root level) and level-0
-    directories (this build's staging) that ``manifest`` does not name:
-    the superseded publish, and the orphans of a writer that crashed
-    before its swap."""
+    """Delete the artifact directories (root level) and the level-0 and
+    shuffle directories (this build's staging) that ``manifest`` does
+    not name: the superseded publish, the orphans of a writer that
+    crashed before its swap, and other resume keys' staging. A build's
+    shuffle ``shuffled-<tag>`` is kept beside its level-0
+    ``postings_l0-<tag>``."""
     keep = {os.path.abspath(p) for p in manifest["paths"].values()}
     if manifest.get("level0"):
-        keep.add(os.path.abspath(manifest["level0"]))
+        level0 = os.path.abspath(manifest["level0"])
+        keep.add(level0)
+        tag = os.path.basename(level0)[len("postings_l0"):]
+        keep.add(os.path.join(os.path.dirname(level0), "shuffled" + tag))
     doomed = [os.path.join(layout.root, e) for e in os.listdir(layout.root)
               if _ARTIFACT_RE.match(e)]
     if os.path.isdir(layout.staging):
         doomed += [os.path.join(layout.staging, e)
                    for e in os.listdir(layout.staging)
-                   if e.startswith("postings_l0")]
+                   if e.startswith(("postings_l0", "shuffled"))]
     for d in doomed:
         if d not in keep:
             shutil.rmtree(d, ignore_errors=True)

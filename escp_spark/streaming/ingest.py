@@ -320,8 +320,11 @@ def _drop_already_indexed(spark: SparkSession, layout: IndexLayout,
 def _ingest_epoch(batch_df: DataFrame, epoch: int, layout: IndexLayout,
                   n_buckets: int) -> None:
     spark = batch_df.sparkSession
+    # Project before the dedup exchange, as build_index does: ``text`` is
+    # re-derived from html and ``lang`` is not indexed, so neither rides
+    # through the shuffle.
     prepared = (
-        dedup_last_write_wins(batch_df)
+        dedup_last_write_wins(batch_df.drop("text", "lang"))
         .withColumn("text", extract_text_udf(F.col("html")))
         .withColumn(
             "bucket",
@@ -347,7 +350,11 @@ def _ingest_epoch(batch_df: DataFrame, epoch: int, layout: IndexLayout,
     )
     seg_path = os.path.join(layout.postings_l0, f"group=e{epoch}")
     build_segments(prepared).write.mode("overwrite").parquet(seg_path)
-    docs = spark.read.parquet(dm_path).count()
+    # The epoch's doc count from the docmap footers (driver-side
+    # metadata, exact), not a listing job plus a two-job Spark count.
+    import pyarrow.dataset as pads
+
+    docs = pads.dataset(dm_path, format="parquet").count_rows()
     # Fold this epoch's urls into the bloom sidecar (distributed bitmap
     # OR over the just-written — epoch-sized — docmap group; replaying
     # an epoch re-ORs the same bits, which is idempotent). Once n_added
@@ -490,14 +497,24 @@ def finalize_streamed_index(spark: SparkSession, index_dir: str,
     )
     # Dictionary from the SAME level-0 metadata (df/cf invariant under
     # the modulo re-layout) — not a re-scan of the published postings.
-    from ..build import _write_dictionary
+    # Small vocabularies take merge_segments' driver fast path: one
+    # limit-collect and one pyarrow write, with no second aggregation
+    # pass for Σcf.
+    from ..build import _PLACEMENT_DRIVER_MAX_TERMS, _write_dictionary
 
-    dictionary, total_tokens = _write_dictionary(
-        spark, layout,
-        l0.groupBy("term").agg(
-            F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")
-        ),
+    stats = l0.groupBy("term").agg(
+        F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")
     )
+    rows = stats.limit(_PLACEMENT_DRIVER_MAX_TERMS + 1).collect()
+    if len(rows) <= _PLACEMENT_DRIVER_MAX_TERMS:
+        dictionary, total_tokens = _write_dictionary(
+            spark, layout, None,
+            driver_pdf=pd.DataFrame(rows, columns=["term", "df", "cf"]),
+        )
+    else:
+        stats = stats.persist()
+        dictionary, total_tokens = _write_dictionary(spark, layout, stats)
+        stats.unpersist()
     # Modulo segment placement (open-ended epoch buckets) is not
     # docid-contiguous, so tails stay unconsolidated and every block
     # remains inside one effective bucket → prune window stays the bucket.

@@ -160,6 +160,27 @@ def test_rebuild_crash_keeps_old_index_and_resumes(
     _assert_at_rest(idx)
 
 
+def test_rerun_after_crashed_rebuild_of_other_input(spark, corpora,
+                                                   old_index, tmp_path):
+    """Build A published, a rebuild B over another input killed after
+    one group, then A re-run: each resume key has its own shuffle and
+    level-0, so the re-run skips A's committed work without reading B's
+    files and republishes A oracle-identical; B's staging is deleted."""
+    old_docs = _docs(corpora[0])
+    idx = _copy_index(old_index, str(tmp_path / "idx"))
+    with pytest.raises(SimulatedFailure):
+        build_index(spark, corpora[1], idx, fail_after_groups=1, **BUILD)
+    staging = os.path.join(idx, "staging", "build0")
+    assert len([e for e in os.listdir(staging)
+                if e.startswith("shuffled-")]) == 2
+    manifest = build_index(spark, corpora[0], idx, **BUILD)
+    assert manifest["n_docs"] == len(old_docs)
+    _assert_oracle(IndexReader(idx), old_docs)
+    _assert_at_rest(idx)
+    assert [e for e in os.listdir(staging) if e.startswith("shuffled-")] == [
+        "shuffled" + os.path.basename(manifest["level0"])[len("postings_l0"):]]
+
+
 def _stream_src(stream_source, dst, n_files: int) -> str:
     """A private source dir holding the first ``n_files`` source files
     (new ones arrive as new streaming epochs)."""

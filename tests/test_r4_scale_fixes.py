@@ -168,18 +168,37 @@ def test_reader_refreshes_after_republish(copied_index):
     assert reader._manifest_sig != old_sig, "reader did not re-resolve"
 
 
-def test_payload_cache_stays_within_byte_budget(copied_index):
+def test_payload_cache_stays_within_byte_budget(copied_index, monkeypatch):
+    """Every cache stays within its byte budget; the decoded payload
+    cache is charged the resident bytes of its decoded arrays, and a
+    budget below the working set evicts decoded row groups without
+    changing results."""
+    import escp_spark.query as Q
     from escp_spark.corpus import reference_queries
     from escp_spark.query import IndexReader, search_topk
 
     budget = 4 << 20
-    reader = IndexReader(copied_index, payload_cache_bytes=budget,
-                         meta_cache_bytes=budget, dm_cache_bytes=budget)
-    for q in reference_queries()[:20]:
-        search_topk(copied_index, [q], reader=reader)
-        assert reader._payload_cache.bytes <= budget
+    monkeypatch.setattr(Q, "_decoded_payloads", Q._ByteLRU(budget))
+    reader = IndexReader(copied_index, meta_cache_bytes=budget,
+                         dm_cache_bytes=budget)
+    qs, want = reference_queries()[:20], []
+    for q in qs:
+        want.append(search_topk(copied_index, [q], reader=reader))
+        cache = reader._payload_cache
+        assert cache.bytes == sum(
+            sum(a.nbytes for a in ent) for ent, _ in cache._d.values())
+        assert cache.bytes <= budget
         assert reader._meta_cache.bytes <= budget
         assert reader._dm_cache.bytes <= budget
+
+    small_budget = reader._payload_cache.bytes // 2
+    monkeypatch.setattr(Q, "_decoded_payloads", Q._ByteLRU(small_budget))
+    small = IndexReader(copied_index)
+    for q, w in zip(qs, want):
+        assert search_topk(copied_index, [q], reader=small) == w
+        cache = small._payload_cache
+        assert cache.bytes <= small_budget or len(cache) == 1
+    assert len(small._payload_cache) < small.payload_rowgroups_fetched
 
 
 # ---------------------------------------------------------------------------

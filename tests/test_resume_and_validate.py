@@ -19,6 +19,14 @@ def _file_mtimes(path):
     return out
 
 
+def _staging_dir(layout, prefix):
+    """The one ``<prefix>-<resume key>`` directory in the build's staging
+    (these tests run one resume key per index)."""
+    (d,) = [e for e in os.listdir(layout.staging)
+            if e.startswith(prefix + "-")]
+    return os.path.join(layout.staging, d)
+
+
 def _index_content(spark, index_dir, build_id="build0"):
     layout = IndexLayout(index_dir, build_id)
     postings = sorted(
@@ -56,9 +64,10 @@ def test_resume_skips_committed_and_is_identical(spark, tiny_corpus, tmp_path):
         led = read_ledger(spark, layout)
         assert led.filter(F.col("stage") == "shuffle").count() == 4
         assert led.filter(F.col("stage") == "segment").count() == kill_after
-        shuffled_dir = os.path.join(layout.staging, "shuffled")
+        shuffled_dir = _staging_dir(layout, "shuffled")
+        level0 = shuffled_dir.replace("shuffled-", "postings_l0-")
         before_shuffle = _file_mtimes(shuffled_dir)
-        before = _file_mtimes(layout.postings_l0)
+        before = _file_mtimes(level0)
         assert before_shuffle, "no staging files after the shuffle commit"
         assert bool(before) == bool(kill_after), (
             f"kill after {kill_after}: unexpected level-0 segment files"
@@ -72,7 +81,7 @@ def test_resume_skips_committed_and_is_identical(spark, tiny_corpus, tmp_path):
         assert _file_mtimes(shuffled_dir) == before_shuffle, (
             f"kill after {kill_after}: resume re-ran the wide shuffle pass"
         )
-        after = _file_mtimes(layout.postings_l0)
+        after = _file_mtimes(level0)
         for p, m in before.items():
             assert after.get(p) == m, f"committed segment file was rewritten: {p}"
         led = read_ledger(spark, layout)

@@ -255,13 +255,22 @@ def _write_pages(path, cols, extra):
     }), path)
 
 
-def _assert_fetch_matches_per_block_decode(idx) -> int:
-    """Decode fetch_payloads' buffers for every block of ``idx``, in
-    shuffled request order, and compare with a per-block decode of the
-    row groups' own cells. Returns the number of blocks with a payload
-    ending in a NUL byte."""
-    from escp_spark.codec import decode_block, decode_blocks_bulk
+def _forget_decoded(idx: str) -> None:
+    """Drop ``idx``'s row groups from the process-wide decoded cache."""
+    import os
 
+    root = os.path.join(os.path.abspath(idx), "")
+    Q._decoded_payloads.retain(lambda key: not key[0].startswith(root))
+
+
+def _assert_fetch_matches_per_block_decode(idx) -> int:
+    """Fetch the decoded postings of every block of ``idx``, in shuffled
+    request order, and compare with a per-block decode of the row
+    groups' own cells. Returns the number of blocks with a payload
+    ending in a NUL byte."""
+    from escp_spark.codec import decode_block
+
+    _forget_decoded(idx)
     reader = IndexReader(idx)
     src, want, nul_tails = [], [], 0
     for fi, path in enumerate(reader._pfiles):
@@ -276,7 +285,8 @@ def _assert_fetch_matches_per_block_decode(idx) -> int:
                 want.append(decode_block(*bufs, n))
     perm = np.random.default_rng(0).permutation(len(src))
     fi, rg, pos, n = np.array(src, dtype=np.int64)[perm].T
-    got = decode_blocks_bulk(*reader.fetch_payloads(fi, rg, pos), n)
+    got = reader.fetch_payloads(fi, rg, pos)
+    assert reader.payload_rowgroups_fetched == len(set(zip(fi, rg)))
     for c in range(3):
         np.testing.assert_array_equal(
             got[c], np.concatenate([want[i][c] for i in perm]))
@@ -285,12 +295,13 @@ def _assert_fetch_matches_per_block_decode(idx) -> int:
 
 
 def test_fetch_payloads_gathers_every_block(spark, big_index, tmp_path):
-    """fetch_payloads returns each payload column as one buffer of the
-    requested blocks, back to back in request order: decoding it equals
-    a per-block decode for every block of ``big_index`` and of a small
-    one-bucket index whose smallest url (doc id 0) alone holds a term.
-    That term's one-posting block stores doc id 0 as the single byte
-    0x00, a payload that ends in NUL."""
+    """fetch_payloads returns the requested blocks' decoded postings back
+    to back in request order, each row group read and decoded once: it
+    equals a per-block decode for every block of ``big_index`` (many row
+    groups) and of a small one-bucket index (one row group) whose
+    smallest url (doc id 0) alone holds a term. That term's one-posting
+    block stores doc id 0 as the single byte 0x00, a payload that ends
+    in NUL."""
     from escp_spark.corpus import generate_web_pages
 
     _assert_fetch_matches_per_block_decode(big_index[1])
@@ -302,6 +313,63 @@ def test_fetch_payloads_gathers_every_block(spark, big_index, tmp_path):
     assert IndexReader(idx).urls_for(np.array([0])) == {
         0: "https://0.example/"}
     assert _assert_fetch_matches_per_block_decode(idx) > 0
+
+
+def _count_decodes(monkeypatch) -> list:
+    calls = []
+    real = Q.decode_blocks_bulk
+
+    def counting(*args):
+        calls.append(len(args[3]))
+        return real(*args)
+
+    monkeypatch.setattr(Q, "decode_blocks_bulk", counting)
+    return calls
+
+
+def test_repeated_query_decodes_nothing(big_index, monkeypatch):
+    """Each payload row group is decoded once per process: re-running a
+    query on a warm reader, or running it on a second reader of the same
+    index, makes no decode_blocks_bulk call and reads no row group."""
+    _, idx = big_index
+    _forget_decoded(idx)
+    calls = _count_decodes(monkeypatch)
+    qs = [{"query_id": 0, "query_text": "t00000 t00001 t00042", "k": 10},
+          {"query_id": 1, "query_text": "t00007", "k": 3}]
+    reader = IndexReader(idx)
+    first = search_topk(idx, qs, reader=reader)
+    assert len(calls) == reader.payload_rowgroups_fetched > 0
+    calls.clear()
+    assert search_topk(idx, qs, reader=reader) == first
+    other = IndexReader(idx)
+    assert search_topk(idx, qs, reader=other) == first
+    assert calls == [] and other.payload_rowgroups_fetched == 0
+
+
+def test_serving_and_batch_readers_share_decoded_rowgroups(spark, big_index):
+    """The batch path's driver-side reader and a serving reader of the
+    same index hold ONE decoded copy of each row group: the batch
+    reader reads none of the row groups the serving reader decoded."""
+    import os
+
+    from escp_spark.query import search_topk_spark
+
+    _, idx = big_index
+    _forget_decoded(idx)
+    Q._batch_reader_cache.clear()
+    qs = [{"query_id": 0, "query_text": "t00000 t00003", "k": 5},
+          {"query_id": 1, "query_text": "t00011 t00120", "k": 5}]
+    reader = IndexReader(idx)
+    want = [(r["query_id"], r["rank"], r["doc_url"], r["score"])
+            for r in search_topk(idx, qs, reader=reader)]
+    got = [tuple(r) for r in search_topk_spark(spark, idx, qs).collect()]
+    assert got == want
+    batch = Q._batch_reader_cache[0][1]
+    assert batch._payload_cache is reader._payload_cache
+    assert batch.payload_rowgroups_fetched == 0
+    root = os.path.join(os.path.abspath(idx), "")
+    entries = [k for k in Q._decoded_payloads._d if k[0].startswith(root)]
+    assert len(entries) == reader.payload_rowgroups_fetched > 0
 
 
 def test_tie_plateau_across_partitions(spark, tmp_path, batch_sides):
