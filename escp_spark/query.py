@@ -27,16 +27,17 @@ Two execution paths, both rank-identical to the exhaustive oracle:
    matched terms, from the driver-side dictionary lookup) picks the
    side of one switch, `_BIG_MATCHED_POSTINGS`: at or below it the
    driver runs the serving scorer above over a cached batch reader (no
-   Spark job); above it one distributed scoring pass runs — rebalanced
-   term-pushdown scan of postings → `mapInPandas` decode to
-   query-independent BM25 bases → JVM-side (posting × query) expansion
-   (broadcast join + hash agg, map-side combine) →
-   `groupBy(query_id, doc_id)` exact fixed-point sum → in the same
-   stage, each partition's tie-complete top-k per query (`mapInArrow`) →
-   one Arrow collect of the survivors → the exact tie-complete cut in
-   numpy → driver-side url resolution via the serving reader's
-   interval-index stabs and deterministic (score desc, url asc) final
-   ranking.
+   Spark job); above it one distributed scoring pass runs, sharded by
+   doc bucket window the way a sharded engine scores each shard's docs
+   completely — term-pushdown scan of the matched compressed blocks →
+   one shuffle keyed by window (a consolidated block that spans windows
+   goes to each) → one Arrow kernel per window (`applyInArrow`) that
+   bulk-decodes its blocks, masks them to the window, drops tombstones,
+   expands each posting to its term's queries, sums every (query, doc)
+   score in term order and keeps each query's tie-complete top-k → one
+   Arrow collect of the survivors → the exact tie-complete cut in numpy
+   → driver-side url resolution via the serving reader's interval-index
+   stabs and deterministic (score desc, url asc) final ranking.
 
 Tie-break contract (FIXTURES.md §2): final order is (score desc, url asc);
 ranking first takes a tie-complete candidate set (`rank() <= k`, which
@@ -54,8 +55,10 @@ from contextlib import contextmanager
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .analyzer import tokenize
 from .codec import decode_blocks_bulk
@@ -810,17 +813,19 @@ def _serve_topk(reader: IndexReader, queries: list[dict]):
 # BEFORE any job runs). At or below it the serving WAND scorer runs on
 # the driver (rank-identical, no Spark job): as a Spark job such a batch
 # is bound by per-job scheduling cost, not work. Above it the batch runs
-# the distributed decode rebalance + one-pass partition-local top-k cut,
-# which scales past one driver. Keyed on the batch's work, not the index
-# size.
-# 100k docs, local[4], 4-core VM, cold reader, driver vs distributed cut
-# (batched-window serving scorer): 50 reference queries (0.57M matched)
-# 0.45-0.51 vs 4.7-5.3 s; 100 Zipf queries (2.0M) 1.9 vs 9.6-10.9 s;
-# scale_queries(1000) (1.3M) 2.0-2.4 vs 7.1-7.4 s; scale_queries(3000)
-# (3.0M) 6.2-7.4 vs 13.3-14.1 s; scale_queries(6000) (4.6M) 13.4-13.8 vs
-# 20.4-21.4 s. The driver wins at every size up to 4.6M, so the crossover
-# lies above the switch; it stays at 4M (see ROADMAP item 5). Tests force
-# the distributed side with -1.
+# the window-sharded distributed pass, which scales past one driver.
+# Keyed on the batch's work, not the index size.
+# 100k docs (n_buckets 16, max_segments 5), local[4], 4-core VM, cold
+# batch reader, driver vs window-sharded distributed side, 3 runs each:
+# 50 reference queries (0.57M matched) 0.83-0.99 vs 0.92-0.97 s; 100
+# Zipf queries (2.1M) 1.24-1.59 vs 1.28-1.48 s; scale_queries(1000)
+# (1.3M) 1.73-1.91 vs 1.44-1.47 s; scale_queries(3000) (3.0M) 3.74-4.91
+# vs 2.33-2.75 s; scale_queries(6000) (4.6M) 6.97-9.78 vs 3.61-3.89 s.
+# The sides are level near 0.6-2M and the distributed side wins from
+# 1.3M up, so the crossover now lies BELOW the switch: batches between it
+# and 4M would run faster distributed. The switch stays at 4M because
+# the benchmark scales it and requires its driver-side batches to stay
+# below it (ROADMAP). Tests force the distributed side with -1.
 _BIG_MATCHED_POSTINGS = 4_000_000
 
 # Size-1 reader cache for the batch path's driver side: repeat batches
@@ -847,14 +852,14 @@ def _batch_reader(index_dir: str) -> "IndexReader":
 # analog of build.last_build_timings). "plan" = driver-side planning incl.
 # the pyarrow dictionary df lookup that decides the switch; "score" = the
 # driver-side serving scorer (below the switch, with "cut" = 0) or the
-# one Spark action (above it): scan, decode, score, aggregate, cut each
-# partition's tie-complete top-k and collect the survivors; "cut" = the
-# driver's exact tie-complete cut over those survivors; "survivors" =
-# rows collected from the partitions (= "candidates" below the switch,
-# which has no partition cut); "candidates" = tie-complete candidates
-# whose urls were resolved. Url resolution + final ranking are
-# driver-side and the returned DataFrame is a local relation, so
-# plan + score + cut ≈ wall.
+# one Spark action (above it): scan, shuffle the matched blocks by
+# window, decode, score and cut each window's tie-complete top-k, and
+# collect the survivors; "cut" = the driver's exact tie-complete cut
+# over those survivors; "survivors" = rows collected from the windows
+# (= "candidates" below the switch, which has no window cut);
+# "candidates" = tie-complete candidates whose urls were resolved. Url
+# resolution + final ranking are driver-side and the returned DataFrame
+# is a local relation, so plan + score + cut ≈ wall.
 last_batch_timings: dict = {}
 
 _BATCH_SCHEMA = pa.schema([
@@ -923,40 +928,44 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
     (_BIG_MATCHED_POSTINGS). A batch at or below that switch is scored
     on the driver by the serving WAND scorer over the size-1 batch
     reader — no broadcast, no Spark job. A batch above it runs one
-    distributed pass: the postings scan is term-pushdown-pruned (Parquet
-    row-group stats on the sorted term column) and hash-rebalanced
-    before the decode — term-sorted postings concentrate a hot term's
-    blocks in a few row groups and scan splits bottom out at one row
-    group; python tasks decode each live posting ONCE into a
-    query-independent BM25 base keyed by a dense term id; the (posting ×
-    query) expansion and idf/tf weighting run JVM-side (broadcast join
-    against the tiny per-query weight table + hash aggregation inside
-    whole-stage codegen, map-side partials before the one shuffle). In
-    the final ``groupBy(query_id, doc_id)`` aggregation's own stage a
-    ``mapInArrow`` keeps, per query, every row scoring at least that
-    partition's k-th largest score; one ``toArrow()`` collects those
-    survivors — the batch is ONE Spark action, with no persist, window
-    or second collect — and the driver finishes the exact per-query
-    tie-complete cut in numpy (*External Merge Sort for Top-K Queries*:
-    a provably safe cutoff filters before any sort, and only
+    distributed pass sharded by doc bucket window (docid >>
+    DOC_BUCKET_SHIFT, the windows the serving scorer visits): the
+    postings scan is term-pushdown-pruned (Parquet row-group stats on the
+    sorted term column), and ONE shuffle sends each matched compressed
+    block to every window its doc-id range overlaps. A ``groupBy(window)
+    .applyInArrow`` kernel then bulk-decodes the window's blocks, keeps
+    the live postings inside the window, expands each to its term's
+    queries (CSR over term code, the serving path's weights), sums every
+    (query, doc) score in ascending term order and keeps, per query,
+    every row scoring at least the window's k-th largest score. One
+    ``toArrow()`` collects those survivors — the batch is ONE Spark
+    action, with no JVM expansion, broadcast join, aggregation shuffle,
+    persist or second collect — and the driver finishes the exact
+    per-query tie-complete cut in numpy (*External Merge Sort for Top-K
+    Queries*: a provably safe cutoff filters before any sort, and only
     driver-sized survivors are collected).
+
+    Why the scores are the serving path's, bit for bit:
+
+    - A doc's postings all lie inside its window. Every block that
+      overlaps a window is routed to it (a consolidated tail block spans
+      several windows and goes to each) and masked to it, so each
+      posting counts in exactly one kernel, and each (query, doc) score
+      is final in one group.
+    - The kernel computes each contribution as the serving scorer does
+      (same query tf × idf weight, same ``bm25_contrib``) and sums a
+      doc's contributions in ascending term order (``_aggregate``), so
+      equal postings give bit-equal scores on both sides of the switch.
 
     Why the cut is exact:
 
-    - Each (query, doc) score is final in exactly one post-shuffle
-      partition, and the exact fixed-point sums make it independent of
-      the order the shuffle delivers the doc's terms in.
-    - A partition's top k rows for a query are global rows, so the
-      global k-th score is at least the partition's k-th score t_P.
-      Every row scoring at least the global k-th score therefore
-      survives its partition, and the driver's cut over the survivors
-      equals the cut over all rows.
-    - The survivors are at most partitions × Σ_q (k_q + the tie
-      plateau at t_P).
-    - The cut streams: after each Arrow batch the running survivor set
-      is cut again. Its k-th largest score (over a subset of the
-      partition's rows) never exceeds t_P, so nothing scoring at least
-      t_P is dropped, and temporaries stay batch-sized.
+    - A window's top k rows for a query are global rows, so the global
+      k-th score is at least the window's k-th score t_W. Every row
+      scoring at least the global k-th score therefore survives its
+      window, and the driver's cut over the survivors equals the cut
+      over all rows.
+    - The survivors are at most windows × Σ_q (k_q + the tie plateau at
+      t_W).
 
     Url resolution for the driver-sized tie-complete candidate set is
     driver-side on both sides — the serving reader's sidecar-backed
@@ -972,28 +981,37 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
     t0 = _time.perf_counter()
     reader = _batch_reader(index_dir)
     with reader.pinned():
-        return _batch_topk(spark, index_dir, reader, queries, t0)
+        return _batch_topk(spark, reader, queries, t0)
 
 
 def _postings_scan(spark, path: str, terms: list[str]):
-    """The postings rows of ``terms`` that scoring reads. The term filter
-    is parsed from one SQL string — one py4j call, where ``Column.isin``
-    makes one per term — into the same In/InSet predicate, which the
-    parquet scan prunes row groups with (plan-asserted in
-    tests/test_plans.py)."""
+    """The postings blocks of ``terms`` that scoring reads, one row per
+    doc bucket window a block overlaps (``window`` = doc_id >>
+    DOC_BUCKET_SHIFT over the block's doc-id range: a consolidated tail
+    block spans several). The term filter is parsed from one SQL string
+    — one py4j call, where ``Column.isin`` makes one per term — into the
+    same In/InSet predicate, which the parquet scan prunes row groups
+    with (plan-asserted in tests/test_plans.py). The schema is the
+    merge's, so no Spark job reads a footer to infer it."""
+    from .build import DOC_BUCKET_SHIFT, MERGED_SCHEMA
+
     quoted = ",".join(
         "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'"
         for t in terms
     )
+    window = F.explode(F.sequence(*(
+        F.shiftright(c, DOC_BUCKET_SHIFT).cast("int")
+        for c in ("doc_id_lo", "doc_id_hi")
+    )))
     return (
-        spark.read.parquet(path)
+        spark.read.schema(MERGED_SCHEMA).parquet(path)
         .filter(F.expr(f"term IN ({quoted})"))
-        .select("term", "n", "doc_ids", "tfs", "dls")
+        .select(window.alias("window"), "term", "n", "doc_ids", "tfs", "dls")
     )
 
 
-def _batch_topk(spark, index_dir: str, reader: "IndexReader",
-                queries: list[dict], t0: float):
+def _batch_topk(spark, reader: "IndexReader", queries: list[dict],
+                t0: float):
     """search_topk_spark's body, on the manifest ``reader`` pinned."""
     import time as _time
 
@@ -1023,7 +1041,7 @@ def _batch_topk(spark, index_dir: str, reader: "IndexReader",
                     (q["query_id"], float(c) * float(idf_lucene(n_docs, dfs[t])))
                 )
     # The batch's work, known before any job runs (on the distributed
-    # side: one decode + one base-score row per matched posting).
+    # side: one decode per matched posting).
     if sum(dfs[t] for t in q_terms) <= _BIG_MATCHED_POSTINGS:
         last_batch_timings["plan"] = round(_time.perf_counter() - _t0, 3)
         _t0 = _time.perf_counter()
@@ -1036,182 +1054,92 @@ def _batch_topk(spark, index_dir: str, reader: "IndexReader",
         return _result_df(spark, [
             (r["query_id"], r["rank"], r["doc_url"], r["score"]) for r in rows
         ])
-    # Per-query weighting happens JVM-side (broadcast join + hash agg):
-    # python tasks only decode and compute the query-independent BM25
-    # base per posting, keyed by a dense integer term id (a python-side
-    # expansion profiled at ~250 core-seconds at 2M docs/200 queries).
-    tid_of = {t: i for i, t in enumerate(all_terms) if t in q_terms}
-    w_rows = [
-        (tid, qid, w)
-        for t, tid in tid_of.items()
-        for qid, w in q_terms[t]
-    ]
-    wdf = spark.createDataFrame(w_rows, "tid int, query_id int, w double")
+    # The distributed side: one shuffle of the matched compressed blocks,
+    # keyed by doc bucket window, and one Arrow kernel per window that
+    # scores the window's docs completely (proof in search_topk_spark).
+    from .build import DOC_BUCKET_SHIFT, _balanced_shuffle_partitions
+    from .streaming.deletes import live_mask
+
     k_of = {q["query_id"]: q["k"] for q in queries}
     k_qids = np.array(sorted(k_of), dtype=np.int64)
     k_vals = np.array([k_of[q] for q in k_qids.tolist()], dtype=np.int64)
-    avgdl_bc = avgdl
-    # Soft-deleted doc_ids (streamed update/delete): dropped at decode
-    # time inside the scoring tasks, mirroring the serving path.
-    from .streaming.deletes import live_mask
+    if k_qids.size >= 1 << (63 - DOC_BUCKET_SHIFT):
+        raise ValueError(f"{k_qids.size} queries in one batch: a window "
+                         "kernel packs (query, doc) keys into 63 bits")
+    # CSR over the matched terms' codes: term i's (query ordinal, weight)
+    # pairs are entries q_off[i]:q_off[i + 1]. The weights are the serving
+    # path's (query tf × idf), so contributions are bit-equal to it.
+    terms = sorted(q_terms)
+    pairs = [p for t in terms for p in q_terms[t]]
+    q_off = np.cumsum([0] + [len(q_terms[t]) for t in terms])
+    q_ord = np.searchsorted(k_qids, [qid for qid, _ in pairs])
+    q_w = np.array([w for _, w in pairs], dtype=np.float64)
+    local = (1 << DOC_BUCKET_SHIFT) - 1
 
-    tombstones = reader.tombstones
+    def score_window(key, tbl):
+        """One window's tie-complete top-k per query: decode its blocks,
+        keep the live postings inside the window, expand each to its
+        term's queries and sum per (query, doc) in ascending term order
+        (_aggregate's order, as the serving scorer sums)."""
+        terms_arr, q_off, q_ord, q_w, tomb, kq, kv = plan_bc.value
+        win = key[0].as_py()
+        ids, tfs, dls, blk = decode_blocks_bulk(
+            *(_payload_stream(tbl.column(c)) for c in PAYLOAD_COLS),
+            tbl.column("n").to_numpy())
+        ids = ids.view(np.int64)
+        t = pc.index_in(tbl.column("term"), value_set=terms_arr).to_numpy()
+        # A block spanning several windows is sent to each of them: only
+        # its postings inside this window count here.
+        m = (ids >> DOC_BUCKET_SHIFT) == win
+        if tomb.size:
+            m &= live_mask(ids, tomb)
+        ids, tfs, dls, t = ids[m], tfs[m], dls[m], t[blk[m]]
+        cnt = q_off[t + 1] - q_off[t]
+        e = _ranges(q_off[t], cnt)
+        p = np.repeat(np.arange(ids.size), cnt)
+        keys, scores = _aggregate(
+            (q_ord[e] << DOC_BUCKET_SHIFT) | (ids[p] & local),
+            bm25_contrib(tfs[p], dls[p], avgdl, q_w[e]), t[p])
+        qid = kq[keys >> DOC_BUCKET_SHIFT]
+        keep = _tie_complete_rows(qid, scores, kq, kv)
+        return pa.table({
+            "query_id": pa.array(qid[keep], pa.int32()),
+            "doc_id": pa.array((win << DOC_BUCKET_SHIFT)
+                               | (keys[keep] & local), pa.int64()),
+            "score": pa.array(scores[keep], pa.float64()),
+        })
 
-    # Flush the per-posting output every ~512k rows so each yielded
-    # Arrow batch concatenates ~10 MB of reusable arena pages instead of
-    # one unbounded task-sized buffer (this host taxes fresh-page bursts
-    # heavily — CLAUDE.md).
-    _EMIT_FLUSH_ROWS = 1 << 19
-
-    def score_partition(batches):
-        def emit(tids_out, dids_out, base_out):
-            return pd.DataFrame(
-                {
-                    "tid": np.concatenate(tids_out),
-                    "doc_id": np.concatenate(dids_out),
-                    "base": np.concatenate(base_out),
-                }
-            )
-
-        for pdf in batches:
-            tid_map = plan_bc.value
-            tids_out, dids_out, base_out, pending = [], [], [], 0
-            # Group rows by term: one bulk vectorized decode per term;
-            # ONE output row per live posting regardless of how many
-            # queries reference the term.
-            for term, g in pdf.groupby("term", sort=False):
-                tid = tid_map.get(term)
-                if tid is None:
-                    continue
-                ids, tfs, dls, _ = decode_blocks_bulk(
-                    list(g["doc_ids"]), list(g["tfs"]), list(g["dls"]),
-                    g["n"].to_numpy(),
-                )
-                tomb = tomb_bc.value
-                if tomb.size:
-                    m = live_mask(ids, tomb)
-                    ids, tfs, dls = ids[m], tfs[m], dls[m]
-                base = bm25_contrib(tfs, dls, avgdl_bc, 1.0)
-                tids_out.append(np.full(ids.size, tid, dtype=np.int32))
-                dids_out.append(ids.astype(np.int64))
-                base_out.append(base)
-                pending += ids.size
-                if pending >= _EMIT_FLUSH_ROWS:
-                    yield emit(tids_out, dids_out, base_out)
-                    tids_out, dids_out, base_out, pending = [], [], [], 0
-            if tids_out:
-                yield emit(tids_out, dids_out, base_out)
-
-    def cut_partition(batches):
-        """The partition's tie-complete top-k per query, cut again after
-        every Arrow batch, so temporaries stay batch-sized plus the
-        running survivors (proof in search_topk_spark's docstring)."""
-        kq, kv = k_bc.value
-        q, d, s = (np.empty(0, dtype=t)
-                   for t in (np.int32, np.int64, np.float64))
-        for b in batches:
-            q, d, s = (np.concatenate([x, b.column(i).to_numpy()])
-                       for i, x in enumerate((q, d, s)))
-            keep = _tie_complete_rows(q, s, kq, kv)
-            q, d, s = q[keep], d[keep], s[keep]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(q), pa.array(d), pa.array(s)],
-            names=["query_id", "doc_id", "score"],
-        )
-
-    # Published-postings size: drives the scan-split sizing. Local FS
-    # walk first; on a remote FS (s3a/hdfs — os.walk yields nothing) fall
-    # back to the rg_stats sidecar's payload_bytes sum, which the build
-    # persists for exactly this kind of listing-free consumer.
-    from .build import _dir_bytes, _scoped_conf
-
-    try:
-        post_bytes = _dir_bytes(paths["postings"])
-    except OSError:
-        post_bytes = 0
-    if not post_bytes:
-        from .sidecar import sidecar_payload_bytes
-
-        post_bytes = sidecar_payload_bytes(index_dir, "postings")
-    # Split-size the postings scan to the session's parallelism (the
-    # scan runs inside the one action below): the merged postings of a
-    # 2M-doc index are ~40 files / ~280 MB, which the session-wide 32 MB
-    # splits bin-pack into ~14 tasks — two ragged waves at 8 cores
-    # (profiled max task 35 s vs ~24 s mean) while the work inside is
-    # row-group-pruned and CPU-heavy. Target ~3 waves of small splits per
-    # core so pruned-empty splits cost nothing and hot row groups spread
-    # across tasks; cap at 16 MB (2 postings row groups) — with term-isin
-    # row-group pruning the matched work concentrates in few splits, and
-    # a 32 MB cap left one local[2] task holding 69 s of the 82
-    # core-second scan. (At cluster scale the same rule holds per
-    # executor core; bytes come from a driver-side listing — the rg_stats
-    # sidecar carries them when the FS walk is remote.)
-    scan_conf = {}
-    if post_bytes:
-        par = max(1, spark.sparkContext.defaultParallelism)
-        target = min(16 << 20, max(2 << 20, post_bytes // (3 * par)))
-        scan_conf = {
-            "spark.sql.files.maxPartitionBytes": str(int(target)),
-            "spark.sql.files.openCostInBytes": str(256 << 10),
-        }
-
-    sc = spark.sparkContext
+    # The windows, from the docmap row groups' doc-id ranges (the
+    # sidecar url resolution reads anyway): they size the shuffle so
+    # no task holds many more windows than another.
+    dm = reader._dm_rg_index()[0]
+    lo, hi = dm.lo >> DOC_BUCKET_SHIFT, dm.hi >> DOC_BUCKET_SHIFT
+    windows = np.unique(_ranges(lo, hi - lo + 1)).tolist()
+    n_parts = _balanced_shuffle_partitions(
+        [windows], int(spark.conf.get("spark.sql.shuffle.partitions")),
+        T.IntegerType())
     # Each broadcast pickles to a file in the driver's temp dir that only
-    # destroy() removes, so they are destroyed once the one action ran.
-    plan_bc = sc.broadcast(tid_of)
-    tomb_bc = sc.broadcast(tombstones)
-    k_bc = sc.broadcast((k_qids, k_vals))
+    # destroy() removes, so it is destroyed once the one action ran.
+    plan_bc = spark.sparkContext.broadcast((
+        pa.array(terms, pa.string()), q_off, q_ord, q_w, reader.tombstones,
+        k_qids, k_vals))
     try:
-        postings = _postings_scan(spark, paths["postings"], all_terms)
-        # Explicit skew rebalance before the CPU-heavy decode: the scan's
-        # parallelism bottoms out at parquet row-group granularity, and
-        # the postings are TERM-SORTED — a hot term's blocks cluster in a
-        # few row groups, so one scan task can hold most of the decode
-        # work (profiled at 2M docs: max decode task 32 s vs an 11 s
-        # mean; after the rebalance max task 4.7 s). Hash on (term,
-        # doc_ids) spreads a single hot term's blocks too — every block
-        # has distinct doc_ids bytes — and is deterministic under task
-        # retry (unlike round-robin repartition, which also local-sorts
-        # the block payloads). Shuffled bytes = matched blocks only (~10
-        # core-s vs the ~80 core-s decode it balances).
-        n_parts = max(16, sc.defaultParallelism * 3)
-        postings = postings.repartition(n_parts, F.xxhash64("term", "doc_ids"))
-        partials = postings.mapInPandas(
-            score_partition, "tid int, doc_id long, base double"
-        )
-        # Expansion to (posting x query) happens HERE, inside whole-stage
-        # codegen: broadcast-join the tiny (tid, query_id, weight) table
-        # and hash-aggregate — the partial agg in the scan stage collapses
-        # duplicate (query_id, doc_id) keys before the shuffle exactly
-        # like the old python-side combine did, at Tungsten cost per row.
-        # Each contribution is split into two integers in units of 2^-30
-        # and 2^-60 whose sums are exact, so a doc's score does not depend
-        # on the order the shuffle delivers its terms in (equal docs tie
-        # bit-identically in whichever partition they land).
-        c = F.col("base") * F.col("w") * float(1 << 30)
-        scores = (
-            partials.join(F.broadcast(wdf), "tid")
-            .select("query_id", "doc_id", F.floor(c).alias("hi"),
-                    F.floor((c - F.floor(c)) * float(1 << 30)).alias("lo"))
-            .groupBy("query_id", "doc_id")
-            .agg((F.sum("hi") * 2.0 ** -30 + F.sum("lo") * 2.0 ** -60)
-                 .alias("score"))
-        )
-        # The partition-local cut runs in the final aggregation's stage.
-        survivors = scores.mapInArrow(
-            cut_partition, "query_id int, doc_id long, score double"
+        survivors = (
+            _postings_scan(spark, paths["postings"], terms)
+            .repartition(n_parts, "window")
+            .groupBy("window")
+            .applyInArrow(score_window,
+                          "query_id int, doc_id long, score double")
         )
         _maybe_dump_plan(survivors, "bm25_batch_bigcut")
         last_batch_timings["plan"] = round(_time.perf_counter() - _t0, 3)
         _t0 = _time.perf_counter()
-        with _scoped_conf(spark, scan_conf):
-            surv = survivors.toArrow()
+        surv = survivors.toArrow()
     finally:
-        for bc in (plan_bc, tomb_bc, k_bc):
-            bc.destroy()
+        plan_bc.destroy()
     last_batch_timings["score"] = round(_time.perf_counter() - _t0, 3)
     _t0 = _time.perf_counter()
-    # The exact cut over the union of the partitions' survivors.
+    # The exact cut over the union of the windows' survivors.
     qid, did, score = (surv.column(c).to_numpy()
                        for c in ("query_id", "doc_id", "score"))
     keep = _tie_complete_rows(qid, score, k_qids, k_vals)

@@ -231,28 +231,6 @@ def write_rg_sidecar(layout, paths: dict, spark=None) -> str:
     return out
 
 
-def sidecar_payload_bytes(index_dir: str, kind: str) -> int:
-    """Σ payload_bytes of one kind of the published index — a
-    listing-free size probe for scan sizing (reads only that kind's
-    shards). 0 when absent/unreadable."""
-    import pyarrow.dataset as pads
-
-    from .sources.tables import load_manifest
-
-    try:
-        sidecar = load_manifest(index_dir)["paths"][SIDECAR_NAME]
-        files = _list_parquet_files(os.path.join(sidecar, f"kind={kind}"))
-        if not files:
-            return 0
-        tbl = pads.dataset(files, format="parquet").to_table(
-            columns=["payload_bytes"]
-        )
-        total = tbl.column("payload_bytes").to_pandas().sum()
-        return int(total) if not pd.isna(total) else 0
-    except Exception:
-        return 0
-
-
 def load_rg_sidecar(index_dir: str, sidecar: str,
                     kind: str) -> tuple[list[str], pd.DataFrame]:
     """The published files of ``kind`` (absolute, sorted) and their row

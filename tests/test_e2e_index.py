@@ -304,9 +304,10 @@ def test_balanced_shuffle_planner_rejects_long_key():
 
 
 # Spark jobs of one forced-distributed batch over ``built_index``, as
-# measured: the one toArrow action runs as several jobs under adaptive
-# execution (the weight table's broadcast and one per shuffle stage).
-_DISTRIBUTED_BATCH_JOBS = 5
+# measured: the one toArrow action runs as one job per stage of its one
+# shuffle under adaptive execution (the scan's schema is given, so no
+# footer-reading job precedes it).
+_DISTRIBUTED_BATCH_JOBS = 2
 
 
 def test_distributed_batch_is_one_pass_and_caches_nothing(

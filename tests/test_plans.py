@@ -153,3 +153,26 @@ def test_build_source_filter_pushed_down(spark, tiny_corpus):
 
     pages = read_web_pages(spark, tiny_corpus).filter(F.expr("lang = 'en'"))
     assert_pushed_filters(prepared_corpus(pages, 8), "EqualTo(lang,en)")
+
+
+def test_distributed_batch_plan_one_exchange(spark, built_index, tmp_path,
+                                             monkeypatch):
+    """The distributed batch's plan (bm25_batch_bigcut) is one shuffle of
+    the matched blocks by bucket window into per-window Arrow kernels:
+    exactly one Exchange, no broadcast join, and the term filter still
+    pushed to the postings scan."""
+    import re
+
+    import escp_spark.query as Q
+    from escp_spark.query import search_topk_spark
+
+    monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", -1)
+    monkeypatch.setenv("ESCP_DUMP_PLAN_DIR", str(tmp_path))
+    assert search_topk_spark(
+        spark, built_index[0],
+        [{"query_id": 0, "query_text": "t00000 t00005", "k": 3}],
+    ).collect()
+    plan = (tmp_path / "bm25_batch_bigcut.txt").read_text()
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    assert re.search(r"PushedFilters: \[[^\n]*In\(term", plan), plan

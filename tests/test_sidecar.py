@@ -266,42 +266,3 @@ def test_republish_refreshes_sidecar(spark, stream_source, tmp_path):
         assert r._pfiles == _nonempty_files(paths["postings"])
         assert r._dm_files == _nonempty_files(paths["docmap"])
     assert sidecars[0] != sidecars[1]
-
-
-def test_batch_post_bytes_falls_back_to_sidecar(spark, built_index,
-                                                oracle_docs, monkeypatch):
-    """search_topk_spark sizes its postings-scan splits from the
-    published-postings byte count. On a remote FS the driver-side walk
-    yields nothing; the fallback reads the rg_stats sidecar's
-    payload_bytes (persisted at build time for exactly this kind of
-    listing-free consumer). Force the walk to return 0 and assert the
-    batch path still produces oracle-identical results — and that the
-    sidecar actually yields a positive size for the scan heuristic."""
-    import escp_spark.build as B
-    from escp_spark.oracle import NaiveIndex
-
-    import escp_spark.query as Q
-
-    d, _ = built_index
-    monkeypatch.setattr(B, "_dir_bytes", lambda path: 0)
-    # Only the distributed side sizes a postings scan.
-    monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", -1)
-
-    from escp_spark.sidecar import sidecar_payload_bytes
-
-    assert sidecar_payload_bytes(d, "postings") > 0
-
-    from escp_spark.query import search_topk_spark
-
-    qs = _queries()[:8]
-    got = {}
-    for r in search_topk_spark(spark, d, qs).collect():
-        got.setdefault(r.query_id, []).append((r.rank, r.doc_url, r.score))
-    ix = NaiveIndex(oracle_docs)
-    for q in qs:
-        exp = ix.search(q["query_text"], q["k"])
-        mine = sorted(got.get(q["query_id"], []))
-        assert len(mine) == len(exp)
-        for (rank, url, score), (e_url, e_score) in zip(mine, exp):
-            assert url == e_url
-            assert score == pytest.approx(e_score, abs=1e-6)

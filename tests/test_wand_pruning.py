@@ -394,3 +394,70 @@ def test_tie_plateau_across_partitions(spark, tmp_path, batch_sides):
         rows = search_topk_spark(spark, idx, queries).collect()
         assert [r.doc_url for r in rows] == urls[:5], side
         assert len({r.score for r in rows}) == 1, side
+
+
+def test_distributed_batch_bit_equal_to_serving(spark, big_index, tiny_corpus,
+                                                stream_source, tmp_path,
+                                                monkeypatch):
+    """The forced-distributed batch returns exactly the serving path's
+    rows, scores equal by ``==``: every block overlapping a bucket window
+    reaches that window's kernel masked to it, so each (query, doc) is
+    summed in one kernel in ascending term order, as the serving scorer
+    sums it. Checked on ``big_index`` (consolidated blocks spanning
+    windows), on an index with tombstones inside spanning blocks and on
+    a streamed index of several epochs (effective buckets)."""
+    from pyspark.sql import types as T
+
+    from escp_spark.query import search_topk_spark
+    from escp_spark.streaming import (delete_urls, finalize_streamed_index,
+                                      stream_ingest_once)
+
+    rng = np.random.default_rng(11)
+    queries = [{"query_id": 0, "query_text": "t00000 t00001", "k": 1},
+               {"query_id": 1, "query_text": "t00003", "k": 400}]
+    for qid in range(2, 30):
+        terms = [f"t{int(i):05d}" for i in rng.zipf(1.2, size=rng.integers(1, 4))
+                 if i < 10000] or ["t00002"]
+        queries.append({"query_id": qid, "query_text": " ".join(terms),
+                        "k": 10})
+    monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", -1)
+
+    def check(idx):
+        Q._batch_reader_cache.clear()
+        want = [(r["query_id"], r["rank"], r["doc_url"], r["score"])
+                for r in search_topk(idx, queries)]
+        got = [tuple(r) for r in search_topk_spark(spark, idx,
+                                                   queries).collect()]
+        assert want and got == want, idx
+
+    def spanning(idx):
+        meta = IndexReader(idx).meta_for_terms(["t00000", "t00001", "t00003"])
+        lo, hi = meta["doc_id_lo"] >> 40, meta["doc_id_hi"] >> 40
+        return meta["doc_id_lo"][lo != hi], hi.max()
+
+    assert spanning(big_index[1])[0].size
+    check(big_index[1])
+
+    idx = str(tmp_path / "tomb")
+    build_index(spark, tiny_corpus, idx, n_buckets=8, max_segments=2,
+                n_groups=1)
+    top = sorted({r["doc_url"] for r in search_topk(idx, queries)})
+    in_spans = spanning(idx)[0]
+    assert in_spans.size
+    urls = IndexReader(idx).urls_for(in_spans)
+    assert delete_urls(spark, idx, top[::5] + sorted(urls.values())[:5]) > 5
+    check(idx)
+
+    schema = T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+    ])
+    idx = str(tmp_path / "stream")
+    assert stream_ingest_once(spark, stream_source, idx, schema,
+                              n_buckets=4) >= 2
+    finalize_streamed_index(spark, idx, max_segments=3)
+    assert spanning(idx)[1] >= 4  # effective buckets past the first epoch
+    check(idx)
