@@ -5,8 +5,9 @@ Where escp scans an ES index and bulk-writes documents into another ES index
 ``web_pages`` corpus and builds the inverted index itself, Spark-first:
 
   scan → last-write-wins dedup → html→text extraction (Arrow UDF) →
-  deterministic md5 bucketing → per-bucket segment build (applyInPandas,
-  numpy codec) → dictionary/stats aggregation → merge → atomic publish
+  deterministic md5 bucketing → per-bucket kernel (applyInPandas, numpy
+  codec: docid assignment, the bucket's docmap file, its level-0 posting
+  blocks) → dictionary/stats aggregation → merge → atomic publish
 
 escp behaviors carried over:
 - **Resumable units of work** (esscroll.go:129 + 293-294 "Continue" stub →
@@ -29,18 +30,20 @@ escp behaviors carried over:
   deterministic: latest ``warc_ts`` wins, ties broken by md5(html).
 
 Scale notes (the 10^12-doc design point):
-- One wide shuffle total: the url-hash repartition that co-locates each
-  bucket. Dedup reuses the same hash partitioning (window over url), and
-  docid assignment is a window over the already-clustered data.
-- The dedup shuffle is materialized once to staging (stage ``shuffle``,
-  partitioned by checkpoint group). The CPU-heavy html→text extraction
-  runs inside that wide pass, so staging stores text and the corpus is
-  read and written exactly once. A mid-segment failure never recomputes
-  the corpus-wide shuffle, and per-group builds re-read a pruned scan.
-- Segment build is ``applyInPandas`` per bucket: memory per task is one
-  bucket's text + postings; choose ``n_buckets`` ≈ corpus_bytes /
-  (executor_mem / tasks_per_executor). Buckets are hash-uniform, so no
-  straggler buckets (cf. estypes.go:104-116 skew heuristic).
+- One wide shuffle total: the url-hash dedup exchange, materialized once
+  to staging partitioned by checkpoint group (stage ``shuffle``). The
+  CPU-heavy html→text extraction runs inside that wide pass, so staging
+  stores text and the corpus is read and written exactly once. A
+  mid-segment failure never recomputes the corpus-wide shuffle.
+- Each checkpoint group is ONE Spark job: a pruned staging scan grouped
+  by bucket into one ``applyInPandas`` kernel per bucket. The kernel
+  sorts its bucket's urls once, assigns docid = bucket<<40 | rank, writes
+  the bucket's docmap file itself (pyarrow, deterministic name, temp +
+  rename) and returns its posting blocks, which the job writes as the
+  group's level-0. Memory per task is one bucket's text + postings;
+  choose ``n_buckets`` ≈ corpus_bytes / (executor_mem /
+  tasks_per_executor). Buckets are hash-uniform, so no straggler buckets
+  (cf. estypes.go:104-116 skew heuristic).
 - The merge is *metadata-level*: per-bucket docid ranges are disjoint and
   ordered (docid = bucket<<40 | rank), so concatenating per-bucket posting
   blocks in bucket order yields a globally sorted posting list with no
@@ -53,7 +56,9 @@ from __future__ import annotations
 
 import logging
 import os
-from typing import Iterator
+import shutil
+import time
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -162,62 +167,97 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text)
 
 
-@F.pandas_udf(T.IntegerType())
-def token_count_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: len(tokenize(t or "")))
+def staged_corpus(pages: DataFrame, n_buckets: int, n_groups: int,
+                  source_filter: str | None = None) -> DataFrame:
+    """The build's one wide pass, as staging stores it: filter → LWW
+    dedup → md5 bucket and checkpoint group → html→text extraction.
 
-
-def prepared_corpus(df: DataFrame, n_buckets: int) -> DataFrame:
-    """dedup → extract → bucket; the input to all build stages."""
+    Catalyst pushes ``source_filter`` into the corpus scan
+    (plan-asserted in tests/test_plans.py). The corpus ``text`` column
+    is dropped BEFORE the dedup aggregate: text is re-derived from html
+    by the byte-identical extractor, and the aggregate's max_by struct
+    would otherwise carry it through the exchange (guide §2.3 "project
+    before the exchange"; ~45% fewer dedup-exchange bytes on the bench
+    corpus, where text ≈ html payload). Extraction runs on the
+    post-dedup stage tasks, so the html is never written anywhere."""
+    if source_filter:
+        pages = pages.filter(F.expr(source_filter))
     return (
-        dedup_last_write_wins(df)
-        .withColumn("text", extract_text_udf(F.col("html")))
+        dedup_last_write_wins(pages.drop("text"))
         .withColumn("bucket", bucket_expr(F.col("url"), n_buckets))
-        .select("url", "bucket", "text", "lang")
+        .withColumn("grp", F.col("bucket") % n_groups)
+        .withColumn("text", extract_text_udf(F.col("html")))
+        .select("url", "bucket", "grp", "text", "lang")
     )
 
 
-DOCMAP_SCHEMA = "bucket int, url string, doc_id long"
-
-
-def _rank_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("url", kind="mergesort").reset_index(drop=True)
-    base = int(pdf["bucket"].iloc[0]) << DOC_BUCKET_SHIFT
-    return pd.DataFrame(
-        {
-            "bucket": pdf["bucket"],
-            "url": pdf["url"],
-            "doc_id": base + np.arange(len(pdf), dtype=np.int64),
-        }
+def group_segments(spark: SparkSession, staged_dir: str, group: int,
+                   docmap_dir: str) -> DataFrame:
+    """The plan of one checkpoint group's one Spark job: the group's
+    staged rows through the per-bucket kernel, which writes the group's
+    docmap files into ``docmap_dir`` and returns its level-0 blocks."""
+    part = (
+        spark.read.parquet(staged_dir).filter(F.col("grp") == group)
+        .select("url", "bucket", "text")
     )
-
-
-def docmap_for(df: DataFrame) -> DataFrame:
-    """docid = bucket<<40 | rank(url within bucket) — deterministic and
-    independent of parallelism; the url↔docid table (B4).
-
-    Per-bucket Arrow UDF rank, not a row_number window: the window's
-    whole-corpus JVM sort cost ~600 core-s at 2M docs, while sorting each
-    bucket's urls in pandas is milliseconds. No tokenization here — doc
-    lengths live inline in posting blocks and avgdl derives from the
-    dictionary's Σcf, so nothing tokenizes twice."""
-    return df.select("bucket", "url").groupBy("bucket").applyInPandas(
-        _rank_bucket, DOCMAP_SCHEMA
-    )
+    return build_segments(part, docmap_dir)
 
 
 # --------------------------------------------------------------------------
 # Segment build (applyInPandas per bucket; numpy inside — B5/B6/B7)
 # --------------------------------------------------------------------------
 
-def _build_bucket_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One bucket → encoded posting blocks. Vectorized: one lexsort over
-    all (term, docid) token pairs of the bucket, run-length tf counting,
-    per-term block encoding with the numpy codec."""
+def docmap_file_name(bucket: int) -> str:
+    """The one docmap file of ``bucket`` inside its group directory."""
+    return f"bucket-{bucket:05d}.parquet"
+
+
+def _write_bucket_docmap(docmap_dir: str, bucket: int, urls: np.ndarray,
+                         doc_ids: np.ndarray) -> None:
+    """Write one bucket's ``(bucket, url, doc_id)`` rows (url order ==
+    doc_id order) as ``docmap_dir/bucket-NNNNN.parquet``. The name
+    depends only on the bucket and the bytes only on its rows, and the
+    file appears by rename from a hidden temp name: a retried or
+    speculative task rewrites the same bytes, and no reader ever lists a
+    partial file."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pa.table({
+        "bucket": pa.array(np.full(len(urls), bucket, dtype=np.int32)),
+        "url": pa.array(urls, pa.string()),
+        "doc_id": pa.array(doc_ids.astype(np.int64)),
+    })
+    name = docmap_file_name(bucket)
+    tmp = os.path.join(docmap_dir, f".{name}.{uuid.uuid4().hex}")
+    # Dictionary-encode only the constant bucket column (url and doc_id
+    # are unique) and skip the Arrow schema footer: ~1/3 smaller files.
+    pq.write_table(
+        tbl, tmp, compression="zstd", use_dictionary=["bucket"],
+        store_schema=False,
+        row_group_size=max(
+            1, DOCMAP_ROW_GROUP_BYTES * tbl.num_rows // max(tbl.nbytes, 1)
+        ),
+    )
+    os.replace(tmp, os.path.join(docmap_dir, name))
+
+
+def _build_bucket_segment(pdf: pd.DataFrame, docmap_dir: str) -> pd.DataFrame:
+    """One bucket → its docmap file and its encoded posting blocks.
+
+    docid = bucket<<40 | rank(url within bucket) is assigned here, once:
+    the bucket's docmap rows are written (``_write_bucket_docmap``)
+    before any tokenizing, so a bucket whose docs have no tokens keeps
+    its docs. Postings are vectorized: one sort over all (term, docid)
+    token pairs of the bucket, run-length tf counting, per-term block
+    encoding with the numpy codec."""
     bucket = int(pdf["bucket"].iloc[0])
     pdf = pdf.sort_values("url", kind="mergesort").reset_index(drop=True)
     base = np.uint64(bucket) << np.uint64(DOC_BUCKET_SHIFT)
     doc_ids = base + np.arange(len(pdf), dtype=np.uint64)
+    _write_bucket_docmap(docmap_dir, bucket, pdf["url"].to_numpy(), doc_ids)
 
     tok_lists = [tokenize(t or "") for t in pdf["text"]]
     dls = np.array([len(t) for t in tok_lists], dtype=np.uint64)
@@ -279,37 +319,20 @@ def _build_bucket_segment(pdf: pd.DataFrame) -> pd.DataFrame:
     return out[[f.name for f in POSTINGS_SCHEMA]]
 
 
-def build_segments(df: DataFrame) -> DataFrame:
-    """Per-bucket level-0 segment build. Input: url, bucket, text."""
-    return df.groupBy("bucket").applyInPandas(_build_bucket_segment, POSTINGS_SCHEMA)
+def build_segments(df: DataFrame, docmap_dir: str) -> DataFrame:
+    """Per-bucket level-0 segment build. Input: url, bucket, text. The
+    returned plan's one action also writes each bucket's docmap file
+    into ``docmap_dir``, which must exist and should be empty."""
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _build_bucket_segment(pdf, docmap_dir)
+
+    return df.groupBy("bucket").applyInPandas(kernel, POSTINGS_SCHEMA)
 
 
 # --------------------------------------------------------------------------
 # Ledger (checkpoint/resume — B10)
 # --------------------------------------------------------------------------
-
-_LEDGER_ARROW = None
-
-
-def _ledger_arrow_schema():
-    global _LEDGER_ARROW
-    if _LEDGER_ARROW is None:
-        import pyarrow as pa
-
-        _LEDGER_ARROW = pa.schema(
-            [
-                ("build_id", pa.string()),
-                ("partition_id", pa.int32()),
-                ("stage", pa.string()),
-                ("status", pa.string()),
-                ("segment_path", pa.string()),
-                ("docs", pa.int64()),
-                ("bytes", pa.int64()),
-                ("input_snapshot", pa.string()),
-            ]
-        )
-    return _LEDGER_ARROW
-
 
 def _ledger_append(spark: SparkSession, layout: IndexLayout, rows: list[dict]):
     """Append-only checkpoint commit. The ledger is tiny driver-side
@@ -321,7 +344,12 @@ def _ledger_append(spark: SparkSession, layout: IndexLayout, rows: list[dict]):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    schema = _ledger_arrow_schema()
+    schema = pa.schema([
+        ("build_id", pa.string()), ("partition_id", pa.int32()),
+        ("stage", pa.string()), ("status", pa.string()),
+        ("segment_path", pa.string()), ("docs", pa.int64()),
+        ("bytes", pa.int64()), ("input_snapshot", pa.string()),
+    ])
     table = pa.Table.from_pylist(rows, schema=schema)
     tmp = os.path.join(layout.ledger, f".tmp-{uuid.uuid4().hex}")
     dst = os.path.join(layout.ledger, f"commit-{uuid.uuid4().hex}.parquet")
@@ -370,9 +398,6 @@ def committed_groups(
 class SimulatedFailure(RuntimeError):
     """Raised by build_index(fail_after_groups=k) — the resume-test kill
     switch (SURVEY.md §5.4)."""
-
-
-from contextlib import contextmanager
 
 
 @contextmanager
@@ -456,7 +481,7 @@ def _balanced_shuffle_partitions(key_groups: list[list[int]],
     bins than keys). Spark's key→partition map is pmod(Murmur3(key), n),
     known driver-side, so scan n ∈ [default_n, 3·default_n] and take the
     smallest n minimizing the worst per-group max-load (each group's
-    segment/docmap jobs see only that group's buckets). Beyond 3× the
+    segment job sees only that group's buckets). Beyond 3× the
     empty-task scheduling overhead outweighs the remaining load-2 tail.
 
     ``key_type`` is the Spark type of the grouping column. The planner
@@ -505,19 +530,15 @@ last_build_timings: dict = {}
 # docs — "instrument once, then cut the top item").
 last_build_detail: dict = {}
 
-import contextlib as _contextlib
-import time as _time_mod
 
-
-@_contextlib.contextmanager
+@contextmanager
 def _detail(key: str):
-    t0 = _time_mod.perf_counter()
+    t0 = time.perf_counter()
     try:
         yield
     finally:
         last_build_detail[key] = round(
-            last_build_detail.get(key, 0.0)
-            + (_time_mod.perf_counter() - t0), 3,
+            last_build_detail.get(key, 0.0) + (time.perf_counter() - t0), 3,
         )
 
 
@@ -1060,15 +1081,13 @@ def build_index(
     dm_dir = layout.artifact("docmap", tag)
     merge_parallelism = merge_parallelism or spark.sparkContext.defaultParallelism
 
-    import time as _time
-
     last_build_timings.clear()
     last_build_detail.clear()
-    _t0 = _time.perf_counter()
+    _t0 = time.perf_counter()
 
     def _mark(stage: str):
         nonlocal _t0
-        now = _time.perf_counter()
+        now = time.perf_counter()
         last_build_timings[stage] = round(now - _t0, 3)
         _t0 = now
 
@@ -1084,27 +1103,7 @@ def build_index(
             and os.path.isdir(shuffled_dir)):
         if pages is None:
             pages = read_web_pages(spark, source)
-        if source_filter:
-            # Catalyst pushes this predicate into the Parquet/Iceberg
-            # scan (plan-asserted in tests/test_plans.py).
-            pages = pages.filter(F.expr(source_filter))
-        # The corpus ``text`` column never survives the wide pass (text
-        # is re-derived from html via the byte-identical extractor), but the dedup aggregate's max_by struct would
-        # otherwise carry it through the one wide exchange — drop it
-        # BEFORE the aggregate so the shuffle ships html only (guide
-        # §2.3 "project before the exchange"; ~45% fewer dedup-exchange
-        # bytes on the bench corpus, where text ≈ html payload).
-        pages = pages.drop("text")
-        # Extraction inside the wide pass: the Arrow UDF runs on the
-        # post-dedup stage tasks and staging stores text — the html is
-        # never written anywhere.
-        shuffled = (
-            dedup_last_write_wins(pages)
-            .withColumn("bucket", bucket_expr(F.col("url"), n_buckets))
-            .withColumn("grp", (F.col("bucket") % n_groups))
-            .withColumn("text", extract_text_udf(F.col("html")))
-            .select("url", "bucket", "grp", "text", "lang")
-        )
+        shuffled = staged_corpus(pages, n_buckets, n_groups, source_filter)
         with _scoped_conf(spark, _CORPUS_SCAN_CONF), _detail("shuffle_write"):
             shuffled.write.mode("overwrite").partitionBy("grp").parquet(
                 shuffled_dir
@@ -1117,23 +1116,15 @@ def build_index(
         with _detail("shuffle_counts"):
             import pyarrow.parquet as _pq
 
-            grp_counts = {}
-            for entry in os.listdir(shuffled_dir):
-                if not entry.startswith("grp="):
-                    continue
-                g = int(entry.split("=", 1)[1])
-                n = 0
-                for broot, _, bfiles in os.walk(
-                    os.path.join(shuffled_dir, entry)
-                ):
-                    for fn in bfiles:
-                        if fn.endswith(".parquet") and not fn.startswith(
-                            (".", "_")
-                        ):
-                            n += _pq.ParquetFile(
-                                os.path.join(broot, fn)
-                            ).metadata.num_rows
-                grp_counts[g] = n
+            from .sidecar import _list_parquet_files
+
+            grp_counts = {
+                int(e.split("=", 1)[1]): sum(
+                    _pq.ParquetFile(f).metadata.num_rows
+                    for f in _list_parquet_files(os.path.join(shuffled_dir, e))
+                )
+                for e in os.listdir(shuffled_dir) if e.startswith("grp=")
+            }
         with _detail("shuffle_ledger"):
             _ledger_append(
                 spark,
@@ -1169,39 +1160,28 @@ def build_index(
 
     _mark("shuffle")
 
-    # ---- Stage "segment": per-group docmap + level-0 segment build,
-    # idempotent group-scoped writes, ledger commit per group. A
-    # committed group counts only while its outputs exist (a compaction
-    # replaces this build's level-0 and docmap, and the publish deletes
-    # the replaced ones).
+    # ---- Stage "segment": ONE Spark job per group — the per-bucket
+    # kernel writes each bucket's docmap file and returns its level-0
+    # blocks — then a ledger commit per group. A committed group counts
+    # only while its outputs exist (a compaction replaces this build's
+    # level-0 and docmap, and the publish deletes the replaced ones).
     done = {
         g for g in committed_groups(spark, layout, "segment", resume_key)
         if all(os.path.isdir(os.path.join(d, f"group={g}"))
                for d in (layout.postings_l0, dm_dir))
     }
 
-    def _group_input(g: int) -> DataFrame:
-        return (
-            spark.read.parquet(shuffled_dir).filter(F.col("grp") == g)
-            .select("url", "bucket", "text", "lang")
-        )
-
     def _run_group(g: int) -> None:
-        part = _group_input(g)
-        # docmap group files are written straight into the directory the
-        # publish names (clustered by doc_id via the window's output
-        # order) — publish is zero-copy, which matters when the docmap
-        # has 10^12 rows.
+        # The docmap files go straight into the directory the publish
+        # names — publish is zero-copy, which matters when the docmap has
+        # 10^12 rows. The group's directory is emptied first: a crashed
+        # attempt's temp files and strays never reach a publish.
         dm_path = os.path.join(dm_dir, f"group={g}")
-        with _detail("segment_docmap"):
-            (
-                docmap_for(part).write.mode("overwrite")
-                .option("parquet.block.size", str(DOCMAP_ROW_GROUP_BYTES))
-                .parquet(dm_path)
-            )
+        shutil.rmtree(dm_path, ignore_errors=True)
+        os.makedirs(dm_path)
         seg_path = os.path.join(layout.postings_l0, f"group={g}")
-        with _detail("segment_postings"):
-            build_segments(part.select("url", "bucket", "text")).write.mode(
+        with _detail("segment_write"):
+            group_segments(spark, shuffled_dir, g, dm_path).write.mode(
                 "overwrite"
             ).parquet(seg_path)
         docs_g = int(grp_counts.get(g, 0))
@@ -1250,7 +1230,7 @@ def build_index(
                     for g in range(n_groups)
                 ],
                 int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-                _group_input(pending[0]).schema["bucket"].dataType,
+                spark.read.parquet(shuffled_dir).schema["bucket"].dataType,
             )
         )
     with _scoped_conf(spark, seg_conf):

@@ -78,7 +78,8 @@ class IndexLayout:
     index_dir/
       _manifest.json                   the one mutable file: names all below
       postings-<id>/segment=N/         merged postings         (paths.postings)
-      docmap-<id>/group=G/             docid↔url map           (paths.docmap)
+      docmap-<id>/group=G/             docid↔url map           (paths.docmap;
+                                       a bucket-NNNNN.parquet per bucket)
       dictionary-<id>/                 term → df/cf            (paths.dictionary)
       rg_stats-<id>/kind=K/segment=N/  serving sidecar = the
                                        publish's file lists     (paths.rg_stats)

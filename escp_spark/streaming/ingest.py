@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import logging
 import os
+import shutil
 import uuid
 
 import numpy as np
@@ -42,7 +43,6 @@ from ..build import (
     bucket_expr,
     build_segments,
     dedup_last_write_wins,
-    docmap_for,
     extract_text_udf,
     merge_segments,
 )
@@ -340,16 +340,14 @@ def _ingest_epoch(batch_df: DataFrame, epoch: int, layout: IndexLayout,
             spark, layout, prepared, epoch, n_buckets
         )
 
-    from ..build import DOCMAP_ROW_GROUP_BYTES
-
+    # One Spark job per epoch, as in build_index: the per-bucket kernel
+    # writes each bucket's docmap file into the emptied epoch group and
+    # returns its level-0 blocks, so ``prepared`` runs once.
     dm_path = os.path.join(layout.docmap, f"group=e{epoch}")
-    (
-        docmap_for(prepared).write.mode("overwrite")
-        .option("parquet.block.size", str(DOCMAP_ROW_GROUP_BYTES))
-        .parquet(dm_path)
-    )
+    shutil.rmtree(dm_path, ignore_errors=True)
+    os.makedirs(dm_path)
     seg_path = os.path.join(layout.postings_l0, f"group=e{epoch}")
-    build_segments(prepared).write.mode("overwrite").parquet(seg_path)
+    build_segments(prepared, dm_path).write.mode("overwrite").parquet(seg_path)
     # The epoch's doc count from the docmap footers (driver-side
     # metadata, exact), not a listing job plus a two-job Spark count.
     import pyarrow.dataset as pads

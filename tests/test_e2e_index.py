@@ -165,6 +165,148 @@ def test_docids_unique_and_bucketed(spark, built_index):
     assert bad == 0
 
 
+def _md5_bucket(url: str, n_buckets: int) -> int:
+    import hashlib
+
+    return int(hashlib.md5(url.encode()).hexdigest()[:8], 16) % n_buckets
+
+
+def _docmap_bucket_files(docmap_dir: str) -> dict:
+    """{bucket: (group dir name, table)} of a docmap the segment kernel
+    wrote: each group directory holds only ``bucket-NNNNN.parquet``
+    files, none hidden (no temp file left behind), none without rows,
+    and no bucket in two files."""
+    import os
+    import re
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for group in sorted(os.listdir(docmap_dir)):
+        for name in sorted(os.listdir(os.path.join(docmap_dir, group))):
+            m = re.fullmatch(r"bucket-(\d{5,})\.parquet", name)
+            assert m, f"unexpected file {group}/{name}"
+            tbl = pq.read_table(os.path.join(docmap_dir, group, name))
+            assert tbl.num_rows > 0, f"zero-row docmap file {group}/{name}"
+            b = int(m.group(1))
+            assert b not in out, f"bucket {b} written twice"
+            out[b] = (group, tbl)
+    return out
+
+
+def _expected_docmap(bucket: int, urls) -> dict:
+    """One bucket's rows by an independent sort: doc_id = bucket<<40 |
+    rank of the url within its bucket."""
+    urls = sorted(urls)
+    return {"bucket": [bucket] * len(urls), "url": urls,
+            "doc_id": [(bucket << 40) | r for r in range(len(urls))]}
+
+
+def test_fused_docmap_built_index(built_index, oracle_docs):
+    """The per-bucket segment kernel writes the docmap: one file per
+    non-empty bucket in its checkpoint group's directory, holding
+    exactly that bucket's urls with their rank doc ids."""
+    from collections import defaultdict
+
+    _, manifest = built_index
+    n_buckets, n_groups = manifest["n_buckets"], 4  # the fixture's build
+    by_bucket = defaultdict(list)
+    for url in oracle_docs:
+        by_bucket[_md5_bucket(url, n_buckets)].append(url)
+    files = _docmap_bucket_files(manifest["paths"]["docmap"])
+    assert sorted(files) == sorted(by_bucket)
+    for b, (group, tbl) in files.items():
+        assert group == f"group={b % n_groups}"
+        assert tbl.to_pydict() == _expected_docmap(b, by_bucket[b]), b
+
+
+def test_fused_docmap_streamed_index(spark, stream_source, tmp_path):
+    """Streamed epochs write their docmap through the same kernel: per
+    epoch group, one file per effective bucket (epoch·n_buckets + md5
+    bucket) with rank doc ids, and every source url exactly once."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from escp_spark.streaming import (
+        finalize_streamed_index, stream_ingest_once,
+    )
+
+    schema = T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+    ])
+    idx, n_buckets = str(tmp_path / "stream_idx"), 4
+    assert stream_ingest_once(spark, stream_source, idx, schema,
+                              n_buckets=n_buckets) == 3
+    manifest = finalize_streamed_index(spark, idx, max_segments=3)
+    files = _docmap_bucket_files(manifest["paths"]["docmap"])
+    seen = []
+    for b, (group, tbl) in files.items():
+        assert group == f"group=e{b // n_buckets}"
+        urls = tbl.column("url").to_pylist()
+        assert {_md5_bucket(u, n_buckets) for u in urls} == {b % n_buckets}
+        assert tbl.to_pydict() == _expected_docmap(b, urls), b
+        seen += urls
+    assert sorted(seen) == sorted(
+        pq.read_table(stream_source).column("url").to_pylist())
+    assert {g for g, _ in files.values()} == {"group=e0", "group=e1",
+                                              "group=e2"}
+
+
+def test_segment_kernel_docmap_without_tokens_and_rerun(tmp_path):
+    """A bucket whose docs have no tokens keeps its docmap rows (the
+    kernel writes them before its zero-token return), and a rerun of
+    the kernel on the same bucket — rows in another order, as a retried
+    task may see them — leaves a byte-identical file and no temp file."""
+    import os
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from escp_spark.build import _build_bucket_segment, docmap_file_name
+
+    pdf = pd.DataFrame({"url": ["u/b", "u/a", "u/c"], "bucket": [3, 3, 3],
+                        "text": ["", None, "!!! ---"]})
+    assert len(_build_bucket_segment(pdf, str(tmp_path))) == 0
+    path = tmp_path / docmap_file_name(3)
+    first = path.read_bytes()
+    assert pq.read_table(path).to_pydict() == _expected_docmap(
+        3, ["u/a", "u/b", "u/c"])
+    _build_bucket_segment(pdf.iloc[::-1].reset_index(drop=True),
+                          str(tmp_path))
+    assert path.read_bytes() == first
+    assert os.listdir(tmp_path) == [docmap_file_name(3)]
+
+
+# Spark jobs of one build_index over ``tiny_corpus`` (n_groups=4), as
+# measured: the wide pass, then per checkpoint group ONE fused segment
+# job (two Spark jobs under adaptive execution: its bucket shuffle's map
+# stage and the write), then the merge. The separate docmap job per
+# group took 29 jobs to this 21.
+_BUILD_JOBS = 21
+
+
+def test_build_spark_jobs(spark, tiny_corpus, tmp_path):
+    """build_index runs one segment job per checkpoint group: its job
+    count stays at the measured value."""
+    from escp_spark.build import build_index
+
+    sc = spark.sparkContext
+    group = "build_jobs"
+    try:
+        sc.setJobGroup(group, group)
+        build_index(spark, tiny_corpus, str(tmp_path / "idx"), n_buckets=8,
+                    max_segments=3, n_groups=4)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= _BUILD_JOBS, jobs
+
+
 def test_spark_batch_path_small_k_bounded_topk(spark, built_index,
                                               batch_sides):
     """The batch path's tie-complete top-k cut is rank-safe on both sides

@@ -98,17 +98,23 @@ def test_batch_path_result_is_local_no_docmap_scan(spark, built_index,
         assert len(reader._dm_cache._d) <= len(rows), side
 
 
-def test_no_per_row_python_anywhere(spark, built_index, tiny_corpus):
+def test_no_per_row_python_anywhere(spark, built_index, tiny_corpus,
+                                    tmp_path):
     """input_hint bans per-row Python: the build plan may contain Arrow
     operators (ArrowEvalPython / FlatMapGroupsInPandas) but never
-    BatchEvalPython."""
-    from escp_spark.build import build_segments, prepared_corpus
+    BatchEvalPython — asserted on the two plans ``build_index`` runs:
+    its one wide pass and a checkpoint group's fused segment job."""
+    import glob
+    import os
+
+    from escp_spark.build import group_segments, staged_corpus
     from escp_spark.sources.tables import read_web_pages
 
     pages = read_web_pages(spark, tiny_corpus)
-    corpus = prepared_corpus(pages, 8)
-    assert_no_python_in_plan(corpus)
-    assert_no_python_in_plan(build_segments(corpus.select("url", "bucket", "text")))
+    assert_no_python_in_plan(staged_corpus(pages, 8, 4))
+    layout = IndexLayout(built_index[0], built_index[1]["build_id"])
+    (staged,) = glob.glob(os.path.join(layout.staging, "shuffled-*"))
+    assert_no_python_in_plan(group_segments(spark, staged, 0, str(tmp_path)))
 
 
 def test_relational_queries_no_python(spark):
@@ -148,11 +154,12 @@ def test_pair_operators_never_cross_join(spark):
 def test_build_source_filter_pushed_down(spark, tiny_corpus):
     """--filter must reach the Parquet scan of the build's one wide pass
     (predicate BELOW the dedup aggregate → PushedFilters)."""
-    from escp_spark.build import prepared_corpus
+    from escp_spark.build import staged_corpus
     from escp_spark.sources.tables import read_web_pages
 
-    pages = read_web_pages(spark, tiny_corpus).filter(F.expr("lang = 'en'"))
-    assert_pushed_filters(prepared_corpus(pages, 8), "EqualTo(lang,en)")
+    pages = read_web_pages(spark, tiny_corpus)
+    assert_pushed_filters(staged_corpus(pages, 8, 4, "lang = 'en'"),
+                          "EqualTo(lang,en)")
 
 
 def test_distributed_batch_plan_one_exchange(spark, built_index, tmp_path,

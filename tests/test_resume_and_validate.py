@@ -2,6 +2,8 @@
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -45,9 +47,10 @@ def _index_content(spark, index_dir, build_id="build0"):
 def test_resume_skips_committed_and_is_identical(spark, tiny_corpus, tmp_path):
     """Kill right after the shuffle commit (0 groups) and after 2 of 4
     groups; rerun; the committed shuffle and committed groups must NOT
-    re-execute (file mtimes unchanged) and the final index must be
-    content-identical to an uninterrupted build (esscroll.go:129 /
-    293-294 realized)."""
+    re-execute (file mtimes unchanged), an uncommitted group's docmap
+    directory is cleared of a crashed attempt's files, and the final
+    index must be content-identical to an uninterrupted build
+    (esscroll.go:129 / 293-294 realized)."""
     d_clean = str(tmp_path / "idx_clean")
     build_index(spark, tiny_corpus, d_clean, n_buckets=8, max_segments=3, n_groups=4)
     clean = _index_content(spark, d_clean)
@@ -72,11 +75,26 @@ def test_resume_skips_committed_and_is_identical(spark, tiny_corpus, tmp_path):
         assert bool(before) == bool(kill_after), (
             f"kill after {kill_after}: unexpected level-0 segment files"
         )
+        # What a crashed task attempt of the uncommitted group 3 leaves
+        # in its docmap directory: a temp file and a stray data file.
+        tag = shuffled_dir.rsplit("shuffled-", 1)[1]
+        stray_dir = os.path.join(d_interrupted, f"docmap-{tag}", "group=3")
+        os.makedirs(stray_dir, exist_ok=True)
+        strays = [os.path.join(stray_dir, n) for n in
+                  (".bucket-00003.parquet.0f0f", "bucket-00011.parquet")]
+        for p in strays:
+            pq.write_table(pa.table({
+                "bucket": pa.array([3], pa.int32()), "url": ["stray"],
+                "doc_id": pa.array([3 << 40], pa.int64()),
+            }), p)
 
         # Resume: remaining groups run, committed work is skipped untouched.
         build_index(
             spark, tiny_corpus, d_interrupted,
             n_buckets=8, max_segments=3, n_groups=4,
+        )
+        assert not any(map(os.path.exists, strays)), (
+            f"kill after {kill_after}: the resumed group kept a stray file"
         )
         assert _file_mtimes(shuffled_dir) == before_shuffle, (
             f"kill after {kill_after}: resume re-ran the wide shuffle pass"
