@@ -136,13 +136,14 @@ class _IntervalIndex:
     stats (term strings or doc_id ints).
 
     Candidates containing a point x are located in O(log n + overlap)
-    with two searchsorted calls — never a Python loop over every row
-    group (VERDICT r03 wrong-#3 / ADVICE r03 meta_for_terms): ``lo`` is
-    sorted, and the running max of ``hi`` over that order is monotone,
-    so {i : lo_i <= x} is a prefix and {i in prefix : hi_i >= x} lives
-    in the suffix of the prefix where cummax(hi) >= x — a slice whose
-    length is the local interval-overlap degree (≈1 for the engine's
-    clustered layouts), scanned vectorized."""
+    — never a Python loop over every row group (VERDICT r03 wrong-#3 /
+    ADVICE r03 meta_for_terms): ``lo`` is sorted, and the running max of
+    ``hi`` over that order is monotone, so {i : lo_i <= x} is a prefix
+    and {i in prefix : hi_i >= x} lives in the suffix of the prefix
+    where cummax(hi) >= x — a slice whose length is the local
+    interval-overlap degree (≈1 for the engine's clustered layouts). A
+    batch of points takes two searchsorted calls and one vectorized
+    scan of all their slices, with no Python loop over the points."""
 
     def __init__(self, los: np.ndarray, his: np.ndarray, rows: np.ndarray):
         order = np.argsort(los, kind="stable")
@@ -151,14 +152,13 @@ class _IntervalIndex:
         self.cummax_hi = np.maximum.accumulate(self.hi) if len(order) else his
         self.rows = rows[order]  # caller payload (e.g. index into rg list)
 
-    def stab(self, x) -> np.ndarray:
-        """Row payloads of every interval with lo <= x <= hi."""
-        p = int(np.searchsorted(self.lo, x, side="right"))
-        if p == 0:
-            return self.rows[:0]
-        j0 = int(np.searchsorted(self.cummax_hi[:p], x, side="left"))
-        sel = j0 + np.flatnonzero(self.hi[j0:p] >= x)
-        return self.rows[sel]
+    def stab(self, xs: np.ndarray) -> np.ndarray:
+        """Row payloads of every interval with lo <= x <= hi for some x
+        in ``xs`` (a payload repeats once per point that stabs it)."""
+        p = np.searchsorted(self.lo, xs, side="right")
+        j0 = np.minimum(np.searchsorted(self.cummax_hi, xs, side="left"), p)
+        i = _ranges(j0, p - j0)
+        return self.rows[i[self.hi[i] >= np.repeat(xs, p - j0)]]
 
 # Pruning telemetry of the most recent _prune_and_score call (the M1/M2
 # metering analog for the query side; tests assert pruning actually fires).
@@ -410,7 +410,7 @@ class IndexReader:
             self._ensure_current()
             idx, always, rgs = self._rg_stats()
             cand_rows = np.unique(
-                np.concatenate([always] + [idx.stab(t) for t in tsorted])
+                np.concatenate([always, idx.stab(tsorted)])
             )
             for fi, rgi in rgs[cand_rows].tolist():
                 rg_terms, cols, pos = self._meta_arrays(fi, rgi)
@@ -521,7 +521,7 @@ class IndexReader:
         ids = np.unique(np.asarray(doc_ids, dtype=np.int64))
         idx, always, rgs = self._dm_rg_index()
         cand_rows = np.unique(
-            np.concatenate([always] + [idx.stab(int(i)) for i in ids])
+            np.concatenate([always, idx.stab(ids)])
         )
         out: dict[int, str] = {}
         for fi, rgi in rgs[cand_rows].tolist():

@@ -61,12 +61,17 @@ def test_interval_index_matches_bruteforce(dtype):
         probes = [f"t{v:05d}" for v in rng.integers(-10, 11_000, 50)]
     rows = np.arange(n, dtype=np.int64)
     idx = _IntervalIndex(los, his, rows)
+    want_all = []
     for x in probes:
-        got = sorted(int(r) for r in idx.stab(x))
+        got = sorted(int(r) for r in idx.stab(np.array([x], dtype=los.dtype)))
         want = sorted(
             int(i) for i in range(n) if los[i] <= x <= his[i]
         )
         assert got == want, f"stab({x!r})"
+        want_all += want
+    # A batch of points stabs each interval once per point inside it.
+    assert sorted(int(r) for r in idx.stab(np.array(probes, dtype=los.dtype))) \
+        == sorted(want_all)
 
 
 # ---------------------------------------------------------------------------
