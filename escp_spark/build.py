@@ -95,6 +95,9 @@ MERGE_BLOCK_SHIFT = 20  # merged block_id = bucket << 20 | level0 block_id
 # docid order at scale.
 POSTINGS_ROW_GROUP_BYTES = 8 << 20
 
+# The merge's hot-term cut in level-0 blocks (rationale in merge_segments).
+_HOT_TERM_BLOCKS = 4096
+
 # Docmap is a point-lookup table at serve time (doc_id → url): small row
 # groups keep the read amplification of a ≤k-id lookup bounded.
 DOCMAP_ROW_GROUP_BYTES = 2 << 20
@@ -519,15 +522,12 @@ def _balanced_shuffle_partitions(key_groups: list[list[int]],
 
 
 # Wall-clock per stage of the most recent build_index call (M1/M2-style
-# telemetry; bench_scaling uses it to attribute scaling loss to a stage).
+# telemetry; bench.py and perfbench read it).
 last_build_timings: dict = {}
 
 # Finer-grained driver-wall attribution of the most recent build — one
-# entry per Spark action / driver-side step inside each stage. The
-# scaling harness records this at BOTH parallelism levels; diffing the
-# two decomposes the parallelism-independent fixed cost f that sets the
-# small-corpus efficiency ceiling (VERDICT r05 next-#2: f ≈ 27 s at 2M
-# docs — "instrument once, then cut the top item").
+# entry per Spark action / driver-side step inside each stage
+# (shuffle_write, segment_write, merge_placement, merge_write, …).
 last_build_detail: dict = {}
 
 
@@ -828,8 +828,6 @@ def merge_segments(
     n_buckets: int,
     max_segments: int,
     merge_parallelism: int,
-    hot_term_blocks: int | None = None,
-    row_group_bytes: int = POSTINGS_ROW_GROUP_BYTES,
 ) -> dict:
     """Merge level-0 (per-bucket) segments (``layout.postings_l0``) down
     to ≤ max_segments, into new postings and dictionary directories.
@@ -868,15 +866,14 @@ def merge_segments(
     footer range is NARROW, so per-query metadata reads touch only the
     query terms' row groups. Placement is driven by the B8
     df-stats pass (block counts per term from level-0 metadata), NOT by
-    repartitionByRange's sampling job. Terms above ``hot_term_blocks``
-    (default 4096 blocks — an absolute work-unit bound, see the inline
-    rationale; top-4P by block count so the list stays driver-sized)
-    are classified hot and spread across the partition space by
-    source-bucket position, so the hottest term's postings land in
-    ~merge_parallelism files instead of one straggler task/file —
-    estypes.go:104-116's skew heuristic, wired into placement. The
-    right choice at 10^12-doc scale where file-count per segment
-    matters; overkill at bench scale.
+    repartitionByRange's sampling job. Terms above ``_HOT_TERM_BLOCKS``
+    (an absolute work-unit bound, see the inline rationale; top-4P by
+    block count so the list stays driver-sized) are classified hot and
+    spread across the partition space by source-bucket position, so the
+    hottest term's postings land in ~merge_parallelism files instead of
+    one straggler task/file — estypes.go:104-116's skew heuristic, wired
+    into placement. The right choice at 10^12-doc scale where file-count
+    per segment matters; overkill at bench scale.
     """
     seg_shift = _seg_shift(n_buckets, max_segments)
     l0 = spark.read.parquet(layout.postings_l0)
@@ -921,7 +918,6 @@ def merge_segments(
     # driver-sized via top-(4P): residual terms beyond it are at
     # most as big as the (4P+1)-th hottest — under any Zipf-ish law
     # the fat head is covered.
-    hot_cut = hot_term_blocks or 4096
     n_top = 4 * max(merge_parallelism, 1)
     # Cold terms get CONTIGUOUS, block-balanced term ranges (not a
     # hash): a query term then lives in ONE file per segment and the
@@ -950,7 +946,7 @@ def merge_segments(
                  "cf": [r.cf for r in rows]}
             )
             hot_pdf = (
-                spdf[spdf["nblocks"] > hot_cut]
+                spdf[spdf["nblocks"] > _HOT_TERM_BLOCKS]
                 .sort_values(["nblocks", "term"], ascending=[False, True])
                 .head(n_top)
             )
@@ -967,7 +963,7 @@ def merge_segments(
         with _detail("merge_placement"):
             hot_terms = [
                 r.term
-                for r in stats.filter(F.col("nblocks") > hot_cut)
+                for r in stats.filter(F.col("nblocks") > _HOT_TERM_BLOCKS)
                 .orderBy(F.col("nblocks").desc(), "term")
                 .limit(n_top)
                 .collect()
@@ -1002,13 +998,13 @@ def merge_segments(
     with _detail("merge_write"):
         (
             merged.write
-            .option("parquet.block.size", str(row_group_bytes))
+            .option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES))
             # parquet-mr only checks the accumulated size every N rows
             # (default 100) — scale the interval with the target so small
             # row groups (tests, fine-grained indexes) are actually honored.
             .option(
                 "parquet.page.size.row.check.min",
-                str(max(4, min(100, row_group_bytes // (64 * 1024)))),
+                str(max(4, min(100, POSTINGS_ROW_GROUP_BYTES // (64 * 1024)))),
             )
             .partitionBy("segment")
             .parquet(postings)
@@ -1033,11 +1029,9 @@ def build_index(
     max_segments: int = 5,
     n_groups: int = 4,
     build_id: str = "build0",
-    merge_parallelism: int | None = None,
     fail_after_groups: int | None = None,
     pages: DataFrame | None = None,
     source_filter: str | None = None,
-    postings_row_group_bytes: int = POSTINGS_ROW_GROUP_BYTES,
 ) -> dict:
     """Run (or resume) a full index build. Returns the published manifest.
 
@@ -1079,7 +1073,6 @@ def build_index(
     shuffled_dir = os.path.join(layout.staging, f"shuffled-{tag}")
     layout.postings_l0 = os.path.join(layout.staging, f"postings_l0-{tag}")
     dm_dir = layout.artifact("docmap", tag)
-    merge_parallelism = merge_parallelism or spark.sparkContext.defaultParallelism
 
     last_build_timings.clear()
     last_build_detail.clear()
@@ -1245,8 +1238,8 @@ def build_index(
     # dictionary from its own level-0 stats pass), stats, atomic manifest
     # publish (D3/B11).
     merged = merge_segments(
-        spark, layout, n_buckets, max_segments, merge_parallelism,
-        row_group_bytes=postings_row_group_bytes,
+        spark, layout, n_buckets, max_segments,
+        spark.sparkContext.defaultParallelism,
     )
     prune_shift = merged["prune_shift"]
     _mark("merge")

@@ -183,8 +183,8 @@ def scale_queries(n_queries: int, seed: int = SEED) -> list[dict]:
     50-query reference set with fresh qids, the terms here are distinct
     draws, so EVERY stage of the batch path — posting decode, the
     (posting x query) expansion, and the score aggregation — grows with
-    the batch, the way a real multi-tenant query mix does. Used by
-    bench_scaling.py to measure marginal per-query scaling with the
+    the batch, the way a real multi-tenant query mix does. bench.py's
+    mixed batch uses it to measure marginal per-query cost with the
     fixed per-batch driver cost amortized away.
     """
     vocab = _vocab()

@@ -53,7 +53,6 @@ from collections import Counter, defaultdict
 from contextlib import contextmanager
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
@@ -201,10 +200,9 @@ class IndexReader:
     every other postings directory."""
 
     _DICT_CACHE_MAX_ROWS = 20_000_000  # term dict kept in RAM below this
+    _DM_CACHE_BYTES = 128 << 20  # docmap row groups (urls) kept per reader
 
-    def __init__(self, index_dir: str,
-                 meta_cache_bytes: int = 64 << 20,
-                 dm_cache_bytes: int = 128 << 20):
+    def __init__(self, index_dir: str, meta_cache_bytes: int = 64 << 20):
         self._index_dir = index_dir
         self.payload_bytes_fetched = 0
         self.payload_rowgroups_fetched = 0
@@ -216,7 +214,7 @@ class IndexReader:
         self._payload_cache = _decoded_payloads
         self._meta_cache = _ByteLRU(meta_cache_bytes)
         self._dm_pf: dict[str, object] = {}
-        self._dm_cache = _ByteLRU(dm_cache_bytes)
+        self._dm_cache = _ByteLRU(self._DM_CACHE_BYTES)
         self._load()
 
     def _load(self):
@@ -334,36 +332,45 @@ class IndexReader:
         self._rg_stats()
         return self._post_files
 
-    def _rg_stats(self):
-        """Interval index over every postings row group's [term-min,
-        term-max] stats (the serving path's term-dictionary seek
-        structure), built once per publish from the publish's SIDECAR,
-        which also gives the file list — no data file is opened or
-        listed. Returns (index, always_rows, rgs): ``always_rows`` are
-        row groups without term stats (always candidates), rgs[i] = (fi,
-        rgi) as an (n, 2) array. Also fills ``_payload_sizes[fi, rg]``
-        for the bytes-fetched telemetry."""
-        if self._rg_index is None:
-            from .sidecar import load_rg_sidecar
+    def _sidecar_index(self, kind: str, lo: str, hi: str, dtype) -> tuple:
+        """Interval index over one kind's row-group [lo, hi] stats, built
+        from the publish's SIDECAR, which also gives the file list — no
+        data file is opened or listed. Returns (files, sidecar rows
+        sorted by (fi, rg), (index, always_rows, rgs)): ``always_rows``
+        are row groups without stats (always candidates), rgs[i] = (fi,
+        rgi) as an (n, 2) array."""
+        from .sidecar import load_rg_sidecar
 
-            files, sc = load_rg_sidecar(
-                self._index_dir, self.manifest["paths"]["rg_stats"],
-                "postings")
-            sc = sc.sort_values(["fi", "rg"], kind="mergesort")
-            fis, rgis, pbytes = (sc[c].to_numpy(dtype=np.int64)
-                                 for c in ("fi", "rg", "payload_bytes"))
-            tmins, tmaxs = (sc[c].to_numpy(dtype=object)
-                            for c in ("term_lo", "term_hi"))
-            has = pd.notna(tmins)
-            stat_rows = np.flatnonzero(has)
-            idx = _IntervalIndex(tmins[stat_rows], tmaxs[stat_rows], stat_rows)
+        files, sc = load_rg_sidecar(
+            self._index_dir, self.manifest["paths"]["rg_stats"], kind)
+        sc = sc.sort_values(["fi", "rg"], kind="mergesort")
+        # Doc ids load as nullable Int64 and stay integral end to end —
+        # no float64 leg (exact past 2^53).
+        has = sc[lo].notna().to_numpy(dtype=bool)
+        stat_rows = np.flatnonzero(has)
+        idx = _IntervalIndex(sc[lo][has].to_numpy(dtype=dtype),
+                             sc[hi][has].to_numpy(dtype=dtype), stat_rows)
+        rgs = np.column_stack([sc[c].to_numpy(dtype=np.int64)
+                               for c in ("fi", "rg")])
+        return files, sc, (idx, np.flatnonzero(~has), rgs)
+
+    def _rg_stats(self):
+        """The postings row groups' [term-min, term-max] interval index
+        (the serving path's term-dictionary seek structure), built once
+        per publish: ``_sidecar_index``'s (index, always_rows, rgs). Also
+        fills ``_payload_sizes[fi, rg]`` for the bytes-fetched
+        telemetry."""
+        if self._rg_index is None:
+            files, sc, rg_index = self._sidecar_index(
+                "postings", "term_lo", "term_hi", object)
+            fis, rgis = rg_index[2].T
             self._payload_sizes = np.zeros(
                 (len(files), rgis.max(initial=-1) + 1), dtype=np.int64
             )
-            self._payload_sizes[fis, rgis] = pbytes
+            self._payload_sizes[fis, rgis] = sc["payload_bytes"].to_numpy(
+                dtype=np.int64)
             self._post_files = files
-            self._rg_index = (idx, np.flatnonzero(~has),
-                              np.column_stack([fis, rgis]))
+            self._rg_index = rg_index
         return self._rg_index
 
     def _meta_arrays(self, fi: int, rgi: int) -> tuple:
@@ -486,32 +493,15 @@ class IndexReader:
         return (*out, block_index)
 
     def _dm_rg_index(self):
-        """Interval index over the docmap row groups' [doc_id min, max]
-        stats, from the publish's sidecar — the serving url lookup then
-        touches only the row groups whose range actually contains a
-        requested id (searchsorted per id, VERDICT r03 wrong-#3), instead
-        of looping over every row group's stats in Python. Docmap files
-        are written doc_id-clustered per bucket, so a top-k's ≤k url
-        lookups touch ≤k row groups. Returns (index, always_rows, rgs)
-        like _rg_stats."""
+        """The docmap row groups' [doc_id min, max] interval index, like
+        _rg_stats — the serving url lookup then touches only the row
+        groups whose range actually contains a requested id, instead of
+        looping over every row group's stats in Python. Docmap files are
+        written doc_id-clustered per bucket, so a top-k's ≤k url lookups
+        touch ≤k row groups."""
         if self._dm_index is None:
-            from .sidecar import load_rg_sidecar
-
-            files, sc = load_rg_sidecar(
-                self._index_dir, self.manifest["paths"]["rg_stats"],
-                "docmap")
-            sc = sc.sort_values(["fi", "rg"], kind="mergesort")
-            fis, rgis = (sc[c].to_numpy(dtype=np.int64) for c in ("fi", "rg"))
-            # Nullable-Int64 sidecar (r07): doc ids stay integral
-            # end-to-end — no float64 leg (exact past 2^53).
-            has = sc["doc_lo"].notna().to_numpy(dtype=bool)
-            los = sc["doc_lo"].fillna(0).to_numpy(dtype=np.int64)
-            his = sc["doc_hi"].fillna(0).to_numpy(dtype=np.int64)
-            stat_rows = np.flatnonzero(has)
-            idx = _IntervalIndex(los[stat_rows], his[stat_rows], stat_rows)
-            self._dm_files = files
-            self._dm_index = (idx, np.flatnonzero(~has),
-                              np.column_stack([fis, rgis]))
+            self._dm_files, _, self._dm_index = self._sidecar_index(
+                "docmap", "doc_lo", "doc_hi", np.int64)
         return self._dm_index
 
     def urls_for(self, doc_ids: np.ndarray) -> dict[int, str]:
@@ -850,7 +840,7 @@ def _batch_reader(index_dir: str) -> "IndexReader":
 
 # Phase telemetry of the last search_topk_spark call (the batch-path
 # analog of build.last_build_timings). "plan" = driver-side planning incl.
-# the pyarrow dictionary df lookup that decides the switch; "score" = the
+# the dictionary df lookup that decides the switch; "score" = the
 # driver-side serving scorer (below the switch, with "cut" = 0) or the
 # one Spark action (above it): scan, shuffle the matched blocks by
 # window, decode, score and cut each window's tie-complete top-k, and
@@ -879,28 +869,6 @@ def _result_df(spark, rows: list[tuple]):
     ))
 
 
-def _maybe_dump_plan(df, name: str) -> None:
-    """Opt-in plan capture (ESCP_DUMP_PLAN_DIR=dir): writes the
-    formatted physical plan of an internal batch-path DataFrame so plan
-    evidence for the non-declared paths can be committed (plans/r07).
-    Zero cost when the env var is unset."""
-    d = os.environ.get("ESCP_DUMP_PLAN_DIR")
-    if not d:
-        return
-    try:
-        spark = df.sparkSession
-        txt = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, f"{name}.txt"), "w") as f:
-            f.write(txt)
-    except Exception:
-        pass
-
-
 def _tie_complete_rows(qid: np.ndarray, score: np.ndarray,
                        k_qids: np.ndarray, k_vals: np.ndarray) -> np.ndarray:
     """Indices of the rows that score at least their query's k-th largest
@@ -923,9 +891,9 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
     """Batch scoring of a query set → local DataFrame (query_id int, rank
     int, doc_url string, score double), rows in query-id order.
 
-    The driver first looks up the batch's term dfs in the dictionary
-    (pyarrow, stats-pruned) and sums them over the distinct matched terms
-    (_BIG_MATCHED_POSTINGS). A batch at or below that switch is scored
+    The driver first looks up the batch's term dfs in the batch reader's
+    dictionary (IndexReader.term_dfs) and sums them over the distinct
+    matched terms (_BIG_MATCHED_POSTINGS). A batch at or below that switch is scored
     on the driver by the serving WAND scorer over the size-1 batch
     reader — no broadcast, no Spark job. A batch above it runs one
     distributed pass sharded by doc bucket window (docid >>
@@ -1025,15 +993,10 @@ def _batch_topk(spark, reader: "IndexReader", queries: list[dict],
     all_terms = sorted({t for q in queries for t in tokenize(q["query_text"])})
     if not all_terms:
         return _result_df(spark, [])
-    # Driver-side pyarrow read, not a Spark job: the dictionary is
-    # term-sorted so the isin filter prunes to the row groups holding
-    # the query terms (the same stats-pruned path IndexReader.term_dfs
-    # serves from) — profiled, the Spark-job version of this lookup was
-    # a ~1.5-2 s fixed stage at every parallelism level.
-    dt = pads.dataset(paths["dictionary"], format="parquet").to_table(
-        columns=["term", "df"], filter=pads.field("term").isin(all_terms)
-    )
-    dfs = dict(zip(dt["term"].to_pylist(), dt["df"].to_pylist()))
+    # The batch reader's dictionary lookup (IndexReader.term_dfs), not a
+    # Spark job: profiled, the Spark-job version of this lookup was a
+    # ~1.5-2 s fixed stage at every parallelism level.
+    dfs = reader.term_dfs(all_terms)
     for q in queries:
         for t, c in Counter(tokenize(q["query_text"])).items():
             if t in dfs:
@@ -1131,7 +1094,6 @@ def _batch_topk(spark, reader: "IndexReader", queries: list[dict],
             .applyInArrow(score_window,
                           "query_id int, doc_id long, score double")
         )
-        _maybe_dump_plan(survivors, "bm25_batch_bigcut")
         last_batch_timings["plan"] = round(_time.perf_counter() - _t0, 3)
         _t0 = _time.perf_counter()
         surv = survivors.toArrow()

@@ -366,13 +366,15 @@ def test_merge_consolidates_tail_blocks(spark, built_index):
     assert bad == 0
 
 
-def test_range_merge_stats_driven_placement(spark, tiny_corpus, tmp_path):
+def test_range_merge_stats_driven_placement(spark, tiny_corpus, tmp_path,
+                                           monkeypatch):
     """Range placement driven by the B8 block-count stats —
     hot terms spread across >= merge_parallelism/2 files (no straggler
     task/file), cold terms cluster into one file per (hash-group,
     segment), and rank identity survives the re-layout."""
     from pyspark.sql import functions as F
 
+    import escp_spark.build as B
     from escp_spark.build import build_index, merge_segments
     from escp_spark.corpus import reference_queries
     from escp_spark.oracle import NaiveIndex
@@ -383,8 +385,9 @@ def test_range_merge_stats_driven_placement(spark, tiny_corpus, tmp_path):
     build_index(spark, tiny_corpus, d, n_buckets=8, max_segments=3, n_groups=1)
     layout = IndexLayout(d, "build0")
     P = 8
+    monkeypatch.setattr(B, "_HOT_TERM_BLOCKS", 4)
     merged = merge_segments(spark, layout, n_buckets=8, max_segments=3,
-                            merge_parallelism=P, hot_term_blocks=4)
+                            merge_parallelism=P)
     p = spark.read.parquet(merged["postings"])
     hot_files = (
         p.filter(F.col("term") == "t00000")

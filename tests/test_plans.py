@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from escp_spark.plans import (
     assert_no_python_in_plan,
     assert_pushed_filters,
+    explain_str,
     scan_read_schema,
 )
 from escp_spark.sources.tables import IndexLayout, load_manifest
@@ -162,24 +163,35 @@ def test_build_source_filter_pushed_down(spark, tiny_corpus):
                           "EqualTo(lang,en)")
 
 
-def test_distributed_batch_plan_one_exchange(spark, built_index, tmp_path,
+def test_distributed_batch_plan_one_exchange(spark, built_index,
                                              monkeypatch):
-    """The distributed batch's plan (bm25_batch_bigcut) is one shuffle of
-    the matched blocks by bucket window into per-window Arrow kernels:
-    exactly one Exchange, no broadcast join, and the term filter still
-    pushed to the postings scan."""
+    """The distributed batch's plan is one shuffle of the matched blocks
+    by bucket window into per-window Arrow kernels: exactly one Exchange,
+    no broadcast join, and the term filter still pushed to the postings
+    scan. The plan is the one of the DataFrame the batch collects, taken
+    before it runs (an executed adaptive plan also lists its final
+    plan)."""
     import re
 
     import escp_spark.query as Q
     from escp_spark.query import search_topk_spark
 
+    cls = type(spark.range(1))
+    plans = []
+    to_arrow = cls.toArrow
+
+    def capture(df):
+        plans.append(explain_str(df))
+        return to_arrow(df)
+
     monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", -1)
-    monkeypatch.setenv("ESCP_DUMP_PLAN_DIR", str(tmp_path))
+    monkeypatch.setattr(cls, "toArrow", capture)
     assert search_topk_spark(
         spark, built_index[0],
         [{"query_id": 0, "query_text": "t00000 t00005", "k": 3}],
     ).collect()
-    plan = (tmp_path / "bm25_batch_bigcut.txt").read_text()
+    assert len(plans) == 1
+    plan = plans[0]
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1, plan
     assert "BroadcastHashJoin" not in plan, plan
     assert re.search(r"PushedFilters: \[[^\n]*In\(term", plan), plan

@@ -184,8 +184,8 @@ def test_payload_cache_stays_within_byte_budget(copied_index, monkeypatch):
 
     budget = 4 << 20
     monkeypatch.setattr(Q, "_decoded_payloads", Q._ByteLRU(budget))
-    reader = IndexReader(copied_index, meta_cache_bytes=budget,
-                         dm_cache_bytes=budget)
+    monkeypatch.setattr(IndexReader, "_DM_CACHE_BYTES", budget)
+    reader = IndexReader(copied_index, meta_cache_bytes=budget)
     qs, want = reference_queries()[:20], []
     for q in qs:
         want.append(search_topk(copied_index, [q], reader=reader))

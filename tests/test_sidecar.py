@@ -48,18 +48,19 @@ def test_reader_uses_sidecar_and_stays_rank_identical(spark, built_index,
 
 
 def test_sidecar_reader_opens_no_files_for_metadata(spark, tiny_corpus,
-                                                    tmp_path):
+                                                    tmp_path, monkeypatch):
     """An index with hundreds of row groups: building both interval
     indexes from the sidecar opens ZERO data files (the old footer walk
     opened every postings + docmap file); the first real query then
     opens only its candidate files."""
+    import escp_spark.build as B
     from escp_spark.build import build_index
     from escp_spark.query import IndexReader, search_topk
 
     d = str(tmp_path / "fine_idx")
+    monkeypatch.setattr(B, "POSTINGS_ROW_GROUP_BYTES", 2048)
     manifest = build_index(
         spark, tiny_corpus, d, n_buckets=8, max_segments=3, n_groups=1,
-        postings_row_group_bytes=2048,
     )
     sidecar = manifest["paths"]["rg_stats"]
     n_rg = sum(

@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 import pyarrow.parquet as pq
 
+import escp_spark.build as B
 import escp_spark.query as Q
 from escp_spark.build import build_index
 from escp_spark.corpus import write_web_pages_parquet
@@ -88,7 +89,7 @@ def test_pruning_actually_fires(big_index):
     assert st["kept_blocks"] + st["pruned_blocks"] == st["total_blocks"]
 
 
-def test_payload_io_pruned(spark, big_index, tmp_path_factory):
+def test_payload_io_pruned(spark, big_index, tmp_path_factory, monkeypatch):
     """Metadata-first serving (VERDICT r02 #2): payload bytes read must
     track KEPT blocks, not all blocks of the query terms. Build with
     small posting row groups (the skip unit) so skipping is observable
@@ -96,8 +97,8 @@ def test_payload_io_pruned(spark, big_index, tmp_path_factory):
     payload row groups/bytes than the terms' total."""
     corpus, _ = big_index
     idx = str(tmp_path_factory.mktemp("ioidx") / "idx")
-    build_index(spark, corpus, idx, n_buckets=8, max_segments=2,
-                n_groups=1, postings_row_group_bytes=2048)
+    monkeypatch.setattr(B, "POSTINGS_ROW_GROUP_BYTES", 2048)
+    build_index(spark, corpus, idx, n_buckets=8, max_segments=2, n_groups=1)
     reader = IndexReader(idx)
     import pyarrow.dataset as pads
 
