@@ -333,6 +333,24 @@ def build_segments(df: DataFrame, docmap_dir: str) -> DataFrame:
     return df.groupBy("bucket").applyInPandas(kernel, POSTINGS_SCHEMA)
 
 
+def drop_empty_parquet_files(directory: str) -> None:
+    """Unlink the zero-row parquet files of one Spark write's directory
+    (an empty first output partition still writes a file, to carry the
+    schema), keeping one only when every file is empty, so the schema
+    survives. Footer metadata only; no Spark job."""
+    import pyarrow.parquet as pq
+
+    from .sidecar import _list_parquet_files
+
+    files = _list_parquet_files(directory)
+    empty = [f for f in files if pq.read_metadata(f).num_rows == 0]
+    for f in empty[1:] if len(empty) == len(files) else empty:
+        os.unlink(f)
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.unlink(crc)
+
+
 # --------------------------------------------------------------------------
 # Ledger (checkpoint/resume — B10)
 # --------------------------------------------------------------------------
@@ -1177,6 +1195,7 @@ def build_index(
             group_segments(spark, shuffled_dir, g, dm_path).write.mode(
                 "overwrite"
             ).parquet(seg_path)
+        drop_empty_parquet_files(seg_path)
         docs_g = int(grp_counts.get(g, 0))
         with _detail("segment_ledger"):
             bytes_g = _dir_bytes(seg_path)  # FS listing, no Spark job

@@ -17,10 +17,10 @@ publish — sources/tables.py):
    remain stale until compaction — the same trade Lucene makes before a
    merge; scores of live docs are therefore approximate w.r.t. a fresh
    build over the live docs until compaction.
-3. **Update** = delete + re-ingest: ``_existing_urls`` (ingest.py)
-   excludes tombstoned urls from the append-only dedup, so a later
-   micro-batch re-indexes the url under a fresh doc_id; the old doc_id
-   stays tombstoned.
+3. **Update** = delete + re-ingest: ``_indexed_urls`` (ingest.py)
+   does not count a tombstoned doc_id's docmap row in the append-only
+   dedup, so a later micro-batch re-indexes the url under a fresh
+   doc_id; the old doc_id stays tombstoned.
 4. ``compact_index`` PHYSICALLY purges into new directories: affected
    level-0 blocks are decoded, filtered, and re-encoded (untouched
    blocks pass through by a doc_id-range check against the sorted
@@ -43,7 +43,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -153,21 +152,36 @@ def purge_docmap(spark: SparkSession, layout: IndexLayout,
                  tombstones: np.ndarray) -> str:
     """Write the docmap without its tombstoned rows into a new directory
     and return it (group partitioning preserved so future epochs keep
-    appending group=eN dirs)."""
+    appending group=eN dirs). The same Arrow pass as ``purge_level0``:
+    each batch is filtered with ``live_mask`` against the broadcast
+    tombstone array, so the rows never become Python objects and the
+    compaction runs no join."""
     dm = spark.read.parquet(layout.docmap)
-    tomb_df = spark.createDataFrame(
-        [(int(t),) for t in tombstones], "doc_id long"
-    )
-    purged = dm.join(F.broadcast(tomb_df), "doc_id", "left_anti")
+    tomb_bc = spark.sparkContext.broadcast(tombstones)
+
+    def _live(batches):
+        import pyarrow as pa
+
+        tomb = tomb_bc.value
+        for batch in batches:
+            yield batch.filter(pa.array(
+                live_mask(batch.column("doc_id").to_numpy(), tomb)
+            ))
+
     out = layout.artifact("docmap")
     from ..build import DOCMAP_ROW_GROUP_BYTES
 
-    (
-        purged.write
-        .option("parquet.block.size", str(DOCMAP_ROW_GROUP_BYTES))
-        .partitionBy("group")
-        .parquet(out)
-    )
+    try:
+        (
+            dm.mapInArrow(_live, dm.schema).write
+            .option("parquet.block.size", str(DOCMAP_ROW_GROUP_BYTES))
+            .partitionBy("group")
+            .parquet(out)
+        )
+    finally:
+        # The broadcast's pickle file in the driver's temp dir outlives
+        # the job unless destroyed.
+        tomb_bc.destroy()
     return out
 
 
@@ -178,55 +192,56 @@ def purge_level0(spark: SparkSession, layout: IndexLayout,
 
     Blocks whose [doc_id_lo, doc_id_hi] contains no tombstone (the vast
     majority — checked with one double-searchsorted per Arrow batch)
-    pass through byte-identical. Affected blocks are bulk-decoded,
+    pass through byte-identical as an Arrow batch filter, never as
+    Python objects. Only affected blocks are bulk-decoded,
     filtered with the sorted tombstone array, and re-encoded one output
     block per surviving input block (same bucket/term/block_id, stats
     recomputed); fully-deleted blocks drop out."""
     l0 = spark.read.parquet(layout.postings_l0)
-    cols = l0.columns  # POSTINGS_SCHEMA + the 'group' partition column
     tomb_bc = spark.sparkContext.broadcast(tombstones)
-    stat_cols = ["n", "doc_id_lo", "doc_id_hi", "max_tf", "min_dl", "sum_tf"]
-    payload_cols = ["doc_ids", "tfs", "dls"]
+    stat_cols = ("n", "doc_id_lo", "doc_id_hi", "max_tf", "min_dl", "sum_tf")
+    payload_cols = ("doc_ids", "tfs", "dls")
 
     def _purge(batches):
+        import pyarrow as pa
+
         tomb = tomb_bc.value
-        for pdf in batches:
-            lo = pdf["doc_id_lo"].to_numpy()
-            hi = pdf["doc_id_hi"].to_numpy()
+        for batch in batches:
+            lo = batch.column("doc_id_lo").to_numpy()
+            hi = batch.column("doc_id_hi").to_numpy()
             # A block is affected iff some tombstone lies in [lo, hi].
             affected = np.searchsorted(tomb, hi, side="right") > \
                 np.searchsorted(tomb, lo, side="left")
-            out = [pdf[~affected]]
-            aff = pdf[affected].reset_index(drop=True)
-            if len(aff):
-                ids, tfs, dls, blk = decode_blocks_bulk(
-                    list(aff["doc_ids"]), list(aff["tfs"]),
-                    list(aff["dls"]), aff["n"].to_numpy(),
-                )
-                keep = live_mask(ids, tomb)
-                # One "term" per source block → encode_posting_frame
-                # emits exactly one ≤block_size output block per
-                # surviving input block, in input order.
-                enc = encode_posting_frame(
-                    blk[keep], ids[keep], tfs[keep], dls[keep]
-                )
-                src = enc["term_code"]  # source block ordinal
-                new = {}
-                for c in cols:
-                    if c in stat_cols or c in payload_cols:
-                        continue
-                    new[c] = aff[c].to_numpy()[src]
-                for c in ("n", "doc_id_lo", "doc_id_hi", "max_tf",
-                          "min_dl", "sum_tf"):
-                    new[c] = enc[c]
-                for c in payload_cols:
-                    new[c] = enc[c]
-                out.append(pd.DataFrame(new, columns=cols))
-            yield pd.concat(out)[cols] if len(out) > 1 else out[0]
+            if not affected.any():
+                yield batch
+                continue
+            yield batch.filter(pa.array(~affected))
+            aff = batch.filter(pa.array(affected))
+            ids, tfs, dls, blk = decode_blocks_bulk(
+                *(aff.column(c).to_pylist() for c in payload_cols),
+                aff.column("n").to_numpy(),
+            )
+            keep = live_mask(ids, tomb)
+            # One "term" per source block → encode_posting_frame emits
+            # exactly one ≤block_size output block per surviving input
+            # block, in input order.
+            enc = encode_posting_frame(
+                blk[keep], ids[keep], tfs[keep], dls[keep]
+            )
+            src = pa.array(enc["term_code"])  # source block ordinal
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(enc[f.name], f.type)
+                    if f.name in stat_cols or f.name in payload_cols
+                    else aff.column(f.name).take(src)
+                    for f in batch.schema
+                ],
+                schema=batch.schema,
+            )
 
     out = layout.level0_artifact()
     try:
-        purged = l0.mapInPandas(_purge, l0.schema)
+        purged = l0.mapInArrow(_purge, l0.schema)
         purged.write.partitionBy("group").parquet(out)
     finally:
         # The broadcast's pickle file in the driver's temp dir outlives

@@ -194,6 +194,24 @@ def _docmap_bucket_files(docmap_dir: str) -> dict:
     return out
 
 
+def _assert_no_zero_row_level0(level0_dir: str) -> None:
+    """Every level-0 group directory holds only parquet files with rows
+    (the segment writes unlink the zero-row file an empty first output
+    partition leaves)."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    groups = glob.glob(os.path.join(level0_dir, "group=*"))
+    assert groups
+    for g in groups:
+        files = glob.glob(os.path.join(g, "*.parquet"))
+        assert files, g
+        for f in files:
+            assert pq.read_metadata(f).num_rows > 0, f
+
+
 def _expected_docmap(bucket: int, urls) -> dict:
     """One bucket's rows by an independent sort: doc_id = bucket<<40 |
     rank of the url within its bucket."""
@@ -218,6 +236,7 @@ def test_fused_docmap_built_index(built_index, oracle_docs):
     for b, (group, tbl) in files.items():
         assert group == f"group={b % n_groups}"
         assert tbl.to_pydict() == _expected_docmap(b, by_bucket[b]), b
+    _assert_no_zero_row_level0(manifest["level0"])
 
 
 def test_fused_docmap_streamed_index(spark, stream_source, tmp_path):
@@ -254,6 +273,7 @@ def test_fused_docmap_streamed_index(spark, stream_source, tmp_path):
         pq.read_table(stream_source).column("url").to_pylist())
     assert {g for g, _ in files.values()} == {"group=e0", "group=e1",
                                               "group=e2"}
+    _assert_no_zero_row_level0(manifest["level0"])
 
 
 def test_segment_kernel_docmap_without_tokens_and_rerun(tmp_path):

@@ -15,6 +15,54 @@ from escp_spark.streaming import finalize_streamed_index, stream_ingest_once
 # stream_source fixture lives in conftest.py (shared with
 # test_deletes.py).
 
+QUERIES = [
+    {"query_id": 0, "query_text": "t00000", "k": 10},
+    {"query_id": 1, "query_text": "t00000 t09500", "k": 10},
+    {"query_id": 2, "query_text": "t00001 t00200", "k": 5},
+]
+
+
+def _schema():
+    from pyspark.sql import types as T
+
+    return T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+    ])
+
+
+def _md5_bucket(url: str, n_buckets: int) -> int:
+    import hashlib
+
+    return int(hashlib.md5(url.encode()).hexdigest()[:8], 16) % n_buckets
+
+
+def _file_base_bucket(path: str, n_buckets: int) -> int:
+    """Base bucket of a per-bucket docmap file of a streamed epoch:
+    ``group=e<E>/bucket-NNNNN.parquet`` holds effective bucket
+    NNNNN = E·n_buckets + base."""
+    group, name = path.split(os.sep)[-2:]
+    e = int(group[len("group=e"):])
+    return int(name[len("bucket-"):-len(".parquet")]) - e * n_buckets
+
+
+def _copy_source(stream_source, dst, n_files=None):
+    """Private copy of the source dir (the streaming checkpoint pins the
+    source path, and the shared fixture must not gain files). The copies'
+    mtimes increase in name order, so every copy splits into the same
+    epochs (the file source takes files oldest first)."""
+    import shutil
+
+    dst.mkdir()
+    files = sorted(glob.glob(os.path.join(stream_source, "*.parquet")))
+    for i, f in enumerate(files[:n_files]):
+        out = shutil.copy(f, str(dst))
+        os.utime(out, (1_700_000_000 + i, 1_700_000_000 + i))
+    return str(dst)
+
 
 def test_stream_ingest_matches_batch_build(spark, stream_source, tmp_path):
     from pyspark.sql import types as T
@@ -143,8 +191,8 @@ def test_cli_compact_surface(spark, stream_source, tmp_path, capsys):
 def test_stream_epoch_dedup_is_bloom_pruned(spark, stream_source, tmp_path):
     """VERDICT r03 wrong-#2: the per-epoch append-only dedup must NOT
     full-scan the docmap every micro-batch. With disjoint epochs (the
-    common case) the bloom classifies every row definitely-new and the
-    docmap read is skipped outright."""
+    common case) the bloom classifies every row definitely-new and no
+    bucket kernel opens a docmap file."""
     from pyspark.sql import types as T
 
     import escp_spark.streaming.ingest as ing
@@ -161,8 +209,9 @@ def test_stream_epoch_dedup_is_bloom_pruned(spark, stream_source, tmp_path):
     assert n >= 2
     # Last epoch ran with a prior docmap present; its urls are disjoint
     # → bloom says "new" for all (false-positive odds at 16 bits/url
-    # over a few hundred urls are ~0) → docmap read skipped.
-    assert ing.last_dedup_stats["docmap_verify"] == "skipped"
+    # over a few hundred urls are ~0) → no docmap file opened.
+    assert ing.last_dedup_stats["docmap_files"] > 0
+    assert ing.last_dedup_stats["docmap_files_opened"] == []
     assert ing.last_dedup_stats["maybe_hits"] == 0
     assert os.path.exists(os.path.join(idx, "url_bloom.npz"))
 
@@ -170,8 +219,9 @@ def test_stream_epoch_dedup_is_bloom_pruned(spark, stream_source, tmp_path):
 def test_stream_overlapping_batch_drops_dups_via_pruned_verify(
     spark, stream_source, tmp_path
 ):
-    """True cross-epoch duplicates: bloom maybe-hits are verified with
-    an isin-pruned docmap anti-join; dups are dropped, new urls kept."""
+    """True cross-epoch duplicates: bloom maybe-hits are verified by
+    their bucket kernels, which open only the docmap files of the
+    maybe-hits' base buckets; dups are dropped, new urls kept."""
     import pyarrow as pa
 
     from pyspark.sql import types as T
@@ -216,21 +266,24 @@ def test_stream_overlapping_batch_drops_dups_via_pruned_verify(
     n_epochs = stream_ingest_once(spark, str(src), idx, schema, n_buckets=4)
     assert n_epochs == 1
     assert ing.last_dedup_stats["maybe_hits"] >= 50
-    assert ing.last_dedup_stats["docmap_verify"] == "isin_pruned"
+    st = ing.last_dedup_stats
+    dup_bases = {_md5_bucket(u, 4) for u in dup_half.column("url").to_pylist()}
+    assert set(st["maybe_hit_buckets"]) <= dup_bases
+    assert st["docmap_files_opened"]
+    assert {_file_base_bucket(f, 4) for f in st["docmap_files_opened"]} <= \
+        set(st["maybe_hit_buckets"])
     dm = spark.read.parquet(layout.docmap)
     assert dm.count() == n_before + 50, "dups must be dropped, new kept"
     assert dm.select("url").distinct().count() == n_before + 50
 
 
 def test_stream_huge_overlap_fallback_is_bucket_pruned(
-    spark, stream_source, tmp_path, monkeypatch
+    spark, stream_source, tmp_path
 ):
-    """VERDICT r04 next-#6: when the bloom maybe-set outgrows the isin
-    budget (a re-ingest of a known corpus), the verify anti-join's
-    docmap read is pruned to the batch's base buckets × known epochs
-    (effective-bucket isin literals → row-group stats pruning), not a
-    full docmap scan. Dedup results stay exact."""
-    import hashlib
+    """VERDICT r04 next-#6: a re-ingest of known urls (every row a bloom
+    maybe-hit) reads only the docmap files of the batch's base buckets
+    in the earlier epochs, not the whole docmap. Dedup results stay
+    exact."""
     import shutil
 
     from pyspark.sql import types as T
@@ -258,9 +311,7 @@ def test_stream_huge_overlap_fallback_is_bucket_pruned(
     # rule the engine buckets with.
     first = pq.read_table(sorted(glob.glob(str(src / "*.parquet")))[0])
     pdf = first.to_pandas()
-    b = pdf["url"].map(
-        lambda u: int(hashlib.md5(u.encode()).hexdigest()[:8], 16) % 4
-    )
+    b = pdf["url"].map(lambda u: _md5_bucket(u, 4))
     dup = pdf[b == 0].head(20)
     assert len(dup) >= 8, "fixture hash skew — widen the slice"
     import pyarrow as pa
@@ -269,13 +320,12 @@ def test_stream_huge_overlap_fallback_is_bucket_pruned(
         pa.Table.from_pandas(dup, preserve_index=False).cast(first.schema),
         str(src / "zz_reingest.parquet"),
     )
-    # Shrink the isin budget so this overlap takes the fallback branch.
-    monkeypatch.setattr(ing, "_MAYBE_ISIN_MAX", 5)
     n_epochs = stream_ingest_once(spark, str(src), idx, schema, n_buckets=4)
     assert n_epochs == 1
     st = ing.last_dedup_stats
-    assert st["docmap_verify"] == "bucket_pruned"
-    assert 0 < st["docmap_bucket_candidates"] < st["docmap_eff_buckets_total"]
+    assert st["maybe_hits"] == len(dup)
+    assert 0 < len(st["docmap_files_opened"]) < st["docmap_files"]
+    assert {_file_base_bucket(f, 4) for f in st["docmap_files_opened"]} == {0}
     dm = spark.read.parquet(layout.docmap)
     assert dm.count() == n_before, "pure-duplicate batch must add nothing"
     assert dm.select("url").distinct().count() == n_before
@@ -299,3 +349,169 @@ def test_stream_restart_skips_ingested(spark, stream_source, tmp_path):
     assert first >= 1
     again = stream_ingest_once(spark, stream_source, idx, schema, n_buckets=4)
     assert again == 0
+
+
+def _docmap_rows(spark, index_dir):
+    from escp_spark.sources.tables import IndexLayout
+
+    return sorted(
+        tuple(r) for r in spark.read.parquet(
+            IndexLayout(index_dir, "stream0").docmap
+        ).select("bucket", "url", "doc_id").collect()
+    )
+
+
+def test_stream_epoch_replay_keeps_its_own_urls(spark, stream_source,
+                                                tmp_path, monkeypatch):
+    """A crash after an epoch's segment job and bloom save, before its
+    ledger commit, replays the same epoch id on restart. Its urls are
+    then bloom maybe-hits of its own partial write; the verify skips the
+    replaying epoch's own docmap group, so none is dropped, and the
+    index equals a clean run's."""
+    import escp_spark.streaming.ingest as ing
+
+    clean = str(tmp_path / "clean_idx")
+    stream_ingest_once(spark, _copy_source(stream_source, tmp_path / "src"),
+                       clean, _schema(), n_buckets=4)
+    finalize_streamed_index(spark, clean, max_segments=3)
+
+    src = _copy_source(stream_source, tmp_path / "replay_src")
+    idx = str(tmp_path / "replay_idx")
+    real_append = ing._ledger_append
+    epochs = []
+
+    def crash_on_second_epoch(spark_, layout, rows):
+        epochs.append(rows[0]["partition_id"])
+        if len(epochs) == 2:
+            raise RuntimeError("killed before the epoch's ledger commit")
+        real_append(spark_, layout, rows)
+
+    monkeypatch.setattr(ing, "_ledger_append", crash_on_second_epoch)
+    with pytest.raises(Exception):
+        stream_ingest_once(spark, src, idx, _schema(), n_buckets=4)
+    assert epochs == [0, 1]
+    assert os.path.isdir(os.path.join(idx, "docmap-stream0", "group=e1"))
+
+    stats = {}
+
+    def record_stats(spark_, layout, rows):
+        stats[rows[0]["partition_id"]] = dict(ing.last_dedup_stats)
+        real_append(spark_, layout, rows)
+
+    monkeypatch.setattr(ing, "_ledger_append", record_stats)
+    assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 2
+    assert sorted(stats) == [1, 2], "the crashed epoch must replay as itself"
+    replay = stats[1]
+    assert replay["maybe_hits"] > 0, "the replayed urls are in the bloom"
+    assert not any(f"{os.sep}group=e1{os.sep}" in f
+                   for f in replay["docmap_files_opened"])
+    finalize_streamed_index(spark, idx, max_segments=3)
+    assert _docmap_rows(spark, idx) == _docmap_rows(spark, clean)
+    assert search_topk(idx, QUERIES) == search_topk(clean, QUERIES)
+
+
+def test_stream_overlap_after_compaction_drops_dups(spark, stream_source,
+                                                    tmp_path):
+    """After a compaction that purged tombstones, the docmap is Spark's
+    part-file layout, not one file per bucket. A later epoch of 50
+    duplicate and 50 new urls still drops exactly the duplicates, and so
+    does the next one, whose duplicates sit in both layouts."""
+    import pandas as pd
+    import pyarrow as pa
+
+    import escp_spark.streaming.ingest as ing
+    from escp_spark.sources.tables import IndexLayout
+    from escp_spark.streaming import compact_index, delete_urls
+
+    src = _copy_source(stream_source, tmp_path / "compact_src")
+    idx = str(tmp_path / "compact_idx")
+    stream_ingest_once(spark, src, idx, _schema(), n_buckets=4)
+    finalize_streamed_index(spark, idx, max_segments=3)
+    files = sorted(glob.glob(os.path.join(src, "*.parquet")))
+    first = pq.read_table(files[0])
+    victims = pq.read_table(files[-1]).column("url").to_pylist()[:3]
+    assert delete_urls(spark, idx, victims) == 3
+    compact_index(spark, idx, max_segments=3)
+    docmap = IndexLayout(idx, "stream0").docmap
+    parts = glob.glob(os.path.join(docmap, "group=e*", "*.parquet"))
+    assert parts and all(os.path.basename(f).startswith("part-")
+                         for f in parts), "docmap not in Spark's layout"
+    n_before = spark.read.parquet(docmap).count()
+
+    dup_half = first.slice(0, 50)
+    new_pdf = dup_half.to_pandas()
+    new_pdf["url"] = ["https://new.example/%d" % i for i in range(50)]
+    pq.write_table(
+        pa.concat_tables([
+            dup_half,
+            pa.Table.from_pandas(new_pdf, preserve_index=False).cast(
+                dup_half.schema),
+        ]),
+        os.path.join(src, "zz_more.parquet"),
+    )
+    assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 1
+    st = ing.last_dedup_stats
+    assert st["maybe_hits"] >= 50
+    assert st["docmap_files_opened"]
+    dm = spark.read.parquet(IndexLayout(idx, "stream0").docmap)
+    assert dm.count() == n_before + 50, "dups must be dropped, new kept"
+    assert dm.select("url").distinct().count() == n_before + 50
+    assert dm.filter(dm.url.startswith("https://new.example/")).count() == 50
+
+    # Both layouts at once: duplicates of a compacted epoch (part files)
+    # and of the epoch just ingested (per-bucket files), plus new urls.
+    mixed = new_pdf.head(10).copy()
+    mixed["url"] = (
+        first.column("url").to_pylist()[50:55]
+        + ["https://new.example/%d" % i for i in range(5)]
+    )
+    newer = new_pdf.head(5).copy()
+    newer["url"] = ["https://newer.example/%d" % i for i in range(5)]
+    pq.write_table(
+        pa.Table.from_pandas(pd.concat([mixed, newer]),
+                             preserve_index=False).cast(dup_half.schema),
+        os.path.join(src, "zz_mixed.parquet"),
+    )
+    assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 1
+    st = ing.last_dedup_stats
+    assert st["maybe_hits"] >= 10
+    opened = {os.path.basename(f).split("-")[0]
+              for f in st["docmap_files_opened"]}
+    assert opened == {"part", "bucket"}, st["docmap_files_opened"]
+    dm = spark.read.parquet(IndexLayout(idx, "stream0").docmap)
+    assert dm.count() == n_before + 55
+    assert dm.select("url").distinct().count() == n_before + 55
+
+
+# Spark jobs of one streamed epoch that runs with a prior epoch present,
+# as measured: the micro-batch's isEmpty probe, and the epoch's one
+# segment job (its bucket shuffle's map stage and the write under
+# adaptive execution) — the bloom probe, the duplicate verify and the
+# bloom update all run inside its bucket kernels. The separate
+# maybe-url collect and bloom-update jobs took 8 jobs to this 4.
+_STREAM_EPOCH_JOBS = 4
+
+
+def test_stream_epoch_spark_jobs(spark, stream_source, tmp_path):
+    """One epoch of stream_ingest_once, counted from the application
+    status store (the micro-batch runs on the streaming thread, so a job
+    group set here would not label its jobs)."""
+    src = _copy_source(stream_source, tmp_path / "jobs_src", n_files=2)
+    idx = str(tmp_path / "jobs_idx")
+    assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 2
+    import shutil
+
+    shutil.copy(sorted(glob.glob(os.path.join(stream_source,
+                                              "*.parquet")))[2], src)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        seq = store.jobsList(None)
+        return {seq.apply(i).jobId() for i in range(seq.size())}
+
+    before = job_ids()
+    assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 1
+    jobs = job_ids() - before
+    assert len(jobs) <= _STREAM_EPOCH_JOBS, sorted(jobs)
