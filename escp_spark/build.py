@@ -587,6 +587,22 @@ def _seg_shift(n_buckets: int, max_segments: int) -> int:
     return shift
 
 
+def binary_offsets_and_data(arr):
+    """The offsets (numpy) and values buffer (memoryview) of an Arrow
+    (large_)binary array: the values of rows [a, b) are the one
+    concatenated stream ``data[offs[a]:offs[b]]``, which the codec's
+    bulk decode takes as is — no per-block bytes objects."""
+    import pyarrow as pa
+
+    bufs = arr.buffers()
+    wide = pa.types.is_large_binary(arr.type)
+    offs = np.frombuffer(
+        bufs[1], dtype=np.int64 if wide else np.int32,
+        count=len(arr) + 1, offset=arr.offset * (8 if wide else 4),
+    )
+    return offs, memoryview(bufs[2])
+
+
 def _consolidate_tails_arrow(batches):
     """Re-block one partition's tail fragments — Arrow-native mapInArrow
     kernel (zero per-row Python objects; the earlier applyInPandas
@@ -640,18 +656,8 @@ def _consolidate_tails_arrow(batches):
         return
     sub = tbl.take(pa.array(midx)).combine_chunks()
     ns = sub.column("n").to_numpy()
-
-    def offsets_and_data(name: str):
-        arr = sub.column(name).chunk(0)
-        bufs = arr.buffers()
-        wide = pa.types.is_large_binary(arr.type)
-        offs = np.frombuffer(
-            bufs[1], dtype=np.int64 if wide else np.int32,
-            count=len(arr) + 1, offset=arr.offset * (8 if wide else 4),
-        )
-        return offs, memoryview(bufs[2])
-
-    payloads = [offsets_and_data(c) for c in ("doc_ids", "tfs", "dls")]
+    payloads = [binary_offsets_and_data(sub.column(c).chunk(0))
+                for c in ("doc_ids", "tfs", "dls")]
     sub_grp = grp_id[midx]  # nondecreasing
     bump = sub_grp[1:] != sub_grp[:-1]
     codes = np.cumsum(np.concatenate(([0], bump.astype(np.int64))))

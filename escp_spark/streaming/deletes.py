@@ -21,21 +21,25 @@ publish — sources/tables.py):
    does not count a tombstoned doc_id's docmap row in the append-only
    dedup, so a later micro-batch re-indexes the url under a fresh
    doc_id; the old doc_id stays tombstoned.
-4. ``compact_index`` PHYSICALLY purges into new directories: affected
-   level-0 blocks are decoded, filtered, and re-encoded (untouched
-   blocks pass through by a doc_id-range check against the sorted
-   tombstone array), the docmap drops tombstoned rows, stats are
-   recomputed from the purged postings, and one publish names the
-   purged level-0, docmap and postings and no tombstone set — after
-   which results are EXACTLY those of a fresh build over the live
-   corpus (asserted in tests). A crash before that publish leaves the
-   previous index, tombstones included, serving.
+4. ``compact_index`` PHYSICALLY purges into new directories, in ONE
+   Spark job over the level-0 and docmap file list (``purge_level0``):
+   each task streams its files row group by row group with pyarrow. A
+   file whose footer doc-id range holds no tombstone is copied byte for
+   byte; in any other file only the blocks whose [doc_id_lo,
+   doc_id_hi] holds a tombstone are decoded, filtered and re-encoded,
+   and the docmap drops its tombstoned rows. Every file keeps its
+   relative path (a docmap keeps its ``group=eN/bucket-NNNNN.parquet``
+   files). Stats are recomputed from the purged postings, and one
+   publish names the purged level-0, docmap and postings and no
+   tombstone set — after which results are EXACTLY those of a fresh
+   build over the live corpus (asserted in tests). A crash before that
+   publish leaves the previous index, tombstones included, serving.
 
 Scale shape: tombstones are explicit operator actions — driver-sized by
-nature (each one was itself a driver call); the purge pass touches only
-blocks whose [doc_id_lo, doc_id_hi] range contains a tombstone
-(vectorized double-searchsorted per Arrow batch), so purge cost is
-O(deleted docs' blocks), not O(index).
+nature (each one was itself a driver call), so they travel in the purge
+tasks' closure. The purge is one task per slice of files, balanced by
+bytes, with no shuffle and no Spark parquet writer: untouched files
+cost a copy, and decoding is O(deleted docs' blocks), not O(index).
 """
 
 from __future__ import annotations
@@ -148,103 +152,192 @@ def delete_urls(spark: SparkSession, index_dir: str, urls,
     return len(rows)
 
 
-def purge_docmap(spark: SparkSession, layout: IndexLayout,
-                 tombstones: np.ndarray) -> str:
-    """Write the docmap without its tombstoned rows into a new directory
-    and return it (group partitioning preserved so future epochs keep
-    appending group=eN dirs). The same Arrow pass as ``purge_level0``:
-    each batch is filtered with ``live_mask`` against the broadcast
-    tombstone array, so the rows never become Python objects and the
-    compaction runs no join."""
-    dm = spark.read.parquet(layout.docmap)
-    tomb_bc = spark.sparkContext.broadcast(tombstones)
+# Rewritten files use the zstd level Spark writes level-0 with
+# (parquet-mr's default, 3) and no Arrow schema footer, as the build's
+# docmap writer does: pyarrow's defaults write larger files.
+_REWRITE_OPTS = {"compression": "zstd", "compression_level": 3,
+                 "store_schema": False}
+_STAT_COLS = ("n", "doc_id_lo", "doc_id_hi", "max_tf", "min_dl", "sum_tf")
+_PAYLOAD_COLS = ("doc_ids", "tfs", "dls")
 
-    def _live(batches):
-        import pyarrow as pa
 
-        tomb = tomb_bc.value
-        for batch in batches:
-            yield batch.filter(pa.array(
-                live_mask(batch.column("doc_id").to_numpy(), tomb)
-            ))
+def _holds_tombstone(lo, hi, tombstones: np.ndarray) -> np.ndarray:
+    """Per [lo, hi] doc-id range: does some tombstone lie in it? One
+    double-searchsorted over the sorted tombstone array."""
+    return np.searchsorted(tombstones, hi, side="right") > \
+        np.searchsorted(tombstones, lo, side="left")
 
-    out = layout.artifact("docmap")
-    from ..build import DOCMAP_ROW_GROUP_BYTES
 
-    try:
-        (
-            dm.mapInArrow(_live, dm.schema).write
-            .option("parquet.block.size", str(DOCMAP_ROW_GROUP_BYTES))
-            .partitionBy("group")
-            .parquet(out)
-        )
-    finally:
-        # The broadcast's pickle file in the driver's temp dir outlives
-        # the job unless destroyed.
-        tomb_bc.destroy()
-    return out
+def _rewrite_file(src: str, dst: str, lo_col: str, hi_col: str,
+                  tombstones: np.ndarray, purge_rows, **write_opts) -> bool:
+    """Write ``src`` minus its tombstoned rows to ``dst``; returns whether
+    it had to be rewritten. A file whose row groups' [min(lo_col),
+    max(hi_col)] footer ranges hold no tombstone is copied byte for
+    byte; otherwise each row group is read and passed through
+    ``purge_rows(table, tombstones)`` when its own range holds one, and
+    written as one row group (an emptied one is left out). The file
+    appears under ``dst`` by rename from a hidden temp name, so a
+    retried task rewrites the same bytes and no reader lists a partial
+    file."""
+    import shutil
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    tmp = os.path.join(os.path.dirname(dst),
+                       f".{os.path.basename(dst)}.{uuid.uuid4().hex}")
+    with pq.ParquetFile(src) as pf:
+        md = pf.metadata
+        lo, hi = (md.schema.names.index(c) for c in (lo_col, hi_col))
+        hit = [
+            bool(_holds_tombstone(md.row_group(i).column(lo).statistics.min,
+                                  md.row_group(i).column(hi).statistics.max,
+                                  tombstones))
+            for i in range(md.num_row_groups)
+        ]
+        rewrite = any(hit)
+        if rewrite:
+            with pq.ParquetWriter(tmp, pf.schema_arrow, **write_opts) as w:
+                for i, h in enumerate(hit):
+                    t = pf.read_row_group(i)
+                    if h:
+                        t = purge_rows(t, tombstones)
+                    if t.num_rows:
+                        w.write_table(t, row_group_size=t.num_rows)
+        else:
+            shutil.copyfile(src, tmp)
+    os.replace(tmp, dst)
+    return rewrite
+
+
+def _live_docmap_rows(t, tombstones: np.ndarray):
+    import pyarrow as pa
+
+    return t.filter(pa.array(live_mask(t.column("doc_id").to_numpy(),
+                                       tombstones)))
+
+
+def purge_docmap(src: str, dst: str, tombstones: np.ndarray) -> bool:
+    """One docmap file without its tombstoned rows: ``src`` copied to
+    ``dst`` when its doc-id range holds no tombstone, else rewritten
+    with each affected row group filtered by ``live_mask`` (rows stay
+    url-sorted, so the ingest's url-stat pruning still holds). Returns
+    whether it was rewritten. Run by ``purge_level0``'s tasks."""
+    return _rewrite_file(src, dst, "doc_id", "doc_id", tombstones,
+                         _live_docmap_rows, use_dictionary=["bucket"],
+                         **_REWRITE_OPTS)
+
+
+def _live_blocks(t, tombstones: np.ndarray):
+    """Level-0 blocks without their tombstoned postings. Blocks whose
+    [doc_id_lo, doc_id_hi] holds no tombstone pass as they are; only
+    the others are bulk-decoded straight from the Arrow binary buffers,
+    filtered and re-encoded, one output block per surviving input block
+    (same bucket/term/block_id, stats recomputed, row order kept); a
+    fully deleted block drops out."""
+    import pyarrow as pa
+
+    from ..build import binary_offsets_and_data
+
+    affected = _holds_tombstone(t.column("doc_id_lo").to_numpy(),
+                                t.column("doc_id_hi").to_numpy(), tombstones)
+    aff_rows = np.flatnonzero(affected)
+    if aff_rows.size == 0:
+        return t
+    aff = t.take(pa.array(aff_rows)).combine_chunks()
+    streams = []
+    for c in _PAYLOAD_COLS:
+        offs, data = binary_offsets_and_data(aff.column(c).chunk(0))
+        streams.append(data[offs[0]:offs[-1]])
+    ids, tfs, dls, blk = decode_blocks_bulk(*streams,
+                                            aff.column("n").to_numpy())
+    keep = live_mask(ids, tombstones)
+    # One "term" per source block → encode_posting_frame emits exactly
+    # one ≤block_size output block per surviving input block, in order.
+    enc = encode_posting_frame(blk[keep], ids[keep], tfs[keep], dls[keep])
+    src = pa.array(enc["term_code"])  # source block ordinal in ``aff``
+    rebuilt = pa.Table.from_arrays(
+        [
+            pa.array(enc[f.name], f.type)
+            if f.name in _STAT_COLS or f.name in _PAYLOAD_COLS
+            else aff.column(f.name).take(src)
+            for f in t.schema
+        ],
+        schema=t.schema,
+    )
+    order = np.argsort(np.concatenate(
+        (np.flatnonzero(~affected), aff_rows[enc["term_code"]])
+    ), kind="stable")
+    return pa.concat_tables(
+        [t.filter(pa.array(~affected)), rebuilt]
+    ).take(pa.array(order))
+
+
+def _purge_level0_file(src: str, dst: str, tombstones: np.ndarray) -> bool:
+    """One level-0 file without its tombstoned postings (``_live_blocks``
+    per affected row group); returns whether it was rewritten."""
+    return _rewrite_file(src, dst, "doc_id_lo", "doc_id_hi", tombstones,
+                         _live_blocks, **_REWRITE_OPTS)
+
+
+def _slices_by_bytes(files: list[tuple], n: int) -> list[list[tuple]]:
+    """``files`` ((kind, src, dst, size) tuples) in ≤ n slices of about
+    equal bytes: largest first onto the lightest slice."""
+    import heapq
+
+    heap = [(0, i) for i in range(min(n, len(files)))]
+    slices = [[] for _ in heap]
+    for f in sorted(files, key=lambda f: (-f[3], f[1])):
+        size, i = heapq.heappop(heap)
+        slices[i].append(f)
+        heapq.heappush(heap, (size + f[3], i))
+    return slices
 
 
 def purge_level0(spark: SparkSession, layout: IndexLayout,
-                 tombstones: np.ndarray) -> str:
-    """Write the level-0 segments without their tombstoned postings into
-    a new level-0 directory and return it.
+                 tombstones: np.ndarray) -> tuple[str, str]:
+    """Write the level-0 segments and the docmap without their
+    tombstoned postings and rows into a new level-0 and a new docmap
+    directory, and return both (level-0 first).
 
-    Blocks whose [doc_id_lo, doc_id_hi] contains no tombstone (the vast
-    majority — checked with one double-searchsorted per Arrow batch)
-    pass through byte-identical as an Arrow batch filter, never as
-    Python objects. Only affected blocks are bulk-decoded,
-    filtered with the sorted tombstone array, and re-encoded one output
-    block per surviving input block (same bucket/term/block_id, stats
-    recomputed); fully-deleted blocks drop out."""
-    l0 = spark.read.parquet(layout.postings_l0)
-    tomb_bc = spark.sparkContext.broadcast(tombstones)
-    stat_cols = ("n", "doc_id_lo", "doc_id_hi", "max_tf", "min_dl", "sum_tf")
-    payload_cols = ("doc_ids", "tfs", "dls")
+    ONE Spark job over the two directories' file list, planned without
+    a shuffle: ``spark.range(n, numPartitions=n)``, one task per slice
+    of files balanced by bytes over ``defaultParallelism``. Each task
+    streams its files row group by row group with pyarrow
+    (``_purge_level0_file``, ``purge_docmap``) into the same relative
+    path under the new directory: a file whose footer doc-id range
+    holds no tombstone is copied byte for byte, any other is rewritten.
+    The tombstones travel in the task closure (no broadcast file), and
+    the driver makes every output directory before the job."""
+    from ..sidecar import _list_parquet_files
 
-    def _purge(batches):
+    files = []
+    outs = (layout.level0_artifact(), layout.artifact("docmap"))
+    for kind, src_root, dst_root in zip(("level0", "docmap"),
+                                        (layout.postings_l0, layout.docmap),
+                                        outs):
+        os.makedirs(dst_root)
+        for src in _list_parquet_files(src_root):
+            dst = os.path.join(dst_root, os.path.relpath(src, src_root))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            files.append((kind, src, dst, os.path.getsize(src)))
+    slices = _slices_by_bytes(files, spark.sparkContext.defaultParallelism)
+
+    def run(batches):
         import pyarrow as pa
 
-        tomb = tomb_bc.value
         for batch in batches:
-            lo = batch.column("doc_id_lo").to_numpy()
-            hi = batch.column("doc_id_hi").to_numpy()
-            # A block is affected iff some tombstone lies in [lo, hi].
-            affected = np.searchsorted(tomb, hi, side="right") > \
-                np.searchsorted(tomb, lo, side="left")
-            if not affected.any():
-                yield batch
-                continue
-            yield batch.filter(pa.array(~affected))
-            aff = batch.filter(pa.array(affected))
-            ids, tfs, dls, blk = decode_blocks_bulk(
-                *(aff.column(c).to_pylist() for c in payload_cols),
-                aff.column("n").to_numpy(),
-            )
-            keep = live_mask(ids, tomb)
-            # One "term" per source block → encode_posting_frame emits
-            # exactly one ≤block_size output block per surviving input
-            # block, in input order.
-            enc = encode_posting_frame(
-                blk[keep], ids[keep], tfs[keep], dls[keep]
-            )
-            src = pa.array(enc["term_code"])  # source block ordinal
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(enc[f.name], f.type)
-                    if f.name in stat_cols or f.name in payload_cols
-                    else aff.column(f.name).take(src)
-                    for f in batch.schema
-                ],
-                schema=batch.schema,
-            )
+            for i in batch.column("id").to_numpy():
+                rewritten = sum(
+                    (purge_docmap if kind == "docmap" else _purge_level0_file)(
+                        src, dst, tombstones)
+                    for kind, src, dst, _ in slices[i]
+                )
+                yield pa.RecordBatch.from_pydict(
+                    {"rewritten": pa.array([rewritten], pa.int64())})
 
-    out = layout.level0_artifact()
-    try:
-        purged = l0.mapInArrow(_purge, l0.schema)
-        purged.write.partitionBy("group").parquet(out)
-    finally:
-        # The broadcast's pickle file in the driver's temp dir outlives
-        # the job unless destroyed.
-        tomb_bc.destroy()
-    return out
+    if slices:
+        n = len(slices)
+        spark.range(n, numPartitions=n).mapInArrow(
+            run, "rewritten long").collect()
+    return outs

@@ -98,7 +98,7 @@ def _new_bloom(capacity_urls: int) -> dict:
     m = max(int(capacity_urls), _BLOOM_MIN_CAPACITY) * _BLOOM_BITS_PER_URL
     m = ((m + 63) // 64) * 64
     return {"bits": np.zeros(m // 64, dtype=np.uint64), "m": m,
-            "k": _BLOOM_K, "n": 0}
+            "k": _BLOOM_K, "n": 0, "epoch": -1, "epoch_n": 0}
 
 
 def _load_bloom(layout: IndexLayout) -> dict | None:
@@ -107,9 +107,11 @@ def _load_bloom(layout: IndexLayout) -> dict | None:
         return None
     try:
         z = np.load(p)
-        meta = z["meta"]
+        # meta = m, k, n[, last epoch counted into n, its url count]
+        meta = np.append(z["meta"], [-1, 0])
         return {"bits": z["bits"].astype(np.uint64), "m": int(meta[0]),
-                "k": int(meta[1]), "n": int(meta[2])}
+                "k": int(meta[1]), "n": int(meta[2]),
+                "epoch": int(meta[3]), "epoch_n": int(meta[4])}
     except Exception:
         return None  # corrupt sidecar → rebuild from docmap
 
@@ -118,7 +120,8 @@ def _save_bloom(layout: IndexLayout, bloom: dict) -> None:
     p = _bloom_path(layout)
     tmp = os.path.join(layout.root, f".tmp-{uuid.uuid4().hex}.npz")
     np.savez(tmp, bits=bloom["bits"],
-             meta=np.array([bloom["m"], bloom["k"], bloom["n"]], dtype=np.int64))
+             meta=np.array([bloom["m"], bloom["k"], bloom["n"],
+                            bloom["epoch"], bloom["epoch_n"]], dtype=np.int64))
     os.replace(tmp, p)
 
 
@@ -190,10 +193,11 @@ def _prior_docmap_files(docmap_dir: str, epoch: int,
     """Per base bucket, the docmap files of OTHER epochs that can hold an
     url of that base bucket: an epoch's own ``bucket-NNNNN.parquet`` of
     effective bucket ``e·n_buckets + base``, and every file of a group
-    whose files are not per-bucket (Spark part files, as a compaction's
-    docmap purge writes them). The replaying epoch's own group is left
-    out: a restart that re-runs a crashed epoch (same epoch id) must not
-    find its docs in its own partial write — it rewrites them instead."""
+    whose files are not per-bucket (Spark part files, as an index
+    compacted by an older engine still has them). The replaying epoch's
+    own group is left out: a restart that re-runs a crashed epoch (same
+    epoch id) must not find its docs in its own partial write — it
+    rewrites them instead."""
     files: dict[int, list[str]] = {b: [] for b in range(n_buckets)}
     if not os.path.isdir(docmap_dir):
         return files
@@ -392,16 +396,21 @@ def _ingest_epoch(batch_df: DataFrame, epoch: int, layout: IndexLayout,
             probe.destroy()
     drop_empty_parquet_files(seg_path)
 
-    # Fold the kept urls into the bloom (replaying an epoch re-ORs the
-    # same bits, which is idempotent). Once n_added outgrows capacity
-    # the next epoch rebuilds at 4× (amortized).
+    # Fold the kept urls into the bloom. Replaying an epoch re-ORs the
+    # same bits, and its count replaces the one its crashed attempt
+    # saved (a replay is always of the last epoch run), so both stay
+    # idempotent. Once n outgrows capacity the next epoch rebuilds at
+    # 4× (amortized).
     h1, h2, stats = _read_bloom_updates(side_dir, epoch, n_buckets)
     shutil.rmtree(side_dir)
     docs = len(h1)  # one docmap row per kept url
     if bloom is None:
         bloom = _new_bloom(max(4 * docs, 1))
     _bloom_add(bloom["bits"], h1, h2, bloom["m"], bloom["k"])
+    if bloom["epoch"] == epoch:
+        bloom["n"] -= bloom["epoch_n"]
     bloom["n"] += docs
+    bloom["epoch"], bloom["epoch_n"] = epoch, docs
     _save_bloom(layout, bloom)
     last_dedup_stats = {**stats, "docmap_files": len(prior_files),
                         "bloom_rebuilt": rebuilt, "bloom_n": bloom["n"]}
@@ -565,16 +574,35 @@ def finalize_streamed_index(spark: SparkSession, index_dir: str,
     )
 
 
+def _level0_bucket_count(level0_dir: str) -> int:
+    """1 + the largest effective bucket of the level-0 files, from their
+    ``bucket`` footer statistics (driver-side metadata, no Spark job)."""
+    import pyarrow.parquet as pq
+
+    from ..sidecar import _list_parquet_files
+
+    top = 0
+    for path in _list_parquet_files(level0_dir):
+        md = pq.read_metadata(path)
+        col = md.schema.names.index("bucket")
+        for i in range(md.num_row_groups):
+            top = max(top, md.row_group(i).column(col).statistics.max)
+    return int(top) + 1
+
+
 def compact_index(spark: SparkSession, index_dir: str,
                   max_segments: int | None = None,
                   build_id: str | None = None) -> dict:
     """Compaction for ANY published index — streamed or batch-built
     (VERDICT r04 missing #3: the delete/compact lifecycle used to be
-    wired only for streamed indexes; purge_level0/purge_docmap and the
-    merge are layout-agnostic, so one surface serves both). Purges
-    tombstoned docs physically, re-merges ALL level-0 segments with
-    CONTIGUOUS segment ranges and full tail consolidation, re-exacts
-    the corpus stats, and atomically republishes.
+    wired only for streamed indexes; the purge and the merge are
+    layout-agnostic, so one surface serves both). Purges tombstoned
+    docs physically (``purge_level0``: one Spark job that copies or
+    rewrites every level-0 and docmap file into new directories),
+    re-merges ALL level-0 segments with CONTIGUOUS segment ranges and
+    full tail consolidation over the effective bucket count read from
+    the level-0 ``bucket`` footer stats, re-exacts the corpus stats,
+    and atomically republishes.
 
     For a streamed index this is the periodic epoch compaction: after
     it, ≤1 block per (segment, term) is short, so per-term
@@ -595,9 +623,7 @@ def compact_index(spark: SparkSession, index_dir: str,
     ``max_segments`` defaults to the prior manifest's value."""
     from ..build import merge_segments
     from ..sources.tables import load_manifest
-    from .deletes import (
-        _resolve_build_id, load_tombstones, purge_docmap, purge_level0,
-    )
+    from .deletes import _resolve_build_id, load_tombstones, purge_level0
 
     prior = load_manifest(index_dir)
     layout = IndexLayout(index_dir, _resolve_build_id(prior, build_id))
@@ -607,18 +633,17 @@ def compact_index(spark: SparkSession, index_dir: str,
     # postings from level-0 and rows from the docmap BEFORE the merge,
     # so the republished stats (df, cf, n_docs, avgdl) are exact for
     # the live corpus — post-compact results equal a fresh build over
-    # the live docs (asserted in tests). Both purges write new
+    # the live docs (asserted in tests). The purge writes new
     # directories; the one publish below switches to them and drops the
     # tombstone set.
     paths = {k: v for k, v in layout.paths.items() if k != "tombstones"}
     tomb = load_tombstones(index_dir, layout.paths)
     if tomb.size:
-        layout.postings_l0 = purge_level0(spark, layout, tomb)
-        paths["docmap"] = layout.docmap = purge_docmap(spark, layout, tomb)
-    l0 = spark.read.parquet(layout.postings_l0)
-    n_eff = int(l0.agg(F.max("bucket")).first()[0] or 0) + 1
+        layout.postings_l0, paths["docmap"] = purge_level0(
+            spark, layout, tomb)
     merged = merge_segments(
-        spark, layout, n_buckets=n_eff, max_segments=max_segments,
+        spark, layout, n_buckets=_level0_bucket_count(layout.postings_l0),
+        max_segments=max_segments,
         merge_parallelism=spark.sparkContext.defaultParallelism,
     )
     paths.update(postings=merged["postings"],

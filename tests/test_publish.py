@@ -206,8 +206,10 @@ def _schema():
 def test_streamed_writers_crash_before_publish(spark, stream_source,
                                                tmp_path, monkeypatch):
     """finalize_streamed_index and compact_index killed between their
-    data writes and their publish: readers from before and after the
-    crash still serve the last published index; re-runs publish."""
+    data writes and their publish (compact_index also between its purge
+    job and its merge): readers from before and after the crash still
+    serve the last published index; re-runs publish, and the re-run
+    compaction publishes what an uninterrupted one does."""
     src = _stream_src(stream_source, str(tmp_path / "src"), 2)
     idx = str(tmp_path / "idx")
     stream_ingest_once(spark, src, idx, _schema(), n_buckets=4)
@@ -233,18 +235,43 @@ def test_streamed_writers_crash_before_publish(spark, stream_source,
     _assert_oracle(before, docs3, deleted)
     _assert_at_rest(idx)
 
-    monkeypatch.setattr(ingest, "publish_manifest", _raise)
-    with pytest.raises(Crash):
-        compact_index(spark, idx)
-    monkeypatch.undo()
-    for reader in (before, IndexReader(idx)):
-        _assert_oracle(reader, docs3, deleted)
+    clean = _copy_index(idx, str(tmp_path / "clean"))
+    compact_index(spark, clean)
+    # Killed at its publish, and killed after the purge job, before the
+    # merge: the purged level-0 and docmap directories are orphans.
+    for owner, name in ((ingest, "publish_manifest"), (B, "merge_segments")):
+        monkeypatch.setattr(owner, name, _raise)
+        with pytest.raises(Crash):
+            compact_index(spark, idx)
+        monkeypatch.undo()
+        for reader in (before, IndexReader(idx)):
+            _assert_oracle(reader, docs3, deleted)
 
     compact_index(spark, idx)
     live = {u: t for u, t in docs3.items() if u not in deleted}
     _assert_oracle(before, live)
     _assert_oracle(IndexReader(idx), live)
     _assert_at_rest(idx)
+    assert _published_rows(idx) == _published_rows(clean)
+
+
+def _published_rows(idx: str) -> dict:
+    """Every row of the published postings (block ids included),
+    dictionary and docmap, sorted."""
+    import pyarrow.dataset as pads
+
+    paths = load_manifest(idx)["paths"]
+    return {
+        kind: sorted(zip(*pads.dataset(paths[kind], format="parquet")
+                         .to_table(columns=cols).to_pydict().values()))
+        for kind, cols in (
+            ("postings", ["term", "block_id", "n", "doc_id_lo", "doc_id_hi",
+                          "max_tf", "min_dl", "sum_tf", "doc_ids", "tfs",
+                          "dls"]),
+            ("dictionary", ["term", "df", "cf"]),
+            ("docmap", ["bucket", "url", "doc_id"]),
+        )
+    }
 
 
 def test_long_lived_reader_across_finalize_delete_compact(

@@ -4,6 +4,8 @@ docids legitimately differ because epoch-scoped buckets assign them)."""
 
 import glob
 import os
+import re
+import shutil
 
 import pyarrow.parquet as pq
 import pytest
@@ -54,8 +56,6 @@ def _copy_source(stream_source, dst, n_files=None):
     source path, and the shared fixture must not gain files). The copies'
     mtimes increase in name order, so every copy splits into the same
     epochs (the file source takes files oldest first)."""
-    import shutil
-
     dst.mkdir()
     files = sorted(glob.glob(os.path.join(stream_source, "*.parquet")))
     for i, f in enumerate(files[:n_files]):
@@ -369,6 +369,7 @@ def test_stream_epoch_replay_keeps_its_own_urls(spark, stream_source,
     replaying epoch's own docmap group, so none is dropped, and the
     index equals a clean run's."""
     import escp_spark.streaming.ingest as ing
+    from escp_spark.sources.tables import IndexLayout
 
     clean = str(tmp_path / "clean_idx")
     stream_ingest_once(spark, _copy_source(stream_source, tmp_path / "src"),
@@ -408,14 +409,20 @@ def test_stream_epoch_replay_keeps_its_own_urls(spark, stream_source,
     finalize_streamed_index(spark, idx, max_segments=3)
     assert _docmap_rows(spark, idx) == _docmap_rows(spark, clean)
     assert search_topk(idx, QUERIES) == search_topk(clean, QUERIES)
+    # The replay's urls count into the bloom once.
+    blooms = [ing._load_bloom(IndexLayout(i, "stream0")) for i in (idx, clean)]
+    assert blooms[0]["n"] == blooms[1]["n"]
+    assert (blooms[0]["bits"] == blooms[1]["bits"]).all()
 
 
 def test_stream_overlap_after_compaction_drops_dups(spark, stream_source,
                                                     tmp_path):
-    """After a compaction that purged tombstones, the docmap is Spark's
-    part-file layout, not one file per bucket. A later epoch of 50
-    duplicate and 50 new urls still drops exactly the duplicates, and so
-    does the next one, whose duplicates sit in both layouts."""
+    """A compaction that purged tombstones keeps the docmap's per-bucket
+    ``group=eN/bucket-NNNNN.parquet`` files. A later epoch of 50
+    duplicate and 50 new urls drops exactly the duplicates. So does the
+    next one, after one earlier epoch's docmap group is rewritten as
+    Spark part files (the layout an index compacted by an older engine
+    has on disk): its duplicates then sit in both layouts."""
     import pandas as pd
     import pyarrow as pa
 
@@ -433,9 +440,11 @@ def test_stream_overlap_after_compaction_drops_dups(spark, stream_source,
     assert delete_urls(spark, idx, victims) == 3
     compact_index(spark, idx, max_segments=3)
     docmap = IndexLayout(idx, "stream0").docmap
-    parts = glob.glob(os.path.join(docmap, "group=e*", "*.parquet"))
-    assert parts and all(os.path.basename(f).startswith("part-")
-                         for f in parts), "docmap not in Spark's layout"
+    names = glob.glob(os.path.join(docmap, "*", "*.parquet"))
+    assert names and all(
+        re.fullmatch(r"group=e\d+/bucket-\d{5}\.parquet",
+                     os.path.relpath(f, docmap).replace(os.sep, "/"))
+        for f in names), "compacted docmap lost its per-bucket files"
     n_before = spark.read.parquet(docmap).count()
 
     dup_half = first.slice(0, 50)
@@ -458,8 +467,19 @@ def test_stream_overlap_after_compaction_drops_dups(spark, stream_source,
     assert dm.select("url").distinct().count() == n_before + 50
     assert dm.filter(dm.url.startswith("https://new.example/")).count() == 50
 
-    # Both layouts at once: duplicates of a compacted epoch (part files)
-    # and of the epoch just ingested (per-bucket files), plus new urls.
+    # Both layouts at once: duplicates of an epoch whose docmap group is
+    # Spark part files and of the epoch just ingested (per-bucket
+    # files), plus new urls.
+    dup_urls = set(first.column("url").to_pylist()[50:55])
+    group = next(
+        g for g in sorted(glob.glob(os.path.join(docmap, "group=e*")))
+        if dup_urls <= set(pq.read_table(g).column("url").to_pylist()))
+    spark.read.parquet(group).repartition(2).write.parquet(
+        str(tmp_path / "parts"))
+    shutil.rmtree(group)
+    shutil.move(str(tmp_path / "parts"), group)
+    assert {os.path.basename(f).split("-")[0]
+            for f in glob.glob(os.path.join(group, "*.parquet"))} == {"part"}
     mixed = new_pdf.head(10).copy()
     mixed["url"] = (
         first.column("url").to_pylist()[50:55]
@@ -483,6 +503,16 @@ def test_stream_overlap_after_compaction_drops_dups(spark, stream_source,
     assert dm.select("url").distinct().count() == n_before + 55
 
 
+def _job_ids(spark) -> set[int]:
+    """Ids of every Spark job the application status store knows, of
+    every thread (the streamed micro-batches run on the streaming
+    thread, so a job group set here would not label their jobs)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    seq = sc._jsc.sc().statusStore().jobsList(None)
+    return {seq.apply(i).jobId() for i in range(seq.size())}
+
+
 # Spark jobs of one streamed epoch that runs with a prior epoch present,
 # as measured: the micro-batch's isEmpty probe, and the epoch's one
 # segment job (its bucket shuffle's map stage and the write under
@@ -494,24 +524,40 @@ _STREAM_EPOCH_JOBS = 4
 
 def test_stream_epoch_spark_jobs(spark, stream_source, tmp_path):
     """One epoch of stream_ingest_once, counted from the application
-    status store (the micro-batch runs on the streaming thread, so a job
-    group set here would not label its jobs)."""
+    status store."""
     src = _copy_source(stream_source, tmp_path / "jobs_src", n_files=2)
     idx = str(tmp_path / "jobs_idx")
     assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 2
-    import shutil
-
     shutil.copy(sorted(glob.glob(os.path.join(stream_source,
                                               "*.parquet")))[2], src)
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-
-    def job_ids():
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        seq = store.jobsList(None)
-        return {seq.apply(i).jobId() for i in range(seq.size())}
-
-    before = job_ids()
+    before = _job_ids(spark)
     assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 1
-    jobs = job_ids() - before
+    jobs = _job_ids(spark) - before
     assert len(jobs) <= _STREAM_EPOCH_JOBS, sorted(jobs)
+
+
+# Spark jobs of one compact_index with tombstones, as measured (7): the
+# purge's one job over the level-0 and docmap file list, then the
+# merge's level-0 schema read, its placement stats collect (two stages)
+# and its write (three stages). The bucket count comes from level-0
+# footers and the sidecar scan runs on the driver. The two Spark purge
+# passes and the max-bucket aggregate took 13.
+_COMPACT_JOBS = 7
+
+
+def test_compact_spark_jobs(spark, stream_source, tmp_path):
+    """One compaction that purges tombstones from a 3-epoch streamed
+    index, counted from the application status store."""
+    from escp_spark.streaming import compact_index, delete_urls
+
+    src = _copy_source(stream_source, tmp_path / "compact_jobs_src",
+                       n_files=3)
+    idx = str(tmp_path / "compact_jobs_idx")
+    assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 3
+    finalize_streamed_index(spark, idx, max_segments=3)
+    victims = sorted({r["doc_url"] for r in search_topk(idx, QUERIES)})[:3]
+    assert delete_urls(spark, idx, victims) == 3
+    before = _job_ids(spark)
+    compact_index(spark, idx)
+    jobs = _job_ids(spark) - before
+    assert len(jobs) <= _COMPACT_JOBS, sorted(jobs)
