@@ -23,11 +23,12 @@ publish — sources/tables.py):
    doc_id; the old doc_id stays tombstoned.
 4. ``compact_index`` PHYSICALLY purges into new directories, in ONE
    Spark job over the level-0 and docmap file list (``purge_level0``):
-   each task streams its files row group by row group with pyarrow. A
-   file whose footer doc-id range holds no tombstone is copied byte for
-   byte; in any other file only the blocks whose [doc_id_lo,
-   doc_id_hi] holds a tombstone are decoded, filtered and re-encoded,
-   and the docmap drops its tombstoned rows. Every file keeps its
+   each task streams its files row group by row group with pyarrow
+   into new files. Only the row groups whose footer doc-id range holds
+   a tombstone are filtered: in level-0 only the blocks whose
+   [doc_id_lo, doc_id_hi] holds one are decoded, filtered and
+   re-encoded, and the docmap drops its tombstoned rows. Every file
+   keeps its
    relative path (a docmap keeps its ``group=eN/bucket-NNNNN.parquet``
    files). Stats are recomputed from the purged postings, and one
    publish names the purged level-0, docmap and postings and no
@@ -38,8 +39,9 @@ publish — sources/tables.py):
 Scale shape: tombstones are explicit operator actions — driver-sized by
 nature (each one was itself a driver call), so they travel in the purge
 tasks' closure. The purge is one task per slice of files, balanced by
-bytes, with no shuffle and no Spark parquet writer: untouched files
-cost a copy, and decoding is O(deleted docs' blocks), not O(index).
+bytes, with no shuffle and no Spark parquet writer: untouched row
+groups are read and written back as they are, and decoding is
+O(deleted docs' blocks), not O(index).
 """
 
 from __future__ import annotations
@@ -171,15 +173,13 @@ def _holds_tombstone(lo, hi, tombstones: np.ndarray) -> np.ndarray:
 def _rewrite_file(src: str, dst: str, lo_col: str, hi_col: str,
                   tombstones: np.ndarray, purge_rows, **write_opts) -> bool:
     """Write ``src`` minus its tombstoned rows to ``dst``; returns whether
-    it had to be rewritten. A file whose row groups' [min(lo_col),
-    max(hi_col)] footer ranges hold no tombstone is copied byte for
-    byte; otherwise each row group is read and passed through
-    ``purge_rows(table, tombstones)`` when its own range holds one, and
+    some row group's [min(lo_col), max(hi_col)] footer range held a
+    tombstone. Each row group is read, passed through
+    ``purge_rows(table, tombstones)`` when its range holds one, and
     written as one row group (an emptied one is left out). The file
     appears under ``dst`` by rename from a hidden temp name, so a
     retried task rewrites the same bytes and no reader lists a partial
     file."""
-    import shutil
     import uuid
 
     import pyarrow.parquet as pq
@@ -195,19 +195,15 @@ def _rewrite_file(src: str, dst: str, lo_col: str, hi_col: str,
                                   tombstones))
             for i in range(md.num_row_groups)
         ]
-        rewrite = any(hit)
-        if rewrite:
-            with pq.ParquetWriter(tmp, pf.schema_arrow, **write_opts) as w:
-                for i, h in enumerate(hit):
-                    t = pf.read_row_group(i)
-                    if h:
-                        t = purge_rows(t, tombstones)
-                    if t.num_rows:
-                        w.write_table(t, row_group_size=t.num_rows)
-        else:
-            shutil.copyfile(src, tmp)
+        with pq.ParquetWriter(tmp, pf.schema_arrow, **write_opts) as w:
+            for i, h in enumerate(hit):
+                t = pf.read_row_group(i)
+                if h:
+                    t = purge_rows(t, tombstones)
+                if t.num_rows:
+                    w.write_table(t, row_group_size=t.num_rows)
     os.replace(tmp, dst)
-    return rewrite
+    return any(hit)
 
 
 def _live_docmap_rows(t, tombstones: np.ndarray):
@@ -217,15 +213,20 @@ def _live_docmap_rows(t, tombstones: np.ndarray):
                                        tombstones)))
 
 
-def purge_docmap(src: str, dst: str, tombstones: np.ndarray) -> bool:
-    """One docmap file without its tombstoned rows: ``src`` copied to
-    ``dst`` when its doc-id range holds no tombstone, else rewritten
-    with each affected row group filtered by ``live_mask`` (rows stay
-    url-sorted, so the ingest's url-stat pruning still holds). Returns
-    whether it was rewritten. Run by ``purge_level0``'s tasks."""
+def _purge_docmap_file(src: str, dst: str, tombstones: np.ndarray) -> bool:
+    """One docmap file without its tombstoned rows: ``src`` rewritten to
+    ``dst`` with each affected row group filtered by ``live_mask`` (rows
+    stay url-sorted, so the ingest's url-stat pruning still holds).
+    Returns whether some row group held a tombstone."""
     return _rewrite_file(src, dst, "doc_id", "doc_id", tombstones,
                          _live_docmap_rows, use_dictionary=["bucket"],
                          **_REWRITE_OPTS)
+
+
+# The public name of the per-file docmap purge. ``purge_level0``'s tasks
+# call the private names, so a driver-side wrapper put on this attribute
+# is never pickled into a task.
+purge_docmap = _purge_docmap_file
 
 
 def _live_blocks(t, tombstones: np.ndarray):
@@ -275,7 +276,8 @@ def _live_blocks(t, tombstones: np.ndarray):
 
 def _purge_level0_file(src: str, dst: str, tombstones: np.ndarray) -> bool:
     """One level-0 file without its tombstoned postings (``_live_blocks``
-    per affected row group); returns whether it was rewritten."""
+    per affected row group); returns whether some row group held a
+    tombstone."""
     return _rewrite_file(src, dst, "doc_id_lo", "doc_id_hi", tombstones,
                          _live_blocks, **_REWRITE_OPTS)
 
@@ -304,10 +306,8 @@ def purge_level0(spark: SparkSession, layout: IndexLayout,
     a shuffle: ``spark.range(n, numPartitions=n)``, one task per slice
     of files balanced by bytes over ``defaultParallelism``. Each task
     streams its files row group by row group with pyarrow
-    (``_purge_level0_file``, ``purge_docmap``) into the same relative
-    path under the new directory: a file whose footer doc-id range
-    holds no tombstone is copied byte for byte, any other is rewritten.
-    The tombstones travel in the task closure (no broadcast file), and
+    (``_purge_level0_file``, ``_purge_docmap_file``) into the same
+    relative path under the new directory. The tombstones travel in the task closure (no broadcast file), and
     the driver makes every output directory before the job."""
     from ..sidecar import _list_parquet_files
 
@@ -328,16 +328,16 @@ def purge_level0(spark: SparkSession, layout: IndexLayout,
 
         for batch in batches:
             for i in batch.column("id").to_numpy():
-                rewritten = sum(
-                    (purge_docmap if kind == "docmap" else _purge_level0_file)(
-                        src, dst, tombstones)
+                purged = sum(
+                    (_purge_docmap_file if kind == "docmap"
+                     else _purge_level0_file)(src, dst, tombstones)
                     for kind, src, dst, _ in slices[i]
                 )
                 yield pa.RecordBatch.from_pydict(
-                    {"rewritten": pa.array([rewritten], pa.int64())})
+                    {"purged": pa.array([purged], pa.int64())})
 
     if slices:
         n = len(slices)
         spark.range(n, numPartitions=n).mapInArrow(
-            run, "rewritten long").collect()
+            run, "purged long").collect()
     return outs
