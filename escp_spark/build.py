@@ -71,6 +71,7 @@ from .functions.fmt import iec_format
 from .codec import (
     BLOCK_SIZE,
     CODEC_VERSION,
+    binary_stream,
     decode_blocks_bulk,
     encode_posting_frame,
 )
@@ -94,6 +95,20 @@ MERGE_BLOCK_SHIFT = 20  # merged block_id = bucket << 20 | level0 block_id
 # negligible while a hot term's posting list spans many row groups in
 # docid order at scale.
 POSTINGS_ROW_GROUP_BYTES = 8 << 20
+
+
+def postings_write_options() -> dict[str, str]:
+    """Spark parquet-writer options of every servable postings write:
+    the merge's, and a streamed epoch's level-0, which a finalize
+    publishes as it is. parquet-mr only checks the accumulated size
+    every N rows (default 100), so the interval scales with the target
+    and small row groups (tests, fine-grained indexes) are honored."""
+    return {
+        "parquet.block.size": str(POSTINGS_ROW_GROUP_BYTES),
+        "parquet.page.size.row.check.min":
+            str(max(4, min(100, POSTINGS_ROW_GROUP_BYTES // (64 * 1024)))),
+    }
+
 
 # The merge's hot-term cut in level-0 blocks (rationale in merge_segments).
 _HOT_TERM_BLOCKS = 4096
@@ -587,22 +602,6 @@ def _seg_shift(n_buckets: int, max_segments: int) -> int:
     return shift
 
 
-def binary_offsets_and_data(arr):
-    """The offsets (numpy) and values buffer (memoryview) of an Arrow
-    (large_)binary array: the values of rows [a, b) are the one
-    concatenated stream ``data[offs[a]:offs[b]]``, which the codec's
-    bulk decode takes as is — no per-block bytes objects."""
-    import pyarrow as pa
-
-    bufs = arr.buffers()
-    wide = pa.types.is_large_binary(arr.type)
-    offs = np.frombuffer(
-        bufs[1], dtype=np.int64 if wide else np.int32,
-        count=len(arr) + 1, offset=arr.offset * (8 if wide else 4),
-    )
-    return offs, memoryview(bufs[2])
-
-
 def _consolidate_tails_arrow(batches):
     """Re-block one partition's tail fragments — Arrow-native mapInArrow
     kernel (zero per-row Python objects; the earlier applyInPandas
@@ -656,8 +655,7 @@ def _consolidate_tails_arrow(batches):
         return
     sub = tbl.take(pa.array(midx)).combine_chunks()
     ns = sub.column("n").to_numpy()
-    payloads = [binary_offsets_and_data(sub.column(c).chunk(0))
-                for c in ("doc_ids", "tfs", "dls")]
+    payloads = [sub.column(c).chunk(0) for c in ("doc_ids", "tfs", "dls")]
     sub_grp = grp_id[midx]  # nondecreasing
     bump = sub_grp[1:] != sub_grp[:-1]
     codes = np.cumsum(np.concatenate(([0], bump.astype(np.int64))))
@@ -684,8 +682,7 @@ def _consolidate_tails_arrow(batches):
         gsel = np.flatnonzero(chunk_of_group == c)
         r0, r1 = g_bounds[gsel[0]], g_bounds[gsel[-1] + 1]
         ids, tfs, dls, blk = decode_blocks_bulk(
-            *(data[offs[r0]:offs[r1]] for offs, data in payloads),
-            ns[r0:r1],
+            *(binary_stream(a, r0, r1) for a in payloads), ns[r0:r1],
         )
         enc = encode_posting_frame(
             (codes[r0:r1] - codes[r0])[blk], ids, tfs, dls
@@ -720,47 +717,54 @@ def _consolidate_tails_arrow(batches):
     )
 
 
-# Vocabulary size up to which the merge-placement stats are computed on
-# the driver in pandas (one Spark job — the limit-collect — instead of
-# the persist + three jobs of the distributed path). 1M terms ≈ 30 MB:
-# trivially driver-sized, and most corpora below Common-Crawl scale fit.
+# Vocabulary size up to which the per-term level-0 stats are collected
+# and used on the driver in pandas (one Spark job — the limit-collect —
+# instead of the persist + three jobs of the distributed path). 1M terms
+# ≈ 30 MB: trivially driver-sized, and most corpora below Common-Crawl
+# scale fit.
 _PLACEMENT_DRIVER_MAX_TERMS = 1_000_000
 
 
-def _write_dictionary(spark, layout: IndexLayout, stats: DataFrame | None,
-                      driver_pdf: pd.DataFrame | None = None
-                      ) -> tuple[str, int]:
-    """Write the term dictionary (term, df, cf) from the LEVEL-0 block
-    stats into a new directory; return it and Σcf (the corpus token
-    count, for avgdl).
+def _write_dictionary(spark, layout: IndexLayout, stats: DataFrame
+                      ) -> tuple[str, int, pd.DataFrame | DataFrame]:
+    """Write the term dictionary (term, df, cf) from the LEVEL-0 per-term
+    stats ``stats`` (term, df = Σn, cf = Σsum_tf, and whatever else the
+    caller aggregated in the same pass) into a new directory. Returns
+    the directory, Σcf (the corpus token count, for avgdl) and the stats
+    for the caller's further use.
 
-    df = Σn and cf = Σsum_tf per term are invariant under the merge's
-    tail consolidation (re-encoding preserves every posting), so the
-    dictionary derives from the same single aggregation pass that drives
-    merge placement — the old finalize re-scanned the PUBLISHED postings
-    for it, a second full metadata pass per build (VERDICT r04 #4).
+    df and cf are invariant under the merge's tail consolidation
+    (re-encoding preserves every posting) and under publishing level-0
+    as it is, so the merge and the streamed finalize both derive the
+    dictionary from the level-0 block stats — never by re-scanning
+    published postings (VERDICT r04 #4).
 
-    ``driver_pdf`` (term/df/cf, ≤ _PLACEMENT_DRIVER_MAX_TERMS rows) is
-    the already-collected fast path: one globally term-sorted file
-    written with pyarrow, zero extra Spark jobs. Otherwise ``stats``
-    (ideally persisted by the caller) is written distributed, term-sorted
-    within partitions so dictionary row-group footer stats stay
-    seek-friendly for the serving path's filtered scans."""
+    This is the one driver/distributed fork of the stats pass. Up to
+    ``_PLACEMENT_DRIVER_MAX_TERMS`` terms: one limit-collect job
+    (limit(N+1) returning ≤ N rows proves the whole vocabulary was
+    seen), one globally term-sorted file written with pyarrow, and the
+    stats come back as a pandas frame. Above it, ``stats`` is persisted
+    and written distributed, term-sorted within partitions so the
+    dictionary's row-group footer stats stay seek-friendly for the
+    serving path's filtered scans; the persisted DataFrame comes back
+    and the caller unpersists it."""
     out = layout.artifact("dictionary")
-    if driver_pdf is not None:
+    rows = stats.limit(_PLACEMENT_DRIVER_MAX_TERMS + 1).collect()
+    if len(rows) <= _PLACEMENT_DRIVER_MAX_TERMS:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        pdf = driver_pdf.sort_values("term").reset_index(drop=True)
+        pdf = pd.DataFrame(rows, columns=stats.columns)
         tbl = pa.table({
             "term": pa.array(pdf["term"], pa.string()),
             "df": pa.array(pdf["df"].astype("int64"), pa.int64()),
             "cf": pa.array(pdf["cf"].astype("int64"), pa.int64()),
-        })
+        }).sort_by("term")
         os.makedirs(out)
         pq.write_table(tbl, os.path.join(out, "part-0.parquet"),
                        row_group_size=1 << 20)
-        return out, int(pdf["cf"].sum()) if len(pdf) else 0
+        return out, int(pdf["cf"].sum()) if len(pdf) else 0, pdf
+    stats = stats.persist()
     (
         stats.select(
             "term", F.col("df").cast("long").alias("df"),
@@ -769,7 +773,7 @@ def _write_dictionary(spark, layout: IndexLayout, stats: DataFrame | None,
         .sortWithinPartitions("term")
         .write.parquet(out)
     )
-    return out, int(stats.agg(F.sum("cf")).collect()[0][0] or 0)
+    return out, int(stats.agg(F.sum("cf")).collect()[0][0] or 0), stats
 
 
 def _bounds_pandas(cold: pd.DataFrame, merge_parallelism: int) -> list[str]:
@@ -859,8 +863,10 @@ def merge_segments(
     the two directories, the docid window granularity the serving path
     must use (recorded in the manifest) and Σcf for avgdl. The term
     dictionary is written HERE, fused into the same level-0 stats
-    aggregation that drives placement — finalize no longer re-scans the
-    published postings for it (VERDICT r04 #4).
+    aggregation that drives placement (``_write_dictionary``). This is
+    the engine's only postings rewrite: ``build_index`` and
+    ``compact_index`` call it, and a streamed finalize publishes its
+    level-0 as it is.
 
     Two phases, mirroring Lucene's merge-then-compact:
 
@@ -951,40 +957,27 @@ def merge_segments(
     # per query (measured 5-8× worse serving p50). Range boundaries
     # come from cumulative block counts over the term-sorted stats.
     #
-    # Small-vocab fast path (≤ _PLACEMENT_DRIVER_MAX_TERMS): ONE
-    # limit-collect job, hot list + bounds in pandas on the driver —
-    # the fixed cost of the distributed derivations (~4 extra jobs)
-    # was a measurable slice of the sf0.1 merge stage. limit(N+1)
-    # returning ≤ N rows proves we saw the whole vocabulary; above
-    # the cap, the distributed two-pass prefix sum (_cold_term_bounds
-    # — byte-identical, tested) handles 10^9+-term vocabularies with
-    # no single-partition step.
+    # The stats pass itself is _write_dictionary's driver/distributed
+    # fork: a small vocabulary comes back collected, and the hot list
+    # and bounds are derived in pandas on the driver — the fixed cost of
+    # the distributed derivations (~4 extra jobs) was a measurable slice
+    # of the sf0.1 merge stage. Above the cap, the distributed two-pass
+    # prefix sum (_cold_term_bounds — byte-identical, tested) handles
+    # 10^9+-term vocabularies with no single-partition step.
+    with _detail("merge_dict"):
+        dictionary, total_tokens, stats = _write_dictionary(
+            spark, layout, stats)
     with _detail("merge_placement"):
-        rows = stats.limit(_PLACEMENT_DRIVER_MAX_TERMS + 1).collect()
-    if len(rows) <= _PLACEMENT_DRIVER_MAX_TERMS:
-        with _detail("merge_placement"):
-            spdf = pd.DataFrame(
-                {"term": [r.term for r in rows],
-                 "nblocks": [r.nblocks for r in rows],
-                 "df": [r.df for r in rows],
-                 "cf": [r.cf for r in rows]}
-            )
-            hot_pdf = (
-                spdf[spdf["nblocks"] > _HOT_TERM_BLOCKS]
+        if isinstance(stats, pd.DataFrame):
+            hot_terms = (
+                stats[stats["nblocks"] > _HOT_TERM_BLOCKS]
                 .sort_values(["nblocks", "term"], ascending=[False, True])
-                .head(n_top)
+                .head(n_top)["term"].tolist()
             )
-            hot_terms = hot_pdf["term"].tolist()
             bounds = _bounds_pandas(
-                spdf[~spdf["term"].isin(hot_terms)], merge_parallelism
+                stats[~stats["term"].isin(hot_terms)], merge_parallelism
             )
-        with _detail("merge_dict"):
-            dictionary, total_tokens = _write_dictionary(
-                spark, layout, None, driver_pdf=spdf
-            )
-    else:
-        stats = stats.persist()
-        with _detail("merge_placement"):
+        else:
             hot_terms = [
                 r.term
                 for r in stats.filter(F.col("nblocks") > _HOT_TERM_BLOCKS)
@@ -997,9 +990,7 @@ def merge_segments(
                 if hot_terms else stats
             )
             bounds = _cold_term_bounds(cold, merge_parallelism)
-        with _detail("merge_dict"):
-            dictionary, total_tokens = _write_dictionary(spark, layout, stats)
-        stats.unpersist()
+            stats.unpersist()
     pos = F.shiftright(F.col("doc_id_lo"), DOC_BUCKET_SHIFT)
     barr = (
         F.array(*[F.lit(b) for b in bounds]) if bounds else F.array(F.lit(""))
@@ -1021,15 +1012,7 @@ def merge_segments(
     postings = layout.artifact("postings")
     with _detail("merge_write"):
         (
-            merged.write
-            .option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES))
-            # parquet-mr only checks the accumulated size every N rows
-            # (default 100) — scale the interval with the target so small
-            # row groups (tests, fine-grained indexes) are actually honored.
-            .option(
-                "parquet.page.size.row.check.min",
-                str(max(4, min(100, POSTINGS_ROW_GROUP_BYTES // (64 * 1024)))),
-            )
+            merged.write.options(**postings_write_options())
             .partitionBy("segment")
             .parquet(postings)
         )
@@ -1039,6 +1022,48 @@ def merge_segments(
         "prune_shift": DOC_BUCKET_SHIFT + seg_shift,
         "total_tokens": total_tokens,
     }
+
+
+def _stats_and_publish(spark: SparkSession, layout: IndexLayout,
+                       paths: dict, max_segments: int,
+                       consolidation_shift: int, total_tokens: int,
+                       identity: dict | None = None) -> dict:
+    """Write the rg_stats sidecar of ``paths`` and publish them with the
+    corpus stats: the one publish of every writer that changes postings
+    (``build_index``, ``finalize_streamed_index``, ``compact_index``), so
+    the manifest's fields are written here only. ``total_tokens`` (Σcf)
+    comes from ``_write_dictionary``'s level-0 stats pass, and the doc
+    count from the docmap footers (driver-side metadata, exact; no Spark
+    job). ``identity`` carries the lineage fields n_buckets,
+    input_snapshot and source_filter: a build's own, or the manifest a
+    compaction replaces (so compacting a BATCH-built index does not
+    reset them to the streaming defaults)."""
+    import pyarrow.dataset as pads
+
+    from .sidecar import write_rg_sidecar
+
+    n_docs = pads.dataset(paths["docmap"], format="parquet").count_rows()
+    paths = {**paths, "rg_stats": write_rg_sidecar(layout, paths, spark)}
+    identity = identity or {}
+    stats = {
+        "n_docs": int(n_docs),
+        "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
+        # -1 = open-ended epoch-scoped buckets (streaming).
+        "n_buckets": identity.get("n_buckets", -1),
+        "max_segments": max_segments,
+        "block_size": BLOCK_SIZE,
+        "codec_version": CODEC_VERSION,
+        "layout_version": INDEX_LAYOUT_VERSION,
+        "analyzer_version": ANALYZER_VERSION,
+        "input_snapshot": identity.get("input_snapshot", "streaming"),
+        # Blocks span at most 2^(shift-40) buckets, always within one
+        # segment (the serving path's window, query._prune_and_score).
+        "consolidation_shift": consolidation_shift,
+        "level0": layout.postings_l0,
+    }
+    if "source_filter" in identity:
+        stats["source_filter"] = identity["source_filter"]
+    return publish_manifest(layout, stats, paths)
 
 
 # --------------------------------------------------------------------------
@@ -1266,49 +1291,24 @@ def build_index(
         spark, layout, n_buckets, max_segments,
         spark.sparkContext.defaultParallelism,
     )
-    prune_shift = merged["prune_shift"]
     _mark("merge")
-
-    n_docs = int(sum(grp_counts.values()))
-    avgdl = merged["total_tokens"] / n_docs if n_docs else 0.0
-
-    # Serving-metadata sidecar: the row-group footer stats the reader's
-    # interval indexes need, scanned ONCE here instead of per reader per
-    # publish (VERDICT r04 wrong-#1; the Lucene persist-at-merge analog).
-    from .sidecar import write_rg_sidecar
 
     paths = {"postings": merged["postings"], "docmap": dm_dir,
              "dictionary": merged["dictionary"]}
-    with _detail("final_sidecar"):
-        paths["rg_stats"] = write_rg_sidecar(layout, paths, spark)
     if layout.paths.get("docmap") == dm_dir and "tombstones" in layout.paths:
         # Republishing the docmap the tombstones were resolved against:
         # its deletes still apply.
         paths["tombstones"] = layout.paths["tombstones"]
-
-    manifest = publish_manifest(
-        layout,
-        {
-            "n_docs": int(n_docs),
-            "avgdl": float(avgdl),
-            "n_buckets": n_buckets,
-            "max_segments": max_segments,
-            "block_size": BLOCK_SIZE,
-            "codec_version": CODEC_VERSION,
-            "layout_version": INDEX_LAYOUT_VERSION,
-            "analyzer_version": ANALYZER_VERSION,
-            "input_snapshot": snapshot,
-            "source_filter": source_filter,
-            # Consolidated tail blocks span up to 2^(shift-40) buckets
-            # (always within one segment); the serving path handles them
-            # as spanning blocks (query._prune_and_score step 0).
-            "consolidation_shift": prune_shift,
-            "level0": layout.postings_l0,
-        },
-        paths,
-    )
+    with _detail("final_sidecar"):  # the sidecar scan and the publish
+        manifest = _stats_and_publish(
+            spark, layout, paths, max_segments, merged["prune_shift"],
+            merged["total_tokens"],
+            identity={"n_buckets": n_buckets, "input_snapshot": snapshot,
+                      "source_filter": source_filter},
+        )
     _mark("finalize")
-    log.info("published index: %d docs, avgdl=%.2f", n_docs, avgdl)
+    log.info("published index: %d docs, avgdl=%.2f", manifest["n_docs"],
+             manifest["avgdl"])
     return manifest
 
 

@@ -232,6 +232,24 @@ def _as_stream(bufs):
     return b"".join(bufs)
 
 
+def binary_stream(arr, start: int = 0, stop: int | None = None) -> memoryview:
+    """The values of rows [start, stop) (default: all) of an Arrow
+    (large_)binary array, or of a chunked one once combined, back to
+    back in one zero-copy buffer: the concatenated stream
+    decode_blocks_bulk takes, with no per-block bytes objects."""
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    stop = len(arr) if stop is None else stop
+    _, offsets, values = arr.buffers()
+    if values is None:
+        return memoryview(b"")
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(offsets, dtype=width, count=arr.offset + len(arr) + 1)
+    return memoryview(values)[offs[arr.offset + start]:offs[arr.offset + stop]]
+
+
 def decode_blocks_bulk(id_bufs, tf_bufs, dl_bufs, ns):
     """Decode MANY blocks in one vectorized pass.
 

@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .analyzer import tokenize
-from .codec import decode_blocks_bulk
+from .codec import binary_stream, decode_blocks_bulk
 from .functions.bm25 import bm25_contrib, bm25_upper_bound, idf_lucene
 from .sources.tables import load_manifest
 
@@ -203,7 +203,8 @@ class IndexReader:
     _DM_CACHE_BYTES = 128 << 20  # docmap row groups (urls) kept per reader
 
     def __init__(self, index_dir: str, meta_cache_bytes: int = 64 << 20):
-        self._index_dir = index_dir
+        # Absolute, as the manifest's paths: file paths key the caches.
+        self._index_dir = os.path.abspath(index_dir)
         self.payload_bytes_fetched = 0
         self.payload_rowgroups_fetched = 0
         self.dm_rowgroups_touched = 0
@@ -242,12 +243,13 @@ class IndexReader:
             self._meta_cache.retain(lambda key: key[0].startswith(pre))
             self._pf = {k: v for k, v in self._pf.items() if k.startswith(pre)}
             # The decoded cache may hold other indexes' row groups: drop
-            # only this index's (its root's postings-* directories).
-            mine = os.path.join(os.path.dirname(os.path.normpath(pre)),
-                                "postings")
+            # only this index's (files under its root) outside the new
+            # postings directory. A finalize republishes the same level-0
+            # directory, so the epochs it carries stay decoded.
+            root = os.path.join(self._index_dir, "")
             self._payload_cache.retain(
                 lambda key: key[0].startswith(pre)
-                or not key[0].startswith(mine))
+                or not key[0].startswith(root))
         if changed("docmap", "rg_stats"):
             self._dm_files: list[str] | None = None
             self._dm_index = None                # (_IntervalIndex, always, rgs)
@@ -384,7 +386,9 @@ class IndexReader:
             tbl = self._open(self._pf, key[0]).read_row_group(
                 rgi, columns=META_COLS)
             terms = tbl.column("term").to_numpy(zero_copy_only=False)
-            pos = np.argsort(terms, kind="stable")  # O(n): files are term-sorted
+            # Near O(n): a merged file is term-sorted, a level-0 file
+            # holds one term-sorted run per bucket.
+            pos = np.argsort(terms, kind="stable")
             arrs = (terms[pos],
                     {c: tbl.column(c).to_numpy()[pos] for c in META_COLS[1:]},
                     pos)
@@ -452,7 +456,7 @@ class IndexReader:
                 rgi, columns=["n"] + PAYLOAD_COLS)
             ns = tbl.column("n").to_numpy()
             ids, tfs, dls, _ = decode_blocks_bulk(
-                *(_payload_stream(tbl.column(c)) for c in PAYLOAD_COLS), ns)
+                *(binary_stream(tbl.column(c)) for c in PAYLOAD_COLS), ns)
             ent = (ids.view(np.int64), _narrow(tfs), _narrow(dls),
                    np.concatenate(([0], np.cumsum(ns, dtype=np.int64))))
             self._payload_cache.put(key, ent, sum(a.nbytes for a in ent))
@@ -542,18 +546,6 @@ class IndexReader:
             for i in np.flatnonzero(ok):
                 out[int(ids[i])] = rg_urls[p[i]]
         return out
-
-
-def _payload_stream(col):
-    """A binary column's values back to back, as one buffer (the
-    concatenated stream decode_blocks_bulk takes)."""
-    arr = col.combine_chunks()
-    _, offsets, values = arr.buffers()
-    if values is None:
-        return b""
-    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    offs = np.frombuffer(offsets, dtype=width)
-    return memoryview(values)[offs[arr.offset]:offs[arr.offset + len(arr)]]
 
 
 def _narrow(a: np.ndarray) -> np.ndarray:
@@ -952,16 +944,22 @@ def search_topk_spark(spark, index_dir: str, queries: list[dict]):
         return _batch_topk(spark, reader, queries, t0)
 
 
-def _postings_scan(spark, path: str, terms: list[str]):
+def _postings_scan(spark, files: list[str], terms: list[str]):
     """The postings blocks of ``terms`` that scoring reads, one row per
     doc bucket window a block overlaps (``window`` = doc_id >>
     DOC_BUCKET_SHIFT over the block's doc-id range: a consolidated tail
-    block spans several). The term filter is parsed from one SQL string
-    — one py4j call, where ``Column.isin`` makes one per term — into the
-    same In/InSet predicate, which the parquet scan prunes row groups
-    with (plan-asserted in tests/test_plans.py). The schema is the
-    merge's, so no Spark job reads a footer to infer it."""
-    from .build import DOC_BUCKET_SHIFT, MERGED_SCHEMA
+    block spans several). ``files`` are the pinned publish's postings
+    files (``IndexReader._pfiles``), not a directory: a streamed index's
+    published level-0 directory also holds the epochs ingested since.
+    The term filter is parsed from one SQL string — one py4j call, where
+    ``Column.isin`` makes one per term — into the same In/InSet
+    predicate, which the parquet scan prunes row groups with
+    (plan-asserted in tests/test_plans.py). The read schema is given,
+    so no Spark job reads a footer to infer it, and the listing
+    threshold is raised to the file count around the read, so the files
+    are checked on the driver instead of by a listing job (Spark lists
+    more than 32 root paths with one)."""
+    from .build import DOC_BUCKET_SHIFT, _scoped_conf
 
     quoted = ",".join(
         "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -971,9 +969,14 @@ def _postings_scan(spark, path: str, terms: list[str]):
         F.shiftright(c, DOC_BUCKET_SHIFT).cast("int")
         for c in ("doc_id_lo", "doc_id_hi")
     )))
+    with _scoped_conf(spark, {
+            "spark.sql.sources.parallelPartitionDiscovery.threshold":
+                len(files)}):
+        blocks = spark.read.schema(
+            "term string, n int, doc_id_lo long, doc_id_hi long, "
+            "doc_ids binary, tfs binary, dls binary").parquet(*files)
     return (
-        spark.read.schema(MERGED_SCHEMA).parquet(path)
-        .filter(F.expr(f"term IN ({quoted})"))
+        blocks.filter(F.expr(f"term IN ({quoted})"))
         .select(window.alias("window"), "term", "n", "doc_ids", "tfs", "dls")
     )
 
@@ -985,7 +988,6 @@ def _batch_topk(spark, reader: "IndexReader", queries: list[dict],
 
     _t0 = t0
     manifest = reader.manifest
-    paths = manifest["paths"]
     n_docs, avgdl = manifest["n_docs"], manifest["avgdl"]
 
     # Driver-side query planning (tiny): terms, dfs, idf weights.
@@ -1047,7 +1049,7 @@ def _batch_topk(spark, reader: "IndexReader", queries: list[dict],
         terms_arr, q_off, q_ord, q_w, tomb, kq, kv = plan_bc.value
         win = key[0].as_py()
         ids, tfs, dls, blk = decode_blocks_bulk(
-            *(_payload_stream(tbl.column(c)) for c in PAYLOAD_COLS),
+            *(binary_stream(tbl.column(c)) for c in PAYLOAD_COLS),
             tbl.column("n").to_numpy())
         ids = ids.view(np.int64)
         t = pc.index_in(tbl.column("term"), value_set=terms_arr).to_numpy()
@@ -1088,7 +1090,7 @@ def _batch_topk(spark, reader: "IndexReader", queries: list[dict],
         k_qids, k_vals))
     try:
         survivors = (
-            _postings_scan(spark, paths["postings"], terms)
+            _postings_scan(spark, reader._pfiles, terms)
             .repartition(n_parts, "window")
             .groupBy("window")
             .applyInArrow(score_window,

@@ -19,8 +19,9 @@ directories — a parquet dataset hive-partitioned by (kind, segment), one
 row per (artifact kind, file, row group). It is written for exactly the
 files of that publish, so it is also the publish's FILE LIST: the reader
 takes its postings and docmap file lists from it and never lists a data
-directory (streamed epochs append docmap files that only the next
-publish's sidecar names).
+directory (streamed epochs append level-0 and docmap files, which a
+finalized streamed index publishes as its postings and docmap, and only
+the next publish's sidecar names them).
 
 Why sharded (round 5 shipped ONE monolithic file): at the 10^12-doc
 design point the sidecar is ~10^7 rows. A single file forces every

@@ -14,7 +14,11 @@ properties the engine depends on:
    ``delete_urls``) puts each artifact it produces — postings, docmap,
    dictionary, rg_stats sidecar, tombstone set — into a NEW uniquely
    named directory that no manifest names yet, and carries the paths of
-   the artifacts it did not change. The ``os.replace`` of
+   the artifacts it did not change. The streamed level-0 and docmap
+   directories are the exception: epochs only ADD files to them, a
+   finalize publishes them as they are (the level-0 as the postings),
+   and each publish's rg_stats sidecar names the files it serves. The
+   ``os.replace`` of
    ``_manifest.json`` is the only step that makes them visible: a crash
    anywhere before it leaves the last published index serving, untouched.
    Right after the swap the writer deletes every artifact the new
@@ -48,7 +52,10 @@ MANIFEST_NAME = "_manifest.json"
 # format). An index with an older layout is refused, not served: it has
 # to be rebuilt. 3 = one fresh directory per artifact per publish, named
 # by the manifest (`paths`), with the rg_stats sidecar as the file list.
-INDEX_LAYOUT_VERSION = 3
+# 4 = a streamed finalize publishes its level-0 directory as the
+# postings, written at the postings' row-group size; every docmap file
+# is a per-bucket ``bucket-NNNNN.parquet``.
+INDEX_LAYOUT_VERSION = 4
 
 # Root-level artifact directories: ``<kind>-<id>`` (a bare ``<kind>`` is
 # an older layout's, garbage once a current manifest is published).
@@ -77,7 +84,8 @@ class IndexLayout:
 
     index_dir/
       _manifest.json                   the one mutable file: names all below
-      postings-<id>/segment=N/         merged postings         (paths.postings)
+      postings-<id>/segment=N/         merged postings         (paths.postings
+                                       of a build or compaction)
       docmap-<id>/group=G/             docid↔url map           (paths.docmap;
                                        a bucket-NNNNN.parquet per bucket)
       dictionary-<id>/                 term → df/cf            (paths.dictionary)
@@ -91,15 +99,17 @@ class IndexLayout:
       staging/<build_id>/postings_l0[-<id>]/group=G/
                                        level-0 segments         (level0: a
                                        build's ``-<key>``, a compaction
-                                       purge's ``-<uuid>``, a stream's bare)
+                                       purge's ``-<uuid>``, a stream's bare;
+                                       paths.postings too, once a streamed
+                                       finalize published it)
       ledger/                          checkpoint ledger (append-only parquet)
 
     Attributes are resolved from the manifest published at construction:
     ``postings``/``docmap``/``dictionary`` are the published directories,
-    ``postings_l0`` the level-0 the published postings derive from.
-    Streamed epochs append their docmap and level-0 groups to those
-    directories (new files only — a publish's sidecar pins the files
-    readers see); before the first publish they go to
+    ``postings_l0`` the level-0 the published postings derive from (or
+    are). Streamed epochs append their docmap and level-0 groups to
+    those directories (new files only — a publish's sidecar pins the
+    files readers see); before the first publish they go to
     ``docmap-<build_id>`` and ``staging/<build_id>/postings_l0``.
     """
 

@@ -52,7 +52,7 @@ import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..codec import decode_blocks_bulk, encode_posting_frame
+from ..codec import binary_stream, decode_blocks_bulk, encode_posting_frame
 from ..sources.tables import IndexLayout, load_manifest, publish_manifest
 
 # Manifest keys regenerated by publish_manifest — stripped when
@@ -238,20 +238,15 @@ def _live_blocks(t, tombstones: np.ndarray):
     fully deleted block drops out."""
     import pyarrow as pa
 
-    from ..build import binary_offsets_and_data
-
     affected = _holds_tombstone(t.column("doc_id_lo").to_numpy(),
                                 t.column("doc_id_hi").to_numpy(), tombstones)
     aff_rows = np.flatnonzero(affected)
     if aff_rows.size == 0:
         return t
     aff = t.take(pa.array(aff_rows)).combine_chunks()
-    streams = []
-    for c in _PAYLOAD_COLS:
-        offs, data = binary_offsets_and_data(aff.column(c).chunk(0))
-        streams.append(data[offs[0]:offs[-1]])
-    ids, tfs, dls, blk = decode_blocks_bulk(*streams,
-                                            aff.column("n").to_numpy())
+    ids, tfs, dls, blk = decode_blocks_bulk(
+        *(binary_stream(aff.column(c).chunk(0)) for c in _PAYLOAD_COLS),
+        aff.column("n").to_numpy())
     keep = live_mask(ids, tombstones)
     # One "term" per source block → encode_posting_frame emits exactly
     # one ≤block_size output block per surviving input block, in order.

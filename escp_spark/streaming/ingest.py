@@ -24,9 +24,12 @@ Semantics:
   with soft-deletes.
 - Queries only ever see a published manifest: call
   ``finalize_streamed_index`` after (or periodically between) epochs to
-  merge + re-stat + atomically republish (D3/D5 analogs). An epoch adds
+  re-stat and atomically republish (the D3 refresh). It publishes the
+  level-0 directory itself as the postings and rewrites no posting;
+  ``compact_index`` is the force-merge (D5), through the build's
+  ``merge_segments``, the engine's only postings rewrite. An epoch adds
   files to the level-0 and docmap directories and changes none; readers
-  see the new docmap files only once a publish's sidecar lists them.
+  see the new files only once a publish's sidecar lists them.
 """
 
 from __future__ import annotations
@@ -47,12 +50,18 @@ from ..build import (
     POSTINGS_SCHEMA,
     _build_bucket_segment,
     _ledger_append,
+    _stats_and_publish,
+    _write_dictionary,
     bucket_expr,
     dedup_last_write_wins,
     drop_empty_parquet_files,
     extract_text_udf,
+    postings_write_options,
 )
-from ..sources.tables import IndexLayout, publish_manifest
+# publish_manifest is not called here (build._stats_and_publish is the
+# one publish path) but stays an attribute of this module, where the
+# benchmark's tracer wraps it.
+from ..sources.tables import IndexLayout, load_manifest, publish_manifest  # noqa: F401
 
 log = logging.getLogger("escp_spark.streaming")
 
@@ -107,8 +116,8 @@ def _load_bloom(layout: IndexLayout) -> dict | None:
         return None
     try:
         z = np.load(p)
-        # meta = m, k, n[, last epoch counted into n, its url count]
-        meta = np.append(z["meta"], [-1, 0])
+        # meta = m, k, n, last epoch counted into n, its url count
+        meta = z["meta"]
         return {"bits": z["bits"].astype(np.uint64), "m": int(meta[0]),
                 "k": int(meta[1]), "n": int(meta[2]),
                 "epoch": int(meta[3]), "epoch_n": int(meta[4])}
@@ -191,10 +200,8 @@ def _bloom_bits_for(df_with_urls: DataFrame, m: int, k: int) -> np.ndarray:
 def _prior_docmap_files(docmap_dir: str, epoch: int,
                         n_buckets: int) -> dict[int, list[str]]:
     """Per base bucket, the docmap files of OTHER epochs that can hold an
-    url of that base bucket: an epoch's own ``bucket-NNNNN.parquet`` of
-    effective bucket ``e·n_buckets + base``, and every file of a group
-    whose files are not per-bucket (Spark part files, as an index
-    compacted by an older engine still has them). The replaying epoch's
+    url of that base bucket: each epoch's ``group=eE/bucket-NNNNN.parquet``
+    of effective bucket ``E·n_buckets + base``. The replaying epoch's
     own group is left out: a restart that re-runs a crashed epoch (same
     epoch id) must not find its docs in its own partial write — it
     rewrites them instead."""
@@ -202,21 +209,15 @@ def _prior_docmap_files(docmap_dir: str, epoch: int,
     if not os.path.isdir(docmap_dir):
         return files
     for group in sorted(os.listdir(docmap_dir)):
-        gdir = os.path.join(docmap_dir, group)
-        if group == f"group=e{epoch}" or not os.path.isdir(gdir):
-            continue
         ge = re.fullmatch(r"group=e(\d+)", group)
-        for name in sorted(os.listdir(gdir)):
-            if name.startswith((".", "_")) or not name.endswith(".parquet"):
-                continue
-            path = os.path.join(gdir, name)
+        if not ge or int(ge[1]) == epoch:
+            continue
+        for name in sorted(os.listdir(os.path.join(docmap_dir, group))):
             fb = re.fullmatch(r"bucket-(\d+)\.parquet", name)
-            if ge and fb:
+            if fb:
                 base = int(fb[1]) - int(ge[1]) * n_buckets
-                files.setdefault(base, []).append(path)
-            else:
-                for b in files:
-                    files[b].append(path)
+                files.setdefault(base, []).append(
+                    os.path.join(docmap_dir, group, name))
     return files
 
 
@@ -386,9 +387,12 @@ def _ingest_epoch(batch_df: DataFrame, epoch: int, layout: IndexLayout,
         os.makedirs(d)
     seg_path = os.path.join(layout.postings_l0, f"group=e{epoch}")
     try:
+        # The level-0 is published as it is (finalize_streamed_index),
+        # so it is written with the postings' serving row-group size.
         _epoch_segments(
             prepared, dm_path, side_dir, epoch, n_buckets, probe
-        ).write.mode("overwrite").parquet(seg_path)
+        ).write.mode("overwrite").options(**postings_write_options()).parquet(
+            seg_path)
     finally:
         # Its pickle file in the driver's temp dir outlives the job
         # unless destroyed.
@@ -438,6 +442,8 @@ def stream_ingest_once(spark: SparkSession, source_dir: str, index_dir: str,
     Returns the number of epochs processed. Restart-safe: the streaming
     checkpoint skips files already ingested."""
     layout = IndexLayout(index_dir, build_id)
+    if layout.manifest is not None:
+        load_manifest(index_dir)  # refuses an older layout: rebuild it
     layout.ensure_dirs()
     checkpoint = os.path.join(layout.root, "stream_checkpoint")
 
@@ -464,112 +470,36 @@ def stream_ingest_once(spark: SparkSession, source_dir: str, index_dir: str,
     return epochs["n"]
 
 
-def _stats_and_publish(spark: SparkSession, layout: IndexLayout,
-                       paths: dict, max_segments: int,
-                       consolidation_shift: int, total_tokens: int,
-                       prior: dict | None = None) -> dict:
-    """Write the rg_stats sidecar of ``paths`` and publish them with the
-    corpus stats — shared by finalize and compaction. ``total_tokens``
-    (Σcf) comes from the dictionary write that merge_segments / finalize
-    fused into their level-0 stats pass (VERDICT r04 #4 — no separate
-    published-postings re-scan). ``prior`` (the pre-compaction manifest)
-    carries identity/lineage fields — n_buckets, input_snapshot,
-    source_filter — so compacting a BATCH-built index doesn't rewrite
-    them to streaming defaults."""
-    from ..analyzer import ANALYZER_VERSION
-    from ..codec import BLOCK_SIZE, CODEC_VERSION
-    from ..sidecar import write_rg_sidecar
-    from ..sources.tables import INDEX_LAYOUT_VERSION
-
-    # Doc count from parquet footers (driver-side metadata, exact) —
-    # not a Spark scan job per (re)publish (r07, same change as the
-    # batch build's shuffle_counts).
-    import pyarrow.dataset as pads
-
-    n_docs = pads.dataset(paths["docmap"], format="parquet").count_rows()
-    paths = {**paths, "rg_stats": write_rg_sidecar(layout, paths, spark)}
-    prior = prior or {}
-    stats = {
-        "n_docs": int(n_docs),
-        "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
-        # -1 = open-ended epoch-scoped buckets (streaming default);
-        # batch compaction carries the build's real shard count.
-        "n_buckets": prior.get("n_buckets", -1),
-        "max_segments": max_segments,
-        # Shared constants, not literals: a future codec/layout bump
-        # must propagate to streamed manifests too, or layout-gated
-        # consumers would mis-key cache validity (ADVICE r03).
-        "block_size": BLOCK_SIZE,
-        "codec_version": CODEC_VERSION,
-        "layout_version": INDEX_LAYOUT_VERSION,
-        "analyzer_version": ANALYZER_VERSION,
-        "input_snapshot": prior.get("input_snapshot", "streaming"),
-        "consolidation_shift": consolidation_shift,
-        "level0": layout.postings_l0,
-    }
-    if "source_filter" in prior:
-        stats["source_filter"] = prior["source_filter"]
-    return publish_manifest(layout, stats, paths)
-
-
 def finalize_streamed_index(spark: SparkSession, index_dir: str,
                             max_segments: int = 5,
                             build_id: str = "stream0") -> dict:
-    """Merge all streamed level-0 segments and atomically (re)publish —
-    the force-merge + refresh-restore lifecycle step (D3/D5). Cheap and
-    epoch-incremental-friendly: modulo segment placement, no tail
-    consolidation (fragmentation grows with epochs — run
-    ``compact_index`` periodically to reset it)."""
+    """Atomically (re)publish every epoch streamed so far — the cheap
+    refresh of escp's refresh/force-merge split (D3). The level-0
+    directory itself is published as the postings: its blocks are
+    written bucket-windowed and term-sorted per bucket, so they are
+    servable as they are, and the new rg_stats sidecar is the file list
+    readers pin (later epochs' files stay unseen until the next
+    publish). The dictionary is re-aggregated from the level-0 block
+    stats. No postings are rewritten: an epoch's files keep their paths
+    across finalizes, and readers keep those files' decoded row groups.
+    Per-term fragmentation (one short block per epoch bucket) grows with
+    the epochs until ``compact_index``, the force-merge, rewrites them.
+    ``max_segments`` is only recorded: it is the segment count
+    ``compact_index`` defaults to. The tombstone set (if any) carries
+    over unchanged."""
     layout = IndexLayout(index_dir, build_id)
-    # Segment assignment must not depend on a fixed bucket count (epochs
-    # keep adding effective buckets), so merge with modulo placement.
-    l0 = spark.read.parquet(layout.postings_l0)
-    merged = (
-        l0.withColumn("segment", (F.col("bucket") % max_segments).cast("int"))
-        .withColumn(
-            "block_id",
-            (F.col("bucket").cast("long") * F.lit(1 << 20)) + F.col("block_id"),
-        )
-        .sortWithinPartitions("segment", "term", "doc_id_lo")
-        .drop("bucket", "group")
-    )
-    from ..build import POSTINGS_ROW_GROUP_BYTES
-
-    postings = layout.artifact("postings")
-    (
-        merged.write
-        .option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES))
-        .partitionBy("segment")
-        .parquet(postings)
-    )
-    # Dictionary from the SAME level-0 metadata (df/cf invariant under
-    # the modulo re-layout) — not a re-scan of the published postings.
-    # Small vocabularies take merge_segments' driver fast path: one
-    # limit-collect and one pyarrow write, with no second aggregation
-    # pass for Σcf.
-    from ..build import _PLACEMENT_DRIVER_MAX_TERMS, _write_dictionary
-
-    stats = l0.groupBy("term").agg(
-        F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")
-    )
-    rows = stats.limit(_PLACEMENT_DRIVER_MAX_TERMS + 1).collect()
-    if len(rows) <= _PLACEMENT_DRIVER_MAX_TERMS:
-        dictionary, total_tokens = _write_dictionary(
-            spark, layout, None,
-            driver_pdf=pd.DataFrame(rows, columns=["term", "df", "cf"]),
-        )
-    else:
-        stats = stats.persist()
-        dictionary, total_tokens = _write_dictionary(spark, layout, stats)
+    level0 = spark.read.schema(POSTINGS_SCHEMA).parquet(layout.postings_l0)
+    dictionary, total_tokens, stats = _write_dictionary(
+        spark, layout, level0.groupBy("term").agg(
+            F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")))
+    if not isinstance(stats, pd.DataFrame):
         stats.unpersist()
-    # Modulo segment placement (open-ended epoch buckets) is not
-    # docid-contiguous, so tails stay unconsolidated and every block
-    # remains inside one effective bucket → prune window stays the bucket.
-    # The tombstone set (if any) carries over unchanged.
+    # Every level-0 block lies inside one effective bucket, so the prune
+    # window stays the bucket.
     return _stats_and_publish(
         spark, layout,
-        {**layout.paths, "postings": postings, "dictionary": dictionary,
-         "docmap": layout.docmap},
+        {**layout.paths, "postings": layout.postings_l0,
+         "dictionary": dictionary, "docmap": layout.docmap},
         max_segments, DOC_BUCKET_SHIFT, total_tokens,
     )
 
@@ -611,9 +541,11 @@ def compact_index(spark: SparkSession, index_dir: str,
     effective-bucket ranges are epoch-contiguous docid ranges, and the
     batch merge's window proof applies unchanged at prune_shift =
     DOC_BUCKET_SHIFT + seg_shift (a consolidated block never crosses a
-    segment boundary). Future epochs append NEW effective buckets;
-    finalize/compact re-derive the published layout from level-0, so
-    compaction is a pure re-layout — idempotent and repeatable.
+    segment boundary). Future epochs append NEW effective buckets to
+    the level-0 it merged (the purged one, if it purged); the next
+    finalize publishes that level-0 as it is again, and the next
+    compaction re-merges all of it, so compaction is a pure re-layout —
+    idempotent and repeatable.
 
     For a batch index it is delete-purge + force-merge over the
     original staging segments (reference anchor: per-doc delete
@@ -622,7 +554,6 @@ def compact_index(spark: SparkSession, index_dir: str,
     manifest, not reset to streaming defaults (ADVICE r04).
     ``max_segments`` defaults to the prior manifest's value."""
     from ..build import merge_segments
-    from ..sources.tables import load_manifest
     from .deletes import _resolve_build_id, load_tombstones, purge_level0
 
     prior = load_manifest(index_dir)
@@ -650,5 +581,5 @@ def compact_index(spark: SparkSession, index_dir: str,
                  dictionary=merged["dictionary"])
     return _stats_and_publish(
         spark, layout, paths, max_segments, merged["prune_shift"],
-        merged["total_tokens"], prior=prior,
+        merged["total_tokens"], identity=prior,
     )

@@ -34,15 +34,14 @@ def test_batch_postings_scan_term_filter_pushed_down(spark, built_index,
     still reaches the Parquet scan."""
     import pyspark.sql.classic.column as C
 
-    from escp_spark.query import _postings_scan
+    from escp_spark.query import IndexReader, _postings_scan
 
     index_dir, _ = built_index
     literals, real = [], C._create_column_from_literal
     monkeypatch.setattr(C, "_create_column_from_literal",
                         lambda v: literals.append(v) or real(v))
     terms = [f"t{i:05d}" for i in range(600)] + ["o'neil"]
-    df = _postings_scan(spark, load_manifest(index_dir)["paths"]["postings"],
-                        terms)
+    df = _postings_scan(spark, IndexReader(index_dir)._pfiles, terms)
     assert literals == []
     assert_pushed_filters(df, "In(term")
     assert df.filter(F.col("term") == "t00000").count() > 0

@@ -23,7 +23,6 @@ import pytest
 
 import escp_spark.build as B
 import escp_spark.sidecar as sidecar
-import escp_spark.streaming.ingest as ingest
 from escp_spark.build import SimulatedFailure, build_index
 from escp_spark.corpus import reference_queries, write_web_pages_parquet
 from escp_spark.oracle import NaiveIndex
@@ -71,15 +70,20 @@ def _assert_oracle(reader, docs: dict, deleted=frozenset()):
 
 def _assert_at_rest(idx: str):
     """The index directory holds exactly the artifacts (and level-0) the
-    manifest names."""
+    manifest names. Every named path is a root-level artifact but a
+    finalized streamed index's postings, which are its named level-0."""
     m = load_manifest(idx)
-    named = {os.path.abspath(p) for p in m["paths"].values()}
-    assert all(os.path.isdir(p) for p in named)
+    root = os.path.abspath(idx)
+    named = {k: os.path.abspath(p) for k, p in m["paths"].items()}
+    assert all(os.path.isdir(p) for p in named.values())
     artifacts = {
-        os.path.join(os.path.abspath(idx), e) for e in os.listdir(idx)
+        os.path.join(root, e) for e in os.listdir(idx)
         if re.match(r"^(postings|docmap|dictionary|rg_stats|tombstones)", e)
     }
-    assert artifacts == named
+    assert artifacts == {p for p in named.values()
+                         if os.path.dirname(p) == root}
+    elsewhere = {k: p for k, p in named.items() if os.path.dirname(p) != root}
+    assert elsewhere in ({}, {"postings": os.path.abspath(m["level0"])})
     staging = os.path.join(idx, "staging", m["build_id"])
     level0 = {os.path.join(os.path.abspath(staging), e)
               for e in os.listdir(staging) if e.startswith("postings_l0")}
@@ -223,7 +227,7 @@ def test_streamed_writers_crash_before_publish(spark, stream_source,
 
     _stream_src(stream_source, src, 3)
     stream_ingest_once(spark, src, idx, _schema(), n_buckets=4)
-    monkeypatch.setattr(ingest, "publish_manifest", _raise)
+    monkeypatch.setattr(B, "publish_manifest", _raise)
     with pytest.raises(Crash):
         finalize_streamed_index(spark, idx, max_segments=3)
     monkeypatch.undo()
@@ -239,7 +243,7 @@ def test_streamed_writers_crash_before_publish(spark, stream_source,
     compact_index(spark, clean)
     # Killed at its publish, and killed after the purge job, before the
     # merge: the purged level-0 and docmap directories are orphans.
-    for owner, name in ((ingest, "publish_manifest"), (B, "merge_segments")):
+    for owner, name in ((B, "publish_manifest"), (B, "merge_segments")):
         monkeypatch.setattr(owner, name, _raise)
         with pytest.raises(Crash):
             compact_index(spark, idx)
@@ -330,4 +334,72 @@ def test_warm_reader_stays_warm_across_delete(spark, old_index, tmp_path):
     assert {(r["query_id"], r["doc_url"]) for r in after} == {
         (r["query_id"], r["doc_url"]) for r in first
         if r["doc_url"] not in victims}
+    _assert_at_rest(idx)
+
+
+def test_unfinalized_ingest_serves_last_publish(spark, stream_source,
+                                                tmp_path, monkeypatch):
+    """An ingested epoch adds files to the published level-0 directory,
+    which a finalized streamed index serves as its postings. Until the
+    next finalize both query paths read only the files the pinned
+    sidecar lists: serving and a forced-distributed batch equal the
+    last publish's results."""
+    import escp_spark.query as Q
+    from escp_spark.query import search_topk_spark
+
+    src = _stream_src(stream_source, str(tmp_path / "src"), 2)
+    idx = str(tmp_path / "idx")
+    stream_ingest_once(spark, src, idx, _schema(), n_buckets=4)
+    finalize_streamed_index(spark, idx, max_segments=3)
+    monkeypatch.setattr(Q, "_BIG_MATCHED_POSTINGS", -1)
+    want = [(r["query_id"], r["rank"], r["doc_url"], r["score"])
+            for r in search_topk(idx, QUERIES)]
+    assert [tuple(r) for r in search_topk_spark(spark, idx, QUERIES)
+            .collect()] == want
+
+    _stream_src(stream_source, src, 3)
+    stream_ingest_once(spark, src, idx, _schema(), n_buckets=4)
+    level0 = load_manifest(idx)["paths"]["postings"]
+    published = set(IndexReader(idx)._pfiles)
+    assert set(glob.glob(os.path.join(level0, "*", "*.parquet"))) > published
+    assert [(r["query_id"], r["rank"], r["doc_url"], r["score"])
+            for r in search_topk(idx, QUERIES)] == want
+    Q._batch_reader_cache.clear()
+    assert [tuple(r) for r in search_topk_spark(spark, idx, QUERIES)
+            .collect()] == want
+
+
+def test_decoded_rowgroups_follow_the_published_postings(
+        spark, stream_source, tmp_path):
+    """finalize → delete → compact → finalize with one warm reader: after
+    every reload the process-wide decoded cache holds no row group of
+    this index outside the postings directory the manifest names."""
+    import escp_spark.query as Q
+
+    src = _stream_src(stream_source, str(tmp_path / "src"), 2)
+    idx = str(tmp_path / "idx")
+    root = os.path.join(os.path.abspath(idx), "")
+
+    def assert_cache_follows():
+        search_topk(None, QUERIES, reader=reader)
+        postings = os.path.join(
+            os.path.abspath(load_manifest(idx)["paths"]["postings"]), "")
+        mine = [k[0] for k in Q._decoded_payloads._d if k[0].startswith(root)]
+        assert mine and all(p.startswith(postings) for p in mine)
+
+    stream_ingest_once(spark, src, idx, _schema(), n_buckets=4)
+    finalize_streamed_index(spark, idx, max_segments=3)
+    reader = IndexReader(idx)
+    assert_cache_follows()
+    victims = sorted({r["doc_url"]
+                      for r in search_topk(None, QUERIES, reader=reader)})[:3]
+    delete_urls(spark, idx, victims)
+    compact_index(spark, idx)
+    assert_cache_follows()
+    _stream_src(stream_source, src, 3)
+    stream_ingest_once(spark, src, idx, _schema(), n_buckets=4)
+    finalize_streamed_index(spark, idx, max_segments=3)
+    assert_cache_follows()
+    live = {u: t for u, t in _docs(src).items() if u not in victims}
+    _assert_oracle(reader, live)
     _assert_at_rest(idx)

@@ -134,10 +134,13 @@ def test_stream_compaction_consolidates_and_preserves_results(
     ]
     before = [(r["query_id"], r["rank"], r["doc_url"], round(r["score"], 9))
               for r in search_topk(idx, queries)]
+    # The finalized postings are the level-0 (no segment column): short
+    # blocks of one term in several epoch buckets.
     layout = IndexLayout(idx, "stream0")
+    assert layout.postings == load_manifest(idx)["level0"]
     p = spark.read.parquet(layout.postings)
     frag_before = (
-        p.filter(F.col("n") < BLOCK_SIZE).groupBy("segment", "term")
+        p.filter(F.col("n") < BLOCK_SIZE).groupBy("term")
         .count().filter(F.col("count") > 1).count()
     )
     assert frag_before > 0, "corpus too small to fragment — weak test"
@@ -420,9 +423,8 @@ def test_stream_overlap_after_compaction_drops_dups(spark, stream_source,
     """A compaction that purged tombstones keeps the docmap's per-bucket
     ``group=eN/bucket-NNNNN.parquet`` files. A later epoch of 50
     duplicate and 50 new urls drops exactly the duplicates. So does the
-    next one, after one earlier epoch's docmap group is rewritten as
-    Spark part files (the layout an index compacted by an older engine
-    has on disk): its duplicates then sit in both layouts."""
+    next one, whose duplicates sit in a compacted epoch's docmap group
+    and in the epoch just ingested."""
     import pandas as pd
     import pyarrow as pa
 
@@ -467,19 +469,8 @@ def test_stream_overlap_after_compaction_drops_dups(spark, stream_source,
     assert dm.select("url").distinct().count() == n_before + 50
     assert dm.filter(dm.url.startswith("https://new.example/")).count() == 50
 
-    # Both layouts at once: duplicates of an epoch whose docmap group is
-    # Spark part files and of the epoch just ingested (per-bucket
-    # files), plus new urls.
-    dup_urls = set(first.column("url").to_pylist()[50:55])
-    group = next(
-        g for g in sorted(glob.glob(os.path.join(docmap, "group=e*")))
-        if dup_urls <= set(pq.read_table(g).column("url").to_pylist()))
-    spark.read.parquet(group).repartition(2).write.parquet(
-        str(tmp_path / "parts"))
-    shutil.rmtree(group)
-    shutil.move(str(tmp_path / "parts"), group)
-    assert {os.path.basename(f).split("-")[0]
-            for f in glob.glob(os.path.join(group, "*.parquet"))} == {"part"}
+    # Duplicates of a compacted epoch and of the epoch just ingested,
+    # plus new urls.
     mixed = new_pdf.head(10).copy()
     mixed["url"] = (
         first.column("url").to_pylist()[50:55]
@@ -495,12 +486,69 @@ def test_stream_overlap_after_compaction_drops_dups(spark, stream_source,
     assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 1
     st = ing.last_dedup_stats
     assert st["maybe_hits"] >= 10
-    opened = {os.path.basename(f).split("-")[0]
-              for f in st["docmap_files_opened"]}
-    assert opened == {"part", "bucket"}, st["docmap_files_opened"]
     dm = spark.read.parquet(IndexLayout(idx, "stream0").docmap)
     assert dm.count() == n_before + 55
     assert dm.select("url").distinct().count() == n_before + 55
+
+
+def test_stream_ingest_refuses_older_layout(spark, tmp_path):
+    """Ingesting into an index published under an older layout raises
+    the readers' rebuild error before any epoch runs."""
+    import json
+
+    from escp_spark.sources.tables import INDEX_LAYOUT_VERSION
+
+    idx = tmp_path / "old_idx"
+    (idx / "rg_stats-x").mkdir(parents=True)
+    (idx / "_manifest.json").write_text(json.dumps({
+        "build_id": "stream0", "status": "published",
+        "layout_version": INDEX_LAYOUT_VERSION - 1,
+        "paths": {"rg_stats": str(idx / "rg_stats-x")},
+    }))
+    with pytest.raises(RuntimeError, match="rebuild"):
+        stream_ingest_once(spark, str(tmp_path / "nowhere"), str(idx),
+                           _schema(), n_buckets=4)
+    assert not os.path.exists(idx / "stream_checkpoint")
+
+
+def test_finalize_publishes_level0_in_place(spark, stream_source, tmp_path):
+    """finalize_streamed_index publishes the level-0 directory itself
+    and rewrites no posting: after a finalize of three epochs the
+    earlier epochs' published files keep their paths and mtimes, and
+    the new files are the third epoch's. A warm reader that re-runs its
+    queries fetches payload row groups only from those new files."""
+    import escp_spark.query as Q
+    from escp_spark.query import IndexReader
+
+    src = _copy_source(stream_source, tmp_path / "l0_src", n_files=2)
+    idx = str(tmp_path / "l0_idx")
+    assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 2
+    m = finalize_streamed_index(spark, idx, max_segments=3)
+    assert m["paths"]["postings"] == m["level0"]
+    assert not [e for e in os.listdir(idx) if e.startswith("postings")]
+    # k above the corpus size: no block is pruned, so a re-run reads
+    # every row group of the query terms that it has not decoded yet.
+    qs = [dict(q, k=10_000) for q in QUERIES]
+    reader = IndexReader(idx)
+    search_topk(None, qs, reader=reader)
+    fetched = reader.payload_rowgroups_fetched
+    assert fetched > 0
+    mtimes = {f: os.stat(f).st_mtime_ns for f in reader._pfiles}
+    cached = set(Q._decoded_payloads._d)
+
+    shutil.copy(sorted(glob.glob(os.path.join(stream_source,
+                                              "*.parquet")))[2], src)
+    assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 1
+    finalize_streamed_index(spark, idx, max_segments=3)
+    got = search_topk(None, qs, reader=reader)
+    added = set(Q._decoded_payloads._d) - cached
+    new = set(reader._pfiles) - set(mtimes)
+    assert set(mtimes) < set(reader._pfiles)
+    assert {f: os.stat(f).st_mtime_ns for f in mtimes} == mtimes
+    assert all(f"{os.sep}group=e2{os.sep}" in f for f in new)
+    assert reader.payload_rowgroups_fetched - fetched == len(added) > 0
+    assert {path for path, _ in added} <= new
+    assert got == search_topk(idx, qs)
 
 
 def _job_ids(spark) -> set[int]:
@@ -543,6 +591,27 @@ def test_stream_epoch_spark_jobs(spark, stream_source, tmp_path):
 # footers and the sidecar scan runs on the driver. The two Spark purge
 # passes and the max-bucket aggregate took 13.
 _COMPACT_JOBS = 7
+
+
+# Spark jobs of one finalize_streamed_index, as measured: its level-0
+# stats collect (the aggregation's two stages). The read schema is
+# given, the dictionary and the sidecar are written on the driver and
+# no posting is rewritten. Finalize ran 4 jobs when it copied level-0
+# into a new postings directory.
+_FINALIZE_JOBS = 2
+
+
+def test_finalize_spark_jobs(spark, stream_source, tmp_path):
+    """One finalize of a 3-epoch streamed index, counted from the
+    application status store."""
+    src = _copy_source(stream_source, tmp_path / "finalize_jobs_src",
+                       n_files=3)
+    idx = str(tmp_path / "finalize_jobs_idx")
+    assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 3
+    before = _job_ids(spark)
+    finalize_streamed_index(spark, idx, max_segments=3)
+    jobs = _job_ids(spark) - before
+    assert len(jobs) <= _FINALIZE_JOBS, sorted(jobs)
 
 
 def test_compact_spark_jobs(spark, stream_source, tmp_path):
