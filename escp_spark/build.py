@@ -47,9 +47,11 @@ Scale notes (the 10^12-doc design point):
 - The merge is *metadata-level*: per-bucket docid ranges are disjoint and
   ordered (docid = bucket<<40 | rank), so concatenating per-bucket posting
   blocks in bucket order yields a globally sorted posting list with no
-  decode/re-encode. The physical merge is a repartitionByRange +
-  sortWithinPartitions + partitioned write — embarrassingly parallel,
-  no single-task whole-term materialization even for the hottest term.
+  decode/re-encode. The physical merge is ONE exchange by placement
+  partition + sortWithinPartitions into an Arrow kernel that
+  consolidates tails and writes the files with pyarrow — embarrassingly
+  parallel, no single-task whole-term materialization even for the
+  hottest term.
 """
 
 from __future__ import annotations
@@ -98,11 +100,13 @@ POSTINGS_ROW_GROUP_BYTES = 8 << 20
 
 
 def postings_write_options() -> dict[str, str]:
-    """Spark parquet-writer options of every servable postings write:
-    the merge's, and a streamed epoch's level-0, which a finalize
-    publishes as it is. parquet-mr only checks the accumulated size
-    every N rows (default 100), so the interval scales with the target
-    and small row groups (tests, fine-grained indexes) are honored."""
+    """Spark parquet-writer options of a streamed epoch's level-0 write,
+    the one servable postings write Spark's writer still does: a
+    finalize publishes that level-0 as it is. (The merge writes its
+    files with pyarrow, ``_MergedFileWriter``, to the same row-group
+    target.) parquet-mr only checks the accumulated size every N rows
+    (default 100), so the interval scales with the target and small row
+    groups (tests, fine-grained indexes) are honored."""
     return {
         "parquet.block.size": str(POSTINGS_ROW_GROUP_BYTES),
         "parquet.page.size.row.check.min":
@@ -131,6 +135,29 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("doc_ids", T.BinaryType(), False),
         T.StructField("tfs", T.BinaryType(), False),
         T.StructField("dls", T.BinaryType(), False),
+    ]
+)
+
+# The docmap rows (``_write_bucket_docmap``): every read gives this
+# schema, so no Spark job reads a footer to infer it.
+DOCMAP_SCHEMA = T.StructType(
+    [
+        T.StructField("bucket", T.IntegerType(), False),
+        T.StructField("url", T.StringType(), False),
+        T.StructField("doc_id", T.LongType(), False),
+    ]
+)
+
+# The build's staging rows (``staged_corpus``) as a read sees them: the
+# files hold url, bucket, text and lang, and ``grp`` is the partition
+# directory, typed here so the group filter still prunes directories.
+STAGING_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("bucket", T.IntegerType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("grp", T.IntegerType()),
     ]
 )
 
@@ -215,7 +242,8 @@ def group_segments(spark: SparkSession, staged_dir: str, group: int,
     staged rows through the per-bucket kernel, which writes the group's
     docmap files into ``docmap_dir`` and returns its level-0 blocks."""
     part = (
-        spark.read.parquet(staged_dir).filter(F.col("grp") == group)
+        spark.read.schema(STAGING_SCHEMA).parquet(staged_dir)
+        .filter(F.col("grp") == group)
         .select("url", "bucket", "text")
     )
     return build_segments(part, docmap_dir)
@@ -580,15 +608,27 @@ def _detail(key: str):
 # CONTIGUOUS, not just concatenated)
 # --------------------------------------------------------------------------
 
-MERGED_SCHEMA = T.StructType(
-    [T.StructField("segment", T.IntegerType(), False)]
-    + [f for f in POSTINGS_SCHEMA if f.name != "bucket"]
-)
-_MERGED_COLS = [f.name for f in MERGED_SCHEMA]
+# The merge's rows: level-0 columns with the segment for the bucket.
+_MERGED_COLS = ["segment"] + [f.name for f in POSTINGS_SCHEMA
+                              if f.name != "bucket"]
 
 # Consolidated blocks get ids above every bucket<<20|id label (bucket is
 # int32): block_id is a unique label only — no reader orders by it.
 CONSOLIDATED_BLOCK_BASE = 1 << 60
+
+# The merged postings files are written with zstd at parquet-mr's
+# default level (3, what Spark wrote them with) and no Arrow schema
+# footer. Only the integer columns and ``tfs`` are dictionary-encoded:
+# pyarrow's default also encodes ``term``, ``doc_ids`` and ``dls``.
+# Measured on a compacted 3-epoch perfbench ``update`` index: Spark's
+# writer 1,274,560 B, pyarrow's default dictionary 1,369,234 B, these
+# settings 1,254,609 B (and 1,179,797 → 1,167,736 B against Spark's on
+# the 5,000-doc ``index`` build).
+_MERGED_WRITE_OPTS = {
+    "compression": "zstd", "compression_level": 3, "store_schema": False,
+    "use_dictionary": ["block_id", "n", "doc_id_lo", "doc_id_hi", "max_tf",
+                       "min_dl", "sum_tf", "tfs"],
+}
 
 
 def _seg_shift(n_buckets: int, max_segments: int) -> int:
@@ -602,58 +642,58 @@ def _seg_shift(n_buckets: int, max_segments: int) -> int:
     return shift
 
 
-def _consolidate_tails_arrow(batches):
-    """Re-block one partition's tail fragments — Arrow-native mapInArrow
-    kernel (zero per-row Python objects; the earlier applyInPandas
-    version materialized ~5M python str/bytes objects per 500k-doc merge
-    and spent ~50 s in object churn — measured 48 s → ~3 s).
-
-    Input: every tail block (n < BLOCK_SIZE) of the terms hash-routed to
-    this partition, across all (segment, term). For each (segment, term)
-    with ≥2 tails: bulk-decode straight from the Arrow binary buffers
-    (the values of a combined BinaryArray are already back-to-back, so
-    the codec's concatenated-stream decode needs no per-block bytes),
-    concatenate (already docid-sorted — tails are ≤1 per source bucket
-    and bucket docid ranges are disjoint and ordered), re-encode into
-    ⌈total/BLOCK_SIZE⌉ contiguous blocks — afterwards ≤1 block per
-    (segment, term) has n < BLOCK_SIZE. Single-tail groups pass through
-    as an Arrow take, untouched.
-
-    Bounded regardless of corpus size: a term has ≤1 tail per bucket, so
-    a term contributes ≤ n_buckets × (BLOCK_SIZE−1) postings; size
-    n_tgrp so a partition's tails fit executor memory."""
-    import pyarrow as pa
+def _group_starts(tbl) -> np.ndarray:
+    """Per row of a (segment, term)-sorted table: does a new (segment,
+    term) group start here?"""
     import pyarrow.compute as pc
 
-    batch_list = list(batches)
-    if not batch_list:
-        return
-    tbl = pa.Table.from_batches(batch_list).select(_MERGED_COLS)
     n_rows = tbl.num_rows
-    if n_rows == 0:
-        return
-    tbl = tbl.sort_by(
-        [("segment", "ascending"), ("term", "ascending"),
-         ("doc_id_lo", "ascending")]
-    ).combine_chunks()
-    seg = tbl.column("segment").to_numpy()
-    term = tbl.column("term").chunk(0)
-    if n_rows == 1:
-        new_grp = np.array([True])
-    else:
-        tneq = pc.not_equal(
+    new = np.ones(n_rows, dtype=bool)
+    if n_rows > 1:
+        seg = tbl.column("segment").to_numpy()
+        term = tbl.column("term")
+        new[1:] = (seg[1:] != seg[:-1]) | pc.not_equal(
             term.slice(1), term.slice(0, n_rows - 1)
         ).to_numpy(zero_copy_only=False)
-        new_grp = np.concatenate(([True], (seg[1:] != seg[:-1]) | tneq))
-    grp_id = np.cumsum(new_grp) - 1
+    return new
+
+
+def _consolidate_tails(tails):
+    """Re-block the tail fragments (n < BLOCK_SIZE) of whole (segment,
+    term) groups, Arrow-native (zero per-row Python objects; the earlier
+    applyInPandas version materialized ~5M python str/bytes objects per
+    500k-doc merge and spent ~50 s in object churn — measured 48 s →
+    ~3 s).
+
+    ``tails`` is sorted by (segment, term, doc_id_lo) and holds every
+    tail of each of its groups. For each group with ≥2 tails:
+    bulk-decode straight from the Arrow binary buffers (the values of a
+    combined BinaryArray are already back-to-back, so the codec's
+    concatenated-stream decode needs no per-block bytes), concatenate
+    (already docid-sorted — tails are ≤1 per source bucket and bucket
+    docid ranges are disjoint and ordered), re-encode into
+    ⌈total/BLOCK_SIZE⌉ contiguous blocks — afterwards ≤1 block per
+    (segment, term) has n < BLOCK_SIZE. Single-tail groups pass through
+    untouched.
+
+    Returns the output rows in group order, with ``tails``' schema, and
+    per output row the ``tails`` row of its group's first tail.
+
+    Bounded regardless of corpus size: a term has ≤1 tail per bucket, so
+    a group holds ≤ n_buckets × (BLOCK_SIZE−1) postings."""
+    import pyarrow as pa
+
+    n_rows = tails.num_rows
+    if n_rows == 0:
+        return tails, np.empty(0, dtype=np.int64)
+    tails = tails.combine_chunks()
+    grp_id = np.cumsum(_group_starts(tails)) - 1
     multi = np.bincount(grp_id)[grp_id] > 1
     singles = np.flatnonzero(~multi)
-    if singles.size:
-        yield from tbl.take(pa.array(singles)).to_batches()
     midx = np.flatnonzero(multi)
     if midx.size == 0:
-        return
-    sub = tbl.take(pa.array(midx)).combine_chunks()
+        return tails, singles
+    sub = tails.take(pa.array(midx)).combine_chunks()
     ns = sub.column("n").to_numpy()
     payloads = [sub.column(c).chunk(0) for c in ("doc_ids", "tfs", "dls")]
     sub_grp = grp_id[midx]  # nondecreasing
@@ -671,10 +711,8 @@ def _consolidate_tails_arrow(batches):
     g_bounds = np.append(starts, len(midx))
     g_pair_start = row_off[g_bounds[:-1]]
     chunk_of_group = g_pair_start // (1 << 16)
-    seg_sub = seg[midx]
-    term_sub = sub.column("term").chunk(0)
     out_meta: dict[str, list] = {k: [] for k in (
-        "segment_src", "block_id", "n", "doc_id_lo", "doc_id_hi",
+        "src", "block_id", "n", "doc_id_lo", "doc_id_hi",
         "max_tf", "min_dl", "sum_tf",
     )}
     out_bufs: dict[str, list] = {"doc_ids": [], "tfs": [], "dls": []}
@@ -687,51 +725,228 @@ def _consolidate_tails_arrow(batches):
         enc = encode_posting_frame(
             (codes[r0:r1] - codes[r0])[blk], ids, tfs, dls
         )
-        out_meta["segment_src"].append(starts[enc["term_code"] + codes[r0]])
+        out_meta["src"].append(starts[enc["term_code"] + codes[r0]])
         for k in ("block_id", "n", "doc_id_lo", "doc_id_hi",
                   "max_tf", "min_dl", "sum_tf"):
             out_meta[k].append(enc[k])
         for k in out_bufs:
             out_bufs[k].extend(enc[k])
-    src = np.concatenate(out_meta["segment_src"])
+    src = np.concatenate(out_meta["src"])
+
+    def col(name, values):
+        return pa.array(values, tails.schema.field(name).type)
 
     def cat(k):
         return np.concatenate(out_meta[k])
 
-    yield pa.RecordBatch.from_arrays(
+    consolidated = pa.Table.from_arrays(
         [
-            pa.array(seg_sub[src].astype(np.int32), pa.int32()),
-            term_sub.take(pa.array(src)),
-            pa.array(CONSOLIDATED_BLOCK_BASE + cat("block_id"), pa.int64()),
-            pa.array(cat("n").astype(np.int32), pa.int32()),
-            pa.array(cat("doc_id_lo"), pa.int64()),
-            pa.array(cat("doc_id_hi"), pa.int64()),
-            pa.array(cat("max_tf").astype(np.int32), pa.int32()),
-            pa.array(cat("min_dl").astype(np.int32), pa.int32()),
-            pa.array(cat("sum_tf"), pa.int64()),
-            pa.array(out_bufs["doc_ids"], sub.column("doc_ids").chunk(0).type),
-            pa.array(out_bufs["tfs"], sub.column("tfs").chunk(0).type),
-            pa.array(out_bufs["dls"], sub.column("dls").chunk(0).type),
+            sub.column("segment").take(pa.array(src)),
+            sub.column("term").take(pa.array(src)),
+            col("block_id", CONSOLIDATED_BLOCK_BASE + cat("block_id")),
+            col("n", cat("n").astype(np.int32)),
+            col("doc_id_lo", cat("doc_id_lo")),
+            col("doc_id_hi", cat("doc_id_hi")),
+            col("max_tf", cat("max_tf").astype(np.int32)),
+            col("min_dl", cat("min_dl").astype(np.int32)),
+            col("sum_tf", cat("sum_tf")),
+            col("doc_ids", out_bufs["doc_ids"]),
+            col("tfs", out_bufs["tfs"]),
+            col("dls", out_bufs["dls"]),
         ],
-        names=_MERGED_COLS,
+        schema=tails.schema,
     )
+    first = np.concatenate((singles, midx[src]))
+    order = np.argsort(first, kind="stable")
+    return (pa.concat_tables([tails.take(pa.array(singles)), consolidated])
+            .take(pa.array(order)), first[order])
 
 
-# Vocabulary size up to which the per-term level-0 stats are collected
-# and used on the driver in pandas (one Spark job — the limit-collect —
-# instead of the persist + three jobs of the distributed path). 1M terms
-# ≈ 30 MB: trivially driver-sized, and most corpora below Common-Crawl
-# scale fit.
-_PLACEMENT_DRIVER_MAX_TERMS = 1_000_000
+class _MergedFileWriter:
+    """The postings files of ONE merge partition: per segment it holds,
+    ``segment=S/part-PPPPP.parquet`` (P = the partition), one
+    ``pq.ParquetWriter`` at a time (rows arrive segment-sorted). The
+    name depends only on the partition and the bytes only on its rows,
+    and the file appears by rename from a hidden temp name, so a retried
+    or speculative task rewrites the same bytes and no reader lists a
+    partial file. Row groups close at ``row_group_bytes`` of Arrow data
+    (the Spark writer's ``parquet.block.size`` role)."""
+
+    def __init__(self, out_dir: str, part: int, row_group_bytes: int):
+        self.out_dir, self.part = out_dir, part
+        self.row_group_bytes = row_group_bytes
+        self.segment, self.writer, self.tmp = None, None, None
+        self.pending, self.pending_bytes, self.rows = [], 0, 0
+        self.files: list[tuple[int, int]] = []  # (segment, rows) written
+
+    def write(self, tbl) -> None:
+        """Append (segment, term)-sorted merged rows."""
+        seg = tbl.column("segment").to_numpy()
+        cuts = np.flatnonzero(seg[1:] != seg[:-1]) + 1
+        for a, b in zip(np.append(0, cuts), np.append(cuts, len(seg))):
+            if seg[a] != self.segment:
+                self.close()
+                self._open(int(seg[a]))
+            self._append(tbl.slice(a, b - a).drop_columns(["segment"]))
+
+    def _open(self, segment: int) -> None:
+        import uuid
+
+        self.segment = segment
+        d = os.path.join(self.out_dir, f"segment={segment}")
+        os.makedirs(d, exist_ok=True)
+        self.tmp = os.path.join(
+            d, f".part-{self.part:05d}.parquet.{uuid.uuid4().hex}")
+
+    def _append(self, tbl) -> None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        size = np.zeros(tbl.num_rows, dtype=np.int64)
+        for field, column in zip(tbl.schema, tbl.columns):
+            if pa.types.is_primitive(field.type):
+                size += field.type.bit_width // 8
+            else:
+                size += pc.binary_length(column).to_numpy()
+        cum = np.cumsum(size) + self.pending_bytes
+        start, base = 0, 0
+        while True:
+            end = int(np.searchsorted(cum, base + self.row_group_bytes)) + 1
+            if end > tbl.num_rows:
+                break
+            self.pending.append(tbl.slice(start, end - start))
+            self._flush()
+            start, base = end, cum[end - 1]
+        if start < tbl.num_rows:
+            self.pending.append(tbl.slice(start))
+        self.pending_bytes = int(cum[-1] - base)
+
+    def _flush(self) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        rg = pa.concat_tables(self.pending).combine_chunks()
+        self.pending, self.pending_bytes = [], 0
+        if self.writer is None:
+            self.writer = pq.ParquetWriter(self.tmp, rg.schema,
+                                           **_MERGED_WRITE_OPTS)
+        self.writer.write_table(rg, row_group_size=rg.num_rows)
+        self.rows += rg.num_rows
+
+    def close(self) -> None:
+        """Finish the open segment's file, if any."""
+        if self.pending:
+            self._flush()
+        if self.writer is not None:
+            self.writer.close()
+            name = f"part-{self.part:05d}.parquet"
+            os.replace(self.tmp, os.path.join(os.path.dirname(self.tmp), name))
+            self.files.append((self.segment, self.rows))
+        self.segment, self.writer, self.tmp, self.rows = None, None, None, 0
 
 
-def _write_dictionary(spark, layout: IndexLayout, stats: DataFrame
+def _write_merged_partition(batches, out_dir: str, part: int,
+                            row_group_bytes: int) -> list[tuple[int, int]]:
+    """The merge's write kernel over ONE partition's rows (``_MERGED_COLS``,
+    sorted by segment, term, doc_id_lo; every tail of a (segment, term)
+    group in this partition). Streams them into ``_MergedFileWriter``:
+    full blocks pass through, and each group's tails are consolidated
+    (``_consolidate_tails``) when the group ends and written right after
+    its full blocks, so each file stays term-sorted. Only the open
+    group's tails are held across batches. Returns the (segment, rows)
+    of the files written."""
+    import pyarrow as pa
+
+    out = _MergedFileWriter(out_dir, part, row_group_bytes)
+
+    def emit(tbl, gid, closed_tail):
+        full = np.flatnonzero(tbl.column("n").to_numpy() == BLOCK_SIZE)
+        ti = np.flatnonzero(closed_tail)
+        merged, src = _consolidate_tails(tbl.take(pa.array(ti)))
+        order = np.lexsort((
+            np.repeat([0, 1], [full.size, merged.num_rows]),
+            np.concatenate((gid[full], gid[ti][src])),
+        ))
+        rows = pa.concat_tables([tbl.take(pa.array(full)), merged])
+        if rows.num_rows:
+            out.write(rows.take(pa.array(order)))
+
+    carry = None  # the tails of the group still open at the last batch
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        tbl = pa.Table.from_batches([batch]).select(_MERGED_COLS)
+        if carry is not None:
+            tbl = pa.concat_tables([carry, tbl])
+        tbl = tbl.combine_chunks()
+        gid = np.cumsum(_group_starts(tbl)) - 1
+        tail = tbl.column("n").to_numpy() < BLOCK_SIZE
+        still_open = tail & (gid == gid[-1])
+        carry = tbl.filter(pa.array(still_open)) if still_open.any() else None
+        emit(tbl, gid, tail & ~still_open)
+    if carry is not None:
+        emit(carry, np.zeros(carry.num_rows, dtype=np.int64),
+             np.ones(carry.num_rows, dtype=bool))
+    out.close()
+    return out.files
+
+
+def _merge_write_kernel(out_dir: str, row_group_bytes: int):
+    """The merge's ``mapInArrow`` function: each task writes its
+    partition's files (``_write_merged_partition``) and returns one
+    (segment, rows) row per file. ``row_group_bytes`` is read on the
+    driver and travels in the closure."""
+
+    def kernel(batches):
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        files = _write_merged_partition(
+            batches, out_dir, TaskContext.get().partitionId(),
+            row_group_bytes)
+        if files:
+            seg, rows = zip(*files)
+            yield pa.RecordBatch.from_pydict({
+                "segment": pa.array(seg, pa.int32()),
+                "rows": pa.array(rows, pa.int64()),
+            })
+
+    return kernel
+
+
+# Level-0 block count up to which the per-term stats are aggregated on
+# the driver: a pyarrow group_by over the level-0 files' term, n and
+# sum_tf columns, with no Spark job. Blocks ≥ terms, so this also caps
+# the vocabulary the driver-side placement handles. Measured peak
+# driver RSS growth of the read, the aggregate, the dictionary write
+# and the pandas stats frame at 2M blocks: 68 MB (0.14 s) over 10k
+# terms, 729 MB (2.3 s) in the worst case of one block per term.
+_DRIVER_STATS_MAX_BLOCKS = 2_000_000
+
+
+def _level0_files(layout: IndexLayout) -> list[str]:
+    from .sidecar import _list_parquet_files
+
+    return _list_parquet_files(layout.postings_l0)
+
+
+def _read_level0(spark: SparkSession, files: list[str]) -> DataFrame:
+    """The level-0 ``files`` as a Spark DataFrame: the read schema is
+    given and the listing threshold raised to the file count, so no
+    Spark job infers a schema or lists the files."""
+    with _scoped_conf(spark, {
+            "spark.sql.sources.parallelPartitionDiscovery.threshold":
+                len(files)}):
+        return spark.read.schema(POSTINGS_SCHEMA).parquet(*files)
+
+
+def _write_dictionary(spark, layout: IndexLayout, files: list[str]
                       ) -> tuple[str, int, pd.DataFrame | DataFrame]:
-    """Write the term dictionary (term, df, cf) from the LEVEL-0 per-term
-    stats ``stats`` (term, df = Σn, cf = Σsum_tf, and whatever else the
-    caller aggregated in the same pass) into a new directory. Returns
-    the directory, Σcf (the corpus token count, for avgdl) and the stats
-    for the caller's further use.
+    """Write the term dictionary (term, df, cf) from the per-term stats
+    of the LEVEL-0 ``files`` (term, nblocks = block count, df = Σn,
+    cf = Σsum_tf) into a new directory. Returns the directory, Σcf (the
+    corpus token count, for avgdl) and the stats for the caller's
+    further use (the merge's placement).
 
     df and cf are invariant under the merge's tail consolidation
     (re-encoding preserves every posting) and under publishing level-0
@@ -739,32 +954,50 @@ def _write_dictionary(spark, layout: IndexLayout, stats: DataFrame
     dictionary from the level-0 block stats — never by re-scanning
     published postings (VERDICT r04 #4).
 
-    This is the one driver/distributed fork of the stats pass. Up to
-    ``_PLACEMENT_DRIVER_MAX_TERMS`` terms: one limit-collect job
-    (limit(N+1) returning ≤ N rows proves the whole vocabulary was
-    seen), one globally term-sorted file written with pyarrow, and the
-    stats come back as a pandas frame. Above it, ``stats`` is persisted
-    and written distributed, term-sorted within partitions so the
-    dictionary's row-group footer stats stay seek-friendly for the
-    serving path's filtered scans; the persisted DataFrame comes back
-    and the caller unpersists it."""
-    out = layout.artifact("dictionary")
-    rows = stats.limit(_PLACEMENT_DRIVER_MAX_TERMS + 1).collect()
-    if len(rows) <= _PLACEMENT_DRIVER_MAX_TERMS:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    This is the one driver/distributed fork of the stats pass, gated on
+    the level-0 block count summed from the files' footers (metadata
+    only). Up to ``_DRIVER_STATS_MAX_BLOCKS``: a pyarrow group_by over
+    the files' term, n and sum_tf columns on the driver, no Spark job;
+    one globally term-sorted file, and the stats come back as a pandas
+    frame. Above it, a Spark aggregate is persisted and written
+    distributed, term-sorted within partitions so the dictionary's
+    row-group footer stats stay seek-friendly for the serving path's
+    filtered scans; the persisted DataFrame comes back and the caller
+    unpersists it."""
+    import pyarrow.parquet as pq
 
-        pdf = pd.DataFrame(rows, columns=stats.columns)
-        tbl = pa.table({
-            "term": pa.array(pdf["term"], pa.string()),
-            "df": pa.array(pdf["df"].astype("int64"), pa.int64()),
-            "cf": pa.array(pdf["cf"].astype("int64"), pa.int64()),
+    out = layout.artifact("dictionary")
+    blocks = sum(pq.read_metadata(f).num_rows for f in files)
+    if blocks <= _DRIVER_STATS_MAX_BLOCKS:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        # File by file and single-threaded: a threaded dataset scan and
+        # aggregate raised perfbench ``update``'s peak driver RSS by
+        # ~7 MB over the Spark stats collect it replaces, this by 1-2 MB.
+        schema = pa.schema([("term", pa.string()), ("n", pa.int32()),
+                            ("sum_tf", pa.int64())])
+        parts = [schema.empty_table()]
+        for f in files:
+            with pq.ParquetFile(f) as pf:
+                parts.append(pf.read(columns=schema.names,
+                                     use_threads=False).cast(schema))
+        agg = pa.concat_tables(parts).group_by("term", use_threads=False) \
+            .aggregate([("n", "count"), ("n", "sum"), ("sum_tf", "sum")])
+        stats = pa.table({
+            "term": agg["term"], "nblocks": agg["n_count"],
+            "df": agg["n_sum"], "cf": agg["sum_tf_sum"],
         }).sort_by("term")
         os.makedirs(out)
-        pq.write_table(tbl, os.path.join(out, "part-0.parquet"),
+        pq.write_table(stats.select(["term", "df", "cf"]),
+                       os.path.join(out, "part-0.parquet"),
                        row_group_size=1 << 20)
-        return out, int(pdf["cf"].sum()) if len(pdf) else 0, pdf
-    stats = stats.persist()
+        return out, int(pc.sum(stats["cf"]).as_py() or 0), stats.to_pandas()
+    stats = _read_level0(spark, files).groupBy("term").agg(
+        F.count("*").alias("nblocks"),
+        F.sum("n").alias("df"),
+        F.sum("sum_tf").alias("cf"),
+    ).persist()
     (
         stats.select(
             "term", F.col("df").cast("long").alias("df"),
@@ -862,16 +1095,16 @@ def merge_segments(
     Returns ``{"postings", "dictionary", "prune_shift", "total_tokens"}``:
     the two directories, the docid window granularity the serving path
     must use (recorded in the manifest) and Σcf for avgdl. The term
-    dictionary is written HERE, fused into the same level-0 stats
-    aggregation that drives placement (``_write_dictionary``). This is
-    the engine's only postings rewrite: ``build_index`` and
-    ``compact_index`` call it, and a streamed finalize publishes its
-    level-0 as it is.
+    dictionary is written HERE, from the same level-0 stats that drive
+    placement (``_write_dictionary``). This is the engine's only
+    postings rewrite: ``build_index`` and ``compact_index`` call it, and
+    a streamed finalize publishes its level-0 as it is.
 
-    Two phases, mirroring Lucene's merge-then-compact:
+    ONE exchange into ONE write kernel, mirroring Lucene's
+    merge-then-compact:
 
-    1. **Concatenation (narrow)**: per-bucket docid ranges are disjoint
-       and ordered, so a term's global posting list is its per-bucket
+    1. **Concatenation**: per-bucket docid ranges are disjoint and
+       ordered, so a term's global posting list is its per-bucket
        blocks in bucket order — full blocks (n == BLOCK_SIZE) move
        without decode/re-encode and the hottest term's blocks stay
        distributed across merge tasks. Segment = bucket >> seg_shift
@@ -880,9 +1113,18 @@ def merge_segments(
        SURVEY.md §7 "hard part #1"): every (bucket × term) level-0 list
        ends in a tail block < BLOCK_SIZE — up to n_buckets fragments per
        term: read amplification and loose block-max bounds at serve
-       time. Tails shuffle by hash(term) (bounded: ≤ n_buckets×127
-       postings per term) and are re-encoded per (segment, term) into
-       contiguous blocks, leaving ≤1 short block per (segment, term).
+       time. The exchange routes every tail of a term to ONE partition,
+       and the write kernel re-encodes each (segment, term)'s tails into
+       contiguous blocks when the group ends, leaving ≤1 short block per
+       (segment, term) (bounded: ≤ n_buckets×127 postings per group).
+
+    Every level-0 block is routed by its placement partition (``mpart``)
+    in one exchange, sorted within partitions by (segment, term,
+    doc_id_lo), and streamed by a ``mapInArrow`` kernel
+    (``_write_merged_partition``) that consolidates the tails and writes
+    ``segment=S/part-PPPPP.parquet`` with pyarrow into the new postings
+    directory the driver makes right before the job. No tails exchange,
+    no union, no Spark parquet writer.
 
     Window correctness: a consolidated block spans buckets, so the WAND
     pruning window coarsens from bucket to segment — a segment is a
@@ -898,44 +1140,17 @@ def merge_segments(
     df-stats pass (block counts per term from level-0 metadata), NOT by
     repartitionByRange's sampling job. Terms above ``_HOT_TERM_BLOCKS``
     (an absolute work-unit bound, see the inline rationale; top-4P by
-    block count so the list stays driver-sized) are classified hot and
-    spread across the partition space by source-bucket position, so the
-    hottest term's postings land in ~merge_parallelism files instead of
-    one straggler task/file — estypes.go:104-116's skew heuristic, wired
-    into placement. The right choice at 10^12-doc scale where file-count
-    per segment matters; overkill at bench scale.
+    block count so the list stays driver-sized) are classified hot: their
+    FULL blocks are spread across the partition space by source-bucket
+    position, so the hottest term's postings land in ~merge_parallelism
+    files instead of one straggler task/file — estypes.go:104-116's skew
+    heuristic, wired into placement — while their tails go to the
+    term's cold-range partition, so each (segment, term) tail group
+    lands in one task. The right choice at 10^12-doc scale where
+    file-count per segment matters; overkill at bench scale.
     """
     seg_shift = _seg_shift(n_buckets, max_segments)
-    l0 = spark.read.parquet(layout.postings_l0)
-    base = (
-        l0.withColumn(
-            "segment", F.shiftright(F.col("bucket"), seg_shift).cast("int")
-        )
-        .withColumn(
-            "block_id",
-            (F.col("bucket").cast("long") * F.lit(1 << MERGE_BLOCK_SHIFT))
-            + F.col("block_id"),
-        )
-        .drop("bucket", "group")
-    )
-    full = base.filter(F.col("n") == BLOCK_SIZE).select(*_MERGED_COLS)
-    tails = base.filter(F.col("n") < BLOCK_SIZE)
-    n_tgrp = max(merge_parallelism * 2, 8)
-    # All tails of a term hash to ONE partition (repartition on the
-    # term column), so the Arrow kernel sees every fragment of each
-    # (segment, term) together.
-    consolidated = tails.select(*_MERGED_COLS).repartition(
-        n_tgrp, "term"
-    ).mapInArrow(_consolidate_tails_arrow, MERGED_SCHEMA)
-    merged = full.unionByName(consolidated)
-    # ONE aggregation pass over the level-0 block metadata feeds the
-    # placement derivations (hot list, range bounds) AND the term
-    # dictionary (df = Σn, cf = Σsum_tf — invariant under consolidation).
-    stats = l0.groupBy("term").agg(
-        F.count("*").alias("nblocks"),
-        F.sum("n").alias("df"),
-        F.sum("sum_tf").alias("cf"),
-    )
+    files = _level0_files(layout)
     # A cold term must be a BOUNDED work unit for every consumer —
     # one merge task, one batch-scoring task (its whole list lands in
     # one file = one input split), one serving metadata read. The cut
@@ -958,15 +1173,14 @@ def merge_segments(
     # come from cumulative block counts over the term-sorted stats.
     #
     # The stats pass itself is _write_dictionary's driver/distributed
-    # fork: a small vocabulary comes back collected, and the hot list
-    # and bounds are derived in pandas on the driver — the fixed cost of
-    # the distributed derivations (~4 extra jobs) was a measurable slice
-    # of the sf0.1 merge stage. Above the cap, the distributed two-pass
-    # prefix sum (_cold_term_bounds — byte-identical, tested) handles
-    # 10^9+-term vocabularies with no single-partition step.
+    # fork: up to its block cap the stats are aggregated on the driver
+    # and the hot list and bounds are derived in pandas, with no Spark
+    # job. Above the cap, the distributed two-pass prefix sum
+    # (_cold_term_bounds — byte-identical, tested) handles 10^9+-term
+    # vocabularies with no single-partition step.
     with _detail("merge_dict"):
         dictionary, total_tokens, stats = _write_dictionary(
-            spark, layout, stats)
+            spark, layout, files)
     with _detail("merge_placement"):
         if isinstance(stats, pd.DataFrame):
             hot_terms = (
@@ -991,6 +1205,15 @@ def merge_segments(
             )
             bounds = _cold_term_bounds(cold, merge_parallelism)
             stats.unpersist()
+    blocks = _read_level0(spark, files).select(
+        F.shiftright(F.col("bucket"), seg_shift).cast("int").alias("segment"),
+        "term",
+        (
+            (F.col("bucket").cast("long") * F.lit(1 << MERGE_BLOCK_SHIFT))
+            + F.col("block_id")
+        ).alias("block_id"),
+        *_MERGED_COLS[3:],
+    )
     pos = F.shiftright(F.col("doc_id_lo"), DOC_BUCKET_SHIFT)
     barr = (
         F.array(*[F.lit(b) for b in bounds]) if bounds else F.array(F.lit(""))
@@ -999,23 +1222,27 @@ def merge_segments(
         F.size(F.filter(barr, lambda b: b <= F.col("term"))) - F.lit(1),
         F.lit(0),
     )
-    mpart = F.when(
-        F.col("term").isin(hot_terms) if hot_terms else F.lit(False),
-        F.pmod(pos, F.lit(merge_parallelism)),
-    ).otherwise(F.lit(merge_parallelism) + cold_part)
-    merged = (
-        merged.withColumn("mpart", mpart)
-        .repartition(merge_parallelism + max(len(bounds), 1), "mpart")
-        .drop("mpart")
+    hot_full = (
+        F.col("term").isin(hot_terms) & (F.col("n") == BLOCK_SIZE)
+        if hot_terms else F.lit(False)
     )
-    merged = merged.sortWithinPartitions("segment", "term", "doc_id_lo")
+    mpart = F.when(hot_full, F.pmod(pos, F.lit(merge_parallelism))).otherwise(
+        F.lit(merge_parallelism) + cold_part)
     postings = layout.artifact("postings")
+    os.makedirs(postings)
     with _detail("merge_write"):
-        (
-            merged.write.options(**postings_write_options())
-            .partitionBy("segment")
-            .parquet(postings)
+        written = (
+            blocks.withColumn("mpart", mpart)
+            .repartition(merge_parallelism + max(len(bounds), 1), "mpart")
+            .drop("mpart")
+            .sortWithinPartitions("segment", "term", "doc_id_lo")
+            .mapInArrow(
+                _merge_write_kernel(postings, POSTINGS_ROW_GROUP_BYTES),
+                "segment int, rows long")
+            .collect()
         )
+    log.info("merge wrote %d postings files, %d blocks", len(written),
+             sum(r.rows for r in written))
     return {
         "postings": postings,
         "dictionary": dictionary,
@@ -1273,7 +1500,7 @@ def build_index(
                     for g in range(n_groups)
                 ],
                 int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-                spark.read.parquet(shuffled_dir).schema["bucket"].dataType,
+                STAGING_SCHEMA["bucket"].dataType,
             )
         )
     with _scoped_conf(spark, seg_conf):

@@ -178,8 +178,8 @@ class IndexReader:
     the query terms; the posting PAYLOAD (doc_ids/tfs/dls binaries) is
     read lazily, per Parquet row group, only for blocks the WAND pruning
     keeps. Row groups are the physical skip unit (a Parquet column chunk
-    is read whole), so the postings are written with a small
-    ``parquet.block.size`` (build.POSTINGS_ROW_GROUP_BYTES) — at 10^12-doc
+    is read whole), so the postings are written with a small row-group
+    byte target (build.POSTINGS_ROW_GROUP_BYTES) — at 10^12-doc
     scale a hot term's list spans many row groups in docid order, and a
     pruned docid window skips its row groups' payload bytes entirely.
 

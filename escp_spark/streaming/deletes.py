@@ -52,6 +52,7 @@ import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..build import DOCMAP_SCHEMA
 from ..codec import binary_stream, decode_blocks_bulk, encode_posting_frame
 from ..sources.tables import IndexLayout, load_manifest, publish_manifest
 
@@ -117,9 +118,10 @@ def delete_urls(spark: SparkSession, index_dir: str, urls,
     manifest = load_manifest(index_dir)
     layout = IndexLayout(index_dir, _resolve_build_id(manifest, build_id))
     # isin pushdown: docmap rows are url-sorted within each bucket, so
-    # footer stats prune the row groups this point-lookup touches.
+    # footer stats prune the row groups this point-lookup touches. The
+    # read schema is given, so the lookup is the call's one Spark job.
     rows = (
-        spark.read.parquet(layout.docmap)
+        spark.read.schema(DOCMAP_SCHEMA).parquet(layout.docmap)
         .filter(F.col("url").isin(urls))
         .select("doc_id", "url")
         .collect()

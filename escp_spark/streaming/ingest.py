@@ -47,9 +47,11 @@ from pyspark.sql import functions as F
 
 from ..build import (
     DOC_BUCKET_SHIFT,
+    DOCMAP_SCHEMA,
     POSTINGS_SCHEMA,
     _build_bucket_segment,
     _ledger_append,
+    _level0_files,
     _stats_and_publish,
     _write_dictionary,
     bucket_expr,
@@ -359,7 +361,8 @@ def _ingest_epoch(batch_df: DataFrame, epoch: int, layout: IndexLayout,
                         or bloom["n"] * _BLOOM_BITS_PER_URL > bloom["m"]):
         # Missing/corrupt/over-capacity sidecar: one-off rebuild from the
         # earlier epochs' docmap, sized 4× for growth headroom.
-        existing = spark.read.parquet(*prior_files).select("url")
+        existing = spark.read.schema(DOCMAP_SCHEMA).parquet(
+            *prior_files).select("url")
         n_existing = existing.count()
         bloom = _new_bloom(4 * n_existing)
         bloom["bits"] = _bloom_bits_for(existing, bloom["m"], bloom["k"])
@@ -480,18 +483,19 @@ def finalize_streamed_index(spark: SparkSession, index_dir: str,
     servable as they are, and the new rg_stats sidecar is the file list
     readers pin (later epochs' files stay unseen until the next
     publish). The dictionary is re-aggregated from the level-0 block
-    stats. No postings are rewritten: an epoch's files keep their paths
-    across finalizes, and readers keep those files' decoded row groups.
+    stats, on the driver below ``_write_dictionary``'s block cap, so a
+    finalize then runs no Spark job (the sidecar scan and the publish
+    are driver-side metadata too). No postings are rewritten: an
+    epoch's files keep their paths across finalizes, and readers keep
+    those files' decoded row groups.
     Per-term fragmentation (one short block per epoch bucket) grows with
     the epochs until ``compact_index``, the force-merge, rewrites them.
     ``max_segments`` is only recorded: it is the segment count
     ``compact_index`` defaults to. The tombstone set (if any) carries
     over unchanged."""
     layout = IndexLayout(index_dir, build_id)
-    level0 = spark.read.schema(POSTINGS_SCHEMA).parquet(layout.postings_l0)
     dictionary, total_tokens, stats = _write_dictionary(
-        spark, layout, level0.groupBy("term").agg(
-            F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")))
+        spark, layout, _level0_files(layout))
     if not isinstance(stats, pd.DataFrame):
         stats.unpersist()
     # Every level-0 block lies inside one effective bucket, so the prune

@@ -29,7 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .build import dedup_last_write_wins, extract_text_udf
+from .build import DOCMAP_SCHEMA, dedup_last_write_wins, extract_text_udf
 from .sources.tables import IndexLayout, load_manifest, read_web_pages
 
 
@@ -113,7 +113,8 @@ def validate_index(
     cmd/esdiff/main.go:26-27).
     """
     manifest = load_manifest(index_dir)
-    docmap = spark.read.parquet(manifest["paths"]["docmap"]).select("url")
+    docmap = spark.read.schema(DOCMAP_SCHEMA).parquet(
+        manifest["paths"]["docmap"]).select("url")
 
     src = dedup_last_write_wins(read_web_pages(spark, source))
 

@@ -302,11 +302,16 @@ def test_segment_kernel_docmap_without_tokens_and_rerun(tmp_path):
 
 
 # Spark jobs of one build_index over ``tiny_corpus`` (n_groups=4), as
-# measured: the wide pass, then per checkpoint group ONE fused segment
-# job (two Spark jobs under adaptive execution: its bucket shuffle's map
-# stage and the write), then the merge. The separate docmap job per
-# group took 29 jobs to this 21.
-_BUILD_JOBS = 21
+# measured (13): the corpus read's schema inference and the wide pass
+# (its exchange's map stage and the write), then per checkpoint group
+# ONE fused segment job (two Spark jobs under adaptive execution: its
+# bucket shuffle's map stage and the write), then the merge's one
+# exchange (its map stage and the write kernel's stage). The staging and
+# level-0 reads give their schemas and the level-0 stats are aggregated
+# on the driver. The separate docmap job per group took 29 jobs to 21,
+# and the staging schema reads, the merge's level-0 schema read, stats
+# collect and second exchange took 21 to this 13.
+_BUILD_JOBS = 13
 
 
 def test_build_spark_jobs(spark, tiny_corpus, tmp_path):

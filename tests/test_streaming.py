@@ -584,21 +584,29 @@ def test_stream_epoch_spark_jobs(spark, stream_source, tmp_path):
     assert len(jobs) <= _STREAM_EPOCH_JOBS, sorted(jobs)
 
 
-# Spark jobs of one compact_index with tombstones, as measured (7): the
+# Spark jobs of one compact_index with tombstones, as measured (3): the
 # purge's one job over the level-0 and docmap file list, then the
-# merge's level-0 schema read, its placement stats collect (two stages)
-# and its write (three stages). The bucket count comes from level-0
-# footers and the sidecar scan runs on the driver. The two Spark purge
-# passes and the max-bucket aggregate took 13.
-_COMPACT_JOBS = 7
+# merge's one exchange into its write kernel (the exchange's map stage
+# and the kernel's stage). The bucket count comes from level-0 footers,
+# and the level-0 stats and the sidecar scan run on the driver. The two
+# Spark purge passes and the max-bucket aggregate took 13 to 7; the
+# merge's level-0 schema read, stats collect and second exchange took 7
+# to this 3.
+_COMPACT_JOBS = 3
 
 
-# Spark jobs of one finalize_streamed_index, as measured: its level-0
-# stats collect (the aggregation's two stages). The read schema is
-# given, the dictionary and the sidecar are written on the driver and
-# no posting is rewritten. Finalize ran 4 jobs when it copied level-0
-# into a new postings directory.
-_FINALIZE_JOBS = 2
+# Spark jobs of one finalize_streamed_index, as measured: none. The
+# level-0 stats are a pyarrow aggregate on the driver, the dictionary
+# and the sidecar are written there, and no posting is rewritten.
+# Finalize ran 4 jobs when it copied level-0 into a new postings
+# directory, and 2 while its stats were a Spark aggregate.
+_FINALIZE_JOBS = 0
+
+
+# Spark jobs of one delete_urls, as measured: its docmap lookup's
+# collect. The read gives the docmap schema; inferring it took one
+# more job.
+_DELETE_JOBS = 1
 
 
 def test_finalize_spark_jobs(spark, stream_source, tmp_path):
@@ -630,3 +638,73 @@ def test_compact_spark_jobs(spark, stream_source, tmp_path):
     compact_index(spark, idx)
     jobs = _job_ids(spark) - before
     assert len(jobs) <= _COMPACT_JOBS, sorted(jobs)
+
+
+def test_delete_spark_jobs(spark, stream_source, tmp_path):
+    """One delete_urls on a finalized streamed index, counted from the
+    application status store."""
+    from escp_spark.streaming import delete_urls
+
+    src = _copy_source(stream_source, tmp_path / "delete_jobs_src",
+                       n_files=2)
+    idx = str(tmp_path / "delete_jobs_idx")
+    assert stream_ingest_once(spark, src, idx, _schema(), n_buckets=4) == 2
+    finalize_streamed_index(spark, idx, max_segments=3)
+    victims = sorted({r["doc_url"] for r in search_topk(idx, QUERIES)})[:2]
+    before = _job_ids(spark)
+    assert delete_urls(spark, idx, victims) == 2
+    jobs = _job_ids(spark) - before
+    assert len(jobs) <= _DELETE_JOBS, sorted(jobs)
+
+
+def _published(idx: str) -> dict:
+    """Every published dictionary and postings row (block ids and the
+    segment directory included), and the serving rows of QUERIES."""
+    import pyarrow.dataset as pads
+
+    from escp_spark.sources.tables import load_manifest
+
+    paths = load_manifest(idx)["paths"]
+    rows = {
+        kind: sorted(tuple(r.values()) for r in pads.dataset(
+            paths[kind], format="parquet", partitioning="hive"
+        ).to_table().to_pylist())
+        for kind in ("dictionary", "postings")
+    }
+    rows["search"] = search_topk(idx, QUERIES)
+    return rows
+
+
+def test_distributed_stats_path_matches_driver(spark, tiny_corpus,
+                                               stream_source, tmp_path,
+                                               monkeypatch):
+    """With the driver-stats cap at 0, every level-0 stats pass takes the
+    distributed Spark aggregate and _cold_term_bounds: build_index,
+    finalize_streamed_index and compact_index publish the same
+    dictionary rows, postings rows (block ids included) and serving
+    results as on the driver path."""
+    import escp_spark.build as B
+    from escp_spark.build import build_index
+    from escp_spark.streaming import compact_index, delete_urls
+
+    def publishes(tag: str) -> dict:
+        out = {}
+        built = str(tmp_path / f"built_{tag}")
+        build_index(spark, tiny_corpus, built, n_buckets=8, max_segments=3,
+                    n_groups=2)
+        out["build"] = _published(built)
+        src = _copy_source(stream_source, tmp_path / f"src_{tag}", n_files=3)
+        idx = str(tmp_path / f"stream_{tag}")
+        assert stream_ingest_once(spark, src, idx, _schema(),
+                                  n_buckets=4) == 3
+        finalize_streamed_index(spark, idx, max_segments=3)
+        out["finalize"] = _published(idx)
+        victims = sorted({r["doc_url"] for r in out["finalize"]["search"]})
+        assert delete_urls(spark, idx, victims[:3]) == 3
+        compact_index(spark, idx)
+        out["compact"] = _published(idx)
+        return out
+
+    driver = publishes("driver")
+    monkeypatch.setattr(B, "_DRIVER_STATS_MAX_BLOCKS", 0)
+    assert publishes("spark") == driver
